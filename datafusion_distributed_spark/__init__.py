@@ -25,10 +25,14 @@ package is organized as:
                    bounded-only, SURVEY.md §2.4)
 """
 
+from . import _pyworker
 from .engine import Engine, apply_session_confs, build_session
 from .tables import TABLE_NAMES, load_tables
 
 __version__ = "0.1.0"
+
+# Python workers import this package before running any of its functions.
+_pyworker.install()
 
 __all__ = [
     "Engine",

@@ -43,6 +43,10 @@ from .literal_tpcds import view_definitions as _tpcds_view_definitions
 from .tables import load_tables
 
 REFERENCE_QUERIES = "/root/reference/testdata"
+# The lit_* registry entries execute these texts verbatim. A checkout does not
+# carry them, so without them none of those entries registers.
+HAVE_REFERENCE_QUERIES = os.path.isdir(REFERENCE_QUERIES)
+NO_REFERENCE_QUERIES_REASON = f"reference query texts absent ({REFERENCE_QUERIES})"
 
 # Base tables are re-registered under prefixed names so the padded views can
 # take the bare benchmark names without self-reference.

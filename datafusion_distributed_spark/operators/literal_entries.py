@@ -18,6 +18,9 @@ sum / count): the driver's hash gate is bit-exact, and the literal texts
 mandate engine-native float summation everywhere else — those run under the
 9-significant-digit compare in the pytest lane instead.
 
+Every entry here reads the reference suite's SQL files, so the registry
+loads this module only when they are present (``literal.HAVE_REFERENCE_QUERIES``).
+
 Reference parity: the reference's own proof runs the same files
 (/root/reference/tests/tpch_correctness_test.rs:24-120,
 tests/clickbench_correctness_test.rs).
@@ -188,10 +191,9 @@ def lit_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
 # `customer`/`store` must not collide).
 # ---------------------------------------------------------------------------
 
-import os as _os
 import re as _re
 
-from ..literal import REFERENCE_QUERIES, load_literal_text
+from ..literal import load_literal_text
 
 
 def _tpcds_oracle(
@@ -274,312 +276,311 @@ def _suite_view_defs(suite: str) -> dict[str, str]:
 
 _SUITE_VIEW_DEFS_CACHE: dict[str, dict[str, str]] = {}
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    @query(
-        "lit_tpcds_q1_returns_above_avg",
-        oracle=_tpcds_oracle(
-            "q1",
-            ("store_returns", "date_dim", "store", "customer"),
-            ("c_customer_id",),
-        ),
-        tags=("literal", "tpcds", "returns", "correlated-subquery"),
+@query(
+    "lit_tpcds_q1_returns_above_avg",
+    oracle=_tpcds_oracle(
+        "q1",
+        ("store_returns", "date_dim", "store", "customer"),
+        ("c_customer_id",),
+    ),
+    tags=("literal", "tpcds", "returns", "correlated-subquery"),
+)
+def lit_tpcds_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q1: correlated CTE over store_returns (customers whose
+    # 2000 returns exceed 1.2x their store's average). Integer-exact:
+    # sr_return_amt is an integer-valued double, AVG is one exact-sum /
+    # count division, the output is a string key.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q1").toDF("c_customer_id")
+
+@query(
+    "lit_tpcds_q42_category_november",
+    oracle=_tpcds_oracle(
+        "q42",
+        ("date_dim", "store_sales", "item"),
+        ("d_year", "i_category_id", "i_category", "sum_sales"),
+    ),
+    tags=("literal", "tpcds", "star-join"),
+)
+def lit_tpcds_q42(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return run_literal_sql(spark, sf_dir, "tpcds", "q42").toDF(
+        "d_year", "i_category_id", "i_category", "sum_sales"
     )
-    def lit_tpcds_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q1: correlated CTE over store_returns (customers whose
-        # 2000 returns exceed 1.2x their store's average). Integer-exact:
-        # sr_return_amt is an integer-valued double, AVG is one exact-sum /
-        # count division, the output is a string key.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q1").toDF("c_customer_id")
 
-    @query(
-        "lit_tpcds_q42_category_november",
-        oracle=_tpcds_oracle(
-            "q42",
-            ("date_dim", "store_sales", "item"),
-            ("d_year", "i_category_id", "i_category", "sum_sales"),
-        ),
-        tags=("literal", "tpcds", "star-join"),
+@query(
+    "lit_tpcds_q43_store_weekday_sales",
+    oracle=_tpcds_oracle(
+        "q43",
+        ("date_dim", "store_sales", "store"),
+        ("s_store_name", "s_store_id", "sun_sales", "mon_sales",
+         "tue_sales", "wed_sales", "thu_sales", "fri_sales", "sat_sales"),
+    ),
+    tags=("literal", "tpcds", "pivot"),
+)
+def lit_tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return run_literal_sql(spark, sf_dir, "tpcds", "q43").toDF(
+        "s_store_name", "s_store_id", "sun_sales", "mon_sales",
+        "tue_sales", "wed_sales", "thu_sales", "fri_sales", "sat_sales"
     )
-    def lit_tpcds_q42(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return run_literal_sql(spark, sf_dir, "tpcds", "q42").toDF(
-            "d_year", "i_category_id", "i_category", "sum_sales"
-        )
 
-    @query(
-        "lit_tpcds_q43_store_weekday_sales",
-        oracle=_tpcds_oracle(
-            "q43",
-            ("date_dim", "store_sales", "store"),
-            ("s_store_name", "s_store_id", "sun_sales", "mon_sales",
-             "tue_sales", "wed_sales", "thu_sales", "fri_sales", "sat_sales"),
-        ),
-        tags=("literal", "tpcds", "pivot"),
+@query(
+    "lit_tpcds_q50_return_lag_bands",
+    oracle=_tpcds_oracle(
+        "q50",
+        ("store_sales", "store_returns", "store", "date_dim"),
+        ("s_store_name", "s_company_id", "s_street_number",
+         "s_street_name", "s_street_type", "s_suite_number", "s_city",
+         "s_county", "s_state", "s_zip", "d30", "d31_60", "d61_90",
+         "d91_120", "d_over_120"),
+    ),
+    tags=("literal", "tpcds", "returns", "banding"),
+)
+def lit_tpcds_q50(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Sales-to-returns join on (item_sk, ticket_number) with the return
+    # lag banded into count columns — all integer counts.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q50").toDF(
+        "s_store_name", "s_company_id", "s_street_number",
+        "s_street_name", "s_street_type", "s_suite_number", "s_city",
+        "s_county", "s_state", "s_zip", "d30", "d31_60", "d61_90",
+        "d91_120", "d_over_120"
     )
-    def lit_tpcds_q43(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return run_literal_sql(spark, sf_dir, "tpcds", "q43").toDF(
-            "s_store_name", "s_store_id", "sun_sales", "mon_sales",
-            "tue_sales", "wed_sales", "thu_sales", "fri_sales", "sat_sales"
-        )
 
-    @query(
-        "lit_tpcds_q50_return_lag_bands",
-        oracle=_tpcds_oracle(
-            "q50",
-            ("store_sales", "store_returns", "store", "date_dim"),
-            ("s_store_name", "s_company_id", "s_street_number",
-             "s_street_name", "s_street_type", "s_suite_number", "s_city",
-             "s_county", "s_state", "s_zip", "d30", "d31_60", "d61_90",
-             "d91_120", "d_over_120"),
-        ),
-        tags=("literal", "tpcds", "returns", "banding"),
+@query(
+    "lit_tpcds_q62_ship_lag_bands",
+    oracle=_tpcds_oracle(
+        "q62",
+        ("web_sales", "warehouse", "ship_mode", "web_site", "date_dim"),
+        ("w_substr", "sm_type", "web_name", "d30", "d31_60", "d61_90",
+         "d91_120", "d_over_120"),
+    ),
+    tags=("literal", "tpcds", "banding"),
+)
+def lit_tpcds_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return run_literal_sql(spark, sf_dir, "tpcds", "q62").toDF(
+        "w_substr", "sm_type", "web_name", "d30", "d31_60", "d61_90",
+        "d91_120", "d_over_120"
     )
-    def lit_tpcds_q50(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Sales-to-returns join on (item_sk, ticket_number) with the return
-        # lag banded into count columns — all integer counts.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q50").toDF(
-            "s_store_name", "s_company_id", "s_street_number",
-            "s_street_name", "s_street_type", "s_suite_number", "s_city",
-            "s_county", "s_state", "s_zip", "d30", "d31_60", "d61_90",
-            "d91_120", "d_over_120"
-        )
 
-    @query(
-        "lit_tpcds_q62_ship_lag_bands",
-        oracle=_tpcds_oracle(
-            "q62",
-            ("web_sales", "warehouse", "ship_mode", "web_site", "date_dim"),
-            ("w_substr", "sm_type", "web_name", "d30", "d31_60", "d61_90",
-             "d91_120", "d_over_120"),
-        ),
-        tags=("literal", "tpcds", "banding"),
+@query(
+    "lit_tpcds_q3_brand_november",
+    oracle=_tpcds_oracle(
+        "q3",
+        ("date_dim", "store_sales", "item"),
+        ("d_year", "brand_id", "brand", "sum_agg"),
+    ),
+    tags=("literal", "tpcds", "star-join"),
+)
+def lit_tpcds_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q3: manufacturer-filtered November brand report. The
+    # ORDER BY (d_year, sum_agg DESC, brand_id) is a total order —
+    # brand_id is a group key — so LIMIT 100 is deterministic.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q3").toDF(
+        "d_year", "brand_id", "brand", "sum_agg"
     )
-    def lit_tpcds_q62(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return run_literal_sql(spark, sf_dir, "tpcds", "q62").toDF(
-            "w_substr", "sm_type", "web_name", "d30", "d31_60", "d61_90",
-            "d91_120", "d_over_120"
-        )
 
-    @query(
-        "lit_tpcds_q3_brand_november",
-        oracle=_tpcds_oracle(
-            "q3",
-            ("date_dim", "store_sales", "item"),
-            ("d_year", "brand_id", "brand", "sum_agg"),
-        ),
-        tags=("literal", "tpcds", "star-join"),
+@query(
+    "lit_tpcds_q19_cross_zip_brands",
+    oracle=_tpcds_oracle(
+        "q19",
+        ("date_dim", "store_sales", "item", "customer",
+         "customer_address", "store"),
+        ("brand_id", "brand", "i_manufact_id", "i_manufact", "ext_price"),
+    ),
+    tags=("literal", "tpcds", "star-join"),
+)
+def lit_tpcds_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q19: brand report for customers shopping outside their
+    # own zip (SUBSTRING(ca_zip,1,5) <> SUBSTRING(s_zip,1,5)). ORDER BY
+    # lists every group key after the sum — fully deterministic.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q19").toDF(
+        "brand_id", "brand", "i_manufact_id", "i_manufact", "ext_price"
     )
-    def lit_tpcds_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q3: manufacturer-filtered November brand report. The
-        # ORDER BY (d_year, sum_agg DESC, brand_id) is a total order —
-        # brand_id is a group key — so LIMIT 100 is deterministic.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q3").toDF(
-            "d_year", "brand_id", "brand", "sum_agg"
-        )
 
-    @query(
-        "lit_tpcds_q19_cross_zip_brands",
-        oracle=_tpcds_oracle(
-            "q19",
-            ("date_dim", "store_sales", "item", "customer",
-             "customer_address", "store"),
-            ("brand_id", "brand", "i_manufact_id", "i_manufact", "ext_price"),
-        ),
-        tags=("literal", "tpcds", "star-join"),
+@query(
+    "lit_tpcds_q45_zip_or_item_web",
+    oracle=_tpcds_oracle(
+        "q45",
+        ("web_sales", "customer", "customer_address", "date_dim", "item"),
+        ("ca_zip", "ca_city", "sum_sales"),
+    ),
+    tags=("literal", "tpcds", "disjunctive-subquery"),
+)
+def lit_tpcds_q45(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q45: zip-prefix OR uncorrelated-IN-subquery disjunction;
+    # ORDER BY is the full group key (ca_zip, ca_city).
+    return run_literal_sql(spark, sf_dir, "tpcds", "q45").toDF(
+        "ca_zip", "ca_city", "sum_sales"
     )
-    def lit_tpcds_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q19: brand report for customers shopping outside their
-        # own zip (SUBSTRING(ca_zip,1,5) <> SUBSTRING(s_zip,1,5)). ORDER BY
-        # lists every group key after the sum — fully deterministic.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q19").toDF(
-            "brand_id", "brand", "i_manufact_id", "i_manufact", "ext_price"
-        )
 
-    @query(
-        "lit_tpcds_q45_zip_or_item_web",
-        oracle=_tpcds_oracle(
-            "q45",
-            ("web_sales", "customer", "customer_address", "date_dim", "item"),
-            ("ca_zip", "ca_city", "sum_sales"),
-        ),
-        tags=("literal", "tpcds", "disjunctive-subquery"),
+@query(
+    "lit_tpcds_q52_manager_brand_november",
+    oracle=_tpcds_oracle(
+        "q52",
+        ("date_dim", "store_sales", "item"),
+        ("d_year", "brand_id", "brand", "ext_price"),
+    ),
+    tags=("literal", "tpcds", "star-join"),
+)
+def lit_tpcds_q52(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return run_literal_sql(spark, sf_dir, "tpcds", "q52").toDF(
+        "d_year", "brand_id", "brand", "ext_price"
     )
-    def lit_tpcds_q45(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q45: zip-prefix OR uncorrelated-IN-subquery disjunction;
-        # ORDER BY is the full group key (ca_zip, ca_city).
-        return run_literal_sql(spark, sf_dir, "tpcds", "q45").toDF(
-            "ca_zip", "ca_city", "sum_sales"
-        )
 
-    @query(
-        "lit_tpcds_q52_manager_brand_november",
-        oracle=_tpcds_oracle(
-            "q52",
-            ("date_dim", "store_sales", "item"),
-            ("d_year", "brand_id", "brand", "ext_price"),
-        ),
-        tags=("literal", "tpcds", "star-join"),
+@query(
+    "lit_tpcds_q55_brand_report",
+    oracle=_tpcds_oracle(
+        "q55",
+        ("date_dim", "store_sales", "item"),
+        ("brand_id", "brand", "ext_price"),
+    ),
+    tags=("literal", "tpcds", "star-join"),
+)
+def lit_tpcds_q55(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return run_literal_sql(spark, sf_dir, "tpcds", "q55").toDF(
+        "brand_id", "brand", "ext_price"
     )
-    def lit_tpcds_q52(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return run_literal_sql(spark, sf_dir, "tpcds", "q52").toDF(
-            "d_year", "brand_id", "brand", "ext_price"
-        )
 
-    @query(
-        "lit_tpcds_q55_brand_report",
-        oracle=_tpcds_oracle(
-            "q55",
-            ("date_dim", "store_sales", "item"),
-            ("brand_id", "brand", "ext_price"),
-        ),
-        tags=("literal", "tpcds", "star-join"),
+@query(
+    "lit_tpcds_q96_evening_count",
+    oracle=_tpcds_oracle(
+        "q96",
+        ("store_sales", "household_demographics", "time_dim", "store"),
+        ("n",),
+    ),
+    tags=("literal", "tpcds", "count"),
+)
+def lit_tpcds_q96(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # 8:30pm+ shoppers with 7 dependents at store 'ese' — a pure count
+    # through the generated time_dim/household_demographics dims.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q96").toDF("n")
+
+# -----------------------------------------------------------------------
+# Round-8 promotions: more integer-exact verbatim texts behind the
+# driver's bit-exact hash gate. ClickBench q15 was evaluated and
+# REJECTED: its top-10-users-by-count cut has count TIES at the rank-10
+# boundary at both sf0.01 and sf0.1 (screening probe: ...81,80,80,80,80...
+# / ...87,87,87,87...), so LIMIT 10 is not deterministic across engines.
+# CB q3 (AVG of int64 UserID) was rejected too: Spark sums bigint as
+# DOUBLE (order-dependent at ~9e18 magnitudes) while DuckDB sums exactly
+# in HUGEINT. The shapes below are count/distinct-count only.
+# -----------------------------------------------------------------------
+
+_Q88_COLS = ("h8_30_to_9", "h9_to_9_30", "h9_30_to_10", "h10_to_10_30",
+             "h10_30_to_11", "h11_to_11_30", "h11_30_to_12",
+             "h12_to_12_30")
+
+@query(
+    "lit_tpcds_q88_store_hour_bands",
+    oracle=_tpcds_oracle(
+        "q88",
+        ("store_sales", "household_demographics", "time_dim", "store"),
+        _Q88_COLS,
+    ),
+    tags=("literal", "tpcds", "count", "multiband"),
+)
+def lit_tpcds_q88(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q88: eight half-hour store-traffic counts cross-joined
+    # into one row (the reference's multi-scan shape) — all integers.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q88").toDF(*_Q88_COLS)
+
+@query(
+    "lit_tpcds_q92_excess_discount",
+    oracle=_tpcds_oracle(
+        "q92",
+        ("web_sales", "item", "date_dim"),
+        ("excess_discount_amount",),
+    ),
+    tags=("literal", "tpcds", "correlated-subquery"),
+)
+def lit_tpcds_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q92: discounts above 1.3x the per-item window average.
+    # The threshold is avg (exact-int-sum / count) * 1.3 — identical
+    # double math on identical exact inputs in both engines — and the
+    # output SUM is over integer-valued monetary doubles (exact).
+    return run_literal_sql(spark, sf_dir, "tpcds", "q92").toDF(
+        "excess_discount_amount"
     )
-    def lit_tpcds_q55(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return run_literal_sql(spark, sf_dir, "tpcds", "q55").toDF(
-            "brand_id", "brand", "ext_price"
-        )
 
-    @query(
-        "lit_tpcds_q96_evening_count",
-        oracle=_tpcds_oracle(
-            "q96",
-            ("store_sales", "household_demographics", "time_dim", "store"),
-            ("n",),
-        ),
-        tags=("literal", "tpcds", "count"),
+_Q95_COLS = ("order_count", "total_shipping_cost", "total_net_profit")
+
+@query(
+    "lit_tpcds_q95_returned_multiwarehouse",
+    oracle=_tpcds_oracle(
+        "q95",
+        ("web_sales", "web_returns", "date_dim", "customer_address",
+         "web_site"),
+        _Q95_COLS,
+    ),
+    tags=("literal", "tpcds", "semi-join", "distinct"),
+)
+def lit_tpcds_q95(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q95: multi-warehouse returned web orders — a self-join
+    # CTE feeding two IN subqueries, COUNT(DISTINCT) + exact
+    # integer-valued money sums; single-row output.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q95").toDF(*_Q95_COLS)
+
+_PROMO_AVG_COLS = ("i_item_id", "agg1", "agg2", "agg3", "agg4")
+
+@query(
+    "lit_tpcds_q7_promo_store_avgs",
+    oracle=_tpcds_oracle(
+        "q7",
+        ("store_sales", "customer_demographics", "date_dim", "item",
+         "promotion"),
+        _PROMO_AVG_COLS,
+    ),
+    tags=("literal", "tpcds", "star-join", "avg"),
+    order_by="i_item_id",
+)
+def lit_tpcds_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q7: per-item AVGs of integer-valued monetary doubles for
+    # demographics-filtered promo sales. avg = exact-integer-sum /
+    # count, divided identically in double by both engines (the
+    # lit_cb_q2 precedent); i_item_id is the lone group key, so
+    # ORDER BY + LIMIT 100 is total.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q7").toDF(
+        *_PROMO_AVG_COLS
     )
-    def lit_tpcds_q96(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # 8:30pm+ shoppers with 7 dependents at store 'ese' — a pure count
-        # through the generated time_dim/household_demographics dims.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q96").toDF("n")
 
-    # -----------------------------------------------------------------------
-    # Round-8 promotions: more integer-exact verbatim texts behind the
-    # driver's bit-exact hash gate. ClickBench q15 was evaluated and
-    # REJECTED: its top-10-users-by-count cut has count TIES at the rank-10
-    # boundary at both sf0.01 and sf0.1 (builder probe: ...81,80,80,80,80...
-    # / ...87,87,87,87...), so LIMIT 10 is not deterministic across engines.
-    # CB q3 (AVG of int64 UserID) was rejected too: Spark sums bigint as
-    # DOUBLE (order-dependent at ~9e18 magnitudes) while DuckDB sums exactly
-    # in HUGEINT. The shapes below are count/distinct-count only.
-    # -----------------------------------------------------------------------
-
-    _Q88_COLS = ("h8_30_to_9", "h9_to_9_30", "h9_30_to_10", "h10_to_10_30",
-                 "h10_30_to_11", "h11_to_11_30", "h11_30_to_12",
-                 "h12_to_12_30")
-
-    @query(
-        "lit_tpcds_q88_store_hour_bands",
-        oracle=_tpcds_oracle(
-            "q88",
-            ("store_sales", "household_demographics", "time_dim", "store"),
-            _Q88_COLS,
-        ),
-        tags=("literal", "tpcds", "count", "multiband"),
+@query(
+    "lit_tpcds_q26_promo_catalog_avgs",
+    oracle=_tpcds_oracle(
+        "q26",
+        ("catalog_sales", "customer_demographics", "date_dim", "item",
+         "promotion"),
+        _PROMO_AVG_COLS,
+    ),
+    tags=("literal", "tpcds", "star-join", "avg"),
+    order_by="i_item_id",
+)
+def lit_tpcds_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # q7's catalog-channel twin (cs_bill_cdemo_sk path) — same exactness
+    # argument.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q26").toDF(
+        *_PROMO_AVG_COLS
     )
-    def lit_tpcds_q88(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q88: eight half-hour store-traffic counts cross-joined
-        # into one row (the reference's multi-scan shape) — all integers.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q88").toDF(*_Q88_COLS)
 
-    @query(
-        "lit_tpcds_q92_excess_discount",
-        oracle=_tpcds_oracle(
-            "q92",
-            ("web_sales", "item", "date_dim"),
-            ("excess_discount_amount",),
-        ),
-        tags=("literal", "tpcds", "correlated-subquery"),
+@query(
+    "lit_tpcds_q90_ampm_ratio",
+    oracle="SELECT CAST(am_pm_ratio AS DOUBLE) AS am_pm_ratio FROM ("
+    + _tpcds_oracle(
+        "q90",
+        ("web_sales", "household_demographics", "time_dim", "web_page"),
+        ("am_pm_ratio",),
     )
-    def lit_tpcds_q92(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q92: discounts above 1.3x the per-item window average.
-        # The threshold is avg (exact-int-sum / count) * 1.3 — identical
-        # double math on identical exact inputs in both engines — and the
-        # output SUM is over integer-valued monetary doubles (exact).
-        return run_literal_sql(spark, sf_dir, "tpcds", "q92").toDF(
-            "excess_discount_amount"
-        )
-
-    _Q95_COLS = ("order_count", "total_shipping_cost", "total_net_profit")
-
-    @query(
-        "lit_tpcds_q95_returned_multiwarehouse",
-        oracle=_tpcds_oracle(
-            "q95",
-            ("web_sales", "web_returns", "date_dim", "customer_address",
-             "web_site"),
-            _Q95_COLS,
-        ),
-        tags=("literal", "tpcds", "semi-join", "distinct"),
+    + ")",
+    tags=("literal", "tpcds", "ratio"),
+)
+def lit_tpcds_q90(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q90: morning/evening web-traffic count ratio. The text
+    # divides two exact counts as DECIMAL(15,4); Spark keeps a decimal
+    # quotient (35,20) while DuckDB's decimal division yields DOUBLE —
+    # both sides are cast to DOUBLE for a type-stable compare (the
+    # 20-fractional-digit decimal carries more precision than the
+    # double it rounds into).
+    return run_literal_sql(spark, sf_dir, "tpcds", "q90").selectExpr(
+        "CAST(am_pm_ratio AS DOUBLE) AS am_pm_ratio"
     )
-    def lit_tpcds_q95(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q95: multi-warehouse returned web orders — a self-join
-        # CTE feeding two IN subqueries, COUNT(DISTINCT) + exact
-        # integer-valued money sums; single-row output.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q95").toDF(*_Q95_COLS)
-
-    _PROMO_AVG_COLS = ("i_item_id", "agg1", "agg2", "agg3", "agg4")
-
-    @query(
-        "lit_tpcds_q7_promo_store_avgs",
-        oracle=_tpcds_oracle(
-            "q7",
-            ("store_sales", "customer_demographics", "date_dim", "item",
-             "promotion"),
-            _PROMO_AVG_COLS,
-        ),
-        tags=("literal", "tpcds", "star-join", "avg"),
-        order_by="i_item_id",
-    )
-    def lit_tpcds_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q7: per-item AVGs of integer-valued monetary doubles for
-        # demographics-filtered promo sales. avg = exact-integer-sum /
-        # count, divided identically in double by both engines (the
-        # lit_cb_q2 precedent); i_item_id is the lone group key, so
-        # ORDER BY + LIMIT 100 is total.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q7").toDF(
-            *_PROMO_AVG_COLS
-        )
-
-    @query(
-        "lit_tpcds_q26_promo_catalog_avgs",
-        oracle=_tpcds_oracle(
-            "q26",
-            ("catalog_sales", "customer_demographics", "date_dim", "item",
-             "promotion"),
-            _PROMO_AVG_COLS,
-        ),
-        tags=("literal", "tpcds", "star-join", "avg"),
-        order_by="i_item_id",
-    )
-    def lit_tpcds_q26(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # q7's catalog-channel twin (cs_bill_cdemo_sk path) — same exactness
-        # argument.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q26").toDF(
-            *_PROMO_AVG_COLS
-        )
-
-    @query(
-        "lit_tpcds_q90_ampm_ratio",
-        oracle="SELECT CAST(am_pm_ratio AS DOUBLE) AS am_pm_ratio FROM ("
-        + _tpcds_oracle(
-            "q90",
-            ("web_sales", "household_demographics", "time_dim", "web_page"),
-            ("am_pm_ratio",),
-        )
-        + ")",
-        tags=("literal", "tpcds", "ratio"),
-    )
-    def lit_tpcds_q90(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q90: morning/evening web-traffic count ratio. The text
-        # divides two exact counts as DECIMAL(15,4); Spark keeps a decimal
-        # quotient (35,20) while DuckDB's decimal division yields DOUBLE —
-        # both sides are cast to DOUBLE for a type-stable compare (the
-        # 20-fractional-digit decimal carries more precision than the
-        # double it rounds into).
-        return run_literal_sql(spark, sf_dir, "tpcds", "q90").selectExpr(
-            "CAST(am_pm_ratio AS DOUBLE) AS am_pm_ratio"
-        )
 
 
 _TPCH_Q13_ORACLE = f"""
@@ -748,117 +749,115 @@ def lit_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-if _os.path.isdir(REFERENCE_QUERIES):
+@query(
+    "lit_tpcds_q15_zip_quarter_sales",
+    oracle=_tpcds_oracle(
+        "q15",
+        ("catalog_sales", "customer", "customer_address", "date_dim"),
+        ("ca_zip", "sum_sales"),
+        year_shift=-3,
+    ),
+    tags=("literal", "tpcds", "star-join"),
+    order_by="ca_zip",
+)
+def lit_tpcds_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q15 under the -3 year shift (d_year=2001 predates the
+    # 1992-1998 order range; 1998 Q2 is in range). sum(cs_sales_price)
+    # over integer-valued doubles is order-exact; the 10 zip groups
+    # (bounded vocabulary) are fully ordered and below the LIMIT.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q15", year_shift=-3
+    ).toDF("ca_zip", "sum_sales")
 
-    @query(
-        "lit_tpcds_q15_zip_quarter_sales",
-        oracle=_tpcds_oracle(
-            "q15",
-            ("catalog_sales", "customer", "customer_address", "date_dim"),
-            ("ca_zip", "sum_sales"),
-            year_shift=-3,
-        ),
-        tags=("literal", "tpcds", "star-join"),
-        order_by="ca_zip",
-    )
-    def lit_tpcds_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q15 under the -3 year shift (d_year=2001 predates the
-        # 1992-1998 order range; 1998 Q2 is in range). sum(cs_sales_price)
-        # over integer-valued doubles is order-exact; the 10 zip groups
-        # (bounded vocabulary) are fully ordered and below the LIMIT.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q15", year_shift=-3
-        ).toDF("ca_zip", "sum_sales")
+@query(
+    "lit_tpcds_q32_excess_discount_catalog",
+    oracle=_tpcds_oracle(
+        "q32",
+        ("catalog_sales", "item", "date_dim"),
+        ("excess_discount",),
+        date_shift_years=-3,
+    ),
+    tags=("literal", "tpcds", "correlated-subquery"),
+)
+def lit_tpcds_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q32 (q92's catalog sibling) with its DATE literals
+    # shifted -3y into range: one SUM of integer-valued doubles above a
+    # correlated 1.3*avg threshold — avg is one exact-sum/count
+    # division, the single multiply is bit-identical in both engines.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q32", date_shift_years=-3
+    ).toDF("excess_discount")
 
-    @query(
-        "lit_tpcds_q32_excess_discount_catalog",
-        oracle=_tpcds_oracle(
-            "q32",
-            ("catalog_sales", "item", "date_dim"),
-            ("excess_discount",),
-            date_shift_years=-3,
-        ),
-        tags=("literal", "tpcds", "correlated-subquery"),
-    )
-    def lit_tpcds_q32(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q32 (q92's catalog sibling) with its DATE literals
-        # shifted -3y into range: one SUM of integer-valued doubles above a
-        # correlated 1.3*avg threshold — avg is one exact-sum/count
-        # division, the single multiply is bit-identical in both engines.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q32", date_shift_years=-3
-        ).toDF("excess_discount")
+# -----------------------------------------------------------------------
+# Round-9 second wave (r8 VERDICT item 6 continued): four more
+# integer-exact verbatim texts. TPC-DS q37 was evaluated and REJECTED:
+# its selection is empty at sf0.01, the driver gate's scale (populates
+# only at sf0.1 — 9 rows) — an empty gate entry proves nothing. TPC-H q2
+# likewise REJECTED: empty at both gate scales (the p_size=15 AND
+# p_type LIKE '%BRASS' conjunction misses the synthetic part mix).
+# -----------------------------------------------------------------------
 
-    # -----------------------------------------------------------------------
-    # Round-9 second wave (r8 VERDICT item 6 continued): four more
-    # integer-exact verbatim texts. TPC-DS q37 was evaluated and REJECTED:
-    # its selection is empty at sf0.01, the driver gate's scale (populates
-    # only at sf0.1 — 9 rows) — an empty gate entry proves nothing. TPC-H q2
-    # likewise REJECTED: empty at both gate scales (the p_size=15 AND
-    # p_type LIKE '%BRASS' conjunction misses the synthetic part mix).
-    # -----------------------------------------------------------------------
+_Q21_COLS = ("w_warehouse_name", "i_item_id", "inv_before", "inv_after")
 
-    _Q21_COLS = ("w_warehouse_name", "i_item_id", "inv_before", "inv_after")
+@query(
+    "lit_tpcds_q21_inventory_shift_bands",
+    oracle=_tpcds_oracle(
+        "q21",
+        ("inventory", "warehouse", "item", "date_dim"),
+        _Q21_COLS,
+    ),
+    tags=("literal", "tpcds", "inventory", "conditional-agg"),
+    order_by="w_warehouse_name, i_item_id",
+)
+def lit_tpcds_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q21: before/after pivot-date inventory sums (INT sums —
+    # exact), filtered on a decimal ratio band whose boundary both
+    # engines evaluate from the identical text over identical integer
+    # sums (agreement value-proven in the pytest lane at sf0.01, and
+    # the gate data is fixed). ORDER BY is the full group key, so the
+    # LIMIT 100 cut at sf0.1 is a total-order prefix.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q21").toDF(*_Q21_COLS)
 
-    @query(
-        "lit_tpcds_q21_inventory_shift_bands",
-        oracle=_tpcds_oracle(
-            "q21",
-            ("inventory", "warehouse", "item", "date_dim"),
-            _Q21_COLS,
-        ),
-        tags=("literal", "tpcds", "inventory", "conditional-agg"),
-        order_by="w_warehouse_name, i_item_id",
-    )
-    def lit_tpcds_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q21: before/after pivot-date inventory sums (INT sums —
-        # exact), filtered on a decimal ratio band whose boundary both
-        # engines evaluate from the identical text over identical integer
-        # sums (agreement value-proven in the pytest lane at sf0.01, and
-        # the gate data is fixed). ORDER BY is the full group key, so the
-        # LIMIT 100 cut at sf0.1 is a total-order prefix.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q21").toDF(*_Q21_COLS)
+_Q40_COLS = ("w_state", "i_item_id", "sales_before", "sales_after")
 
-    _Q40_COLS = ("w_state", "i_item_id", "sales_before", "sales_after")
+@query(
+    "lit_tpcds_q40_returns_net_bands",
+    oracle=_tpcds_oracle(
+        "q40",
+        ("catalog_sales", "catalog_returns", "warehouse", "item",
+         "date_dim"),
+        _Q40_COLS,
+    ),
+    tags=("literal", "tpcds", "outer-join", "conditional-agg"),
+    order_by="w_state, i_item_id",
+)
+def lit_tpcds_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q40: catalog sales net of returns (LEFT OUTER on
+    # (order, item)) split at the pivot date. cs_sales_price and
+    # cr_refunded_cash are integer-valued doubles, so the differences
+    # and sums are order-exact; ORDER BY is the full group key.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q40").toDF(*_Q40_COLS)
 
-    @query(
-        "lit_tpcds_q40_returns_net_bands",
-        oracle=_tpcds_oracle(
-            "q40",
-            ("catalog_sales", "catalog_returns", "warehouse", "item",
-             "date_dim"),
-            _Q40_COLS,
-        ),
-        tags=("literal", "tpcds", "outer-join", "conditional-agg"),
-        order_by="w_state, i_item_id",
-    )
-    def lit_tpcds_q40(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q40: catalog sales net of returns (LEFT OUTER on
-        # (order, item)) split at the pivot date. cs_sales_price and
-        # cr_refunded_cash are integer-valued doubles, so the differences
-        # and sums are order-exact; ORDER BY is the full group key.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q40").toDF(*_Q40_COLS)
+_Q82_COLS = ("i_item_id", "i_item_desc", "i_current_price")
 
-    _Q82_COLS = ("i_item_id", "i_item_desc", "i_current_price")
-
-    @query(
-        "lit_tpcds_q82_inventory_band_items",
-        oracle=_tpcds_oracle(
-            "q82",
-            ("item", "inventory", "date_dim", "store_sales"),
-            _Q82_COLS,
-        ),
-        tags=("literal", "tpcds", "inventory", "semi-join"),
-        order_by="i_item_id",
-    )
-    def lit_tpcds_q82(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q82: items in a price/manufacturer band with in-stock
-        # inventory and store sales. GROUP-KEYS-ONLY output (no aggregate
-        # columns): strings plus i_current_price, an exact two-decimal
-        # double computed from the same integer expression in both engines.
-        # i_item_id determines the other two columns, so ORDER BY i_item_id
-        # is total.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q82").toDF(*_Q82_COLS)
+@query(
+    "lit_tpcds_q82_inventory_band_items",
+    oracle=_tpcds_oracle(
+        "q82",
+        ("item", "inventory", "date_dim", "store_sales"),
+        _Q82_COLS,
+    ),
+    tags=("literal", "tpcds", "inventory", "semi-join"),
+    order_by="i_item_id",
+)
+def lit_tpcds_q82(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q82: items in a price/manufacturer band with in-stock
+    # inventory and store sales. GROUP-KEYS-ONLY output (no aggregate
+    # columns): strings plus i_current_price, an exact two-decimal
+    # double computed from the same integer expression in both engines.
+    # i_item_id determines the other two columns, so ORDER BY i_item_id
+    # is total.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q82").toDF(*_Q82_COLS)
 
 
 _TPCH_Q21_ORACLE = f"""
@@ -911,210 +910,209 @@ def lit_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
 # the bit-exact gate must not sit on.
 # ---------------------------------------------------------------------------
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    _Q4_COLS = ("customer_id", "customer_first_name", "customer_last_name",
-                "customer_preferred_cust_flag")
+_Q4_COLS = ("customer_id", "customer_first_name", "customer_last_name",
+            "customer_preferred_cust_flag")
 
-    @query(
-        "lit_tpcds_q4_three_channel_growth",
-        oracle=_tpcds_oracle(
-            "q4",
-            ("store_sales", "catalog_sales", "web_sales", "customer",
-             "date_dim"),
-            _Q4_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "self-join", "growth-ratio"),
-        order_by="customer_id",
+@query(
+    "lit_tpcds_q4_three_channel_growth",
+    oracle=_tpcds_oracle(
+        "q4",
+        ("store_sales", "catalog_sales", "web_sales", "customer",
+         "date_dim"),
+        _Q4_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "self-join", "growth-ratio"),
+    order_by="customer_id",
+)
+def lit_tpcds_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q4 under the -1 year shift (2001/2002 predate the order
+    # range): the 6-alias year_total self-join with growth-ratio-of-
+    # ratios comparisons across all three channels. year_total sums
+    # (... )/2 of integer-valued doubles — halves are binary-exact —
+    # and the ratio compares divide exact doubles identically in both
+    # engines. Output is strings; ORDER BY customer_id is unique, so
+    # the sf0.1 LIMIT cut is a total-order prefix.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q4", year_shift=-1
+    ).toDF(*_Q4_COLS)
+
+@query(
+    "lit_tpcds_q8_preferred_zip_stores",
+    oracle=_tpcds_oracle(
+        "q8",
+        ("store_sales", "date_dim", "store", "customer_address",
+         "customer"),
+        ("s_store_name", "sum_net_profit"),
+    ),
+    tags=("literal", "tpcds", "intersect", "zip-prefix"),
+    order_by="s_store_name",
+)
+def lit_tpcds_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q8: the zip-prefix INTERSECT machinery (400-literal
+    # IN-list x preferred-customer zips, then substr-2 store match).
+    # sum(ss_net_profit) is exact; store names are a 10-value bounded
+    # vocabulary, so the LIMIT never cuts.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q8").toDF(
+        "s_store_name", "sum_net_profit"
     )
-    def lit_tpcds_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q4 under the -1 year shift (2001/2002 predate the order
-        # range): the 6-alias year_total self-join with growth-ratio-of-
-        # ratios comparisons across all three channels. year_total sums
-        # (... )/2 of integer-valued doubles — halves are binary-exact —
-        # and the ratio compares divide exact doubles identically in both
-        # engines. Output is strings; ORDER BY customer_id is unique, so
-        # the sf0.1 LIMIT cut is a total-order prefix.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q4", year_shift=-1
-        ).toDF(*_Q4_COLS)
 
-    @query(
-        "lit_tpcds_q8_preferred_zip_stores",
-        oracle=_tpcds_oracle(
-            "q8",
-            ("store_sales", "date_dim", "store", "customer_address",
-             "customer"),
-            ("s_store_name", "sum_net_profit"),
-        ),
-        tags=("literal", "tpcds", "intersect", "zip-prefix"),
-        order_by="s_store_name",
+_Q25_COLS = ("i_item_id", "i_item_desc", "s_store_id", "s_store_name",
+             "store_sales_profit", "store_returns_loss",
+             "catalog_sales_profit")
+
+@query(
+    "lit_tpcds_q25_buy_return_rebuy_profit",
+    oracle=_tpcds_oracle(
+        "q25",
+        ("store_sales", "store_returns", "catalog_sales", "date_dim",
+         "store", "item"),
+        _Q25_COLS,
+    ),
+    tags=("literal", "tpcds", "chain-join"),
+    order_by="i_item_id, i_item_desc, s_store_id, s_store_name",
+)
+def lit_tpcds_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q25: the buy->return->rebuy same-customer-same-item
+    # chain (store sale, store return, catalog re-purchase) with
+    # exact net_profit/net_loss sums; ORDER BY is the full group key.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q25").toDF(*_Q25_COLS)
+
+_Q29_COLS = ("i_item_id", "i_item_desc", "s_store_id", "s_store_name",
+             "store_sales_quantity", "store_returns_quantity",
+             "catalog_sales_quantity")
+
+@query(
+    "lit_tpcds_q29_buy_return_rebuy_quantity",
+    oracle=_tpcds_oracle(
+        "q29",
+        ("store_sales", "store_returns", "catalog_sales", "date_dim",
+         "store", "item"),
+        _Q29_COLS,
+    ),
+    tags=("literal", "tpcds", "chain-join"),
+    order_by="i_item_id, i_item_desc, s_store_id, s_store_name",
+)
+def lit_tpcds_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q29: q25's INT-quantity sibling over a wider month
+    # window; all-integer outputs, full-group-key ordering.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q29").toDF(*_Q29_COLS)
+
+@query(
+    "lit_tpcds_q33_manufact_period_sales",
+    oracle=_tpcds_oracle(
+        "q33",
+        ("store_sales", "catalog_sales", "web_sales", "date_dim",
+         "customer_address", "item"),
+        ("i_manufact_id", "total_sales"),
+    ),
+    tags=("literal", "tpcds", "union", "in-subquery"),
+)
+def lit_tpcds_q33(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q33: three-channel UNION under an IN-subquery manufact
+    # restriction. total_sales sums integer-valued ext_sales_price
+    # (exact); 90 groups at sf0.1 < LIMIT 100, so the count-tied ORDER
+    # never cuts and the compare is a multiset.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q33").toDF(
+        "i_manufact_id", "total_sales"
     )
-    def lit_tpcds_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q8: the zip-prefix INTERSECT machinery (400-literal
-        # IN-list x preferred-customer zips, then substr-2 store match).
-        # sum(ss_net_profit) is exact; store names are a 10-value bounded
-        # vocabulary, so the LIMIT never cuts.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q8").toDF(
-            "s_store_name", "sum_net_profit"
-        )
 
-    _Q25_COLS = ("i_item_id", "i_item_desc", "s_store_id", "s_store_name",
-                 "store_sales_profit", "store_returns_loss",
-                 "catalog_sales_profit")
-
-    @query(
-        "lit_tpcds_q25_buy_return_rebuy_profit",
-        oracle=_tpcds_oracle(
-            "q25",
-            ("store_sales", "store_returns", "catalog_sales", "date_dim",
-             "store", "item"),
-            _Q25_COLS,
-        ),
-        tags=("literal", "tpcds", "chain-join"),
-        order_by="i_item_id, i_item_desc, s_store_id, s_store_name",
+@query(
+    "lit_tpcds_q56_color_period_sales",
+    oracle=_tpcds_oracle(
+        "q56",
+        ("store_sales", "catalog_sales", "web_sales", "date_dim",
+         "customer_address", "item"),
+        ("i_item_id", "total_sales"),
+    ),
+    tags=("literal", "tpcds", "union", "in-subquery"),
+)
+def lit_tpcds_q56(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q56: q33's color-restricted sibling; 79 groups at sf0.1
+    # < LIMIT 100 — no cut, multiset-total.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q56").toDF(
+        "i_item_id", "total_sales"
     )
-    def lit_tpcds_q25(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q25: the buy->return->rebuy same-customer-same-item
-        # chain (store sale, store return, catalog re-purchase) with
-        # exact net_profit/net_loss sums; ORDER BY is the full group key.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q25").toDF(*_Q25_COLS)
 
-    _Q29_COLS = ("i_item_id", "i_item_desc", "s_store_id", "s_store_name",
-                 "store_sales_quantity", "store_returns_quantity",
-                 "catalog_sales_quantity")
+_Q58_COLS = ("item_id", "ss_item_rev", "ss_dev", "cs_item_rev",
+             "cs_dev", "ws_item_rev", "ws_dev", "average")
 
-    @query(
-        "lit_tpcds_q29_buy_return_rebuy_quantity",
-        oracle=_tpcds_oracle(
-            "q29",
-            ("store_sales", "store_returns", "catalog_sales", "date_dim",
-             "store", "item"),
-            _Q29_COLS,
-        ),
-        tags=("literal", "tpcds", "chain-join"),
-        order_by="i_item_id, i_item_desc, s_store_id, s_store_name",
+@query(
+    "lit_tpcds_q58_cross_channel_parity",
+    oracle=_tpcds_oracle(
+        "q58",
+        ("store_sales", "catalog_sales", "web_sales", "date_dim",
+         "item"),
+        _Q58_COLS,
+    ),
+    tags=("literal", "tpcds", "scalar-subquery", "band-compare"),
+    order_by="item_id, ss_item_rev",
+)
+def lit_tpcds_q58(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q58: items whose one-day revenue agrees within 10%
+    # across all three channels. Each rev is an exact sum; the 0.9/1.1
+    # band products and the dev/average divisions are single IEEE ops
+    # on exact doubles — bit-identical. ORDER BY leads with the unique
+    # item_id, so the sf0.1 LIMIT cut is total-ordered.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q58").toDF(*_Q58_COLS)
+
+@query(
+    "lit_tpcds_q60_category_period_sales",
+    oracle=_tpcds_oracle(
+        "q60",
+        ("store_sales", "catalog_sales", "web_sales", "date_dim",
+         "customer_address", "item"),
+        ("i_item_id", "total_sales"),
+    ),
+    tags=("literal", "tpcds", "union", "in-subquery"),
+    order_by="i_item_id, total_sales",
+)
+def lit_tpcds_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q60: q33's category-restricted sibling. ORDER BY leads
+    # with the unique group key i_item_id, so the LIMIT cut at sf0.1
+    # (exactly 100 groups) is a total-order prefix.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q60").toDF(
+        "i_item_id", "total_sales"
     )
-    def lit_tpcds_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q29: q25's INT-quantity sibling over a wider month
-        # window; all-integer outputs, full-group-key ordering.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q29").toDF(*_Q29_COLS)
 
-    @query(
-        "lit_tpcds_q33_manufact_period_sales",
-        oracle=_tpcds_oracle(
-            "q33",
-            ("store_sales", "catalog_sales", "web_sales", "date_dim",
-             "customer_address", "item"),
-            ("i_manufact_id", "total_sales"),
-        ),
-        tags=("literal", "tpcds", "union", "in-subquery"),
+_Q71_COLS = ("brand_id", "brand", "t_hour", "t_minute", "ext_price")
+
+@query(
+    "lit_tpcds_q71_brand_time_of_day",
+    oracle=_tpcds_oracle(
+        "q71",
+        ("item", "web_sales", "catalog_sales", "store_sales",
+         "date_dim", "time_dim"),
+        _Q71_COLS,
+    ),
+    tags=("literal", "tpcds", "union", "time-dim"),
+)
+def lit_tpcds_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q71: three-channel UNION joined to time_dim's meal-time
+    # slices, grouped by brand x minute. Exact integer-valued sums, NO
+    # LIMIT — multiset-deterministic despite ext_price ordering ties.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q71").toDF(*_Q71_COLS)
+
+@query(
+    "lit_tpcds_q93_net_after_returns",
+    oracle=_tpcds_oracle(
+        "q93",
+        ("store_sales", "store_returns", "reason"),
+        ("ss_customer_sk", "sumsales"),
+    ),
+    tags=("literal", "tpcds", "outer-join"),
+    order_by="sumsales, ss_customer_sk",
+)
+def lit_tpcds_q93(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q93: per-customer sales net of reason-28 returns
+    # (LEFT OUTER on (item, ticket)). act_sales multiplies integer
+    # quantities by integer-valued sales_price — exact products, exact
+    # sums; ss_customer_sk breaks sumsales ties, so the LIMIT cut
+    # (exactly 100 at both scales) is total-ordered.
+    return run_literal_sql(spark, sf_dir, "tpcds", "q93").toDF(
+        "ss_customer_sk", "sumsales"
     )
-    def lit_tpcds_q33(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q33: three-channel UNION under an IN-subquery manufact
-        # restriction. total_sales sums integer-valued ext_sales_price
-        # (exact); 90 groups at sf0.1 < LIMIT 100, so the count-tied ORDER
-        # never cuts and the compare is a multiset.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q33").toDF(
-            "i_manufact_id", "total_sales"
-        )
-
-    @query(
-        "lit_tpcds_q56_color_period_sales",
-        oracle=_tpcds_oracle(
-            "q56",
-            ("store_sales", "catalog_sales", "web_sales", "date_dim",
-             "customer_address", "item"),
-            ("i_item_id", "total_sales"),
-        ),
-        tags=("literal", "tpcds", "union", "in-subquery"),
-    )
-    def lit_tpcds_q56(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q56: q33's color-restricted sibling; 79 groups at sf0.1
-        # < LIMIT 100 — no cut, multiset-total.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q56").toDF(
-            "i_item_id", "total_sales"
-        )
-
-    _Q58_COLS = ("item_id", "ss_item_rev", "ss_dev", "cs_item_rev",
-                 "cs_dev", "ws_item_rev", "ws_dev", "average")
-
-    @query(
-        "lit_tpcds_q58_cross_channel_parity",
-        oracle=_tpcds_oracle(
-            "q58",
-            ("store_sales", "catalog_sales", "web_sales", "date_dim",
-             "item"),
-            _Q58_COLS,
-        ),
-        tags=("literal", "tpcds", "scalar-subquery", "band-compare"),
-        order_by="item_id, ss_item_rev",
-    )
-    def lit_tpcds_q58(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q58: items whose one-day revenue agrees within 10%
-        # across all three channels. Each rev is an exact sum; the 0.9/1.1
-        # band products and the dev/average divisions are single IEEE ops
-        # on exact doubles — bit-identical. ORDER BY leads with the unique
-        # item_id, so the sf0.1 LIMIT cut is total-ordered.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q58").toDF(*_Q58_COLS)
-
-    @query(
-        "lit_tpcds_q60_category_period_sales",
-        oracle=_tpcds_oracle(
-            "q60",
-            ("store_sales", "catalog_sales", "web_sales", "date_dim",
-             "customer_address", "item"),
-            ("i_item_id", "total_sales"),
-        ),
-        tags=("literal", "tpcds", "union", "in-subquery"),
-        order_by="i_item_id, total_sales",
-    )
-    def lit_tpcds_q60(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q60: q33's category-restricted sibling. ORDER BY leads
-        # with the unique group key i_item_id, so the LIMIT cut at sf0.1
-        # (exactly 100 groups) is a total-order prefix.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q60").toDF(
-            "i_item_id", "total_sales"
-        )
-
-    _Q71_COLS = ("brand_id", "brand", "t_hour", "t_minute", "ext_price")
-
-    @query(
-        "lit_tpcds_q71_brand_time_of_day",
-        oracle=_tpcds_oracle(
-            "q71",
-            ("item", "web_sales", "catalog_sales", "store_sales",
-             "date_dim", "time_dim"),
-            _Q71_COLS,
-        ),
-        tags=("literal", "tpcds", "union", "time-dim"),
-    )
-    def lit_tpcds_q71(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q71: three-channel UNION joined to time_dim's meal-time
-        # slices, grouped by brand x minute. Exact integer-valued sums, NO
-        # LIMIT — multiset-deterministic despite ext_price ordering ties.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q71").toDF(*_Q71_COLS)
-
-    @query(
-        "lit_tpcds_q93_net_after_returns",
-        oracle=_tpcds_oracle(
-            "q93",
-            ("store_sales", "store_returns", "reason"),
-            ("ss_customer_sk", "sumsales"),
-        ),
-        tags=("literal", "tpcds", "outer-join"),
-        order_by="sumsales, ss_customer_sk",
-    )
-    def lit_tpcds_q93(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q93: per-customer sales net of reason-28 returns
-        # (LEFT OUTER on (item, ticket)). act_sales multiplies integer
-        # quantities by integer-valued sales_price — exact products, exact
-        # sums; ss_customer_sk breaks sumsales ties, so the LIMIT cut
-        # (exactly 100 at both scales) is total-ordered.
-        return run_literal_sql(spark, sf_dir, "tpcds", "q93").toDF(
-            "ss_customer_sk", "sumsales"
-        )
 
 
 _TPCH_Q18_ORACLE = f"""
@@ -1383,42 +1381,41 @@ _SWEEP = [
      "ORDER BY is the full group key (total)"),
 ]
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    def _tables_in_text(qname: str) -> tuple[str, ...]:
-        """Auto-derive the view names a text references (word matches
+def _tables_in_text(qname: str) -> tuple[str, ...]:
+    """Auto-derive the view names a text references (word matches
         outside single-quoted literals), so oracle CTE lists can't drift
         from the text."""
-        text = load_literal_text("tpcds", qname)
-        segments = text.split("'")[::2]
-        body = "\n".join(segments)
-        names = [
-            t for t in TPCDS_TABLE_NAMES
-            if _re.search(rf"\b{t}\b", body)
-        ]
-        return tuple(names)
+    text = load_literal_text("tpcds", qname)
+    segments = text.split("'")[::2]
+    body = "\n".join(segments)
+    names = [
+        t for t in TPCDS_TABLE_NAMES
+        if _re.search(rf"\b{t}\b", body)
+    ]
+    return tuple(names)
 
-    from ..literal_tpcds import TPCDS_SUITE_VIEWS as _TSV
+from ..literal_tpcds import TPCDS_SUITE_VIEWS as _TSV
 
-    TPCDS_TABLE_NAMES = tuple(name for name, _key in _TSV)
+TPCDS_TABLE_NAMES = tuple(name for name, _key in _TSV)
 
-    def _register_sweep_entry(qnum, slug, renames, order_by, note):
-        tables = _tables_in_text(qnum)
+def _register_sweep_entry(qnum, slug, renames, order_by, note):
+    tables = _tables_in_text(qnum)
 
-        def fn(spark: SparkSession, sf_dir: str, _q=qnum, _r=renames):
-            return run_literal_sql(spark, sf_dir, "tpcds", _q).toDF(*_r)
+    def fn(spark: SparkSession, sf_dir: str, _q=qnum, _r=renames):
+        return run_literal_sql(spark, sf_dir, "tpcds", _q).toDF(*_r)
 
-        fn.__name__ = f"lit_tpcds_{qnum}"
-        fn.__doc__ = f"Verbatim TPC-DS {qnum}: {note}."
-        query(
-            f"lit_tpcds_{qnum}_{slug}",
-            oracle=_tpcds_oracle(qnum, tables, renames),
-            tags=("literal", "tpcds", "sweep"),
-            order_by=order_by,
-        )(fn)
+    fn.__name__ = f"lit_tpcds_{qnum}"
+    fn.__doc__ = f"Verbatim TPC-DS {qnum}: {note}."
+    query(
+        f"lit_tpcds_{qnum}_{slug}",
+        oracle=_tpcds_oracle(qnum, tables, renames),
+        tags=("literal", "tpcds", "sweep"),
+        order_by=order_by,
+    )(fn)
 
-    for _row in _SWEEP:
-        _register_sweep_entry(*_row)
+for _row in _SWEEP:
+    _register_sweep_entry(*_row)
 
 
 # ---------------------------------------------------------------------------
@@ -1470,63 +1467,61 @@ def _cb_oracle(
     )
 
 
-if _os.path.isdir(REFERENCE_QUERIES):
-
-    @query(
-        "lit_cb_q12_phrase_counts",
-        oracle=_cb_oracle("q12", ("phrase", "c")),
-        tags=("literal", "clickbench", "count", "sweep"),
+@query(
+    "lit_cb_q12_phrase_counts",
+    oracle=_cb_oracle("q12", ("phrase", "c")),
+    tags=("literal", "clickbench", "count", "sweep"),
+)
+def lit_cb_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q12: per-phrase counts; exactly 10 non-empty phrases at
+    # any SF (bounded vocabulary) == LIMIT 10 — never cuts.
+    return run_literal_sql(spark, sf_dir, "clickbench", "q12").toDF(
+        "phrase", "c"
     )
-    def lit_cb_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q12: per-phrase counts; exactly 10 non-empty phrases at
-        # any SF (bounded vocabulary) == LIMIT 10 — never cuts.
-        return run_literal_sql(spark, sf_dir, "clickbench", "q12").toDF(
-            "phrase", "c"
-        )
 
-    @query(
-        "lit_cb_q21_url_like_phrases",
-        oracle=_cb_oracle("q21", ("phrase", "min_url", "c")),
-        tags=("literal", "clickbench", "like", "sweep"),
+@query(
+    "lit_cb_q21_url_like_phrases",
+    oracle=_cb_oracle("q21", ("phrase", "min_url", "c")),
+    tags=("literal", "clickbench", "like", "sweep"),
+)
+def lit_cb_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q21: URL-LIKE-filtered phrase groups with min(URL); all
+    # 10 phrase groups survive the filter (vocabulary-bounded, == LIMIT).
+    return run_literal_sql(spark, sf_dir, "clickbench", "q21").toDF(
+        "phrase", "min_url", "c"
     )
-    def lit_cb_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q21: URL-LIKE-filtered phrase groups with min(URL); all
-        # 10 phrase groups survive the filter (vocabulary-bounded, == LIMIT).
-        return run_literal_sql(spark, sf_dir, "clickbench", "q21").toDF(
-            "phrase", "min_url", "c"
-        )
 
-    @query(
-        "lit_cb_q22_title_like_phrases",
-        oracle=_cb_oracle(
-            "q22", ("phrase", "min_url", "min_title", "c", "u")
-        ),
-        tags=("literal", "clickbench", "like", "distinct", "sweep"),
+@query(
+    "lit_cb_q22_title_like_phrases",
+    oracle=_cb_oracle(
+        "q22", ("phrase", "min_url", "min_title", "c", "u")
+    ),
+    tags=("literal", "clickbench", "like", "distinct", "sweep"),
+)
+def lit_cb_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q22: Title-LIKE + URL-NOT-LIKE phrase groups with string
+    # extrema and COUNT DISTINCT; vocabulary-bounded below the LIMIT.
+    return run_literal_sql(spark, sf_dir, "clickbench", "q22").toDF(
+        "phrase", "min_url", "min_title", "c", "u"
     )
-    def lit_cb_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q22: Title-LIKE + URL-NOT-LIKE phrase groups with string
-        # extrema and COUNT DISTINCT; vocabulary-bounded below the LIMIT.
-        return run_literal_sql(spark, sf_dir, "clickbench", "q22").toDF(
-            "phrase", "min_url", "min_title", "c", "u"
-        )
 
-    # NB: distinct name from the tpcds q29 entry's _Q29_COLS — the entry
-    # functions read their column tuples LATE-BOUND from module scope, so
-    # re-binding a shared name here silently re-aliases the other entry
-    # (caught by the oracle battery: tpcds q29 got 90 CB names).
-    _CB_Q29_COLS = tuple(f"s{k}" for k in range(90))
+# NB: distinct name from the tpcds q29 entry's _Q29_COLS — the entry
+# functions read their column tuples LATE-BOUND from module scope, so
+# re-binding a shared name here silently re-aliases the other entry
+# (caught by the oracle battery: tpcds q29 got 90 CB names).
+_CB_Q29_COLS = tuple(f"s{k}" for k in range(90))
 
-    @query(
-        "lit_cb_q29_resolution_sum_fan",
-        oracle=_cb_oracle("q29", _CB_Q29_COLS),
-        tags=("literal", "clickbench", "sweep"),
+@query(
+    "lit_cb_q29_resolution_sum_fan",
+    oracle=_cb_oracle("q29", _CB_Q29_COLS),
+    tags=("literal", "clickbench", "sweep"),
+)
+def lit_cb_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q29: SUM(ResolutionWidth + k) for k = 0..89 — ninety
+    # exact integer sums in one row (whole-stage-codegen width stress).
+    return run_literal_sql(spark, sf_dir, "clickbench", "q29").toDF(
+        *_CB_Q29_COLS
     )
-    def lit_cb_q29(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q29: SUM(ResolutionWidth + k) for k = 0..89 — ninety
-        # exact integer sums in one row (whole-stage-codegen width stress).
-        return run_literal_sql(spark, sf_dir, "clickbench", "q29").toDF(
-            *_CB_Q29_COLS
-        )
 
 
 # ---------------------------------------------------------------------------
@@ -1542,30 +1537,29 @@ if _os.path.isdir(REFERENCE_QUERIES):
 # tier) and by the engine-native sql_channel_decline_yoy class.
 # ---------------------------------------------------------------------------
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    _Q74_COLS = ("customer_id", "customer_first_name", "customer_last_name")
+_Q74_COLS = ("customer_id", "customer_first_name", "customer_last_name")
 
-    @query(
-        "lit_tpcds_q74_two_channel_growth",
-        oracle=_tpcds_oracle(
-            "q74",
-            ("store_sales", "web_sales", "customer", "date_dim"),
-            _Q74_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "self-join", "growth-ratio"),
-        order_by="customer_id",
-    )
-    def lit_tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q74 under the -1 year shift: q4's two-channel sibling
-        # (4-alias year_total self-join, web growth beats store growth).
-        # sum(ss_net_paid)/sum(ws_net_paid) are exact integer-valued-double
-        # sums; the ratio compare divides exact doubles identically in both
-        # engines; ORDER BY 1 = the unique customer_id (total cut).
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q74", year_shift=-1
-        ).toDF(*_Q74_COLS)
+@query(
+    "lit_tpcds_q74_two_channel_growth",
+    oracle=_tpcds_oracle(
+        "q74",
+        ("store_sales", "web_sales", "customer", "date_dim"),
+        _Q74_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "self-join", "growth-ratio"),
+    order_by="customer_id",
+)
+def lit_tpcds_q74(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q74 under the -1 year shift: q4's two-channel sibling
+    # (4-alias year_total self-join, web growth beats store growth).
+    # sum(ss_net_paid)/sum(ws_net_paid) are exact integer-valued-double
+    # sums; the ratio compare divides exact doubles identically in both
+    # engines; ORDER BY 1 = the unique customer_id (total cut).
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q74", year_shift=-1
+    ).toDF(*_Q74_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -1578,163 +1572,160 @@ if _os.path.isdir(REFERENCE_QUERIES):
 # shift; value-proven at sf0.1 in the pytest lane).
 # ---------------------------------------------------------------------------
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    _Q10_COLS = ("cd_gender", "cd_marital_status", "cd_education_status",
-                 "cnt1", "cd_purchase_estimate", "cnt2", "cd_credit_rating",
-                 "cnt3", "cd_dep_count", "cnt4", "cd_dep_employed_count",
-                 "cnt5", "cd_dep_college_count", "cnt6")
+_Q10_COLS = ("cd_gender", "cd_marital_status", "cd_education_status",
+             "cnt1", "cd_purchase_estimate", "cnt2", "cd_credit_rating",
+             "cnt3", "cd_dep_count", "cnt4", "cd_dep_employed_count",
+             "cnt5", "cd_dep_college_count", "cnt6")
 
-    @query(
-        "lit_tpcds_q10_county_demographic_profile",
-        oracle=_tpcds_oracle(
-            "q10",
-            ("customer", "customer_address", "customer_demographics",
-             "store_sales", "web_sales", "catalog_sales", "date_dim"),
-            _Q10_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "exists", "mark-join"),
-    )
-    def lit_tpcds_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q10 under -1: EXISTS AND (EXISTS OR EXISTS) double mark
-        # join over county-restricted customers; counts only; 14 groups <
-        # LIMIT at both scales.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q10", year_shift=-1
-        ).toDF(*_Q10_COLS)
+@query(
+    "lit_tpcds_q10_county_demographic_profile",
+    oracle=_tpcds_oracle(
+        "q10",
+        ("customer", "customer_address", "customer_demographics",
+         "store_sales", "web_sales", "catalog_sales", "date_dim"),
+        _Q10_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "exists", "mark-join"),
+)
+def lit_tpcds_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q10 under -1: EXISTS AND (EXISTS OR EXISTS) double mark
+    # join over county-restricted customers; counts only; 14 groups <
+    # LIMIT at both scales.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q10", year_shift=-1
+    ).toDF(*_Q10_COLS)
 
-    _Q11_COLS = ("customer_id", "customer_first_name", "customer_last_name",
-                 "customer_preferred_cust_flag")
+_Q11_COLS = ("customer_id", "customer_first_name", "customer_last_name",
+             "customer_preferred_cust_flag")
 
-    @query(
-        "lit_tpcds_q11_store_web_growth",
-        oracle=_tpcds_oracle(
-            "q11",
-            ("store_sales", "web_sales", "customer", "date_dim"),
-            _Q11_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "self-join", "growth-ratio"),
-        order_by="customer_id",
-    )
-    def lit_tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q11 under -1: q4/q74's list-price-minus-discount
-        # sibling. Exact integer-valued sums, deterministic ratio compare;
-        # ORDER BY leads with the unique customer_id (total sf0.1 cut).
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q11", year_shift=-1
-        ).toDF(*_Q11_COLS)
+@query(
+    "lit_tpcds_q11_store_web_growth",
+    oracle=_tpcds_oracle(
+        "q11",
+        ("store_sales", "web_sales", "customer", "date_dim"),
+        _Q11_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "self-join", "growth-ratio"),
+    order_by="customer_id",
+)
+def lit_tpcds_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q11 under -1: q4/q74's list-price-minus-discount
+    # sibling. Exact integer-valued sums, deterministic ratio compare;
+    # ORDER BY leads with the unique customer_id (total sf0.1 cut).
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q11", year_shift=-1
+    ).toDF(*_Q11_COLS)
 
-    _Q30_COLS = ("c_customer_id", "c_salutation", "c_first_name",
-                 "c_last_name", "c_preferred_cust_flag", "c_birth_day",
-                 "c_birth_month", "c_birth_year", "c_birth_country",
-                 "c_login", "c_email_address", "c_last_review_date_sk",
-                 "ctr_total_return")
+_Q30_COLS = ("c_customer_id", "c_salutation", "c_first_name",
+             "c_last_name", "c_preferred_cust_flag", "c_birth_day",
+             "c_birth_month", "c_birth_year", "c_birth_country",
+             "c_login", "c_email_address", "c_last_review_date_sk",
+             "ctr_total_return")
 
-    @query(
-        "lit_tpcds_q30_web_return_outliers",
-        oracle=_tpcds_oracle(
-            "q30",
-            ("web_returns", "date_dim", "customer_address", "customer"),
-            _Q30_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "correlated-subquery"),
-        order_by="c_customer_id",
-    )
-    def lit_tpcds_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q30 under -1: q81's web sibling (returns above 1.2x the
-        # state average, correlated CTE). Exact sums, exact-sum/count
-        # threshold; c_customer_id is unique; under the LIMIT at both
-        # scales (5 / 49 rows).
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q30", year_shift=-1
-        ).toDF(*_Q30_COLS)
+@query(
+    "lit_tpcds_q30_web_return_outliers",
+    oracle=_tpcds_oracle(
+        "q30",
+        ("web_returns", "date_dim", "customer_address", "customer"),
+        _Q30_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "correlated-subquery"),
+    order_by="c_customer_id",
+)
+def lit_tpcds_q30(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q30 under -1: q81's web sibling (returns above 1.2x the
+    # state average, correlated CTE). Exact sums, exact-sum/count
+    # threshold; c_customer_id is unique; under the LIMIT at both
+    # scales (5 / 49 rows).
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q30", year_shift=-1
+    ).toDF(*_Q30_COLS)
 
-    _Q35_COLS = ("ca_state", "cd_gender", "cd_marital_status",
-                 "cd_dep_count", "cnt1", "min1", "max1", "avg1",
-                 "cd_dep_employed_count", "cnt2", "min2", "max2", "avg2",
-                 "cd_dep_college_count", "cnt3", "min3", "max3", "avg3")
+_Q35_COLS = ("ca_state", "cd_gender", "cd_marital_status",
+             "cd_dep_count", "cnt1", "min1", "max1", "avg1",
+             "cd_dep_employed_count", "cnt2", "min2", "max2", "avg2",
+             "cd_dep_college_count", "cnt3", "min3", "max3", "avg3")
 
-    @query(
-        "lit_tpcds_q35_state_dependent_profile",
-        oracle=_tpcds_oracle(
-            "q35",
-            ("customer", "customer_address", "customer_demographics",
-             "store_sales", "web_sales", "catalog_sales", "date_dim"),
-            _Q35_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "exists", "mark-join"),
-        order_by="ca_state NULLS FIRST, cd_gender NULLS FIRST, "
-                 "cd_marital_status NULLS FIRST, cd_dep_count NULLS FIRST, "
-                 "cd_dep_employed_count NULLS FIRST, "
-                 "cd_dep_college_count NULLS FIRST",
-    )
-    def lit_tpcds_q35(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q35 under -1: q10's state-level sibling with
-        # count/min/max/avg blocks per dependent-count dimension — avg of
-        # ints is exact-sum/count; ORDER BY is the full 6-key group key,
-        # so the sf0.1 LIMIT cut is total-ordered.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q35", year_shift=-1
-        ).toDF(*_Q35_COLS)
+@query(
+    "lit_tpcds_q35_state_dependent_profile",
+    oracle=_tpcds_oracle(
+        "q35",
+        ("customer", "customer_address", "customer_demographics",
+         "store_sales", "web_sales", "catalog_sales", "date_dim"),
+        _Q35_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "exists", "mark-join"),
+    order_by="ca_state NULLS FIRST, cd_gender NULLS FIRST, "
+             "cd_marital_status NULLS FIRST, cd_dep_count NULLS FIRST, "
+             "cd_dep_employed_count NULLS FIRST, "
+             "cd_dep_college_count NULLS FIRST",
+)
+def lit_tpcds_q35(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q35 under -1: q10's state-level sibling with
+    # count/min/max/avg blocks per dependent-count dimension — avg of
+    # ints is exact-sum/count; ORDER BY is the full 6-key group key,
+    # so the sf0.1 LIMIT cut is total-ordered.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q35", year_shift=-1
+    ).toDF(*_Q35_COLS)
 
-    _Q91_COLS = ("call_center", "call_center_name", "manager",
-                 "returns_loss")
+_Q91_COLS = ("call_center", "call_center_name", "manager",
+             "returns_loss")
 
-    @query(
-        "lit_tpcds_q91_call_center_losses",
-        oracle=_tpcds_oracle(
-            "q91",
-            ("call_center", "catalog_returns", "date_dim", "customer",
-             "customer_address", "customer_demographics",
-             "household_demographics"),
-            _Q91_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "star-join"),
-    )
-    def lit_tpcds_q91(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q91 under -1: call-center return losses for a
-        # demographics band. sum(cr_net_loss) is an exact integer-valued
-        # sum; 1 / 6 rows, NO LIMIT — multiset-total despite the
-        # loss-descending ordering.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q91", year_shift=-1
-        ).toDF(*_Q91_COLS)
+@query(
+    "lit_tpcds_q91_call_center_losses",
+    oracle=_tpcds_oracle(
+        "q91",
+        ("call_center", "catalog_returns", "date_dim", "customer",
+         "customer_address", "customer_demographics",
+         "household_demographics"),
+        _Q91_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "star-join"),
+)
+def lit_tpcds_q91(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q91 under -1: call-center return losses for a
+    # demographics band. sum(cr_net_loss) is an exact integer-valued
+    # sum; 1 / 6 rows, NO LIMIT — multiset-total despite the
+    # loss-descending ordering.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q91", year_shift=-1
+    ).toDF(*_Q91_COLS)
 
 
-if _os.path.isdir(REFERENCE_QUERIES):
+_Q59_COLS = ("s_store_name1", "s_store_id1", "d_week_seq1",
+             "sun_sales_ratio", "mon_sales_ratio", "tue_sales_ratio",
+             "wed_sales_ratio", "thu_sales_ratio", "fri_sales_ratio",
+             "sat_sales_ratio")
 
-    _Q59_COLS = ("s_store_name1", "s_store_id1", "d_week_seq1",
-                 "sun_sales_ratio", "mon_sales_ratio", "tue_sales_ratio",
-                 "wed_sales_ratio", "thu_sales_ratio", "fri_sales_ratio",
-                 "sat_sales_ratio")
-
-    @query(
-        "lit_tpcds_q59_weekday_yoy_ratios",
-        oracle=_tpcds_oracle(
-            "q59",
-            ("store_sales", "date_dim", "store"),
-            _Q59_COLS,
-            year_shift=-1,
-        ),
-        tags=("literal", "tpcds", "pivot", "self-join"),
-        order_by="s_store_name1 NULLS FIRST, s_store_id1 NULLS FIRST, "
-                 "d_week_seq1 NULLS FIRST",
-    )
-    def lit_tpcds_q59(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q59 under -1 (initially missed by the zero-shift
-        # screen): the day-of-week pivot with 53-week-lagged YoY ratios —
-        # conditional integer-valued sums per weekday divided across the
-        # year pair (single IEEE divisions of exact doubles, NO ROUND,
-        # unlike the rejected q2 sibling). ORDER BY is the full group key,
-        # so the LIMIT cut at both scales is total-ordered.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds", "q59", year_shift=-1
-        ).toDF(*_Q59_COLS)
+@query(
+    "lit_tpcds_q59_weekday_yoy_ratios",
+    oracle=_tpcds_oracle(
+        "q59",
+        ("store_sales", "date_dim", "store"),
+        _Q59_COLS,
+        year_shift=-1,
+    ),
+    tags=("literal", "tpcds", "pivot", "self-join"),
+    order_by="s_store_name1 NULLS FIRST, s_store_id1 NULLS FIRST, "
+             "d_week_seq1 NULLS FIRST",
+)
+def lit_tpcds_q59(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q59 under -1 (initially missed by the zero-shift
+    # screen): the day-of-week pivot with 53-week-lagged YoY ratios —
+    # conditional integer-valued sums per weekday divided across the
+    # year pair (single IEEE divisions of exact doubles, NO ROUND,
+    # unlike the rejected q2 sibling). ORDER BY is the full group key,
+    # so the LIMIT cut at both scales is total-ordered.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds", "q59", year_shift=-1
+    ).toDF(*_Q59_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -1774,309 +1765,307 @@ def _tpch_exact_oracle(
     return f"WITH {ctes}\nSELECT * FROM (\n{text}\n) AS _r({cols})"
 
 
-if _os.path.isdir(REFERENCE_QUERIES):
+_Q1_COLS = ("l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
+            "sum_disc_price", "sum_charge", "avg_qty", "avg_price",
+            "avg_disc", "count_order")
 
-    _Q1_COLS = ("l_returnflag", "l_linestatus", "sum_qty", "sum_base_price",
-                "sum_disc_price", "sum_charge", "avg_qty", "avg_price",
-                "avg_disc", "count_order")
+@query(
+    "lit_tpch_q1_exact_pricing",
+    oracle=_tpch_exact_oracle("q1", ("lineitem",), _Q1_COLS),
+    tags=("literal", "tpch", "exact"),
+    order_by="l_returnflag, l_linestatus",
+)
+def lit_tpch_q1_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q1 (THE float-sum text): four money sums + three avgs,
+    # all exact under the lane's quantization; avgs are exact sums /
+    # counts (one correctly-rounded division each engine).
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q1").toDF(*_Q1_COLS)
 
-    @query(
-        "lit_tpch_q1_exact_pricing",
-        oracle=_tpch_exact_oracle("q1", ("lineitem",), _Q1_COLS),
-        tags=("literal", "tpch", "exact"),
-        order_by="l_returnflag, l_linestatus",
+@query(
+    "lit_tpch_q5_exact_local_supplier",
+    oracle=_tpch_exact_oracle(
+        "q5",
+        ("customer", "orders", "lineitem", "supplier", "nation", "region"),
+        ("n_name", "revenue"),
+        date_shift_years=2,
+    ),
+    tags=("literal", "tpch", "exact", "join"),
+    order_by="revenue DESC",
+)
+def lit_tpch_q5_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q5 (+2y into the driver's 1995-2001 range): the 6-table
+    # local-supplier join; revenue sums are exact multiples of 2^-7.
+    # No LIMIT — the full ordered group set returns, so ties can't cut.
+    return run_literal_sql(
+        spark, sf_dir, "tpch_exact", "q5", date_shift_years=2
+    ).toDF("n_name", "revenue")
+
+@query(
+    "lit_tpch_q6_exact_forecast",
+    oracle=_tpch_exact_oracle(
+        "q6", ("lineitem",), ("revenue",), date_shift_years=2
+    ),
+    tags=("literal", "tpch", "exact"),
+)
+def lit_tpch_q6_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q6 (+2y): BETWEEN 0.05 AND 0.07 keeps exactly the
+    # source-0.06 rows (quantized 0.0625) — populated AND selective.
+    return run_literal_sql(
+        spark, sf_dir, "tpch_exact", "q6", date_shift_years=2
+    ).toDF("revenue")
+
+@query(
+    "lit_tpch_q14_exact_promo",
+    oracle=_tpch_exact_oracle(
+        "q14", ("lineitem", "part"), ("promo_revenue",)
+    ),
+    tags=("literal", "tpch", "exact"),
+)
+def lit_tpch_q14_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q14 (September 1995 is inside the driver date range):
+    # 100.00 * exact_sum / exact_sum — both engines evaluate the same
+    # two exact doubles through the same left-associated mul/div.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q14").toDF(
+        "promo_revenue"
     )
-    def lit_tpch_q1_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q1 (THE float-sum text): four money sums + three avgs,
-        # all exact under the lane's quantization; avgs are exact sums /
-        # counts (one correctly-rounded division each engine).
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q1").toDF(*_Q1_COLS)
 
-    @query(
-        "lit_tpch_q5_exact_local_supplier",
-        oracle=_tpch_exact_oracle(
-            "q5",
-            ("customer", "orders", "lineitem", "supplier", "nation", "region"),
-            ("n_name", "revenue"),
-            date_shift_years=2,
-        ),
-        tags=("literal", "tpch", "exact", "join"),
-        order_by="revenue DESC",
+@query(
+    "lit_tpch_q17_exact_small_qty",
+    oracle=_tpch_exact_oracle(
+        "q17", ("lineitem", "part"), ("avg_yearly",)
+    ),
+    tags=("literal", "tpch", "exact", "correlated-subquery"),
+)
+def lit_tpch_q17_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q17: correlated scalar AVG per part; the 0.2*avg bound
+    # is one identical multiply of an exact-sum/count double, and the
+    # outer sum is whole-dollar exact / 7.0 (single division).
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q17").toDF(
+        "avg_yearly"
     )
-    def lit_tpch_q5_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q5 (+2y into the driver's 1995-2001 range): the 6-table
-        # local-supplier join; revenue sums are exact multiples of 2^-7.
-        # No LIMIT — the full ordered group set returns, so ties can't cut.
-        return run_literal_sql(
-            spark, sf_dir, "tpch_exact", "q5", date_shift_years=2
-        ).toDF("n_name", "revenue")
 
-    @query(
-        "lit_tpch_q6_exact_forecast",
-        oracle=_tpch_exact_oracle(
-            "q6", ("lineitem",), ("revenue",), date_shift_years=2
-        ),
-        tags=("literal", "tpch", "exact"),
+@query(
+    "lit_tpch_q19_exact_discounted",
+    oracle=_tpch_exact_oracle(
+        "q19", ("lineitem", "part"), ("revenue",)
+    ),
+    tags=("literal", "tpch", "exact", "disjunctive-join"),
+)
+def lit_tpch_q19_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q19: the three-armed disjunctive join predicate (brand x
+    # container x quantity bands); dateless, so no shift needed.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q19").toDF(
+        "revenue"
     )
-    def lit_tpch_q6_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q6 (+2y): BETWEEN 0.05 AND 0.07 keeps exactly the
-        # source-0.06 rows (quantized 0.0625) — populated AND selective.
-        return run_literal_sql(
-            spark, sf_dir, "tpch_exact", "q6", date_shift_years=2
-        ).toDF("revenue")
 
-    @query(
-        "lit_tpch_q14_exact_promo",
-        oracle=_tpch_exact_oracle(
-            "q14", ("lineitem", "part"), ("promo_revenue",)
-        ),
-        tags=("literal", "tpch", "exact"),
+# -- second exact-lane wave: the remaining no-LIMIT float-sum texts --
+
+@query(
+    "lit_tpch_q3_exact_shipping_priority",
+    oracle=_tpch_exact_oracle(
+        "q3",
+        ("customer", "orders", "lineitem"),
+        ("l_orderkey", "revenue", "o_orderdate", "o_shippriority"),
+    ),
+    tags=("literal", "tpch", "exact", "join"),
+    order_by="revenue DESC, o_orderdate",
+)
+def lit_tpch_q3_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q3 (the reference's file carries NO LIMIT, so the full
+    # ordered group set returns — no tie cut); the 1995-03-15 pivot
+    # date sits inside the driver's range unshifted.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q3").toDF(
+        "l_orderkey", "revenue", "o_orderdate", "o_shippriority"
     )
-    def lit_tpch_q14_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q14 (September 1995 is inside the driver date range):
-        # 100.00 * exact_sum / exact_sum — both engines evaluate the same
-        # two exact doubles through the same left-associated mul/div.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q14").toDF(
-            "promo_revenue"
-        )
 
-    @query(
-        "lit_tpch_q17_exact_small_qty",
-        oracle=_tpch_exact_oracle(
-            "q17", ("lineitem", "part"), ("avg_yearly",)
-        ),
-        tags=("literal", "tpch", "exact", "correlated-subquery"),
+@query(
+    "lit_tpch_q7_exact_volume_shipping",
+    oracle=_tpch_exact_oracle(
+        "q7",
+        ("supplier", "lineitem", "orders", "customer", "nation"),
+        ("supp_nation", "cust_nation", "l_year", "revenue"),
+    ),
+    tags=("literal", "tpch", "exact", "join"),
+    order_by="supp_nation, cust_nation, l_year",
+)
+def lit_tpch_q7_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q7: FRANCE<->GERMANY bilateral volumes (the view's
+    # official nation vocabulary on supplier-populated keys), 1995-1996
+    # dates unshifted; EXTRACT(YEAR) compares as canonical ints.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q7").toDF(
+        "supp_nation", "cust_nation", "l_year", "revenue"
     )
-    def lit_tpch_q17_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q17: correlated scalar AVG per part; the 0.2*avg bound
-        # is one identical multiply of an exact-sum/count double, and the
-        # outer sum is whole-dollar exact / 7.0 (single division).
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q17").toDF(
-            "avg_yearly"
-        )
 
-    @query(
-        "lit_tpch_q19_exact_discounted",
-        oracle=_tpch_exact_oracle(
-            "q19", ("lineitem", "part"), ("revenue",)
-        ),
-        tags=("literal", "tpch", "exact", "disjunctive-join"),
+@query(
+    "lit_tpch_q8_exact_market_share",
+    oracle=_tpch_exact_oracle(
+        "q8",
+        ("part", "supplier", "lineitem", "orders", "customer",
+         "nation", "region"),
+        ("o_year", "mkt_share"),
+    ),
+    tags=("literal", "tpch", "exact", "join"),
+    order_by="o_year",
+)
+def lit_tpch_q8_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q8: the 8-table mkt-share join; populated through the
+    # exact lane's 1-in-7 'ECONOMY ANODIZED STEEL' p_type slice;
+    # mkt_share = exact-sum / exact-sum, one identical division.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q8").toDF(
+        "o_year", "mkt_share"
     )
-    def lit_tpch_q19_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q19: the three-armed disjunctive join predicate (brand x
-        # container x quantity bands); dateless, so no shift needed.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q19").toDF(
-            "revenue"
-        )
 
-    # -- second exact-lane wave: the remaining no-LIMIT float-sum texts --
-
-    @query(
-        "lit_tpch_q3_exact_shipping_priority",
-        oracle=_tpch_exact_oracle(
-            "q3",
-            ("customer", "orders", "lineitem"),
-            ("l_orderkey", "revenue", "o_orderdate", "o_shippriority"),
-        ),
-        tags=("literal", "tpch", "exact", "join"),
-        order_by="revenue DESC, o_orderdate",
+@query(
+    "lit_tpch_q9_exact_product_profit",
+    oracle=_tpch_exact_oracle(
+        "q9",
+        ("part", "supplier", "lineitem", "partsupp", "orders", "nation"),
+        ("nation", "o_year", "sum_profit"),
+    ),
+    tags=("literal", "tpch", "exact", "join"),
+    order_by="nation, o_year DESC",
+)
+def lit_tpch_q9_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q9: profit = 2^-7-exact revenue minus integer
+    # supplycost*quantity — every amount an exact multiple of 2^-7;
+    # '%green%' selects through the color-prefixed p_name.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q9").toDF(
+        "nation", "o_year", "sum_profit"
     )
-    def lit_tpch_q3_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q3 (the reference's file carries NO LIMIT, so the full
-        # ordered group set returns — no tie cut); the 1995-03-15 pivot
-        # date sits inside the driver's range unshifted.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q3").toDF(
-            "l_orderkey", "revenue", "o_orderdate", "o_shippriority"
-        )
 
-    @query(
-        "lit_tpch_q7_exact_volume_shipping",
-        oracle=_tpch_exact_oracle(
-            "q7",
-            ("supplier", "lineitem", "orders", "customer", "nation"),
-            ("supp_nation", "cust_nation", "l_year", "revenue"),
-        ),
-        tags=("literal", "tpch", "exact", "join"),
-        order_by="supp_nation, cust_nation, l_year",
+_TPCH_Q10_COLS = ("c_custkey", "c_name", "revenue", "c_acctbal", "n_name",
+             "c_address", "c_phone", "c_comment")
+
+@query(
+    "lit_tpch_q10_exact_returned_items",
+    oracle=_tpch_exact_oracle(
+        "q10",
+        ("customer", "orders", "lineitem", "nation"),
+        _TPCH_Q10_COLS,
+        date_shift_years=2,
+    ),
+    tags=("literal", "tpch", "exact", "join"),
+    order_by="revenue DESC",
+)
+def lit_tpch_q10_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q10 (+2y): returned-item revenue per customer; the
+    # reference file carries NO LIMIT, so the ordered set is complete.
+    return run_literal_sql(
+        spark, sf_dir, "tpch_exact", "q10", date_shift_years=2
+    ).toDF(*_TPCH_Q10_COLS)
+
+@query(
+    "lit_tpch_q11_exact_important_stock",
+    oracle=_tpch_exact_oracle(
+        "q11", ("partsupp", "supplier", "nation"), ("ps_partkey", "value")
+    ),
+    tags=("literal", "tpch", "exact", "having"),
+    order_by="value DESC",
+)
+def lit_tpch_q11_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q11: all-integer supplycost*availqty sums; the 0.0001
+    # threshold multiple is one identical multiply of the same exact
+    # total in both engines.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q11").toDF(
+        "ps_partkey", "value"
     )
-    def lit_tpch_q7_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q7: FRANCE<->GERMANY bilateral volumes (the view's
-        # official nation vocabulary on supplier-populated keys), 1995-1996
-        # dates unshifted; EXTRACT(YEAR) compares as canonical ints.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q7").toDF(
-            "supp_nation", "cust_nation", "l_year", "revenue"
-        )
 
-    @query(
-        "lit_tpch_q8_exact_market_share",
-        oracle=_tpch_exact_oracle(
-            "q8",
-            ("part", "supplier", "lineitem", "orders", "customer",
-             "nation", "region"),
-            ("o_year", "mkt_share"),
-        ),
-        tags=("literal", "tpch", "exact", "join"),
-        order_by="o_year",
+@query(
+    "lit_tpch_q20_exact_potential_promotion",
+    oracle=_tpch_exact_oracle(
+        "q20",
+        ("supplier", "nation", "partsupp", "part", "lineitem"),
+        ("s_name", "s_address"),
+        date_shift_years=2,
+    ),
+    tags=("literal", "tpch", "exact", "nested-in"),
+    order_by="s_name",
+)
+def lit_tpch_q20_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q20 (+2y): triple-nested IN with the 0.5*sum(l_quantity)
+    # availability bound (integer quantities — exact halves); 'forest%'
+    # selects through the color-prefixed p_name; CANADA is a
+    # supplier-populated nation key.
+    return run_literal_sql(
+        spark, sf_dir, "tpch_exact", "q20", date_shift_years=2
+    ).toDF("s_name", "s_address")
+
+@query(
+    "lit_tpch_q22_exact_global_sales_opp",
+    oracle=_tpch_exact_oracle(
+        "q22", ("customer", "orders"), ("cntrycode", "numcust", "totacctbal")
+    ),
+    tags=("literal", "tpch", "exact", "anti-join"),
+    order_by="cntrycode",
+)
+def lit_tpch_q22_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q22: whole-dollar acctbal sums are exact; the avg bound
+    # is one identical exact-sum/count division. Selection profile
+    # matches the engine-native tpch_q22: 0 rows at sf0.01 (every
+    # country-coded customer has orders there), populated at sf0.1 —
+    # the multi-scale validate + vacuity escalation prove population.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q22").toDF(
+        "cntrycode", "numcust", "totacctbal"
     )
-    def lit_tpch_q8_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q8: the 8-table mkt-share join; populated through the
-        # exact lane's 1-in-7 'ECONOMY ANODIZED STEEL' p_type slice;
-        # mkt_share = exact-sum / exact-sum, one identical division.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q8").toDF(
-            "o_year", "mkt_share"
-        )
 
-    @query(
-        "lit_tpch_q9_exact_product_profit",
-        oracle=_tpch_exact_oracle(
-            "q9",
-            ("part", "supplier", "lineitem", "partsupp", "orders", "nation"),
-            ("nation", "o_year", "sum_profit"),
-        ),
-        tags=("literal", "tpch", "exact", "join"),
-        order_by="nation, o_year DESC",
-    )
-    def lit_tpch_q9_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q9: profit = 2^-7-exact revenue minus integer
-        # supplycost*quantity — every amount an exact multiple of 2^-7;
-        # '%green%' selects through the color-prefixed p_name.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q9").toDF(
-            "nation", "o_year", "sum_profit"
-        )
-
-    _TPCH_Q10_COLS = ("c_custkey", "c_name", "revenue", "c_acctbal", "n_name",
-                 "c_address", "c_phone", "c_comment")
-
-    @query(
-        "lit_tpch_q10_exact_returned_items",
-        oracle=_tpch_exact_oracle(
-            "q10",
-            ("customer", "orders", "lineitem", "nation"),
-            _TPCH_Q10_COLS,
-            date_shift_years=2,
-        ),
-        tags=("literal", "tpch", "exact", "join"),
-        order_by="revenue DESC",
-    )
-    def lit_tpch_q10_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q10 (+2y): returned-item revenue per customer; the
-        # reference file carries NO LIMIT, so the ordered set is complete.
-        return run_literal_sql(
-            spark, sf_dir, "tpch_exact", "q10", date_shift_years=2
-        ).toDF(*_TPCH_Q10_COLS)
-
-    @query(
-        "lit_tpch_q11_exact_important_stock",
-        oracle=_tpch_exact_oracle(
-            "q11", ("partsupp", "supplier", "nation"), ("ps_partkey", "value")
-        ),
-        tags=("literal", "tpch", "exact", "having"),
-        order_by="value DESC",
-    )
-    def lit_tpch_q11_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q11: all-integer supplycost*availqty sums; the 0.0001
-        # threshold multiple is one identical multiply of the same exact
-        # total in both engines.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q11").toDF(
-            "ps_partkey", "value"
-        )
-
-    @query(
-        "lit_tpch_q20_exact_potential_promotion",
-        oracle=_tpch_exact_oracle(
-            "q20",
-            ("supplier", "nation", "partsupp", "part", "lineitem"),
-            ("s_name", "s_address"),
-            date_shift_years=2,
-        ),
-        tags=("literal", "tpch", "exact", "nested-in"),
-        order_by="s_name",
-    )
-    def lit_tpch_q20_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q20 (+2y): triple-nested IN with the 0.5*sum(l_quantity)
-        # availability bound (integer quantities — exact halves); 'forest%'
-        # selects through the color-prefixed p_name; CANADA is a
-        # supplier-populated nation key.
-        return run_literal_sql(
-            spark, sf_dir, "tpch_exact", "q20", date_shift_years=2
-        ).toDF("s_name", "s_address")
-
-    @query(
-        "lit_tpch_q22_exact_global_sales_opp",
-        oracle=_tpch_exact_oracle(
-            "q22", ("customer", "orders"), ("cntrycode", "numcust", "totacctbal")
-        ),
-        tags=("literal", "tpch", "exact", "anti-join"),
-        order_by="cntrycode",
-    )
-    def lit_tpch_q22_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q22: whole-dollar acctbal sums are exact; the avg bound
-        # is one identical exact-sum/count division. Selection profile
-        # matches the engine-native tpch_q22: 0 rows at sf0.01 (every
-        # country-coded customer has orders there), populated at sf0.1 —
-        # the multi-scale validate + vacuity escalation prove population.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q22").toDF(
-            "cntrycode", "numcust", "totacctbal"
-        )
-
-    def _q15_oracle() -> str:
-        """q15 is a CREATE VIEW / SELECT / DROP VIEW script: splice the
+def _q15_oracle() -> str:
+    """q15 is a CREATE VIEW / SELECT / DROP VIEW script: splice the
         view body in as a named-column CTE (revenue0(supplier_no,
         total_revenue)) alongside the lit_ view CTEs, then run the SELECT
         verbatim — statement-for-statement what both engines execute."""
-        from ..literal import load_literal_statements
+    from ..literal import load_literal_statements
 
-        stmts = load_literal_statements("tpch", "q15")
-        create, select = stmts[0], stmts[1]
-        m = _re.search(r"(?is)create\s+view\s+revenue0\s*\(([^)]*)\)\s+as\s+(.*)",
-                       create)
-        cols, body = m.group(1), m.group(2)
-        for t in ("lineitem", "supplier"):
-            pat = _re.compile(rf"\b{t}\b")
-            body = pat.sub(f"lit_{t}", body)
-            select = pat.sub(f"lit_{t}", select)
-        ctes = ",\n".join(
-            f"lit_{n} AS ({_EXACT_VIEW_DEFS[n]})" for n in ("lineitem", "supplier")
-        )
-        return (f"WITH {ctes},\nrevenue0({cols}) AS ({body})\n"
-                f"SELECT * FROM (\n{select}\n) AS _r(s_suppkey, s_name, "
-                f"s_address, s_phone, total_revenue)")
-
-    @query(
-        "lit_tpch_q15_exact_top_supplier",
-        oracle=_q15_oracle(),
-        tags=("literal", "tpch", "exact", "view-script"),
-        order_by="s_suppkey",
+    stmts = load_literal_statements("tpch", "q15")
+    create, select = stmts[0], stmts[1]
+    m = _re.search(r"(?is)create\s+view\s+revenue0\s*\(([^)]*)\)\s+as\s+(.*)",
+                   create)
+    cols, body = m.group(1), m.group(2)
+    for t in ("lineitem", "supplier"):
+        pat = _re.compile(rf"\b{t}\b")
+        body = pat.sub(f"lit_{t}", body)
+        select = pat.sub(f"lit_{t}", select)
+    ctes = ",\n".join(
+        f"lit_{n} AS ({_EXACT_VIEW_DEFS[n]})" for n in ("lineitem", "supplier")
     )
-    def lit_tpch_q15_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q15 SCRIPT (create view / select / drop view — the one
-        # multi-statement TPC-H text, exercised statement-for-statement
-        # through spark.sql's temp-view rewrite); revenue ties at max()
-        # would return multiple rows identically in both engines because
-        # the 2^-7-exact sums compare exactly.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q15").toDF(
-            "s_suppkey", "s_name", "s_address", "s_phone", "total_revenue"
-        )
+    return (f"WITH {ctes},\nrevenue0({cols}) AS ({body})\n"
+            f"SELECT * FROM (\n{select}\n) AS _r(s_suppkey, s_name, "
+            f"s_address, s_phone, total_revenue)")
 
-    _TPCH_Q2_COLS = ("s_acctbal", "s_name", "n_name", "p_partkey", "p_mfgr",
-                "s_address", "s_phone", "s_comment")
-
-    @query(
-        "lit_tpch_q2_exact_min_cost_supplier",
-        oracle=_tpch_exact_oracle(
-            "q2", ("part", "supplier", "partsupp", "nation", "region"),
-            _TPCH_Q2_COLS,
-        ),
-        tags=("literal", "tpch", "exact", "correlated-subquery"),
-        order_by="s_acctbal DESC, n_name, s_name, p_partkey",
+@query(
+    "lit_tpch_q15_exact_top_supplier",
+    oracle=_q15_oracle(),
+    tags=("literal", "tpch", "exact", "view-script"),
+    order_by="s_suppkey",
+)
+def lit_tpch_q15_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q15 SCRIPT (create view / select / drop view — the one
+    # multi-statement TPC-H text, exercised statement-for-statement
+    # through spark.sql's temp-view rewrite); revenue ties at max()
+    # would return multiple rows identically in both engines because
+    # the 2^-7-exact sums compare exactly.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q15").toDF(
+        "s_suppkey", "s_name", "s_address", "s_phone", "total_revenue"
     )
-    def lit_tpch_q2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q2 (the last unpromoted TPC-H text): correlated
-        # min-supplycost subquery over whole-number costs (exact equality);
-        # populated through the exact lane's '%BRASS'-suffixed p_type slice
-        # (p_size = 15 x that slice is non-empty at every fixture scale);
-        # the reference file carries NO LIMIT, so no tie cut exists.
-        return run_literal_sql(spark, sf_dir, "tpch_exact", "q2").toDF(*_TPCH_Q2_COLS)
+
+_TPCH_Q2_COLS = ("s_acctbal", "s_name", "n_name", "p_partkey", "p_mfgr",
+            "s_address", "s_phone", "s_comment")
+
+@query(
+    "lit_tpch_q2_exact_min_cost_supplier",
+    oracle=_tpch_exact_oracle(
+        "q2", ("part", "supplier", "partsupp", "nation", "region"),
+        _TPCH_Q2_COLS,
+    ),
+    tags=("literal", "tpch", "exact", "correlated-subquery"),
+    order_by="s_acctbal DESC, n_name, s_name, p_partkey",
+)
+def lit_tpch_q2_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q2 (the last unpromoted TPC-H text): correlated
+    # min-supplycost subquery over whole-number costs (exact equality);
+    # populated through the exact lane's '%BRASS'-suffixed p_type slice
+    # (p_size = 15 x that slice is non-empty at every fixture scale);
+    # the reference file carries NO LIMIT, so no tie cut exists.
+    return run_literal_sql(spark, sf_dir, "tpch_exact", "q2").toDF(*_TPCH_Q2_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -2213,199 +2202,198 @@ _R11_WAVE = [
      "was sf0.1-only); <= 8 manufact-band items, never cuts"),
 ]
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    def _register_r11_entry(qnum, suite, yshift, slug, renames, order_by, note):
-        tables = _tables_in_text(qnum)
+def _register_r11_entry(qnum, suite, yshift, slug, renames, order_by, note):
+    tables = _tables_in_text(qnum)
 
-        def fn(spark: SparkSession, sf_dir: str, _q=qnum, _s=suite,
-               _y=yshift, _r=renames):
-            return run_literal_sql(
-                spark, sf_dir, _s, _q, year_shift=_y
-            ).toDF(*_r)
-
-        fn.__name__ = f"lit_tpcds_{qnum}"
-        fn.__doc__ = f"Verbatim TPC-DS {qnum} ({suite} lane): {note}."
-        query(
-            f"lit_tpcds_{qnum}_{slug}",
-            oracle=_tpcds_oracle(
-                qnum, tables, renames, year_shift=yshift, suite=suite
-            ),
-            tags=("literal", "tpcds", "r11", suite),
-            order_by=order_by,
-        )(fn)
-
-    for _row in _R11_WAVE:
-        _register_r11_entry(*_row)
-
-    # ---------------------------------------------------------------------
-    # Round-12: q64 promoted via the 'tpcds_dense64' taming sub-lane (r11
-    # VERDICT item 2). The r11 note above stands for the PLAIN dense lane
-    # (1.70 M rows / 164 s at sf0.1 — unusable); dense64 keeps every
-    # semantic the text exercises (cd1<>cd2 partner shift, cs_ui partial-
-    # refund HAVING, cross-year same-store match) and folds ONLY the
-    # cross_sales GROUP BY's customer-side cardinality (addresses -> 2
-    # keys, first-sale/shipto dates -> 2 values, one fact-reachable item
-    # passing the 6-color filter): 13/83/86 rows at the three scales,
-    # screened bit-exact. No LIMIT in the text, so no cut hazard; measures
-    # are FLOOR-integer-valued double sums (order-exact).
-    # ---------------------------------------------------------------------
-
-    _Q64_COLS = (
-        "product_name", "store_name", "store_zip", "b_street_number",
-        "b_street_name", "b_city", "b_zip", "c_street_number",
-        "c_street_name", "c_city", "c_zip", "cs1syear", "cs1cnt",
-        "s11", "s21", "s31", "s12", "s22", "s32", "syear", "cnt",
-    )
-
-    # ---------------------------------------------------------------------
-    # Round-12: the TICKET lane ('tpcds_dense34') promotes q34/q46/q68 —
-    # the last members of the r9 "ticket-size-bound" rejection class. Two
-    # targeted folds (literal_tpcds dense34 notes): store_sales lines
-    # replicate x4 so q34's cnt BETWEEN 15 AND 20 lands on 4-5-line
-    # tickets, and ss_addr_sk becomes a PER-ORDER key so q46/q68's
-    # current_addr.ca_city <> bought_city — structurally FALSE in every
-    # prior lane (purchase addr == customer's current addr by construction)
-    # — genuinely fires. All three ORDER BYs contain ss_ticket_number,
-    # which is unique per output row (one group per ticket: customer, addr
-    # and city are per-order constants), so the sorts are total and the
-    # q46/q68 LIMIT-100 cuts are deterministic. Measures are FLOOR-integer
-    # double sums (order-exact); q34's ratio filter (hd_dep*1.000)/hd_veh
-    # > 1.2 has no exact-boundary members (veh in {3,4} -> 1.2*veh is
-    # never an integer).
-    # ---------------------------------------------------------------------
-
-    _DENSE34 = [
-        ("q34", "bulk_ticket_customers",
-         ("c_last_name", "c_first_name", "c_salutation",
-          "c_preferred_cust_flag", "ss_ticket_number", "cnt"),
-         "c_last_name NULLS FIRST, c_first_name NULLS FIRST, "
-         "c_salutation NULLS FIRST, c_preferred_cust_flag DESC NULLS FIRST, "
-         "ss_ticket_number NULLS FIRST",
-         "15-20-line tickets on month-edge shopping days"),
-        ("q46", "out_of_town_ticket_profit",
-         ("c_last_name", "c_first_name", "ca_city", "bought_city",
-          "ss_ticket_number", "amt", "profit"),
-         "c_last_name NULLS FIRST, c_first_name NULLS FIRST, "
-         "ca_city NULLS FIRST, bought_city NULLS FIRST, "
-         "ss_ticket_number NULLS FIRST",
-         "weekend tickets bought outside the customer's current city"),
-        ("q68", "out_of_town_ticket_prices",
-         ("c_last_name", "c_first_name", "ca_city", "bought_city",
-          "ss_ticket_number", "extended_price", "extended_tax",
-          "list_price"),
-         "c_last_name NULLS FIRST, ss_ticket_number NULLS FIRST",
-         "month-start tickets, price/tax/list sums, out-of-town filter"),
-        # q41 rides the same lane via an ITEM plant (the ticket folds don't
-        # touch item, and q34/q46/q68 never read it): the 1-in-10 part
-        # slice carries one of the text's exact attribute quadruples
-        # (Women/powder/Ounce/medium), so the correlated manufact count
-        # fires for the five planted manufact classes. Populates at both
-        # gate scales (16 rows at sf0.01, the LIMIT-100 cut at sf0.1);
-        # ORDER BY = the UNIQUE product_name, so the cut is total. This
-        # was the last sf0.1-only-tier text.
-        ("q41", "manufact_attribute_items",
-         ("i_product_name",),
-         "i_product_name",
-         "correlated same-manufact attribute-combo count over a price band"),
-    ]
-
-    def _register_dense34_entry(qnum, slug, renames, order_by, note):
-        def fn(spark: SparkSession, sf_dir: str, _q=qnum, _r=renames):
-            return run_literal_sql(
-                spark, sf_dir, "tpcds_dense34", _q
-            ).toDF(*_r)
-
-        fn.__name__ = f"lit_tpcds_{qnum}"
-        fn.__doc__ = f"Verbatim TPC-DS {qnum} (tpcds_dense34 lane): {note}."
-        query(
-            f"lit_tpcds_{qnum}_{slug}",
-            oracle=_tpcds_oracle(
-                qnum, _tables_in_text(qnum), renames, suite="tpcds_dense34"
-            ),
-            tags=("literal", "tpcds", "r12", "tpcds_dense34"),
-            order_by=order_by,
-        )(fn)
-
-    for _row in _DENSE34:
-        _register_dense34_entry(*_row)
-
-    # q72 (r12): the r9 probe-OOM rejection closed by the dense34 grid cap
-    # (literal_tpcds _GRID notes): the unbounded inventory grid (parts x 5
-    # warehouses x 417 weeks — 417M rows on the 10x layout) shrinks to 500
-    # parts x 5 x 209 weeks = ~0.5M rows FLAT at any scale; the dense fact
-    # item fold (keys 1..20) means every fact join was always inside the
-    # cap, so q72's week-matched low-inventory semantics are untouched.
-    # ORDER BY = total_cnt + the FULL group key, so the LIMIT-100 cut is
-    # total. DuckDB's wall on this join is ~26 s at sf0.1 (2.6 s at the
-    # sf0.01 gate scale) — the known-heaviest oracle; the default
-    # materialization set (inventory/time_dim/hd) measured fastest
-    # (all-inline and all-materialized are 5-10x worse).
-    _Q72_COLS = ("i_item_desc", "w_warehouse_name", "d_week_seq",
-                 "no_promo", "promo", "total_cnt")
-
-    @query(
-        "lit_tpcds_q72_low_inventory_promo_split",
-        oracle=_tpcds_oracle(
-            "q72", _tables_in_text("q72"), _Q72_COLS, suite="tpcds_dense34"
-        ),
-        tags=("literal", "tpcds", "r12", "tpcds_dense34", "inventory"),
-        order_by="total_cnt DESC NULLS FIRST, i_item_desc NULLS FIRST, "
-                 "w_warehouse_name NULLS FIRST, d_week_seq NULLS FIRST",
-    )
-    def lit_tpcds_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q72: catalog sales x week-matched inventory shortfall
-        # with demographics filters and a promo/no-promo split.
+    def fn(spark: SparkSession, sf_dir: str, _q=qnum, _s=suite,
+           _y=yshift, _r=renames):
         return run_literal_sql(
-            spark, sf_dir, "tpcds_dense34", "q72"
-        ).toDF(*_Q72_COLS)
+            spark, sf_dir, _s, _q, year_shift=_y
+        ).toDF(*_r)
 
-    # q75 (r12): the r9 ANSI-transient-zero-divisor rejection closed by a
-    # dense34 fold — returns in this lane restock HALF the units
-    # (return_quantity = l_quantity DIV 2), so every net unit count is
-    # >= ceil(q/2) >= 1 and the text's CAST(cnt)/CAST(prev_cnt) < 0.9
-    # predicate can never meet a zero divisor in EITHER engine — the
-    # Spark-ANSI-throws-where-DuckDB's-join-order-never-evaluates edge is
-    # structurally gone (return AMOUNTS stay real, so net dollars still
-    # exercise the COALESCE/LEFT JOIN path). Year pair shifted -1 onto the
-    # populated horizon (the lit_tpch_*_shifted contract). 2 rows at every
-    # scale — the >10 % year-over-year unit decline is rare in uniform
-    # driver data — so the LIMIT-100 cut never fires (no tie hazard).
-    _Q75_COLS = ("prev_year", "year_", "i_brand_id", "i_class_id",
-                 "i_category_id", "i_manufact_id", "prev_yr_cnt",
-                 "curr_yr_cnt", "sales_cnt_diff", "sales_amt_diff")
-
-    @query(
-        "lit_tpcds_q75_brand_unit_decline",
+    fn.__name__ = f"lit_tpcds_{qnum}"
+    fn.__doc__ = f"Verbatim TPC-DS {qnum} ({suite} lane): {note}."
+    query(
+        f"lit_tpcds_{qnum}_{slug}",
         oracle=_tpcds_oracle(
-            "q75", _tables_in_text("q75"), _Q75_COLS, year_shift=-1,
-            suite="tpcds_dense34",
+            qnum, tables, renames, year_shift=yshift, suite=suite
         ),
-        tags=("literal", "tpcds", "r12", "tpcds_dense34", "three-channel"),
-    )
-    def lit_tpcds_q75(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q75 under -1: three-channel net-of-returns UNION,
-        # year-over-year brand-tuple self-join, decimal-ratio decline
-        # filter.
-        return run_literal_sql(
-            spark, sf_dir, "tpcds_dense34", "q75", year_shift=-1
-        ).toDF(*_Q75_COLS)
+        tags=("literal", "tpcds", "r11", suite),
+        order_by=order_by,
+    )(fn)
 
-    @query(
-        "lit_tpcds_q64_cross_year_store_sales",
-        oracle=_tpcds_oracle(
-            "q64", _tables_in_text("q64"), _Q64_COLS, suite="tpcds_dense64",
-            materialize=frozenset(),
-        ),
-        tags=("literal", "tpcds", "r12", "tpcds_dense64", "self-join"),
-    )
-    def lit_tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # Verbatim q64 over the dense64 lane: cs_ui partial-refund HAVING,
-        # 18-table cross_sales star, 1999/2000 same-item-same-store
-        # self-join with cd1 <> cd2 and cnt ordering.
+for _row in _R11_WAVE:
+    _register_r11_entry(*_row)
+
+# ---------------------------------------------------------------------
+# Round-12: q64 promoted via the 'tpcds_dense64' taming sub-lane (r11
+# VERDICT item 2). The r11 note above stands for the PLAIN dense lane
+# (1.70 M rows / 164 s at sf0.1 — unusable); dense64 keeps every
+# semantic the text exercises (cd1<>cd2 partner shift, cs_ui partial-
+# refund HAVING, cross-year same-store match) and folds ONLY the
+# cross_sales GROUP BY's customer-side cardinality (addresses -> 2
+# keys, first-sale/shipto dates -> 2 values, one fact-reachable item
+# passing the 6-color filter): 13/83/86 rows at the three scales,
+# screened bit-exact. No LIMIT in the text, so no cut hazard; measures
+# are FLOOR-integer-valued double sums (order-exact).
+# ---------------------------------------------------------------------
+
+_Q64_COLS = (
+    "product_name", "store_name", "store_zip", "b_street_number",
+    "b_street_name", "b_city", "b_zip", "c_street_number",
+    "c_street_name", "c_city", "c_zip", "cs1syear", "cs1cnt",
+    "s11", "s21", "s31", "s12", "s22", "s32", "syear", "cnt",
+)
+
+# ---------------------------------------------------------------------
+# Round-12: the TICKET lane ('tpcds_dense34') promotes q34/q46/q68 —
+# the last members of the r9 "ticket-size-bound" rejection class. Two
+# targeted folds (literal_tpcds dense34 notes): store_sales lines
+# replicate x4 so q34's cnt BETWEEN 15 AND 20 lands on 4-5-line
+# tickets, and ss_addr_sk becomes a PER-ORDER key so q46/q68's
+# current_addr.ca_city <> bought_city — structurally FALSE in every
+# prior lane (purchase addr == customer's current addr by construction)
+# — genuinely fires. All three ORDER BYs contain ss_ticket_number,
+# which is unique per output row (one group per ticket: customer, addr
+# and city are per-order constants), so the sorts are total and the
+# q46/q68 LIMIT-100 cuts are deterministic. Measures are FLOOR-integer
+# double sums (order-exact); q34's ratio filter (hd_dep*1.000)/hd_veh
+# > 1.2 has no exact-boundary members (veh in {3,4} -> 1.2*veh is
+# never an integer).
+# ---------------------------------------------------------------------
+
+_DENSE34 = [
+    ("q34", "bulk_ticket_customers",
+     ("c_last_name", "c_first_name", "c_salutation",
+      "c_preferred_cust_flag", "ss_ticket_number", "cnt"),
+     "c_last_name NULLS FIRST, c_first_name NULLS FIRST, "
+     "c_salutation NULLS FIRST, c_preferred_cust_flag DESC NULLS FIRST, "
+     "ss_ticket_number NULLS FIRST",
+     "15-20-line tickets on month-edge shopping days"),
+    ("q46", "out_of_town_ticket_profit",
+     ("c_last_name", "c_first_name", "ca_city", "bought_city",
+      "ss_ticket_number", "amt", "profit"),
+     "c_last_name NULLS FIRST, c_first_name NULLS FIRST, "
+     "ca_city NULLS FIRST, bought_city NULLS FIRST, "
+     "ss_ticket_number NULLS FIRST",
+     "weekend tickets bought outside the customer's current city"),
+    ("q68", "out_of_town_ticket_prices",
+     ("c_last_name", "c_first_name", "ca_city", "bought_city",
+      "ss_ticket_number", "extended_price", "extended_tax",
+      "list_price"),
+     "c_last_name NULLS FIRST, ss_ticket_number NULLS FIRST",
+     "month-start tickets, price/tax/list sums, out-of-town filter"),
+    # q41 rides the same lane via an ITEM plant (the ticket folds don't
+    # touch item, and q34/q46/q68 never read it): the 1-in-10 part
+    # slice carries one of the text's exact attribute quadruples
+    # (Women/powder/Ounce/medium), so the correlated manufact count
+    # fires for the five planted manufact classes. Populates at both
+    # gate scales (16 rows at sf0.01, the LIMIT-100 cut at sf0.1);
+    # ORDER BY = the UNIQUE product_name, so the cut is total. This
+    # was the last sf0.1-only-tier text.
+    ("q41", "manufact_attribute_items",
+     ("i_product_name",),
+     "i_product_name",
+     "correlated same-manufact attribute-combo count over a price band"),
+]
+
+def _register_dense34_entry(qnum, slug, renames, order_by, note):
+    def fn(spark: SparkSession, sf_dir: str, _q=qnum, _r=renames):
         return run_literal_sql(
-            spark, sf_dir, "tpcds_dense64", "q64"
-        ).toDF(*_Q64_COLS)
+            spark, sf_dir, "tpcds_dense34", _q
+        ).toDF(*_r)
+
+    fn.__name__ = f"lit_tpcds_{qnum}"
+    fn.__doc__ = f"Verbatim TPC-DS {qnum} (tpcds_dense34 lane): {note}."
+    query(
+        f"lit_tpcds_{qnum}_{slug}",
+        oracle=_tpcds_oracle(
+            qnum, _tables_in_text(qnum), renames, suite="tpcds_dense34"
+        ),
+        tags=("literal", "tpcds", "r12", "tpcds_dense34"),
+        order_by=order_by,
+    )(fn)
+
+for _row in _DENSE34:
+    _register_dense34_entry(*_row)
+
+# q72 (r12): the r9 probe-OOM rejection closed by the dense34 grid cap
+# (literal_tpcds _GRID notes): the unbounded inventory grid (parts x 5
+# warehouses x 417 weeks — 417M rows on the 10x layout) shrinks to 500
+# parts x 5 x 209 weeks = ~0.5M rows FLAT at any scale; the dense fact
+# item fold (keys 1..20) means every fact join was always inside the
+# cap, so q72's week-matched low-inventory semantics are untouched.
+# ORDER BY = total_cnt + the FULL group key, so the LIMIT-100 cut is
+# total. DuckDB's wall on this join is ~26 s at sf0.1 (2.6 s at the
+# sf0.01 gate scale) — the known-heaviest oracle; the default
+# materialization set (inventory/time_dim/hd) measured fastest
+# (all-inline and all-materialized are 5-10x worse).
+_Q72_COLS = ("i_item_desc", "w_warehouse_name", "d_week_seq",
+             "no_promo", "promo", "total_cnt")
+
+@query(
+    "lit_tpcds_q72_low_inventory_promo_split",
+    oracle=_tpcds_oracle(
+        "q72", _tables_in_text("q72"), _Q72_COLS, suite="tpcds_dense34"
+    ),
+    tags=("literal", "tpcds", "r12", "tpcds_dense34", "inventory"),
+    order_by="total_cnt DESC NULLS FIRST, i_item_desc NULLS FIRST, "
+             "w_warehouse_name NULLS FIRST, d_week_seq NULLS FIRST",
+)
+def lit_tpcds_q72(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q72: catalog sales x week-matched inventory shortfall
+    # with demographics filters and a promo/no-promo split.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds_dense34", "q72"
+    ).toDF(*_Q72_COLS)
+
+# q75 (r12): the r9 ANSI-transient-zero-divisor rejection closed by a
+# dense34 fold — returns in this lane restock HALF the units
+# (return_quantity = l_quantity DIV 2), so every net unit count is
+# >= ceil(q/2) >= 1 and the text's CAST(cnt)/CAST(prev_cnt) < 0.9
+# predicate can never meet a zero divisor in EITHER engine — the
+# Spark-ANSI-throws-where-DuckDB's-join-order-never-evaluates edge is
+# structurally gone (return AMOUNTS stay real, so net dollars still
+# exercise the COALESCE/LEFT JOIN path). Year pair shifted -1 onto the
+# populated horizon (the lit_tpch_*_shifted contract). 2 rows at every
+# scale — the >10 % year-over-year unit decline is rare in uniform
+# driver data — so the LIMIT-100 cut never fires (no tie hazard).
+_Q75_COLS = ("prev_year", "year_", "i_brand_id", "i_class_id",
+             "i_category_id", "i_manufact_id", "prev_yr_cnt",
+             "curr_yr_cnt", "sales_cnt_diff", "sales_amt_diff")
+
+@query(
+    "lit_tpcds_q75_brand_unit_decline",
+    oracle=_tpcds_oracle(
+        "q75", _tables_in_text("q75"), _Q75_COLS, year_shift=-1,
+        suite="tpcds_dense34",
+    ),
+    tags=("literal", "tpcds", "r12", "tpcds_dense34", "three-channel"),
+)
+def lit_tpcds_q75(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q75 under -1: three-channel net-of-returns UNION,
+    # year-over-year brand-tuple self-join, decimal-ratio decline
+    # filter.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds_dense34", "q75", year_shift=-1
+    ).toDF(*_Q75_COLS)
+
+@query(
+    "lit_tpcds_q64_cross_year_store_sales",
+    oracle=_tpcds_oracle(
+        "q64", _tables_in_text("q64"), _Q64_COLS, suite="tpcds_dense64",
+        materialize=frozenset(),
+    ),
+    tags=("literal", "tpcds", "r12", "tpcds_dense64", "self-join"),
+)
+def lit_tpcds_q64(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # Verbatim q64 over the dense64 lane: cs_ui partial-refund HAVING,
+    # 18-table cross_sales star, 1999/2000 same-item-same-store
+    # self-join with cd1 <> cd2 and cnt ordering.
+    return run_literal_sql(
+        spark, sf_dir, "tpcds_dense64", "q64"
+    ).toDF(*_Q64_COLS)
 
 
 # ---------------------------------------------------------------------------
@@ -2513,23 +2501,22 @@ _CB_R11 = [
      "9 ClientIP values < LIMIT 10: cut unreachable"),
 ]
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    def _register_cb_r11(qnum, suite, slug, renames, order_by, note):
-        def fn(spark: SparkSession, sf_dir: str, _q=qnum, _s=suite, _r=renames):
-            return run_literal_sql(spark, sf_dir, _s, _q).toDF(*_r)
+def _register_cb_r11(qnum, suite, slug, renames, order_by, note):
+    def fn(spark: SparkSession, sf_dir: str, _q=qnum, _s=suite, _r=renames):
+        return run_literal_sql(spark, sf_dir, _s, _q).toDF(*_r)
 
-        fn.__name__ = f"lit_cb_{qnum}"
-        fn.__doc__ = f"Verbatim ClickBench {qnum} ({suite} lane): {note}."
-        query(
-            f"lit_cb_{qnum}_{slug}",
-            oracle=_cb_oracle(qnum, renames, suite=suite),
-            tags=("literal", "clickbench", "r11", suite),
-            order_by=order_by,
-        )(fn)
+    fn.__name__ = f"lit_cb_{qnum}"
+    fn.__doc__ = f"Verbatim ClickBench {qnum} ({suite} lane): {note}."
+    query(
+        f"lit_cb_{qnum}_{slug}",
+        oracle=_cb_oracle(qnum, renames, suite=suite),
+        tags=("literal", "clickbench", "r11", suite),
+        order_by=order_by,
+    )(fn)
 
-    for _row in _CB_R11:
-        _register_cb_r11(*_row)
+for _row in _CB_R11:
+    _register_cb_r11(*_row)
 
 
 # ---------------------------------------------------------------------------
@@ -2613,22 +2600,21 @@ _CB_R12 = [
      "ORDER BY = the minute group key itself; >= 1010 distinct minutes"),
 ]
 
-if _os.path.isdir(REFERENCE_QUERIES):
 
-    def _register_cb_r12(qnum, slug, renames, order_by, note):
-        def fn(spark: SparkSession, sf_dir: str, _q=qnum, _r=renames):
-            return run_literal_sql(
-                spark, sf_dir, "clickbench_dense", _q
-            ).toDF(*_r)
+def _register_cb_r12(qnum, slug, renames, order_by, note):
+    def fn(spark: SparkSession, sf_dir: str, _q=qnum, _r=renames):
+        return run_literal_sql(
+            spark, sf_dir, "clickbench_dense", _q
+        ).toDF(*_r)
 
-        fn.__name__ = f"lit_cb_{qnum}"
-        fn.__doc__ = f"Verbatim ClickBench {qnum} (clickbench_dense lane): {note}."
-        query(
-            f"lit_cb_{qnum}_{slug}",
-            oracle=_cb_oracle(qnum, renames, suite="clickbench_dense"),
-            tags=("literal", "clickbench", "r12", "clickbench_dense"),
-            order_by=order_by,
-        )(fn)
+    fn.__name__ = f"lit_cb_{qnum}"
+    fn.__doc__ = f"Verbatim ClickBench {qnum} (clickbench_dense lane): {note}."
+    query(
+        f"lit_cb_{qnum}_{slug}",
+        oracle=_cb_oracle(qnum, renames, suite="clickbench_dense"),
+        tags=("literal", "clickbench", "r12", "clickbench_dense"),
+        order_by=order_by,
+    )(fn)
 
-    for _row in _CB_R12:
-        _register_cb_r12(*_row)
+for _row in _CB_R12:
+    _register_cb_r12(*_row)

@@ -144,6 +144,7 @@ def _ensure_loaded() -> None:
     global _LOADED
     if _LOADED:
         return
+    from ..literal import HAVE_REFERENCE_QUERIES
     from . import (  # noqa: F401
         aggregates,
         analytic,
@@ -151,7 +152,6 @@ def _ensure_loaded() -> None:
         clickstream,
         dedup,
         feeds,
-        literal_entries,
         multimodal,
         pipeline,
         relational,
@@ -162,5 +162,8 @@ def _ensure_loaded() -> None:
         textstats,
         udfs,
     )
+
+    if HAVE_REFERENCE_QUERIES:
+        from . import literal_entries  # noqa: F401
 
     _LOADED = True

@@ -49,7 +49,8 @@ import duckdb
 import pytest
 
 from datafusion_distributed_spark.literal import (
-    REFERENCE_QUERIES,
+    HAVE_REFERENCE_QUERIES,
+    NO_REFERENCE_QUERIES_REASON,
     load_literal_text,
     register_duck_views,
     run_literal_duck,
@@ -59,8 +60,7 @@ from datafusion_distributed_spark.literal import (
 from .conftest import SF_DIR
 
 pytestmark = pytest.mark.skipif(
-    not os.path.isdir(REFERENCE_QUERIES),
-    reason="reference query texts not available",
+    not HAVE_REFERENCE_QUERIES, reason=NO_REFERENCE_QUERIES_REASON
 )
 
 # (suite, name, shiftable, star_join, tie_col)

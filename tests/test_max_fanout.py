@@ -15,12 +15,20 @@ from __future__ import annotations
 
 import pytest
 
+from datafusion_distributed_spark.literal import (
+    HAVE_REFERENCE_QUERIES,
+    NO_REFERENCE_QUERIES_REASON,
+)
 from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_loaded
 from datafusion_distributed_spark.tables import load_tables
 
 from .conftest import SF_DIR_MED, compare_to_oracle, oracle_views
 
 _ensure_loaded()
+
+_needs_reference = pytest.mark.skipif(
+    not HAVE_REFERENCE_QUERIES, reason=NO_REFERENCE_QUERIES_REASON
+)
 
 # One query per operator family (agg, join+topk, window, rollup, set-op,
 # subquery/mark-join, dedup, events-scan histogram): broad plan coverage
@@ -45,8 +53,8 @@ _STRESS_QUERIES = [
     # (FILE_SCAN_CONFIG_BYTES_PER_PARTITION=1 over the TPC-H corpus). One
     # star text over the 24-view TPC-DS mapping and one EXISTS/NOT-EXISTS
     # TPC-H text exercise the literal lane's scan splitting.
-    "lit_tpcds_q59_weekday_yoy_ratios",
-    "lit_tpch_q21_waiting_suppliers",
+    pytest.param("lit_tpcds_q59_weekday_yoy_ratios", marks=_needs_reference),
+    pytest.param("lit_tpch_q21_waiting_suppliers", marks=_needs_reference),
 ]
 
 _TINY_SPLIT = 64 * 1024

@@ -89,6 +89,8 @@ def main() -> None:
         row[key] = sec
         if row.get("c8") and row.get("c32"):
             row["speedup_8_to_32"] = round(row["c8"] / row["c32"], 2)
+        else:  # never pair a speedup with a missing timing
+            row.pop("speedup_8_to_32", None)
         print(f"[{i + 1}/{len(names)}] {name} {key}={sec}s", file=sys.stderr)
     with open(OUT_PATH, "w") as f:
         json.dump(record, f, indent=1, sort_keys=True)
