@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ._util import (
     _fan_out,
+    const_exprs,
     dbl,
     kgram_concat_sql,
     slot_local_checkpoint,
@@ -1181,16 +1182,21 @@ def length_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
 # set with the Okapi BM25 formula and return the top-k. The retrieval
 # backbone of corpus search / RAG candidate generation.
 #
-# Scale design (100 TB): the term filter (tok IN Q) applies BEFORE the only
-# data-scale shuffle, so the (doc_id, tok) tf aggregate sees just the
-# matching postings. Document frequency is a |Q|-row aggregate OF that tf
-# table (broadcast back), and the corpus stats (N, total doc length) are a
-# 1-row aggregate broadcast via cross join — a second narrow pass over the
-# text column only (the q14/q15 scalar-denominator shape), no driver-side
-# collect. Per-term scores are rounded to integer micro-units
-# BEFORE the per-doc sum, so the final aggregate is exact integer math —
-# immune to float summation order across partitions (the same discipline as
-# the cents columns; see _util.cents).
+# Scale design (100 TB): each token array is filtered to the query terms
+# Q BEFORE the explode, so the (doc_id, dl, tok) tf aggregate — the only
+# data-scale shuffle — sees just the matching postings. The corpus stats
+# (N, total doc length) and the |Q| document frequencies are ONE 1-row
+# aggregate of |Q|+2 map-side-combinable counts, broadcast via cross join:
+# a second narrow pass over the text column (the q14/q15 scalar-denominator
+# shape), no driver-side collect. df is deliberately NOT a |Q|-row
+# aggregate OF the tf table: that branch never reads tf's count, so Spark
+# prunes it from the branch's copy of the partial aggregate, the two
+# exchanges no longer match, and the tokenize/explode/aggregate pass runs
+# twice. Counting df as count_if(array_contains(ws, term)) needs doc_id to
+# be a key, which it is of documents. Per-term scores are rounded to
+# integer micro-units BEFORE the per-doc sum, so the final aggregate is
+# exact integer math — immune to float summation order across partitions
+# (the same discipline as the cents columns; see _util.cents).
 #
 # Reference parity: the reference has no IR surface; this extends the
 # text-analysis family (SURVEY.md §2 "training-data pipeline" rows) next to
@@ -1202,10 +1208,12 @@ _BM25_TOPK = 20
 # k1 = 1.2, b = 0.75; (k1+1) = 2.2, (1-b) = 0.25 written as literals so the
 # oracle SQL evaluates the byte-identical double expression.
 
-def _bm25_oracle(terms=_BM25_TERMS, topk=_BM25_TOPK) -> str:
+def _bm25_oracle(terms=_BM25_TERMS, topk=_BM25_TOPK, docs="documents") -> str:
+    """``docs`` is the documents relation in DuckDB SQL: the table name or a
+    parenthesized, aliased subquery over it."""
     return f"""
 WITH w AS (
-  SELECT doc_id, {_TOK_SQL} AS ws FROM documents
+  SELECT doc_id, {_TOK_SQL} AS ws FROM {docs}
 ),
 tok AS (
   SELECT doc_id, len(ws) AS dl, unnest(ws) AS tok FROM w
@@ -1237,26 +1245,47 @@ LIMIT {topk}
 """
 
 
+def _bm25_term_exprs(terms: tuple) -> tuple:
+    """The expressions that depend on the term set: one df count per term
+    (for the corpus-stats aggregate), the postings generator (the token
+    array filtered to the terms, then exploded) and the per-row df pick."""
+    df_counts = [
+        F.count_if(F.array_contains("ws", term)).alias(f"df{i}")
+        for i, term in enumerate(terms)
+    ]
+    postings = F.explode(F.filter("ws", lambda w: w.isin(*terms))).alias("tok")
+    df = F.when(F.col("tok") == terms[0], F.col("df0"))
+    for i in range(1, len(terms)):
+        df = df.when(F.col("tok") == terms[i], F.col(f"df{i}"))
+    return df_counts, postings, df
+
+
 def bm25_frames(docs: DataFrame, terms=_BM25_TERMS, topk=_BM25_TOPK) -> DataFrame:
     """BM25 subplan over an arbitrary documents frame (also driven by the
-    randomized differential family over generated term sets)."""
+    randomized differential family over generated term sets).
+
+    Precondition: ``doc_id`` is a key of ``docs`` (as it is of
+    ``documents``). The oracle's df counts the (doc_id, dl) tf groups that
+    hold a term; on a keyed frame that is the number of rows whose token
+    array contains it, which the 1-row corpus-stats aggregate computes."""
+    terms = tuple(terms)
+    df_counts, postings, df = const_exprs(
+        docs.sparkSession, ("bm25", terms), lambda: _bm25_term_exprs(terms)
+    )
     words = docs.select(
         "doc_id", F.split(F.trim(F.lower(F.col("text"))), " +").alias("ws")
     )
-    toks = words.select(
-        "doc_id", F.size("ws").alias("dl"), F.explode("ws").alias("tok")
-    )
-    tf = (
-        toks.filter(F.col("tok").isin(*terms))
-        .groupBy("doc_id", "dl", "tok")
-        .agg(F.count(F.lit(1)).alias("tf"))
-    )
-    df_tbl = tf.groupBy("tok").agg(F.count(F.lit(1)).alias("df"))
     stats = words.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("ws")).cast("long").alias("total_dl"),
+        *df_counts,
     )
-    joined = tf.join(F.broadcast(df_tbl), "tok").crossJoin(F.broadcast(stats))
+    tf = (
+        words.select("doc_id", F.size("ws").alias("dl"), postings)
+        .groupBy("doc_id", "dl", "tok")
+        .agg(F.count(F.lit(1)).alias("tf"))
+    )
+    joined = tf.crossJoin(F.broadcast(stats)).withColumn("df", df)
     idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     avgdl = F.col("total_dl").cast("double") / F.col("n_docs")
     tfp = (F.col("tf") * 2.2) / (

@@ -31,7 +31,7 @@ import pytest
 from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_loaded
 from datafusion_distributed_spark.plans.explain import stage_summary
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, unregistered_reason
 
 _ensure_loaded()
 
@@ -77,7 +77,7 @@ def test_no_stale_snapshots():
     """Snapshot file must not carry entries for deleted queries."""
     if not _DEFAULT_SF or _REGEN:
         pytest.skip("stale check only meaningful against pinned snapshots")
-    stale = sorted(set(_SNAPSHOTS) - set(_ALL))
+    stale = sorted(n for n in set(_SNAPSHOTS) - set(_ALL) if unregistered_reason(n) is None)
     assert stale == [], f"snapshots for queries that no longer exist: {stale}"
 
 
@@ -86,10 +86,11 @@ def _write_snapshots() -> None:
     # only rewrites the entries it actually collected; entries for queries
     # that no longer exist are pruned (the stale-entry test would catch them
     # on full runs, but a partial regen must not resurrect or drop others).
+    # Entries of queries unregistered on this machine by design are kept.
     merged = {
         name: _COLLECTED.get(name, _SNAPSHOTS.get(name))
         for name in sorted(set(_SNAPSHOTS) | set(_COLLECTED))
-        if name in _COLLECTED or name in _ALL
+        if name in _COLLECTED or name in _ALL or unregistered_reason(name) is not None
     }
     _SNAPSHOT_PATH.write_text(json.dumps(merged, indent=1, sort_keys=True) + "\n")
 

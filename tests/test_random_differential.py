@@ -1047,8 +1047,18 @@ def _gen_bm25_case(rng: random.Random):
 
 _BM25_CASES = [_gen_bm25_case(random.Random(16000 + i)) for i in range(_N_BM25_CASES)]
 
+# Edge cases the generator does not reach: a term no document holds (df 0,
+# never picked), a single-term set (a one-branch df CASE), and a documents
+# frame filtered to a subset of sources, so that df and n_docs must come
+# from the filtered frame rather than the whole table.
+_BM25_CASES += [
+    {"terms": ("lakehouse", "spark", "window"), "topk": 10},
+    {"terms": ("dup",), "topk": 10},
+    {"terms": ("hash", "join", "vector"), "topk": 25, "sources": ("src1", "src4", "src7")},
+]
 
-@pytest.mark.parametrize("i", range(_N_BM25_CASES))
+
+@pytest.mark.parametrize("i", range(len(_BM25_CASES)))
 def test_random_bm25_matches_oracle(spark, duck, i):
     from datafusion_distributed_spark.operators.textstats import (
         _bm25_oracle,
@@ -1057,11 +1067,15 @@ def test_random_bm25_matches_oracle(spark, duck, i):
 
     case = _BM25_CASES[i]
     docs = load_tables(spark, SF_DIR)["documents"]
+    docs_sql = "documents"
+    if "sources" in case:
+        docs = docs.filter(F.col("source").isin(*case["sources"]))
+        docs_sql = f"(SELECT * FROM documents WHERE source IN {case['sources']!r}) d"
     oracle_views(duck, SF_DIR)
     compare_to_oracle(
         bm25_frames(docs, terms=case["terms"], topk=case["topk"]),
         duck,
-        _bm25_oracle(terms=case["terms"], topk=case["topk"]),
+        _bm25_oracle(terms=case["terms"], topk=case["topk"], docs=docs_sql),
         name=f"randbm25[{i}]{case}",
     )
 
