@@ -74,11 +74,6 @@ def build_session(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-        # Compiled codegen classes, keyed by generated source (static conf).
-        # The default 100 is split over the cache's segments, so a session
-        # that cycles through a few hundred queries evicts classes it still
-        # reuses and recompiles them on every pass.
-        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     if shuffle_partitions is None:
         # Default the shuffle width to the core count: Spark's 200 default is

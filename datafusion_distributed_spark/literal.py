@@ -748,21 +748,11 @@ def load_literal_text(
 # re-registration recreates the SAME view definitions (deterministic
 # functions of (suite, sf_dir)), and a temp view's plan is captured into
 # the analyzed frame, so an older frame is semantically identical.
-# A hit returns a fresh frame over the memoized analyzed plan (_fresh): the
-# memoized frame's QueryExecution caches its optimized and physical plans,
-# which would otherwise outlive a change of AQE or shuffle-partition confs.
+# A hit returns a fresh frame over the memoized one (select("*"), whose
+# Project the optimizer removes): the memoized frame's QueryExecution caches
+# its optimized and physical plans, which would otherwise outlive a change
+# of AQE or shuffle-partition confs.
 _FRAME_MEMO_ATTR = "_dds_literal_frame_memo"
-
-
-def _fresh(frame: DataFrame) -> DataFrame:
-    """A new frame over ``frame``'s analyzed plan, with its own
-    QueryExecution: optimized and planned under the confs in force when it
-    runs."""
-    spark = frame.sparkSession
-    jdf = spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
-        spark._jsparkSession, frame._jdf.queryExecution().analyzed()
-    )
-    return DataFrame(jdf, spark)
 
 
 def run_literal_sql(
@@ -787,7 +777,7 @@ def run_literal_sql(
     memo_key = (suite, name, date_shift_years, year_shift, sf_dir.rstrip("/"))
     hit = memo.get(memo_key)
     if hit is not None:
-        return _fresh(hit)
+        return hit.select("*")
     register_spark_views(spark, sf_dir, suite)
     stmts = load_literal_statements(suite, name, date_shift_years, year_shift)
     # clickbench quotes column identifiers; tpcds quotes aliases (q50/q62's

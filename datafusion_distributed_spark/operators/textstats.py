@@ -14,7 +14,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ._util import (
     _fan_out,
-    const_exprs,
     dbl,
     kgram_concat_sql,
     slot_local_checkpoint,
@@ -1245,21 +1244,6 @@ LIMIT {topk}
 """
 
 
-def _bm25_term_exprs(terms: tuple) -> tuple:
-    """The expressions that depend on the term set: one df count per term
-    (for the corpus-stats aggregate), the postings generator (the token
-    array filtered to the terms, then exploded) and the per-row df pick."""
-    df_counts = [
-        F.count_if(F.array_contains("ws", term)).alias(f"df{i}")
-        for i, term in enumerate(terms)
-    ]
-    postings = F.explode(F.filter("ws", lambda w: w.isin(*terms))).alias("tok")
-    df = F.when(F.col("tok") == terms[0], F.col("df0"))
-    for i in range(1, len(terms)):
-        df = df.when(F.col("tok") == terms[i], F.col(f"df{i}"))
-    return df_counts, postings, df
-
-
 def bm25_frames(docs: DataFrame, terms=_BM25_TERMS, topk=_BM25_TOPK) -> DataFrame:
     """BM25 subplan over an arbitrary documents frame (also driven by the
     randomized differential family over generated term sets).
@@ -1269,22 +1253,26 @@ def bm25_frames(docs: DataFrame, terms=_BM25_TERMS, topk=_BM25_TOPK) -> DataFram
     hold a term; on a keyed frame that is the number of rows whose token
     array contains it, which the 1-row corpus-stats aggregate computes."""
     terms = tuple(terms)
-    df_counts, postings, df = const_exprs(
-        docs.sparkSession, ("bm25", terms), lambda: _bm25_term_exprs(terms)
-    )
     words = docs.select(
         "doc_id", F.split(F.trim(F.lower(F.col("text"))), " +").alias("ws")
     )
     stats = words.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.sum(F.size("ws")).cast("long").alias("total_dl"),
-        *df_counts,
+        *[
+            F.count_if(F.array_contains("ws", term)).alias(f"df{i}")
+            for i, term in enumerate(terms)
+        ],
     )
+    postings = F.explode(F.filter("ws", lambda w: w.isin(*terms))).alias("tok")
     tf = (
         words.select("doc_id", F.size("ws").alias("dl"), postings)
         .groupBy("doc_id", "dl", "tok")
         .agg(F.count(F.lit(1)).alias("tf"))
     )
+    df = F.when(F.col("tok") == terms[0], F.col("df0"))
+    for i in range(1, len(terms)):
+        df = df.when(F.col("tok") == terms[i], F.col(f"df{i}"))
     joined = tf.crossJoin(F.broadcast(stats)).withColumn("df", df)
     idf = F.log(1.0 + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5))
     avgdl = F.col("total_dl").cast("double") / F.col("n_docs")
