@@ -2,7 +2,8 @@
 """Benchmark harness: runs the full registered query battery at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line:
-  {"metric": "total_p50_sec", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": "total_p50_sec", "value": N, "unit": "sec", "failed": [...],
+   "unregistered": {...}, "queries": {...}, "sf": ...}
 
 Methodology mirrors the reference's benchmark stats (p50 of repeated runs,
 /root/reference/benchmarks/src/stats.rs; BASELINE.md §B): one warm-up run,
@@ -28,6 +29,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 def main() -> None:
     from datafusion_distributed_spark.engine import build_session
+    from datafusion_distributed_spark.literal import (
+        HAVE_REFERENCE_QUERIES,
+        NO_REFERENCE_QUERIES_REASON,
+    )
     from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_loaded
 
     _ensure_loaded()
@@ -50,6 +55,7 @@ def main() -> None:
 
     row_counts = table_row_counts(spark, SF_DIR)
     per_query: dict[str, float] = {}
+    failed: list[str] = []
     cost_flags: list[str] = []
     for name, qd in sorted(REGISTRY.items()):
         times = []
@@ -75,6 +81,7 @@ def main() -> None:
         except Exception as exc:  # keep the harness alive; surface on stderr
             print(f"bench: {name} failed: {exc}", file=sys.stderr)
             per_query[name] = -1.0
+            failed.append(name)
         # Per-query hygiene: iterative queries localCheckpoint/persist
         # intermediate frames; without an explicit release those blocks
         # accumulate across the battery and squeeze the unified memory pool,
@@ -96,6 +103,15 @@ def main() -> None:
             "metric": "total_p50_sec",
             "value": total,
             "unit": "sec",
+            # Named ahead of the per-query map so they survive a truncated
+            # stdout capture: failed entries are -1 in `queries` and left
+            # out of `value`; the lit_* lane is not registered at all
+            # without the reference query texts.
+            "failed": failed,
+            "unregistered": (
+                {} if HAVE_REFERENCE_QUERIES
+                else {"lit_*": NO_REFERENCE_QUERIES_REASON}
+            ),
             "queries": per_query,
             "sf": sf_val,
             "n_queries": len(per_query),

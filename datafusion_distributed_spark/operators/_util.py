@@ -18,6 +18,8 @@ DECIMAL(38,0) before summing (exact; DuckDB's SUM(BIGINT)->HUGEINT matches).
 
 from __future__ import annotations
 
+import threading
+
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Column, SparkSession
 
@@ -200,14 +202,14 @@ _CHECKPOINT_SLOTS: dict = {}
 
 def _prune_dead_sessions(slots: dict) -> None:
     """Drop slots owned by STOPPED sessions: the multi-session differential
-    harnesses create short-lived sessions, and a (session, key) entry holds
+    harnesses create short-lived sessions, and a (session, ...) entry holds
     strong references to the dead session and its frame for the process
     lifetime otherwise (r7 ADVICE). A stopped PySpark context nulls its
     _jsc, which is the liveness signal used here; the blocks themselves
     died with the session, so popping the entry is the whole cleanup."""
     dead = [
         k
-        for k in slots
+        for k in list(slots)
         if getattr(k[0].sparkContext, "_jsc", None) is None
     ]
     for k in dead:
@@ -223,15 +225,18 @@ def slot_local_checkpoint(key: str, df) -> "DataFrame":
     randomized sweeps — would accumulate block-manager storage for the
     session's lifetime. The slot bounds that: creating checkpoint N for
     `key` first releases checkpoint N-1, so each operator owns at most ONE
-    materialized frame at a time. Contract: a frame returned by a previous
-    invocation of the same operator is invalidated by the next invocation —
-    exactly the consume-then-reinvoke pattern every harness here uses.
+    materialized frame at a time per calling thread. Contract: a frame
+    returned by a previous invocation of the same operator is invalidated by
+    the next invocation in the same thread — exactly the consume-then-reinvoke
+    pattern every harness here uses.
     """
-    # Slots are keyed per (SparkSession, operator): two sessions in one
-    # process (the differential harnesses) must not release each other's
-    # blocks — localCheckpoint lineage cannot be recomputed (r6 ADVICE).
+    # Slots are keyed per (SparkSession, calling thread, operator): two
+    # sessions in one process (the differential harnesses) or two threads
+    # must not release each other's blocks — localCheckpoint lineage cannot
+    # be recomputed (r6 ADVICE). A thread started after another finished may
+    # reuse its ident, and then takes over its slots.
     _prune_dead_sessions(_CHECKPOINT_SLOTS)
-    skey = (df.sparkSession, key)
+    skey = (df.sparkSession, threading.get_ident(), key)
     prev = _CHECKPOINT_SLOTS.pop(skey, None)
     if prev is not None:
         release_local_checkpoint(prev)
@@ -253,7 +258,7 @@ def slot_rebuild(key: str, spark: SparkSession, builder) -> "DataFrame":
     item 3 — the former build-once slot served later calls from cached
     blocks, which measured a cache read, not the operator)."""
     _prune_dead_sessions(_CHECKPOINT_SLOTS)
-    skey = (spark, key)
+    skey = (spark, threading.get_ident(), key)
     prev = _CHECKPOINT_SLOTS.pop(skey, None)
     if prev is not None:
         release_local_checkpoint(prev)
@@ -276,7 +281,7 @@ def slot_persist(key: str, df, eager: bool = False) -> "DataFrame":
     mattered was releasing the PREVIOUS invocation's block, which an
     un-slotted persist never does."""
     _prune_dead_sessions(_PERSIST_SLOTS)
-    skey = (df.sparkSession, key)
+    skey = (df.sparkSession, threading.get_ident(), key)
     prev = _PERSIST_SLOTS.pop(skey, None)
     if prev is not None:
         try:
@@ -291,8 +296,9 @@ def slot_persist(key: str, df, eager: bool = False) -> "DataFrame":
 
 
 def release_all_slots(spark: SparkSession | None = None) -> None:
-    """Release EVERY live slot-held frame (checkpoint, persist, build-once)
-    owned by ``spark`` (or by any session when ``spark`` is None).
+    """Release EVERY live slot-held frame (checkpoint, persist) owned by
+    ``spark`` (or by any session when ``spark`` is None), whichever thread
+    created it.
 
     Bench hygiene (r12 VERDICT item 2): ``spark.catalog.clearCache()`` drops
     CacheManager entries but NOT localCheckpoint RDD blocks, so the LAST

@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ._util import t
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # Exact percentiles (PercentileCont / APPROX-free): p25/median/p75 quantity
@@ -462,15 +462,13 @@ ORDER BY l_returnflag
 """
 
 
-@query(
+sql_query(
     "fn_array_hof_surface",
+    _array_hof_spark_sql(),
     oracle=_array_hof_oracle(),
     tags=("functions", "array", "hof"),
     order_by="l_returnflag",
 )
-def fn_array_hof_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_array_hof_spark_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -508,15 +506,13 @@ ORDER BY p_brand
 """
 
 
-@query(
+sql_query(
     "fn_string_surface",
+    _string_surface_sql("format_string", "STRING"),
     oracle=_string_surface_sql("printf", "VARCHAR"),
     tags=("functions", "string"),
     order_by="p_brand",
 )
-def fn_string_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_string_surface_sql("format_string", "STRING"))
 
 
 # ---------------------------------------------------------------------------
@@ -567,12 +563,10 @@ ORDER BY l_returnflag
 """
 
 
-@query(
+sql_query(
     "fn_map_surface",
+    _MAP_SPARK_SQL,
     oracle=_MAP_ORACLE,
     tags=("functions", "map"),
     order_by="l_returnflag",
 )
-def fn_map_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_MAP_SPARK_SQL)

@@ -16,7 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ._util import dbl, dec, t
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # rank() over partition — top-3 customers by order revenue within each nation.
@@ -272,18 +272,18 @@ GROUP BY GROUPING SETS ((p_brand), (p_type), ())
 """
 
 
-@query("gsets_grouping_sets_part", oracle=_GSETS_ORACLE, tags=("grouping-sets", "tpcds"))
-def gsets_part(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(
-        """
+sql_query(
+    "gsets_grouping_sets_part",
+    """
         SELECT COALESCE(p_brand, 'ALL') AS p_brand, COALESCE(p_type, 'ALL') AS p_type,
                COUNT(*) AS n_parts,
                CAST(SUM(CAST(p_retailprice AS DECIMAL(12,2))) AS DOUBLE) AS total_price
         FROM part
         GROUP BY GROUPING SETS ((p_brand), (p_type), ())
-        """
-    )
+        """,
+    oracle=_GSETS_ORACLE,
+    tags=("grouping-sets", "tpcds"),
+)
 
 
 # ---------------------------------------------------------------------------

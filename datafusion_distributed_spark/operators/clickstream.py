@@ -18,7 +18,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
 from ._util import dbl, dec, t
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # Top-k heavy hitters by user (ClickBench q12-ish).
@@ -802,15 +802,12 @@ LIMIT 10
 """
 
 
-@query(
+sql_query(
     "cb_url_prefix_topk",
-    oracle=_URL_TOPK_SQL,
+    _URL_TOPK_SQL,
     tags=("string", "topk", "clickbench"),
     order_by="n_hits DESC, url_prefix",
 )
-def cb_url_prefix_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_URL_TOPK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -844,15 +841,13 @@ LIMIT 25
 """
 
 
-@query(
+sql_query(
     "cb_having_heavy_groups",
+    _heavy_groups_sql("$1"),
     oracle=_heavy_groups_sql("\\1"),
     tags=("regexp", "having", "clickbench"),
     order_by="avg_len DESC, domain",
 )
-def cb_having_heavy_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_heavy_groups_sql("$1"))
 
 
 # ---------------------------------------------------------------------------
@@ -884,15 +879,13 @@ LIMIT 10
 """
 
 
-@query(
+sql_query(
     "cb_wide_row_time_topk",
+    _wide_row_sql("date_format(", ", 'yyyy-MM-dd HH:mm:ss')"),
     oracle=_wide_row_sql("strftime(", ", '%Y-%m-%d %H:%M:%S')"),
     tags=("topk", "wide-row", "clickbench"),
     order_by="ts_s, event_id",
 )
-def cb_wide_row_time_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_wide_row_sql("date_format(", ", 'yyyy-MM-dd HH:mm:ss')"))
 
 
 # ---------------------------------------------------------------------------
@@ -916,15 +909,12 @@ LIMIT 10 OFFSET 40
 """
 
 
-@query(
+sql_query(
     "cb_topk_deep_offset",
-    oracle=_DEEP_OFFSET_SQL,
+    _DEEP_OFFSET_SQL,
     tags=("topk", "offset", "clickbench"),
     order_by="c DESC, user_id, event_type",
 )
-def cb_topk_deep_offset(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DEEP_OFFSET_SQL)
 
 
 # ---------------------------------------------------------------------------

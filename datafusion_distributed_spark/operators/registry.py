@@ -20,10 +20,13 @@ Conventions enforced for oracle hash-parity (see SURVEY.md §7 risk register):
 from __future__ import annotations
 
 import re
+import sys
 from collections.abc import Callable
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..tables import load_tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -126,6 +129,29 @@ def query(
     return deco
 
 
+def sql_query(
+    name: str,
+    text: str,
+    oracle: str | None = None,
+    tags: tuple[str, ...] = (),
+    order_by: str | None = None,
+    expect_empty: bool = False,
+) -> None:
+    """Register a plain SQL-text entry: its builder loads the tables and
+    returns ``spark.sql(text)``. ``oracle`` defaults to ``text``."""
+
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        load_tables(spark, sf_dir)
+        return spark.sql(text)
+
+    # Named after the entry and its registering module, so tracebacks and
+    # the duplicate-name error point at the registration.
+    build.__module__ = sys._getframe(1).f_globals["__name__"]
+    build.__name__ = build.__qualname__ = name
+    oracle = text if oracle is None else oracle
+    query(name, oracle, tags, order_by, expect_empty)(build)
+
+
 def all_queries() -> dict[str, QueryFn]:
     _ensure_loaded()
     return {name: qd.fn for name, qd in REGISTRY.items()}
@@ -140,7 +166,7 @@ _LOADED = False
 
 
 def _ensure_loaded() -> None:
-    """Import all operator modules so their @query decorators run."""
+    """Import all operator modules so their registrations run."""
     global _LOADED
     if _LOADED:
         return

@@ -42,7 +42,7 @@ from ._util import (
     ts,
     unscale,
 )
-from .registry import query
+from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
 # q1: pricing summary — scan → filter → partial/final hash aggregate.
@@ -975,15 +975,12 @@ ORDER BY value DESC, partkey
 """
 
 
-@query(
+sql_query(
     "tpch_q11_important_stock",
-    oracle=_Q11_SQL,
+    _Q11_SQL,
     tags=("tpch", "having", "scalar-subquery"),
     order_by="value DESC, partkey",
 )
-def tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_Q11_SQL)
 
 
 # q20 "potential part promotion": suppliers holding (across the full
@@ -1019,12 +1016,9 @@ ORDER BY supplier
 """
 
 
-@query(
+sql_query(
     "tpch_q20_part_promotion",
-    oracle=_Q20_SQL,
+    _Q20_SQL,
     tags=("tpch", "semi-join"),
     order_by="supplier",
 )
-def tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_Q20_SQL)

@@ -5,6 +5,9 @@ SURVEY.md §3.1). Everything else in the registry uses the DataFrame API
 (entry point 2); these prove the SQL path plans identically through Catalyst,
 including TPC-DS-style CTE chains referenced multiple times (SURVEY.md §2.3
 "deep CTE chains").
+
+A plain SQL-text entry is one ``sql_query(name, text, ...)`` call; its oracle
+defaults to the same text. Builders that do more keep ``@query``.
 """
 
 from __future__ import annotations
@@ -13,7 +16,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ._util import release_local_checkpoint, slot_local_checkpoint, t
-from .registry import query
+from .registry import query, sql_query
 
 # Year-over-year revenue doublers: a CTE materialized once, self-joined
 # across adjacent years (the TPC-DS q74 'year_total' shape).
@@ -50,10 +53,7 @@ WHERE a.cents > 2 * b.cents
 """
 
 
-@query("sql_cte_yoy_doublers", oracle=_CTE_ORACLE, tags=("sql-entry", "cte", "tpcds"))
-def cte_yoy_doublers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)  # registers the temp views the SQL references
-    return spark.sql(_CTE_SPARK_SQL)
+sql_query("sql_cte_yoy_doublers", _CTE_SPARK_SQL, oracle=_CTE_ORACLE, tags=("sql-entry", "cte", "tpcds"))
 
 
 # ---------------------------------------------------------------------------
@@ -82,14 +82,11 @@ GROUP BY ROLLUP(COALESCE(f.channel, o.channel))
 """
 
 
-@query(
+sql_query(
     "sql_channel_rollup",
-    oracle=_CHANNEL_SPARK_SQL,  # identical ANSI text runs on DuckDB
+    _CHANNEL_SPARK_SQL,  # identical ANSI text runs on DuckDB
     tags=("sql-entry", "tpcds", "rollup"),
 )
-def channel_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_CHANNEL_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -111,10 +108,7 @@ SELECT COUNT(*) AS n_repeat_buyers FROM (
 """
 
 
-@query("sql_repeat_buyers", oracle=_REPEAT_SQL, tags=("sql-entry", "tpcds", "setop"))
-def repeat_buyers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_REPEAT_SQL)
+sql_query("sql_repeat_buyers", _REPEAT_SQL, tags=("sql-entry", "tpcds", "setop"))
 
 
 # ---------------------------------------------------------------------------
@@ -139,10 +133,7 @@ GROUP BY c_mktsegment
 """
 
 
-@query("sql_exists_chain", oracle=_EXISTS_SQL, tags=("sql-entry", "tpcds", "subquery"))
-def exists_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_EXISTS_SQL)
+sql_query("sql_exists_chain", _EXISTS_SQL, tags=("sql-entry", "tpcds", "subquery"))
 
 
 # ---------------------------------------------------------------------------
@@ -162,10 +153,7 @@ GROUP BY c_mktsegment
 """
 
 
-@query("sql_mark_join", oracle=_MARK_SQL, tags=("sql-entry", "mark-join", "subquery"))
-def mark_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_MARK_SQL)
+sql_query("sql_mark_join", _MARK_SQL, tags=("sql-entry", "mark-join", "subquery"))
 
 
 # ---------------------------------------------------------------------------
@@ -185,10 +173,7 @@ FROM nation n, LATERAL (
 """
 
 
-@query("sql_lateral_topn", oracle=_LATERAL_SQL, tags=("sql-entry", "lateral"))
-def lateral_topn(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_LATERAL_SQL)
+sql_query("sql_lateral_topn", _LATERAL_SQL, tags=("sql-entry", "lateral"))
 
 
 # ---------------------------------------------------------------------------
@@ -212,10 +197,7 @@ GROUP BY o_orderpriority
 """
 
 
-@query("sql_agg_filter_clause", oracle=_FILTER_CLAUSE_SQL, tags=("sql-entry", "agg-filter"))
-def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_FILTER_CLAUSE_SQL)
+sql_query("sql_agg_filter_clause", _FILTER_CLAUSE_SQL, tags=("sql-entry", "agg-filter"))
 
 
 # ---------------------------------------------------------------------------
@@ -297,10 +279,7 @@ WHERE COALESCE(oc.cum, 0) > COALESCE(fc.cum, 0)
 """
 
 
-@query("sql_cumulative_channels", oracle=_CUMULATIVE_SQL, tags=("sql-entry", "tpcds", "window"))
-def cumulative_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_CUMULATIVE_SQL)
+sql_query("sql_cumulative_channels", _CUMULATIVE_SQL, tags=("sql-entry", "tpcds", "window"))
 
 
 # ---------------------------------------------------------------------------
@@ -339,10 +318,7 @@ WHERE CAST(c AS DOUBLE) / avg_c > 1.2 OR CAST(c AS DOUBLE) / avg_c < 0.8
 """
 
 
-@query("sql_monthly_deviation", oracle=_DEVIATION_SQL, tags=("sql-entry", "tpcds", "window"))
-def monthly_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DEVIATION_SQL)
+sql_query("sql_monthly_deviation", _DEVIATION_SQL, tags=("sql-entry", "tpcds", "window"))
 
 
 # ---------------------------------------------------------------------------
@@ -378,15 +354,12 @@ WHERE b.rnk <= 10
 """
 
 
-@query(
+sql_query(
     "sql_best_worst_rank",
-    oracle=_BEST_WORST_SQL,
+    _BEST_WORST_SQL,
     tags=("sql-entry", "tpcds", "window"),
     order_by="rnk",
 )
-def best_worst_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_BEST_WORST_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -428,14 +401,11 @@ GROUP BY ROLLUP(seg, pri)
 """
 
 
-@query(
+sql_query(
     "sql_rank_rollup",
-    oracle=_RANK_ROLLUP_SQL,
+    _RANK_ROLLUP_SQL,
     tags=("sql-entry", "tpcds", "rollup", "window"),
 )
-def rank_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_RANK_ROLLUP_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -461,10 +431,7 @@ SELECT COUNT(*) AS n_churned FROM (
 """
 
 
-@query("sql_except_chain", oracle=_EXCEPT_CHAIN_SQL, tags=("sql-entry", "tpcds", "setop"))
-def except_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_EXCEPT_CHAIN_SQL)
+sql_query("sql_except_chain", _EXCEPT_CHAIN_SQL, tags=("sql-entry", "tpcds", "setop"))
 
 
 # ---------------------------------------------------------------------------
@@ -505,14 +472,11 @@ GROUP BY ROLLUP(channel, class)
 """
 
 
-@query(
+sql_query(
     "sql_union_channel_report",
-    oracle=_UNION_CHANNEL_SQL,
+    _UNION_CHANNEL_SQL,
     tags=("sql-entry", "tpcds", "rollup", "union"),
 )
-def union_channel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_UNION_CHANNEL_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -536,10 +500,7 @@ SELECT s1.n_night, s2.n_morning, s3.n_midday, s4.n_evening FROM
 """
 
 
-@query("sql_multiband_counts", oracle=_MULTIBAND_SQL, tags=("sql-entry", "tpcds", "scalar-agg"))
-def multiband_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_MULTIBAND_SQL)
+sql_query("sql_multiband_counts", _MULTIBAND_SQL, tags=("sql-entry", "tpcds", "scalar-agg"))
 
 
 # ---------------------------------------------------------------------------
@@ -563,10 +524,7 @@ FROM cnt JOIN customer c ON c.c_custkey = cnt.o_custkey
 """
 
 
-@query("sql_order_count_band", oracle=_COUNT_BAND_SQL, tags=("sql-entry", "tpcds", "having"))
-def order_count_band(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_COUNT_BAND_SQL)
+sql_query("sql_order_count_band", _COUNT_BAND_SQL, tags=("sql-entry", "tpcds", "having"))
 
 
 # ---------------------------------------------------------------------------
@@ -593,10 +551,7 @@ WHERE (c.c_mktsegment = 'BUILDING'
 """
 
 
-@query("sql_disjunctive_bands", oracle=_DISJUNCTIVE_SQL, tags=("sql-entry", "tpcds", "disjunctive"))
-def disjunctive_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DISJUNCTIVE_SQL)
+sql_query("sql_disjunctive_bands", _DISJUNCTIVE_SQL, tags=("sql-entry", "tpcds", "disjunctive"))
 
 
 # ---------------------------------------------------------------------------
@@ -629,15 +584,12 @@ LIMIT 20
 """
 
 
-@query(
+sql_query(
     "sql_net_after_returns",
-    oracle=_NET_RETURNS_SQL,
+    _NET_RETURNS_SQL,
     tags=("sql-entry", "tpcds", "outer-join"),
     order_by="net_sales DESC, custkey",
 )
-def net_after_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_NET_RETURNS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -663,10 +615,7 @@ WHERE 5 * ctr1.cents * (SELECT COUNT(*) FROM ctr ctr2 WHERE ctr2.nk = ctr1.nk)
 """
 
 
-@query("sql_above_nation_avg", oracle=_NATION_AVG_SQL, tags=("sql-entry", "tpcds", "subquery"))
-def above_nation_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_NATION_AVG_SQL)
+sql_query("sql_above_nation_avg", _NATION_AVG_SQL, tags=("sql-entry", "tpcds", "subquery"))
 
 
 # ---------------------------------------------------------------------------
@@ -691,10 +640,7 @@ WHERE l.l_partkey IN (SELECT l_partkey FROM freq)
 """
 
 
-@query("sql_frequent_parts", oracle=_FREQ_PARTS_SQL, tags=("sql-entry", "tpcds", "semi-join"))
-def frequent_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_FREQ_PARTS_SQL)
+sql_query("sql_frequent_parts", _FREQ_PARTS_SQL, tags=("sql-entry", "tpcds", "semi-join"))
 
 
 # ---------------------------------------------------------------------------
@@ -722,10 +668,7 @@ FROM fulfilled f FULL OUTER JOIN open_o o ON f.o_custkey = o.o_custkey
 """
 
 
-@query("sql_channel_overlap", oracle=_OVERLAP_SQL, tags=("sql-entry", "tpcds", "outer-join"))
-def channel_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_OVERLAP_SQL)
+sql_query("sql_channel_overlap", _OVERLAP_SQL, tags=("sql-entry", "tpcds", "outer-join"))
 
 
 # ---------------------------------------------------------------------------
@@ -766,10 +709,7 @@ WHERE r_i + a_i + n_i > 0
 """
 
 
-@query("sql_equal_share_parts", oracle=_EQUAL_SHARE_SQL, tags=("sql-entry", "tpcds", "conditional-agg"))
-def equal_share_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_EQUAL_SHARE_SQL)
+sql_query("sql_equal_share_parts", _EQUAL_SHARE_SQL, tags=("sql-entry", "tpcds", "conditional-agg"))
 
 
 # ---------------------------------------------------------------------------
@@ -813,10 +753,7 @@ WHERE hi1 > 0 AND lo1 > 0
 """
 
 
-@query("sql_growth_ratio_compare", oracle=_GROWTH_SQL, tags=("sql-entry", "tpcds", "cte"))
-def growth_ratio_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_GROWTH_SQL)
+sql_query("sql_growth_ratio_compare", _GROWTH_SQL, tags=("sql-entry", "tpcds", "cte"))
 
 
 # ---------------------------------------------------------------------------
@@ -857,15 +794,12 @@ ORDER BY chan, rnk, l_partkey
 """
 
 
-@query(
+sql_query(
     "sql_return_ratio_rank",
-    oracle=_RETURN_RANK_SQL,
+    _RETURN_RANK_SQL,
     tags=("sql-entry", "tpcds", "window"),
     order_by="chan, rnk, l_partkey",
 )
-def return_ratio_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_RETURN_RANK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -898,15 +832,12 @@ ORDER BY mon
 """
 
 
-@query(
+sql_query(
     "sql_monthly_yoy_report",
-    oracle=_MONTHLY_YOY_SQL,
+    _MONTHLY_YOY_SQL,
     tags=("sql-entry", "tpcds", "self-join"),
     order_by="mon",
 )
-def monthly_yoy_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_MONTHLY_YOY_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -932,15 +863,12 @@ ORDER BY bucket
 """
 
 
-@query(
+sql_query(
     "sql_revenue_buckets",
-    oracle=_REV_BUCKETS_SQL,
+    _REV_BUCKETS_SQL,
     tags=("sql-entry", "tpcds", "agg-of-agg"),
     order_by="bucket",
 )
-def revenue_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_REV_BUCKETS_SQL)
 
 
 _RECURSIVE_SQL = """
@@ -954,10 +882,7 @@ SELECT depth, COUNT(*) AS n_nodes FROM tree GROUP BY depth
 """
 
 
-@query("sql_recursive_tree_depth", oracle=_RECURSIVE_SQL, tags=("sql-entry", "recursive-cte"))
-def recursive_tree_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_RECURSIVE_SQL)
+sql_query("sql_recursive_tree_depth", _RECURSIVE_SQL, tags=("sql-entry", "recursive-cte"))
 
 
 # ---------------------------------------------------------------------------
@@ -994,14 +919,11 @@ WHERE b.n > a.n AND a.n > 1
 """
 
 
-@query(
+sql_query(
     "sql_cross_channel_stats",
-    oracle=_CROSS_CHANNEL_SQL,
+    _CROSS_CHANNEL_SQL,
     tags=("sql-entry", "tpcds", "self-join", "statistics"),
 )
-def cross_channel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_CROSS_CHANNEL_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1058,14 +980,11 @@ WHERE a.cov > 0.58 AND b.cov > 0.58
 """
 
 
-@query(
+sql_query(
     "sql_cv_month_pairs",
-    oracle=_CV_PAIR_SQL,
+    _CV_PAIR_SQL,
     tags=("sql-entry", "tpcds", "self-join", "statistics"),
 )
-def cv_month_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_CV_PAIR_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1099,14 +1018,11 @@ WHERE abs(CAST(cents AS DOUBLE) - avg_cents) > 0.1 * avg_cents
 """
 
 
-@query(
+sql_query(
     "sql_window_deviation",
-    oracle=_WINDOW_DEV_SQL,
+    _WINDOW_DEV_SQL,
     tags=("sql-entry", "tpcds", "window"),
 )
-def window_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_WINDOW_DEV_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1126,10 +1042,7 @@ FROM (SELECT COUNT(*) AS n FROM events
 """
 
 
-@query("sql_ampm_ratio", oracle=_AMPM_SQL, tags=("sql-entry", "tpcds", "scalar"))
-def ampm_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_AMPM_SQL)
+sql_query("sql_ampm_ratio", _AMPM_SQL, tags=("sql-entry", "tpcds", "scalar"))
 
 
 # ---------------------------------------------------------------------------
@@ -1155,14 +1068,11 @@ WHERE l.l_partkey < 200
 """
 
 
-@query(
+sql_query(
     "sql_excess_discount",
-    oracle=_EXCESS_DISCOUNT_SQL,
+    _EXCESS_DISCOUNT_SQL,
     tags=("sql-entry", "tpcds", "correlated-subquery"),
 )
-def excess_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_EXCESS_DISCOUNT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1215,15 +1125,13 @@ ORDER BY o.o_orderpriority
 """
 
 
-@query(
+sql_query(
     "sql_ship_delay_matrix",
+    _SHIP_DELAY_SPARK_SQL,
     oracle=_SHIP_DELAY_ORACLE,
     tags=("sql-entry", "tpcds", "case-matrix"),
     order_by="o_orderpriority",
 )
-def ship_delay_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_SHIP_DELAY_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1268,14 +1176,11 @@ WHERE u95 > 0 AND s95 > 0 AND u96 > 0 AND s96 > 0
 """
 
 
-@query(
+sql_query(
     "sql_channel_growth",
-    oracle=_CHANNEL_GROWTH_SQL,
+    _CHANNEL_GROWTH_SQL,
     tags=("sql-entry", "tpcds", "ratio-compare"),
 )
-def channel_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_CHANNEL_GROWTH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1324,14 +1229,11 @@ SELECT
 """
 
 
-@query(
+sql_query(
     "sql_scalar_case_buckets",
-    oracle=_CASE_BUCKETS_SQL,
+    _CASE_BUCKETS_SQL,
     tags=("sql-entry", "tpcds", "scalar-subquery"),
 )
-def scalar_case_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_CASE_BUCKETS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1355,15 +1257,12 @@ ORDER BY y, o_orderpriority
 """
 
 
-@query(
+sql_query(
     "sql_month_matrix",
-    oracle=_MONTH_MATRIX_SQL,
+    _MONTH_MATRIX_SQL,
     tags=("sql-entry", "tpcds", "pivot"),
     order_by="y, o_orderpriority",
 )
-def month_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_MONTH_MATRIX_SQL)
 
 
 @query("df_tree_depth_iterative", oracle=_RECURSIVE_SQL, tags=("recursive", "iterative"))
@@ -1478,15 +1377,12 @@ ORDER BY partkey, year
 """
 
 
-@query(
+sql_query(
     "sql_channel_decline_yoy",
-    oracle=_DECLINE_SQL,
+    _DECLINE_SQL,
     tags=("sql-entry", "tpcds", "union-agg"),
     order_by="partkey, year",
 )
-def channel_decline_yoy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DECLINE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1519,15 +1415,12 @@ ORDER BY supplier, partkey
 """
 
 
-@query(
+sql_query(
     "sql_low_revenue_parts",
-    oracle=_LOW_REV_SQL,
+    _LOW_REV_SQL,
     tags=("sql-entry", "tpcds", "group-avg-join"),
     order_by="supplier, partkey",
 )
-def low_revenue_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_LOW_REV_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1557,15 +1450,12 @@ ORDER BY segment
 """
 
 
-@query(
+sql_query(
     "sql_dual_exists_disjunct",
-    oracle=_DUAL_EXISTS_SQL,
+    _DUAL_EXISTS_SQL,
     tags=("sql-entry", "tpcds", "mark-join"),
     order_by="segment",
 )
-def dual_exists_disjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DUAL_EXISTS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1595,10 +1485,7 @@ WHERE l1.l_shipdate >= TIMESTAMP '1997-01-01'
 """
 
 
-@query("sql_two_hop_exists", oracle=_TWO_HOP_SQL, tags=("sql-entry", "tpcds", "semi-join"))
-def two_hop_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_TWO_HOP_SQL)
+sql_query("sql_two_hop_exists", _TWO_HOP_SQL, tags=("sql-entry", "tpcds", "semi-join"))
 
 
 # ---------------------------------------------------------------------------
@@ -1631,14 +1518,11 @@ _BUCKET_PROFILE_SQL = (
 )
 
 
-@query(
+sql_query(
     "sql_bucket_profile",
-    oracle=_BUCKET_PROFILE_SQL,
+    _BUCKET_PROFILE_SQL,
     tags=("sql-entry", "tpcds", "scalar-agg"),
 )
-def bucket_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_BUCKET_PROFILE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1684,15 +1568,12 @@ LIMIT 25
 )
 
 
-@query(
+sql_query(
     "sql_period_union_parts",
-    oracle=_PERIOD_UNION_SQL,
+    _PERIOD_UNION_SQL,
     tags=("sql-entry", "tpcds", "union-agg"),
     order_by="total_revenue DESC, partkey",
 )
-def period_union_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_PERIOD_UNION_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1719,15 +1600,12 @@ LIMIT 40
 """
 
 
-@query(
+sql_query(
     "sql_attr_pattern_exists",
-    oracle=_ATTR_PATTERN_SQL,
+    _ATTR_PATTERN_SQL,
     tags=("sql-entry", "tpcds", "subquery"),
     order_by="name",
 )
-def attr_pattern_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_ATTR_PATTERN_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1766,15 +1644,13 @@ _MISMATCH_ORACLE = _MISMATCH_BODY.format(
 )
 
 
-@query(
+sql_query(
     "sql_mismatch_channel",
+    _MISMATCH_SQL,
     oracle=_MISMATCH_ORACLE,
     tags=("sql-entry", "tpcds", "mismatch-join"),
     order_by="cross_nation_revenue DESC, custkey",
 )
-def mismatch_channel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_MISMATCH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1814,14 +1690,11 @@ GROUP BY ROLLUP(p.p_brand, CAST(EXTRACT(YEAR FROM l.l_shipdate) AS INTEGER))
 """
 
 
-@query(
+sql_query(
     "sql_common_parts_rollup",
-    oracle=_COMMON_PARTS_SQL,
+    _COMMON_PARTS_SQL,
     tags=("sql-entry", "tpcds", "intersect-rollup"),
 )
-def common_parts_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_COMMON_PARTS_SQL)
 
 
 @query("df_tree_depth_doubling", oracle=_RECURSIVE_SQL, tags=("recursive", "iterative"))
@@ -1989,15 +1862,12 @@ ORDER BY segment
 """
 
 
-@query(
+sql_query(
     "sql_disjunct_in_subquery",
-    oracle=_DISJUNCT_IN_SQL,
+    _DISJUNCT_IN_SQL,
     tags=("sql-entry", "tpcds", "mark-join"),
     order_by="segment",
 )
-def disjunct_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DISJUNCT_IN_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2030,15 +1900,12 @@ ORDER BY class, partkey
 """
 
 
-@query(
+sql_query(
     "sql_class_revenue_share",
-    oracle=_CLASS_SHARE_SQL,
+    _CLASS_SHARE_SQL,
     tags=("sql-entry", "tpcds", "window-over-agg"),
     order_by="class, partkey",
 )
-def class_revenue_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_CLASS_SHARE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2073,15 +1940,12 @@ ORDER BY supplier
 """
 
 
-@query(
+sql_query(
     "sql_before_after_ratio",
-    oracle=_BEFORE_AFTER_SQL,
+    _BEFORE_AFTER_SQL,
     tags=("sql-entry", "tpcds", "conditional-agg"),
     order_by="supplier",
 )
-def before_after_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_BEFORE_AFTER_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2110,15 +1974,12 @@ ORDER BY custkey
 """
 
 
-@query(
+sql_query(
     "sql_above_global_avg",
-    oracle=_ABOVE_GLOBAL_AVG_SQL,
+    _ABOVE_GLOBAL_AVG_SQL,
     tags=("sql-entry", "tpcds", "scalar-subquery"),
     order_by="custkey",
 )
-def above_global_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_ABOVE_GLOBAL_AVG_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2154,15 +2015,12 @@ ORDER BY channel, year
 """
 
 
-@query(
+sql_query(
     "sql_null_key_channels",
-    oracle=_NULL_KEY_CHANNELS_SQL,
+    _NULL_KEY_CHANNELS_SQL,
     tags=("sql-entry", "tpcds", "union"),
     order_by="channel, year",
 )
-def null_key_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_NULL_KEY_CHANNELS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2196,15 +2054,12 @@ ORDER BY nation
 """
 
 
-@query(
+sql_query(
     "sql_prefix_intersect_semi",
-    oracle=_PREFIX_INTERSECT_SQL,
+    _PREFIX_INTERSECT_SQL,
     tags=("sql-entry", "tpcds", "intersect"),
     order_by="nation",
 )
-def prefix_intersect_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_PREFIX_INTERSECT_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2241,15 +2096,12 @@ ORDER BY partkey, year
 """
 
 
-@query(
+sql_query(
     "sql_net_yoy_decline",
-    oracle=_NET_YOY_DECLINE_SQL,
+    _NET_YOY_DECLINE_SQL,
     tags=("sql-entry", "tpcds", "anti-join"),
     order_by="partkey, year",
 )
-def net_yoy_decline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_NET_YOY_DECLINE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2276,15 +2128,12 @@ LIMIT 10
 """
 
 
-@query(
+sql_query(
     "sql_brand_month_report",
-    oracle=_BRAND_MONTH_SQL,
+    _BRAND_MONTH_SQL,
     tags=("sql-entry", "tpcds", "report"),
     order_by="revenue DESC, brand",
 )
-def brand_month_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_BRAND_MONTH_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2328,15 +2177,12 @@ LIMIT 100
 """
 
 
-@query(
+sql_query(
     "sql_demographic_item_report",
-    oracle=_DEMO_ITEM_SQL,
+    _DEMO_ITEM_SQL,
     tags=("sql-entry", "tpcds", "report"),
     order_by="item",
 )
-def demographic_item_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DEMO_ITEM_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2359,15 +2205,12 @@ LIMIT 50
 """
 
 
-@query(
+sql_query(
     "sql_part_band_recent",
-    oracle=_PART_BAND_SQL,
+    _PART_BAND_SQL,
     tags=("sql-entry", "tpcds", "semi-join"),
     order_by="partkey",
 )
-def part_band_recent(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_PART_BAND_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2388,10 +2231,7 @@ WHERE EXTRACT(HOUR FROM e.ts) BETWEEN 8 AND 10
 """
 
 
-@query("sql_hour_traffic_count", oracle=_HOUR_TRAFFIC_SQL, tags=("sql-entry", "tpcds"))
-def hour_traffic_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_HOUR_TRAFFIC_SQL)
+sql_query("sql_hour_traffic_count", _HOUR_TRAFFIC_SQL, tags=("sql-entry", "tpcds"))
 
 
 # ---------------------------------------------------------------------------
@@ -2424,15 +2264,12 @@ ORDER BY brand
 """
 
 
-@query(
+sql_query(
     "sql_shortage_lines",
-    oracle=_SHORTAGE_SQL,
+    _SHORTAGE_SQL,
     tags=("sql-entry", "tpcds", "inequality-residual"),
     order_by="brand",
 )
-def shortage_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_SHORTAGE_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2453,15 +2290,12 @@ ORDER BY returnflag, linestatus
 """
 
 
-@query(
+sql_query(
     "sql_group_by_all",
-    oracle=_GROUP_BY_ALL_SQL,
+    _GROUP_BY_ALL_SQL,
     tags=("sql-entry", "dialect"),
     order_by="returnflag, linestatus",
 )
-def group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_GROUP_BY_ALL_SQL)
 
 
 _VALUES_DIM_SQL = """
@@ -2480,15 +2314,12 @@ ORDER BY tier
 """
 
 
-@query(
+sql_query(
     "sql_values_dim_join",
-    oracle=_VALUES_DIM_SQL,
+    _VALUES_DIM_SQL,
     tags=("sql-entry", "dialect", "values"),
     order_by="tier",
 )
-def values_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_VALUES_DIM_SQL)
 
 
 
@@ -2542,15 +2373,13 @@ _DOW_PIVOT_ORACLE = _dow_pivot_sql(
 )
 
 
-@query(
+sql_query(
     "sql_dow_yoy_pivot",
+    _DOW_PIVOT_SPARK_SQL,
     oracle=_DOW_PIVOT_ORACLE,
     tags=("sql-entry", "tpcds", "pivot"),
     order_by="base_year",
 )
-def dow_yoy_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DOW_PIVOT_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2590,15 +2419,12 @@ ORDER BY rank_ratio, rank_amount, partkey
 """
 
 
-@query(
+sql_query(
     "sql_dual_rank_returns",
-    oracle=_DUAL_RANK_SQL,
+    _DUAL_RANK_SQL,
     tags=("sql-entry", "tpcds", "window"),
     order_by="rank_ratio, rank_amount, partkey",
 )
-def dual_rank_returns(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_DUAL_RANK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2649,15 +2475,13 @@ _LATENCY_BAND_ORACLE = _latency_band_sql(
 )
 
 
-@query(
+sql_query(
     "sql_latency_band_matrix",
+    _LATENCY_BAND_SPARK_SQL,
     oracle=_LATENCY_BAND_ORACLE,
     tags=("sql-entry", "tpcds", "case-matrix"),
     order_by="supplier_band, priority, rflag",
 )
-def latency_band_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_LATENCY_BAND_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2721,15 +2545,13 @@ _COHORT_SPEND_SPARK_SQL = _cohort_spend_sql("div")
 _COHORT_SPEND_ORACLE = _cohort_spend_sql("//")
 
 
-@query(
+sql_query(
     "sql_cohort_spend_bands",
+    _COHORT_SPEND_SPARK_SQL,
     oracle=_COHORT_SPEND_ORACLE,
     tags=("sql-entry", "tpcds", "cohort"),
     order_by="segment",
 )
-def cohort_spend_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_COHORT_SPEND_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2753,14 +2575,11 @@ GROUP BY o_orderstatus
 """
 
 
-@query(
+sql_query(
     "sql_empty_column_stage",
-    oracle=_EMPTY_COLS_SQL,
+    _EMPTY_COLS_SQL,
     tags=("sql-entry", "edge-case", "scalar-subquery"),
 )
-def empty_column_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_EMPTY_COLS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2789,15 +2608,12 @@ ORDER BY c_mktsegment
 """
 
 
-@query(
+sql_query(
     "join_nonequi_exists",
-    oracle=_NONEQUI_EXISTS_SQL,
+    _NONEQUI_EXISTS_SQL,
     tags=("join", "semi", "non-equi", "edge-case"),
     order_by="c_mktsegment",
 )
-def join_nonequi_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_NONEQUI_EXISTS_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -2991,14 +2807,11 @@ def _q9_sql(bands=_Q9_BANDS) -> str:
 _Q9_SQL = _q9_sql()
 
 
-@query(
+sql_query(
     "sql_case_scalar_subqueries",
-    oracle=_Q9_SQL,
+    _Q9_SQL,
     tags=("sql-entry", "tpcds", "scalar-subquery"),
 )
-def case_scalar_subqueries(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_Q9_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -3119,15 +2932,13 @@ LIMIT {limit}
 """
 
 
-@query(
+sql_query(
     "sql_cumulative_dominance",
+    _q51_spark_sql(),
     oracle=_q51_oracle(),
     tags=("sql-entry", "tpcds", "window", "full-outer"),
     order_by="item_sk, d_date",
 )
-def cumulative_dominance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_q51_spark_sql())
 
 
 # ---------------------------------------------------------------------------
@@ -3372,12 +3183,10 @@ v2 AS (
 """
 
 
-@query(
+sql_query(
     "sql_moving_avg_deviation",
+    _q47_spark_sql(),
     oracle=_q47_oracle(),
     tags=("sql-entry", "tpcds", "window", "lag-lead"),
     order_by="deviation, p_brand, channel, d_moy",
 )
-def moving_avg_deviation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t(spark, sf_dir)
-    return spark.sql(_q47_spark_sql())

@@ -137,3 +137,40 @@ def test_slot_checkpoint_bounds_repeat_invocations(spark):
         f"slot leaked checkpoints: {jsc.getPersistentRDDs().size()} vs "
         f"{before} + 1"
     )
+
+
+def test_slot_checkpoint_survives_a_second_thread(spark):
+    """Two live threads calling one slotted operator each own their slot:
+    thread B's invocation must not release thread A's localCheckpoint
+    blocks, whose lineage cannot be recomputed. release_all_slots still
+    frees both."""
+    from datafusion_distributed_spark.operators import _util
+
+    frames = {}
+    a_done = threading.Event()
+    # Both threads stay alive until both have called, so B cannot inherit
+    # A's thread ident.
+    both_called = threading.Barrier(2, timeout=60)
+
+    def call(who):
+        if who == "b":
+            a_done.wait(60)
+        frames[who] = _util.slot_local_checkpoint(
+            "two-thread-probe", spark.range(50)
+        )
+        a_done.set()
+        both_called.wait()
+
+    threads = [threading.Thread(target=call, args=(w,)) for w in ("a", "b")]
+    for th in threads:
+        th.start()
+    for th in threads:
+        th.join(60)
+        assert not th.is_alive()
+    assert frames["a"].count() == 50
+    assert frames["b"].count() == 50
+
+    _util.release_all_slots(spark)
+    assert not any(
+        skey[-1] == "two-thread-probe" for skey in _util._CHECKPOINT_SLOTS
+    )

@@ -151,9 +151,9 @@ def test_scan_column_pruning(spark):
 def test_mark_join_plan_shape(spark):
     # IN-subquery under OR must plan as ExistenceJoin (mark join), not a
     # semi-join — rows failing the subquery survive via the other disjunct.
-    from datafusion_distributed_spark.operators.sqlpath import mark_join
+    from datafusion_distributed_spark.operators.registry import REGISTRY
 
-    df = mark_join(spark, SF_DIR)
+    df = REGISTRY["sql_mark_join"].fn(spark, SF_DIR)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ExistenceJoin" in plan
     assert "LeftSemi" not in plan
@@ -502,11 +502,9 @@ def test_case_scalar_subqueries_merge_and_reuse(spark):
     MergeScalarSubqueries emits a mergedValue struct in the optimized plan
     and ReuseSubquery dedups the physical subquery, so a band costs one
     fact scan, not three."""
-    from datafusion_distributed_spark.operators.sqlpath import (
-        case_scalar_subqueries,
-    )
+    from datafusion_distributed_spark.operators.registry import REGISTRY
 
-    df = case_scalar_subqueries(spark, SF_DIR)
+    df = REGISTRY["sql_case_scalar_subqueries"].fn(spark, SF_DIR)
     optimized = df._jdf.queryExecution().optimizedPlan().toString()
     assert "mergedValue" in optimized, optimized[:2000]
     df.collect()
