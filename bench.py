@@ -3,7 +3,7 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS]
 and prints ONE JSON line:
   {"metric": "total_p50_sec", "value": N, "unit": "sec", "failed": [...],
-   "unregistered": {...}, "queries": {...}, "sf": ...}
+   "unregistered": {...}, "memos": {...}, "queries": {...}, "sf": ...}
 
 Methodology mirrors the reference's benchmark stats (p50 of repeated runs,
 /root/reference/benchmarks/src/stats.rs; BASELINE.md §B): one warm-up run,
@@ -112,6 +112,14 @@ def main() -> None:
                 {} if HAVE_REFERENCE_QUERIES
                 else {"lit_*": NO_REFERENCE_QUERIES_REASON}
             ),
+            # Entry count of each session/context memo at the end of the
+            # run: which memos were warm while the timed runs ran.
+            "memos": {
+                name[len("_dds_"):]: len(d)
+                for owner in (spark, spark.sparkContext)
+                for name, d in vars(owner).items()
+                if name.startswith("_dds_") and isinstance(d, dict)
+            },
             "queries": per_query,
             "sf": sf_val,
             "n_queries": len(per_query),

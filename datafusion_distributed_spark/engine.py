@@ -59,6 +59,17 @@ def apply_session_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def memo(owner, name: str) -> dict:
+    """The ``name`` memo dict stored on ``owner`` (a SparkSession, or its
+    SparkContext for state that sibling sessions share). State lives as long
+    as its owner, like the reference's per-query state
+    (tests/stateful_data_cleanup.rs): no key names the owner, so a
+    ``newSession()`` sibling or a restarted context starts empty and
+    nothing needs pruning. Values are plan metadata or small trained
+    artifacts, never rows."""
+    return vars(owner).setdefault("_dds_" + name, {})
+
+
 def build_session(
     app_name: str = "datafusion-distributed-spark",
     master: str | None = None,

@@ -38,9 +38,10 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .engine import memo
 from .literal_tpcds import TPCDS_SUITE_VIEWS
 from .literal_tpcds import view_definitions as _tpcds_view_definitions
-from .tables import load_tables
+from .tables import claim_views, load_tables
 
 REFERENCE_QUERIES = "/root/reference/testdata"
 # The lit_* registry entries execute these texts verbatim. A checkout does not
@@ -578,21 +579,22 @@ def register_spark_views(spark: SparkSession, sf_dir: str, suite: str) -> None:
     Bases are re-registered under ``lit_base_*`` names so padded views can
     take the bare names. Overriding the bare TPC-H names is safe: every
     engine-native query path re-registers its views through
-    ``tables.load_tables`` (which this resets the ownership token for).
+    ``tables.load_tables``, which re-claims them from this suite.
 
     Idempotent per (session, sf_dir, suite): re-registering 24 views on
     every literal query call cost ~100 ms of DDL each — at 83 ``lit_*``
     registry entries x 4 bench executions that was minutes of pure view
-    churn. The early return is valid only while NO engine-native path
-    re-registered the bare views since (``_dds_active_views`` is the
-    None this function left it as); ``load_tables(register=True)`` sets
-    it to its sf_dir, which invalidates this cache too."""
-    cache_key = (sf_dir.rstrip("/"), suite)
-    if (
-        getattr(spark, "_dds_literal_views", None) == cache_key
-        and getattr(spark, "_dds_active_views", "stale") is None
-    ):
-        return
+    churn. ``claim_views`` skips the DDL only while (sf_dir, suite)
+    still owns the bare views; ``load_tables(register=True)`` claims them
+    for its sf_dir, which invalidates this owner too."""
+    claim_views(
+        spark,
+        (sf_dir.rstrip("/"), suite),
+        lambda: _register_suite_views(spark, sf_dir, suite),
+    )
+
+
+def _register_suite_views(spark: SparkSession, sf_dir: str, suite: str) -> None:
     tables = load_tables(spark, sf_dir, register=False)
     from .operators._util import _fan_out
 
@@ -621,10 +623,6 @@ def register_spark_views(spark: SparkSession, sf_dir: str, suite: str) -> None:
     prior = spark.conf.get("spark.sql.ansi.doubleQuotedIdentifiers", None)
     spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", "true")
     try:
-        # NB: loop variables must not shadow cache_key — a prior spelling
-        # stored the LAST view's definition key as the cache token, so the
-        # "idempotent" early return never fired and every literal call
-        # re-ran the 24-view DDL (~100 ms each, minutes across the bench).
         for name, def_key in SUITE_VIEWS[suite]:
             spark.sql(
                 f'CREATE OR REPLACE TEMPORARY VIEW "{name}" AS {defs[def_key]}'
@@ -636,10 +634,6 @@ def register_spark_views(spark: SparkSession, sf_dir: str, suite: str) -> None:
             spark.conf.unset("spark.sql.ansi.doubleQuotedIdentifiers")
         else:
             spark.conf.set("spark.sql.ansi.doubleQuotedIdentifiers", prior)
-    # Invalidate tables.load_tables view ownership: the next engine-native
-    # query re-registers the unpadded bare views.
-    setattr(spark, "_dds_active_views", None)
-    setattr(spark, "_dds_literal_views", cache_key)
 
 
 # Generated (non-parquet) tables DuckDB must see as TABLES, not views: its
@@ -737,7 +731,7 @@ def load_literal_text(
     return stmts[0]
 
 
-# Session-attribute memo of the LAZY analyzed frame per literal entry.
+# Session memo (engine.memo) of the LAZY analyzed frame per literal entry.
 # Expression metadata only (parsed+analyzed logical plan — the same class
 # as operators/_util.const_exprs): every collect() still optimizes, plans
 # and EXECUTES from the parquet inputs; nothing row-shaped is retained.
@@ -752,7 +746,6 @@ def load_literal_text(
 # Project the optimizer removes): the memoized frame's QueryExecution caches
 # its optimized and physical plans, which would otherwise outlive a change
 # of AQE or shuffle-partition confs.
-_FRAME_MEMO_ATTR = "_dds_literal_frame_memo"
 
 
 def run_literal_sql(
@@ -770,12 +763,9 @@ def run_literal_sql(
     statement-level adaptation). Returns the SELECT's (lazy) frame; Spark
     resolves views at spark.sql time, so the later DROP VIEW does not
     invalidate it."""
-    memo = getattr(spark, _FRAME_MEMO_ATTR, None)
-    if memo is None:
-        memo = {}
-        setattr(spark, _FRAME_MEMO_ATTR, memo)
+    frames = memo(spark, "literal_frames")
     memo_key = (suite, name, date_shift_years, year_shift, sf_dir.rstrip("/"))
-    hit = memo.get(memo_key)
+    hit = frames.get(memo_key)
     if hit is not None:
         return hit.select("*")
     register_spark_views(spark, sf_dir, suite)
@@ -815,7 +805,7 @@ def run_literal_sql(
             if stmt.lstrip().lower().startswith(("select", "with", "(")):
                 result = df
         assert result is not None, f"{suite}/{name}: no SELECT statement"
-        memo[memo_key] = result
+        frames[memo_key] = result
         return result
     finally:
         if quoted:

@@ -23,7 +23,8 @@ import threading
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Column, SparkSession
 
-from ..tables import load_tables
+from ..engine import memo
+from ..tables import _SCAN_KEY_ATTR, load_tables
 
 
 def t(spark: SparkSession, sf_dir: str):
@@ -67,28 +68,16 @@ def arr_lit_sql(values) -> str:
 # codeword/centroid/plane matrices and the fixed HOF fold shapes — need not
 # be re-shipped and re-parsed on every invocation (r12 floor probe: those
 # matrices cost 0.2-0.5 s of py4j/SQL-parse per frame BUILD, re-paid each
-# bench run whichever API ships them). Keyed by applicationId so a
-# restarted JVM never sees stale gateway refs. The payload is expression
-# METADATA only — never data, never results; every collect still computes
-# from the parquet inputs (same class as the session-scoped centroid/
-# codebook caches).
-_CONST_EXPR_CACHE: dict = {}
-
-
-def _const_exprs_for_app(app: str, key: tuple, builder):
-    first = next(iter(_CONST_EXPR_CACHE), None)
-    if first is not None and first[0] != app:
-        # A different SparkContext is active: entries built under a
-        # previous context hold dead gateway refs — drop them (one context
-        # per process is the norm; alternating contexts would just rebuild).
-        for stale in [k for k in _CONST_EXPR_CACHE if k[0] != app]:
-            del _CONST_EXPR_CACHE[stale]
-    full_key = (app, *key)
-    hit = _CONST_EXPR_CACHE.get(full_key)
-    if hit is None:
-        hit = builder()
-        _CONST_EXPR_CACHE[full_key] = hit
-    return hit
+# bench run whichever API ships them). The memo lives on the SparkContext
+# (engine.memo), so a restarted JVM never sees stale gateway refs. The
+# payload is expression METADATA only — never data, never results; every
+# collect still computes from the parquet inputs (same class as the
+# context-scoped centroid/codebook memos).
+def _const_exprs_on(sc, key: tuple, builder):
+    exprs = memo(sc, "const_exprs")
+    if key not in exprs:
+        exprs[key] = builder()
+    return exprs[key]
 
 
 def const_exprs(spark: SparkSession, key: tuple, builder):
@@ -96,31 +85,28 @@ def const_exprs(spark: SparkSession, key: tuple, builder):
     expression trees) per (SparkContext, key).
 
     Constraints (r12 ADVICE):
-    - Keyed by applicationId, so sibling SparkSessions of one context share
-      trees parsed under whichever session's parser conf ran first; the
-      engine builds sessions uniformly (engine.RUNTIME_CONFS), so
+    - Held on the SparkContext, so sibling SparkSessions of one context
+      share trees parsed under whichever session's parser conf ran first;
+      the engine builds sessions uniformly (engine.RUNTIME_CONFS), so
       parser-affecting conf divergence between siblings does not arise.
     - Cached trees containing Alias expressions carry exprIds fixed at
       build time: every frame built from them shares attribute IDs, so a
       cached aliased tree must not surface as an output attribute on BOTH
       sides of a join (analyzer ambiguity hazards). Today's callers project
       them away before any self-join."""
-    return _const_exprs_for_app(spark.sparkContext.applicationId, key, builder)
+    return _const_exprs_on(spark.sparkContext, key, builder)
 
 
 def const_exprs_active(key: tuple, builder):
-    """const_exprs keyed off the ACTIVE SparkContext — for expression
-    helpers with no session handle (similarity's _dot / LSH bucket tree).
-    Routing through the same cache + stale-context sweep as const_exprs
-    (r12 ADVICE: direct inserts bypassed the pruning, so dead-gateway
-    entries could linger after a context restart). Builds unmemoized when
-    no context is live (import time)."""
+    """const_exprs on the ACTIVE SparkContext — for expression helpers with
+    no session handle (similarity's _dot / LSH bucket tree). Builds
+    unmemoized when no context is live (import time)."""
     from pyspark import SparkContext
 
     sc = SparkContext._active_spark_context
     if sc is None:
         return builder()
-    return _const_exprs_for_app(sc.applicationId, key, builder)
+    return _const_exprs_on(sc, key, builder)
 
 
 def _c(col: str | Column) -> Column:
@@ -197,23 +183,31 @@ def release_local_checkpoint(df) -> None:
         pass  # not a LogicalRDD-backed frame — nothing explicit to free
 
 
-_CHECKPOINT_SLOTS: dict = {}
+def _unpersist(df) -> None:
+    try:
+        df.unpersist(blocking=False)
+    except Exception:
+        pass
 
 
-def _prune_dead_sessions(slots: dict) -> None:
-    """Drop slots owned by STOPPED sessions: the multi-session differential
-    harnesses create short-lived sessions, and a (session, ...) entry holds
-    strong references to the dead session and its frame for the process
-    lifetime otherwise (r7 ADVICE). A stopped PySpark context nulls its
-    _jsc, which is the liveness signal used here; the blocks themselves
-    died with the session, so popping the entry is the whole cleanup."""
-    dead = [
-        k
-        for k in list(slots)
-        if getattr(k[0].sparkContext, "_jsc", None) is None
-    ]
-    for k in dead:
-        slots.pop(k, None)
+def _slot(spark: SparkSession, key: str, build, release) -> "DataFrame":
+    """Release the calling thread's previous ``key`` frame, then build and
+    hold the next one with its ``release``.
+
+    Slots are a session memo keyed by (calling thread, operator): two
+    sessions in one process (the differential harnesses) or two threads
+    must not release each other's blocks — localCheckpoint lineage cannot
+    be recomputed (r6 ADVICE). A thread started after another finished may
+    reuse its ident, and then takes over its slots."""
+    slots = memo(spark, "slots")
+    skey = (threading.get_ident(), key)
+    prev = slots.pop(skey, None)
+    if prev is not None:
+        frame, prev_release = prev
+        prev_release(frame)
+    df = build()
+    slots[skey] = (df, release)
+    return df
 
 
 def slot_local_checkpoint(key: str, df) -> "DataFrame":
@@ -230,19 +224,12 @@ def slot_local_checkpoint(key: str, df) -> "DataFrame":
     the next invocation in the same thread — exactly the consume-then-reinvoke
     pattern every harness here uses.
     """
-    # Slots are keyed per (SparkSession, calling thread, operator): two
-    # sessions in one process (the differential harnesses) or two threads
-    # must not release each other's blocks — localCheckpoint lineage cannot
-    # be recomputed (r6 ADVICE). A thread started after another finished may
-    # reuse its ident, and then takes over its slots.
-    _prune_dead_sessions(_CHECKPOINT_SLOTS)
-    skey = (df.sparkSession, threading.get_ident(), key)
-    prev = _CHECKPOINT_SLOTS.pop(skey, None)
-    if prev is not None:
-        release_local_checkpoint(prev)
-    ck = df.localCheckpoint(eager=True)
-    _CHECKPOINT_SLOTS[skey] = ck
-    return ck
+    return _slot(
+        df.sparkSession,
+        key,
+        lambda: df.localCheckpoint(eager=True),
+        release_local_checkpoint,
+    )
 
 
 def slot_rebuild(key: str, spark: SparkSession, builder) -> "DataFrame":
@@ -257,17 +244,7 @@ def slot_rebuild(key: str, spark: SparkSession, builder) -> "DataFrame":
     run of a consumer times the full declared computation (r12 VERDICT
     item 3 — the former build-once slot served later calls from cached
     blocks, which measured a cache read, not the operator)."""
-    _prune_dead_sessions(_CHECKPOINT_SLOTS)
-    skey = (spark, threading.get_ident(), key)
-    prev = _CHECKPOINT_SLOTS.pop(skey, None)
-    if prev is not None:
-        release_local_checkpoint(prev)
-    df = builder()
-    _CHECKPOINT_SLOTS[skey] = df
-    return df
-
-
-_PERSIST_SLOTS: dict = {}
+    return _slot(spark, key, builder, release_local_checkpoint)
 
 
 def slot_persist(key: str, df, eager: bool = False) -> "DataFrame":
@@ -280,25 +257,19 @@ def slot_persist(key: str, df, eager: bool = False) -> "DataFrame":
     more than it saves (p50 0.61 s lazy vs 0.69 s eager); what actually
     mattered was releasing the PREVIOUS invocation's block, which an
     un-slotted persist never does."""
-    _prune_dead_sessions(_PERSIST_SLOTS)
-    skey = (df.sparkSession, threading.get_ident(), key)
-    prev = _PERSIST_SLOTS.pop(skey, None)
-    if prev is not None:
-        try:
-            prev.unpersist(blocking=False)
-        except Exception:
-            pass
-    df = df.persist()
-    if eager:
-        df.count()
-    _PERSIST_SLOTS[skey] = df
-    return df
+
+    def build():
+        held = df.persist()
+        if eager:
+            held.count()
+        return held
+
+    return _slot(df.sparkSession, key, build, _unpersist)
 
 
-def release_all_slots(spark: SparkSession | None = None) -> None:
+def release_all_slots(spark: SparkSession) -> None:
     """Release EVERY live slot-held frame (checkpoint, persist) owned by
-    ``spark`` (or by any session when ``spark`` is None), whichever thread
-    created it.
+    ``spark``, whichever thread created it.
 
     Bench hygiene (r12 VERDICT item 2): ``spark.catalog.clearCache()`` drops
     CacheManager entries but NOT localCheckpoint RDD blocks, so the LAST
@@ -309,21 +280,12 @@ def release_all_slots(spark: SparkSession | None = None) -> None:
     slot contract: a slot frame is only valid until the owner's next
     invocation, and the bench consumes each query's result before moving
     on."""
-    for skey in list(_CHECKPOINT_SLOTS):
-        if spark is not None and skey[0] is not spark:
-            continue
-        frame = _CHECKPOINT_SLOTS.pop(skey, None)
-        if frame is not None:
-            release_local_checkpoint(frame)
-    for skey in list(_PERSIST_SLOTS):
-        if spark is not None and skey[0] is not spark:
-            continue
-        frame = _PERSIST_SLOTS.pop(skey, None)
-        if frame is not None:
-            try:
-                frame.unpersist(blocking=False)
-            except Exception:
-                pass
+    slots = memo(spark, "slots")
+    for skey in list(slots):
+        held = slots.pop(skey, None)
+        if held is not None:
+            frame, release = held
+            release(frame)
 
 
 def kgram_concat_sql(arr: str, idx: str, k: int, base: int = 1) -> str:
@@ -349,12 +311,6 @@ def kgram_concat_sql(arr: str, idx: str, k: int, base: int = 1) -> str:
         else:
             parts.append(f"{arr}[{idx} + {off}]")
     return "concat(" + ", ' ', ".join(parts) + ")"
-
-
-# Per-session memo of scan partition counts for _fan_out: attribute ON the
-# SparkSession (same session-scoping rationale as tables._CACHE_ATTR — two
-# sessions must not share, and the memo dies with the session wrapper).
-_FANOUT_MEMO_ATTR = "_dds_fanout_npart"
 
 
 def _fan_out(df: DataFrame, src: DataFrame | None = None) -> DataFrame:
@@ -395,16 +351,13 @@ def _fan_out(df: DataFrame, src: DataFrame | None = None) -> DataFrame:
     whether to insert a repartition, never what the query computes."""
     spark = df.sparkSession
     parallelism = spark.sparkContext.defaultParallelism
-    key = getattr(src, "_dds_scan_key", None) if src is not None else None
+    key = getattr(src, _SCAN_KEY_ATTR, None) if src is not None else None
     if key is not None:
-        memo = getattr(spark, _FANOUT_MEMO_ATTR, None)
-        if memo is None:
-            memo = {}
-            setattr(spark, _FANOUT_MEMO_ATTR, memo)
-        n = memo.get(key)
+        # A session memo (engine.memo): two sessions must not share it.
+        npart = memo(spark, "fanout_npart")
+        n = npart.get(key)
         if n is None:
-            n = df.rdd.getNumPartitions()
-            memo[key] = n
+            n = npart[key] = df.rdd.getNumPartitions()
     else:
         n = df.rdd.getNumPartitions()
     if n >= parallelism:

@@ -33,6 +33,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
+from ..engine import memo
 from ._util import (
     _fan_out,
     arr_lit_sql,
@@ -583,17 +584,15 @@ SELECT q_id, neighbor_id, cos_sim FROM ranked WHERE rn <= {_TOP_K}
 """
 
 
-_CENTROID_CACHE: dict[tuple[str, str], list[list[float]]] = {}
-
-
 def _centroids(spark: SparkSession, emb: DataFrame, sf_dir: str) -> list[list[float]]:
-    """The K seed centroid vectors, collected once per (session, sf_dir).
+    """The K seed centroid vectors, collected once per (context, sf_dir).
 
     K×64 doubles: constant, metadata-scale (a real fit broadcasts this).
     """
     k0 = _IVF_FIRST_CENTROID
-    cache_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    centroids = _CENTROID_CACHE.get(cache_key)
+    fitted = memo(spark.sparkContext, "ivf_centroids")
+    cache_key = sf_dir.rstrip("/")
+    centroids = fitted.get(cache_key)
     if centroids is None:
         # K scales with the corpus count (r12 — see _ivf_k_for); one count
         # + one K-row collect per (session, sf_dir), both metadata-scale.
@@ -604,7 +603,7 @@ def _centroids(spark: SparkSession, emb: DataFrame, sf_dir: str) -> list[list[fl
             .collect()
         )
         centroids = [list(r.e) for r in cent_rows]
-        _CENTROID_CACHE[cache_key] = centroids
+        fitted[cache_key] = centroids
     return centroids
 
 
@@ -1389,7 +1388,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     64-element HOF folds are CodegenFallback (interpreted, allocation-
     heavy). Isolated p95/p50 = 1.15; the wider bench spread adds ambient
     GC from neighboring queries plus, on whichever sim_* query runs first,
-    the one-time centroid fit (~8 s, session-cached — _CENTROID_CACHE).
+    the one-time centroid fit (~8 s, once per SparkContext — _centroids).
     A/B'd fix attempts: fanning out the embeddings scan moved p50 2.1 ->
     2.1 s (the added repartition stage cancels the parallelism gain at
     fixture scale) — not adopted. At 100 TB the cells are large enough
@@ -2172,9 +2171,6 @@ def _pq_convergence_oracle(steps: int = _PQ_TRAIN_STEPS) -> str:
     return f"{_pq_chain_ctes(steps)}\nSELECT * FROM ({selects})"
 
 
-_LLOYD_CB_CACHE: dict[tuple[str, str, int], list[list[list[float]]]] = {}
-
-
 def _lloyd_stats(
     spark: SparkSession, sf_dir: str, codewords: list[list[float]]
 ) -> DataFrame:
@@ -2225,12 +2221,11 @@ def _lloyd_codebooks(
     spark: SparkSession, sf_dir: str, steps: int = _PQ_TRAIN_STEPS
 ) -> list[list[list[float]]]:
     """[C_0 .. C_steps]: the seed codebook and each Lloyd update, K scaled
-    by corpus count; cached per (session, sf_dir, steps) — each codebook is
-    K x 64 doubles, metadata-scale."""
-    cache_key = (
-        spark.sparkContext.applicationId, sf_dir.rstrip("/"), steps,
-    )
-    hit = _LLOYD_CB_CACHE.get(cache_key)
+    by corpus count; cached per (SparkContext, sf_dir, steps) — each
+    codebook is K x 64 doubles, metadata-scale."""
+    chains = memo(spark.sparkContext, "lloyd_codebooks")
+    cache_key = (sf_dir.rstrip("/"), steps)
+    hit = chains.get(cache_key)
     if hit is not None:
         return hit
     emb = t(spark, sf_dir)["embeddings"].select(
@@ -2250,7 +2245,7 @@ def _lloyd_codebooks(
         for r in _lloyd_stats(spark, sf_dir, chain[-1]).collect():
             nxt[r.code - 1][(r.m - 1) * _PQ_D + (r.dim - 1)] = float(r.mean_val)
         chain.append(nxt)
-    _LLOYD_CB_CACHE[cache_key] = chain
+    chains[cache_key] = chain
     return chain
 
 

@@ -12,6 +12,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
+from ..engine import memo
 from ._util import (
     _fan_out,
     dbl,
@@ -1937,9 +1938,6 @@ v{st} AS (SELECT word, freq, {sym} AS sym FROM {prev}, m{st})""")
     return "".join(parts) + f"\nSELECT * FROM ({selects})"
 
 
-_BPE_MERGE_CACHE: dict[tuple[str, str], list[tuple[str, str, int]]] = {}
-
-
 def _bpe_vocab_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = t(spark, sf_dir)["documents"]
     w = F.explode(F.split(F.trim(F.lower(F.col("text"))), " +")).alias("w")
@@ -1972,10 +1970,11 @@ def _bpe_learned_merges(
     spark: SparkSession, sf_dir: str, steps: int = _BPE_STEPS
 ) -> list[tuple[str, str, int]]:
     """[(left, right, pair_count)] for each learned merge, cached per
-    (session, sf_dir): T aggregate jobs over the vocab table, one 3-value
-    scalar collect each."""
-    cache_key = (spark.sparkContext.applicationId, sf_dir.rstrip("/"))
-    hit = _BPE_MERGE_CACHE.get(cache_key)
+    (SparkContext, sf_dir): T aggregate jobs over the vocab table, one
+    3-value scalar collect each."""
+    learned = memo(spark.sparkContext, "bpe_merges")
+    cache_key = sf_dir.rstrip("/")
+    hit = learned.get(cache_key)
     if hit is not None and len(hit) >= steps:
         return hit[:steps]
     vocab = _bpe_vocab_frame(spark, sf_dir)
@@ -2004,7 +2003,7 @@ def _bpe_learned_merges(
         top = pairs.orderBy(F.desc("cnt"), "l", "r").limit(1).collect()[0]
         merges.append((top.l, top.r, int(top.cnt)))
         sym = _bpe_apply_merge(sym, top.l, top.r)
-    _BPE_MERGE_CACHE[cache_key] = merges
+    learned[cache_key] = merges
     return merges
 
 

@@ -75,8 +75,7 @@ class HookContext:
 # registration order — the reference registers handlers on a specific
 # worker session's SessionStateBuilder (tests/worker_plan_hook.rs), so two
 # sessions in one process must not see each other's handlers. Plain dict
-# keyed by session + stopped-session pruning, the same ownership pattern as
-# operators/_util.py's checkpoint/persist slots (a WeakKeyDictionary could
+# keyed by session + stopped-session pruning (a WeakKeyDictionary could
 # silently drop a live session's hooks if the caller kept no other strong
 # reference; stopped-session pruning can't).
 _HOOKS: dict = {}

@@ -16,7 +16,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .engine import apply_session_confs
+from .engine import apply_session_confs, memo
 
 TABLE_NAMES = (
     "region",
@@ -31,16 +31,10 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Both the DataFrame cache and the view-ownership token live as attributes ON
-# the SparkSession object itself, not in a module dict keyed by applicationId:
-# temp views (and DataFrames) are SparkSession-scoped, and two sessions
-# sharing one SparkContext (spark.newSession()) share an applicationId — a
-# module-level cache hit in the second session would both return frames bound
-# to the FIRST session and skip view registration while the second session
-# has no (or stale) views. Attributes die with the session wrapper, so there
-# is no id()-reuse aliasing either.
-_CACHE_ATTR = "_dds_tables_cache"  # dict[sf_dir, dict[name, DataFrame]]
-_VIEWS_ATTR = "_dds_active_views"  # sf_dir whose frames own the bare views
+# Table frames and the views owner are SparkSession memos, not SparkContext
+# ones: temp views and DataFrames are session-scoped, so a context-wide hit in
+# a spark.newSession() sibling would return frames bound to the FIRST session
+# and skip registering the sibling's views.
 
 # Stamped on every registry table frame so operators/_util._fan_out can
 # memoize its scan-partition-count probe per (sf_dir, table) — the split
@@ -48,11 +42,22 @@ _VIEWS_ATTR = "_dds_active_views"  # sf_dir whose frames own the bare views
 # while df.rdd.getNumPartitions() re-plans the frame on every call.
 _SCAN_KEY_ATTR = "_dds_scan_key"
 
-# Which sf_dir's frames currently own the session's bare-named temp views.
-# A cache hit alone is NOT enough to return early: if another sf_dir was
-# loaded since, the session's views point at THAT data, and every
-# spark.sql-path query would silently read the wrong scale. (Found by the
-# max-fan-out suite — the first caller to alternate sf_dirs in one session.)
+
+def claim_views(spark: SparkSession, owner, register) -> None:
+    """Run ``register()`` unless ``owner`` already owns the session's
+    bare-named temp views, then record ``owner`` as their owner.
+
+    Owners are an sf_dir (``load_tables``) or an (sf_dir, suite) pair
+    (``literal.register_spark_views``, which overrides bare names with
+    schema-mapped views). A cache hit alone is NOT enough to skip
+    registration: if another owner registered since, the views point at
+    THAT data, and every spark.sql-path query would silently read the
+    wrong scale. (Found by the max-fan-out suite — the first caller to
+    alternate sf_dirs in one session.)"""
+    views = memo(spark, "views")
+    if views.get("owner") != owner:
+        register()
+        views["owner"] = owner
 
 
 def _normalize(name: str, df: DataFrame) -> DataFrame:
@@ -72,26 +77,20 @@ def load_tables(
     as temp views under their bare names."""
     apply_session_confs(spark)
     dir_key = sf_dir.rstrip("/")
-    cache: dict[str, dict[str, DataFrame]] = getattr(spark, _CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _CACHE_ATTR, cache)
-    if dir_key in cache:
-        tables = cache[dir_key]
-        if register and getattr(spark, _VIEWS_ATTR, None) != dir_key:
+    cache: dict[str, dict[str, DataFrame]] = memo(spark, "tables")
+    tables = cache.get(dir_key)
+    if tables is None:
+        tables = {}
+        for name in TABLE_NAMES:
+            df = _normalize(name, spark.read.parquet(f"{dir_key}/{name}.parquet"))
+            setattr(df, _SCAN_KEY_ATTR, (dir_key, name))
+            tables[name] = df
+        cache[dir_key] = tables
+    if register:
+
+        def _register() -> None:
             for name, df in tables.items():
                 df.createOrReplaceTempView(name)
-            setattr(spark, _VIEWS_ATTR, dir_key)
-        return tables
-    tables = {}
-    for name in TABLE_NAMES:
-        df = spark.read.parquet(f"{dir_key}/{name}.parquet")
-        df = _normalize(name, df)
-        setattr(df, _SCAN_KEY_ATTR, (dir_key, name))
-        if register:
-            df.createOrReplaceTempView(name)
-        tables[name] = df
-    cache[dir_key] = tables
-    if register:
-        setattr(spark, _VIEWS_ATTR, dir_key)
+
+        claim_views(spark, dir_key, _register)
     return tables

@@ -12,7 +12,9 @@ import threading
 import time
 
 import pyspark.sql.functions as F
+from pyspark import StorageLevel
 
+from datafusion_distributed_spark.engine import memo
 from datafusion_distributed_spark.tables import load_tables
 
 from .conftest import SF_DIR
@@ -172,5 +174,34 @@ def test_slot_checkpoint_survives_a_second_thread(spark):
 
     _util.release_all_slots(spark)
     assert not any(
-        skey[-1] == "two-thread-probe" for skey in _util._CHECKPOINT_SLOTS
+        skey[-1] == "two-thread-probe" for skey in memo(spark, "slots")
     )
+
+
+def test_release_all_slots_frees_persist_and_checkpoint_slots(spark):
+    """One session memo holds both slot kinds; release_all_slots runs each
+    slot's own release, so a persisted frame is unpersisted too."""
+    from datafusion_distributed_spark.operators import _util
+
+    persisted = _util.slot_persist("release-probe-persist", spark.range(40), eager=True)
+    _util.slot_local_checkpoint("release-probe-checkpoint", spark.range(30))
+    assert persisted.storageLevel != StorageLevel.NONE
+
+    _util.release_all_slots(spark)
+    assert persisted.storageLevel == StorageLevel.NONE
+    assert not memo(spark, "slots")
+
+
+def test_release_all_slots_spares_a_sibling_session(spark):
+    """Slots belong to the session that made them: releasing one session's
+    slots leaves a newSession() sibling's checkpoint readable."""
+    from datafusion_distributed_spark.operators import _util
+
+    sibling = spark.newSession()
+    try:
+        kept = _util.slot_local_checkpoint("sibling-probe", sibling.range(25))
+        _util.release_all_slots(spark)
+        assert memo(sibling, "slots")
+        assert kept.count() == 25
+    finally:
+        _util.release_all_slots(sibling)

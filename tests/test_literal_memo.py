@@ -6,7 +6,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from datafusion_distributed_spark.literal import _FRAME_MEMO_ATTR, run_literal_sql
+from datafusion_distributed_spark.engine import memo
+from datafusion_distributed_spark.literal import run_literal_sql
 
 from .conftest import SF_DIR
 
@@ -21,9 +22,9 @@ def test_literal_memo_hit_replans_under_current_confs(spark):
     # Pre-seed the memo so no reference text is read: the key mirrors
     # run_literal_sql's (suite, name, date shift, year shift, sf_dir).
     seeded = spark.range(100).groupBy((F.col("id") % 3).alias("k")).count()
-    memo = vars(spark).setdefault(_FRAME_MEMO_ATTR, {})
+    frames = memo(spark, "literal_frames")
     key = ("memo_probe", "q0", 0, 0, SF_DIR.rstrip("/"))
-    memo[key] = seeded
+    frames[key] = seeded
     prior = spark.conf.get(_AQE)
     try:
         spark.conf.set(_AQE, "true")
@@ -36,4 +37,4 @@ def test_literal_memo_hit_replans_under_current_confs(spark):
         assert sorted(second.collect()) == sorted(seeded.collect())
     finally:
         spark.conf.set(_AQE, prior)
-        del memo[key]
+        del frames[key]
