@@ -7,7 +7,8 @@ and prints ONE JSON line:
 
 Methodology mirrors the reference's benchmark stats (p50 of repeated runs,
 /root/reference/benchmarks/src/stats.rs; BASELINE.md §B): one warm-up run,
-then N_RUNS timed runs per query, per-query median, total = sum of medians.
+then N_RUNS timed runs per query (plans/cost_lint.measure), per-query
+median, total = sum of medians.
 (A round-9 experiment ran lit_* entries warm-up + single-run to shave wall;
 REVERTED — the single run right after warm-up measures ~40% above the 3-run
 median on those sub-second star queries, polluting the battery total for a
@@ -19,9 +20,7 @@ from __future__ import annotations
 import gc
 import json
 import os
-import statistics
 import sys
-import time
 
 N_RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "3"))
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -48,6 +47,7 @@ def main() -> None:
         budget_seconds,
         input_rows,
         is_narrow,
+        measure,
         table_row_counts,
     )
 
@@ -58,19 +58,21 @@ def main() -> None:
     failed: list[str] = []
     cost_flags: list[str] = []
     for name, qd in sorted(REGISTRY.items()):
-        times = []
+        frames = []
+
+        def run() -> None:
+            df = qd.fn(spark, SF_DIR)
+            df.collect()
+            if not frames:
+                frames.append(df)
+
         try:
-            warm = qd.fn(spark, SF_DIR)
-            warm.collect()  # warm-up (also JIT/codegen cache)
+            per_query[name] = round(measure(run, N_RUNS), 4)
             # Per-row cost lint (round-4 verdict: a clean narrow plan can
             # hide a 2,000× per-row constant — e.g. a per-row JVM exception
             # path). Classified off the warm-up frame: zero extra builds.
+            warm = frames[0]
             narrow_rows = input_rows(warm, row_counts) if is_narrow(warm) else None
-            for _ in range(N_RUNS):
-                t0 = time.perf_counter()
-                qd.fn(spark, SF_DIR).collect()
-                times.append(time.perf_counter() - t0)
-            per_query[name] = round(statistics.median(times), 4)
             if narrow_rows is not None and per_query[name] > budget_seconds(
                 narrow_rows
             ):

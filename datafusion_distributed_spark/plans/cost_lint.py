@@ -16,11 +16,13 @@ exactly the class where "rows scanned" is an honest denominator, and exactly
 the class where the plan lint has no signal at all. Row-amplifying plans are
 covered by the structural lint instead.
 
-Used by tests/test_cost_lint.py (the gate) and bench.py (per-round report).
+Used by tests/test_cost_lint.py (the gate) and bench.py (per-round report);
+``measure`` is also the timing loop of tools/bench_vs_duckdb.py.
 """
 
 from __future__ import annotations
 
+import statistics
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -171,12 +173,12 @@ def load_factor(spark: SparkSession, sf_dir: str, counts: dict[str, int]) -> flo
     rows = counts.get("lineitem", 0)
     if not rows:
         return 1.0
-    elapsed = measure(lambda s, d: _cal_probe(s, d), spark, sf_dir)
+    elapsed = measure(lambda: _cal_probe(spark, sf_dir).collect())
     tput = (elapsed / rows) / CAL_NOMINAL_RATE
     heavy = 1.0
     doc_rows = counts.get("documents", 0)
     if doc_rows:
-        elapsed_h = measure(lambda s, d: _cal_probe_heavy(s, d), spark, sf_dir)
+        elapsed_h = measure(lambda: _cal_probe_heavy(spark, sf_dir).collect())
         # Normalize by the PINNED quiet-box nominal (not the raw budget):
         # the probe legitimately runs at ~0.47x its generic budget when
         # unloaded, so the raw ratio would read a loaded box late and a
@@ -187,12 +189,14 @@ def load_factor(spark: SparkSession, sf_dir: str, counts: dict[str, int]) -> flo
     return max(1.0, min(MAX_LOAD_FACTOR, max(tput, heavy)))
 
 
-def measure(df_builder, spark: SparkSession, sf_dir: str) -> float:
-    """Median of 3 timed runs after one warm-up (codegen/JIT cache)."""
-    df_builder(spark, sf_dir).collect()
+def measure(run, runs: int = 3) -> float:
+    """Median wall of ``runs`` timed calls of ``run()`` after one untimed
+    warm-up call (codegen/JIT and file caches): the p50 of repeated runs
+    that the reference's benchmark stats report (benchmarks/src/stats.rs)."""
+    run()
     times = []
-    for _ in range(3):
+    for _ in range(runs):
         t0 = time.perf_counter()
-        df_builder(spark, sf_dir).collect()
+        run()
         times.append(time.perf_counter() - t0)
-    return sorted(times)[1]
+    return statistics.median(times)

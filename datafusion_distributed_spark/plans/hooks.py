@@ -27,7 +27,8 @@ handler in order, enforcing the reference's contract:
   metric taps, logging) and semantics-preserving hints are appropriate;
   anything schema-changing is rejected at hook time.
 
-The registry is keyed per SparkSession, mirroring the reference's
+Each SparkSession holds its own registry (``memo(session, "hooks")``, an
+insertion-ordered name -> handler dict), mirroring the reference's
 per-worker `SessionStateBuilder` registration: handlers registered on one
 session never run on another's frames (the multi-session differential
 harnesses are exactly this scenario). In a real cluster deployment the
@@ -42,6 +43,8 @@ from dataclasses import dataclass
 from typing import Callable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
+
+from ..engine import memo
 
 
 @dataclass
@@ -71,24 +74,6 @@ class HookContext:
         return get_option_extension(cls, self.spark)
 
 
-# Per-session registries: {SparkSession: [(name, handler), ...]} in
-# registration order — the reference registers handlers on a specific
-# worker session's SessionStateBuilder (tests/worker_plan_hook.rs), so two
-# sessions in one process must not see each other's handlers. Plain dict
-# keyed by session + stopped-session pruning (a WeakKeyDictionary could
-# silently drop a live session's hooks if the caller kept no other strong
-# reference; stopped-session pruning can't).
-_HOOKS: dict = {}
-
-
-def _prune_stopped_sessions() -> None:
-    dead = [
-        s for s in _HOOKS if getattr(s.sparkContext, "_jsc", None) is None
-    ]
-    for s in dead:
-        _HOOKS.pop(s, None)
-
-
 def _resolve_session(spark: Optional[SparkSession]) -> SparkSession:
     s = spark or SparkSession.getActiveSession()
     if s is None:
@@ -100,6 +85,12 @@ def _resolve_session(spark: Optional[SparkSession]) -> SparkSession:
     return s
 
 
+def _hooks(spark: Optional[SparkSession]) -> dict:
+    """``spark``'s hooks (default: the active session) in registration
+    order, name -> handler."""
+    return memo(_resolve_session(spark), "hooks")
+
+
 def register_worker_plan_hook(
     name: str,
     fn: Callable[[DataFrame, HookContext], DataFrame],
@@ -109,12 +100,10 @@ def register_worker_plan_hook(
     session). Duplicate names within a session are rejected so
     unregistering is unambiguous; the same name in two sessions is fine —
     that's the isolation the reference's per-session registration gives."""
-    _prune_stopped_sessions()
-    s = _resolve_session(spark)
-    hooks = _HOOKS.setdefault(s, [])
-    if any(n == name for n, _ in hooks):
+    hooks = _hooks(spark)
+    if name in hooks:
         raise ValueError(f"plan hook {name!r} already registered")
-    hooks.append((name, fn))
+    hooks[name] = fn
 
 
 def unregister_worker_plan_hook(
@@ -122,27 +111,17 @@ def unregister_worker_plan_hook(
 ) -> bool:
     """Remove a handler by name from ``spark``'s registry (default: the
     active session); returns whether one was removed."""
-    s = _resolve_session(spark)
-    hooks = _HOOKS.get(s, [])
-    for i, (n, _) in enumerate(hooks):
-        if n == name:
-            del hooks[i]
-            return True
-    return False
+    return _hooks(spark).pop(name, None) is not None
 
 
 def clear_worker_plan_hooks(spark: Optional[SparkSession] = None) -> None:
-    """Clear one session's hooks, or — with no argument and no active
-    session context needed — every session's (the test-fixture clean-slate
-    semantics)."""
-    if spark is not None:
-        _HOOKS.pop(spark, None)
-    else:
-        _HOOKS.clear()
+    """Clear ``spark``'s hooks (default: the active session); sibling
+    sessions keep theirs."""
+    _hooks(spark).clear()
 
 
 def registered_hooks(spark: Optional[SparkSession] = None) -> list:
-    return [n for n, _ in _HOOKS.get(_resolve_session(spark), [])]
+    return list(_hooks(spark))
 
 
 def run_plan_hooks(df: DataFrame) -> DataFrame:
@@ -157,12 +136,12 @@ def run_plan_hooks(df: DataFrame) -> DataFrame:
     Session-scoped: only the hooks registered against ``df``'s own session
     run — a sibling session's handlers never see this frame, matching the
     reference where each worker session carries its own handler list."""
-    hooks = _HOOKS.get(df.sparkSession)
+    hooks = memo(df.sparkSession, "hooks")
     if not hooks:
         return df
     ctx = HookContext(spark=df.sparkSession)
     before = df.schema
-    for name, fn in list(hooks):
+    for name, fn in list(hooks.items()):
         try:
             out = fn(df, ctx)
         except Exception as e:

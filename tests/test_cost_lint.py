@@ -77,7 +77,7 @@ def test_narrow_battery_per_row_cost(spark, counts, load):
     for name in names:
         qd = REGISTRY[name]
         rows = input_rows(qd.fn(spark, COST_SF_DIR), counts)
-        elapsed = measure(qd.fn, spark, COST_SF_DIR)
+        elapsed = measure(lambda: qd.fn(spark, COST_SF_DIR).collect())
         if elapsed > budget_seconds(rows, load):
             # Retry once with a load factor RE-MEASURED at violation time:
             # ambient load can spike mid-battery (the module-start factor is
@@ -89,7 +89,7 @@ def test_narrow_battery_per_row_cost(spark, counts, load):
             # transient probe slowdown leaves a trail instead of vanishing
             # (r7 ADVICE).
             lf2 = load_factor(spark, COST_SF_DIR, counts)
-            elapsed2 = measure(qd.fn, spark, COST_SF_DIR)
+            elapsed2 = measure(lambda: qd.fn(spark, COST_SF_DIR).collect())
             print(
                 f"[cost-lint retry] {name}: first {elapsed:.2f}s "
                 f"(budget {budget_seconds(rows, load):.2f}s at load "
@@ -112,6 +112,24 @@ def test_narrow_battery_per_row_cost(spark, counts, load):
     )
 
 
+def test_measure_is_median_of_timed_runs_after_one_warmup(monkeypatch):
+    """``measure`` calls ``run`` once untimed, then ``runs`` timed calls,
+    and returns their median — not their mean, and never the warm-up."""
+    from datafusion_distributed_spark.plans import cost_lint
+
+    clock = [0.0]
+    durations = iter([100.0, 1.0, 8.0, 3.0])  # warm-up, then 3 timed calls
+    calls = []
+
+    def run():
+        calls.append(1)
+        clock[0] += next(durations)
+
+    monkeypatch.setattr(cost_lint.time, "perf_counter", lambda: clock[0])
+    assert measure(run, runs=3) == 3.0
+    assert len(calls) == 4
+
+
 def test_lint_flags_exception_storm(spark, counts):
     """The injected round-4 defect — an always-overflow try_multiply whose
     NULL-on-error contract is implemented via a per-row JVM exception —
@@ -129,7 +147,7 @@ def test_lint_flags_exception_storm(spark, counts):
     assert is_narrow(df), "storm plan must be in the narrow class to be a fair probe"
     rows = input_rows(df, counts)
     assert rows > 0
-    elapsed = measure(storm, spark, COST_SF_DIR)
+    elapsed = measure(lambda: storm(spark, COST_SF_DIR).collect())
     # The storm must trip even at the measured ambient load: its ~16 µs/row
     # constant exceeds the scaled budget because the scaling comes FROM the
     # same machine conditions slowing the storm itself.
@@ -166,7 +184,7 @@ def test_lint_survives_ambient_burn(spark, counts):
             ).agg(F.max("v").alias("m"))
 
         rows = input_rows(honest(spark, COST_SF_DIR), counts)
-        honest_t = measure(honest, spark, COST_SF_DIR)
+        honest_t = measure(lambda: honest(spark, COST_SF_DIR).collect())
         assert honest_t <= budget_seconds(rows, lf), (
             f"honest narrow query flaked under ambient burn: {honest_t:.2f}s "
             f"vs budget {budget_seconds(rows, lf):.2f}s (load {lf:.2f})"
@@ -179,7 +197,7 @@ def test_lint_survives_ambient_burn(spark, counts):
                 F.sum(F.when(F.col("m").isNull(), 1).otherwise(0)).alias("n_null")
             )
 
-        storm_t = measure(storm, spark, COST_SF_DIR)
+        storm_t = measure(lambda: storm(spark, COST_SF_DIR).collect())
         assert storm_t > budget_seconds(rows, lf), (
             f"storm slipped under the scaled budget during burn: "
             f"{storm_t:.2f}s vs {budget_seconds(rows, lf):.2f}s (load {lf:.2f})"

@@ -162,6 +162,24 @@ def test_hooks_are_session_scoped(spark):
     assert registered_hooks(s2) == []
 
 
+def test_clear_without_argument_spares_a_sibling_session(spark):
+    """With no argument, clear_worker_plan_hooks clears the active session
+    only: a ``newSession()`` sibling keeps its hook, and the hook still runs
+    on the sibling's frames."""
+    sibling = spark.newSession()
+    calls = []
+    register_worker_plan_hook("mine", lambda df, ctx: df)
+    register_worker_plan_hook(
+        "theirs", lambda df, ctx: (calls.append("sibling"), df)[1], spark=sibling
+    )
+
+    clear_worker_plan_hooks()
+    assert registered_hooks() == []
+    assert registered_hooks(sibling) == ["theirs"]
+    run_plan_hooks(tpch_q6(sibling, SF_DIR))
+    assert calls == ["sibling"]
+
+
 def test_unregister_and_duplicates(spark):
     def h(df, ctx):
         return df

@@ -28,9 +28,7 @@ from __future__ import annotations
 
 import argparse
 import json
-import statistics
 import sys
-import time
 
 import duckdb
 
@@ -42,6 +40,7 @@ from datafusion_distributed_spark.literal import (  # noqa: E402
     run_literal_duck,
     run_literal_sql,
 )
+from datafusion_distributed_spark.plans.cost_lint import measure  # noqa: E402
 
 SUITE_QUERIES = {
     "tpch": [f"q{i}" for i in range(1, 23)],
@@ -60,18 +59,6 @@ SCALE_DIRS = {
     "sf0.1": "/root/testdata/sf0.1",
     "sf1eq": "/root/repo/.scale_probe/sf1eq",
 }
-
-
-def _median_wall(fn, runs: int) -> float:
-    # One untimed warm-up (file-cache + plan-cache parity for both engines),
-    # then the median of `runs` timed executions.
-    fn()
-    walls = []
-    for _ in range(runs):
-        t0 = time.time()
-        fn()
-        walls.append(time.time() - t0)
-    return statistics.median(walls)
 
 
 def main() -> None:
@@ -110,13 +97,11 @@ def main() -> None:
                 continue
             rec = out["queries"].setdefault(q, {})
             try:
-                sp = _median_wall(
+                sp = measure(
                     lambda: run_literal_sql(spark, sf_dir, args.suite, q).collect(),
                     args.runs,
                 )
-                dk = _median_wall(
-                    lambda: run_literal_duck(con, args.suite, q), args.runs
-                )
+                dk = measure(lambda: run_literal_duck(con, args.suite, q), args.runs)
             except Exception as e:  # record and continue: a battery tool
                 rec[sf_label] = {"err": str(e).split("\n")[0][:200]}
                 print(f"{q} {sf_label}: ERR {rec[sf_label]['err']}", flush=True)
