@@ -23,7 +23,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from ._util import t
+from ._util import _fan_out, t
 from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
@@ -435,7 +435,9 @@ ORDER BY l_returnflag
 """
 
 
-def _array_hof_spark_sql(mod: int = 3, big: int = 100000, seq_mod: int = 5) -> str:
+def _array_hof_spark_sql(
+    mod: int = 3, big: int = 100000, seq_mod: int = 5, source: str = "lineitem"
+) -> str:
     return f"""
 SELECT l_returnflag,
        CAST(COUNT(*) AS BIGINT) AS n_rows,
@@ -455,20 +457,28 @@ FROM (
                CAST(ROUND(l_discount * 100) AS BIGINT),
                CAST(ROUND(l_tax * 100) AS BIGINT),
                CAST(l_quantity AS BIGINT)) AS arr
-  FROM lineitem
+  FROM {source}
 ) x
 GROUP BY l_returnflag
 ORDER BY l_returnflag
 """
 
 
-sql_query(
+@query(
     "fn_array_hof_surface",
-    _array_hof_spark_sql(),
     oracle=_array_hof_oracle(),
     tags=("functions", "array", "hof"),
     order_by="l_returnflag",
 )
+def fn_array_hof_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # The lambdas run interpreted, once per element of every row, so the
+    # scan's split count caps the query: _fan_out spreads the five input
+    # columns over every core first (a no-op once lineitem scans that wide).
+    li = t(spark, sf_dir)["lineitem"]
+    cols = ["l_returnflag", "l_quantity", "l_extendedprice", "l_discount", "l_tax"]
+    return spark.sql(
+        _array_hof_spark_sql(source="{li}"), li=_fan_out(li.select(*cols), src=li)
+    )
 
 
 # ---------------------------------------------------------------------------

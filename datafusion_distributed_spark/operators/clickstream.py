@@ -17,7 +17,7 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from ._util import dbl, dec, t
+from ._util import _fan_out, dbl, dec, t
 from .registry import query, sql_query
 
 # ---------------------------------------------------------------------------
@@ -1058,7 +1058,11 @@ GROUP BY event_type
 
 @query("fn_variant_shred", oracle=_VARIANT_ORACLE, tags=("variant", "json", "functions"))
 def fn_variant_shred(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # JSON parsing is CPU-bound per row: an events table small in bytes is
+    # one scan split, so _fan_out spreads the four input columns over every
+    # core before parsing (a no-op once the scan is split that wide).
     ev = t(spark, sf_dir)["events"]
+    ev = _fan_out(ev.select("event_type", "props", "value", "user_id"), src=ev)
     k = F.get_json_object("props", "$.k").cast("bigint")
     cents_col = F.round(F.col("value") * 100).cast("bigint")
     doc = F.concat(
@@ -1388,27 +1392,30 @@ def cb_sampled_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ordering the linear-interpolation arithmetic identically — the same
     # round-to-integer-before-output discipline as every other quantile
     # query here.
+    # Each side asks ONE percentile aggregate for both fractions: a
+    # percentile buffer is the group's value -> count map, so one per side
+    # builds half the state of one per (side, fraction), and the
+    # interpolation per fraction is the same.
     micro = lambda c: F.round(c * 10000.0, 0).cast("long")  # noqa: E731
     agg = base.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.expr("COUNT(*) FILTER (WHERE in_sample)").alias("n_sampled"),
-        micro(F.percentile("cents", F.lit(0.5))).alias("exact_p50"),
-        micro(F.percentile("cents", F.lit(0.95))).alias("exact_p95"),
-        micro(F.expr("percentile(cents, 0.5) FILTER (WHERE in_sample)")).alias(
-            "sample_p50"
-        ),
-        micro(F.expr("percentile(cents, 0.95) FILTER (WHERE in_sample)")).alias(
-            "sample_p95"
+        F.expr("percentile(cents, array(0.5, 0.95))").alias("exact"),
+        F.expr("percentile(cents, array(0.5, 0.95)) FILTER (WHERE in_sample)").alias(
+            "sample"
         ),
     )
-    return agg.select(
+    agg = agg.select(
         "event_type",
         "n_rows",
         "n_sampled",
-        "exact_p50",
-        "exact_p95",
-        "sample_p50",
-        "sample_p95",
+        micro(F.col("exact")[0]).alias("exact_p50"),
+        micro(F.col("exact")[1]).alias("exact_p95"),
+        micro(F.col("sample")[0]).alias("sample_p50"),
+        micro(F.col("sample")[1]).alias("sample_p95"),
+    )
+    return agg.select(
+        "*",
         F.abs(F.col("sample_p50") - F.col("exact_p50"))
         .cast("long")
         .alias("p50_err_micro"),

@@ -640,22 +640,28 @@ SELECT doc_id, CAST({bit_expr} AS BIGINT) AS simhash FROM votes
 
 @query("dd_simhash", oracle=_simhash_oracle(), tags=("dedup", "simhash"))
 def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Per-row formulation: distinct-token array → md5 array → 16 integer vote
-    # folds, all inside whole-stage codegen with ZERO shuffles (the
-    # explode+distinct+groupBy alternative shuffles every token in the
+    # Per-row formulation: distinct-token array → md5 prefix array → 16
+    # integer vote folds, all inside whole-stage codegen with ZERO shuffles
+    # (the explode+distinct+groupBy alternative shuffles every token in the
     # corpus). Bit-identical to the oracle's grouped SUM: integer votes over
-    # the same distinct token set.
+    # the same distinct token set. Only the first 16 hex digits of each md5
+    # vote, so each token keeps them as ONE signed 64-bit integer (conv with
+    # a negative target base reads the digits as two's complement) and vote
+    # k reads nibble k with a shift and a mask: the folds are interpreted
+    # lambdas, and an integer shift per element costs less than the
+    # substring + instr string lookup the oracle spells.
     docs = t(spark, sf_dir)["documents"]
     md = _fan_out(docs.select("doc_id", "text"), src=docs).select(
         "doc_id",
-        F.transform(
-            F.expr("array_distinct(split(trim(lower(text)), ' +'))"), F.md5
-        ).alias("ha"),
+        F.expr(
+            "transform(array_distinct(split(trim(lower(text)), ' +')),"
+            " tok -> cast(conv(substring(md5(tok), 1, 16), 16, -10) AS BIGINT))"
+        ).alias("hx"),
     )
     votes = [
         F.expr(
-            f"aggregate(ha, 0L, (acc, h) -> acc"
-            f" + (2 * (instr('{_HEX}', substring(h, {k + 1}, 1)) - 1) - 15))"
+            f"aggregate(hx, 0L, (acc, x) -> acc"
+            f" + (2 * ((x >> {4 * (15 - k)}) & 15) - 15))"
         ).alias(f"v{k}")
         for k in range(16)
     ]
