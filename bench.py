@@ -147,7 +147,8 @@ def main() -> None:
     # Mirror the SAME line to a file (r12 VERDICT item 8): the driver's
     # stdout capture truncates at 2,000 chars, which cost round 12 its
     # round-over-round comparison. Additive only — stdout stays the
-    # one-line contract; the file is best-effort.
+    # one-line contract; the file is best-effort, and git ignores it, so a
+    # bench run leaves the checkout clean.
     try:
         here = os.path.dirname(os.path.abspath(__file__))
         with open(os.path.join(here, "tools", "bench_last.json"), "w") as f:

@@ -7,7 +7,11 @@ SQL configuration:
 ===============================================  =====================================
 reference knob                                    Spark conf
 ===============================================  =====================================
-file_scan_config_bytes_per_partition (16 MiB)     spark.sql.files.maxPartitionBytes
+file_scan_config_bytes_per_partition (16 MiB)     tables.ONE_TASK_BYTES: a table of at
+                                                  most min(16 MiB, spark.sql.files.
+                                                  maxPartitionBytes) is read as one
+                                                  partition; larger tables split at
+                                                  spark.sql.files.maxPartitionBytes
 dynamic_task_count / AQE sampling                 spark.sql.adaptive.* (runtime re-plan)
 compression = lz4 | zstd | none                   spark.io.compression.codec (lz4 default)
 shuffle batch size override                       spark.sql.shuffle.partitions + AQE

@@ -41,7 +41,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .engine import memo
 from .literal_tpcds import TPCDS_SUITE_VIEWS
 from .literal_tpcds import view_definitions as _tpcds_view_definitions
-from .tables import claim_views, load_tables
+from .tables import claim_views, load_tables, table_key
 
 REFERENCE_QUERIES = "/root/reference/testdata"
 # The lit_* registry entries execute these texts verbatim. A checkout does not
@@ -584,12 +584,12 @@ def register_spark_views(spark: SparkSession, sf_dir: str, suite: str) -> None:
     Idempotent per (session, sf_dir, suite): re-registering 24 views on
     every literal query call cost ~100 ms of DDL each — at 83 ``lit_*``
     registry entries x 4 bench executions that was minutes of pure view
-    churn. ``claim_views`` skips the DDL only while (sf_dir, suite)
+    churn. ``claim_views`` skips the DDL only while (table key, suite)
     still owns the bare views; ``load_tables(register=True)`` claims them
-    for its sf_dir, which invalidates this owner too."""
+    for its table key, which invalidates this owner too."""
     claim_views(
         spark,
-        (sf_dir.rstrip("/"), suite),
+        (*table_key(spark, sf_dir), suite),
         lambda: _register_suite_views(spark, sf_dir, suite),
     )
 

@@ -24,7 +24,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Column, SparkSession
 
 from ..engine import memo
-from ..tables import _SCAN_KEY_ATTR, load_tables
+from ..tables import _NPART_ATTR, _SCAN_KEY_ATTR, load_tables
 
 
 def t(spark: SparkSession, sf_dir: str):
@@ -337,29 +337,27 @@ def _fan_out(df: DataFrame, src: DataFrame | None = None) -> DataFrame:
     ``src``: the registry TABLE frame ``df`` projects/filters (projections
     and filters preserve scan partitioning). CONTRACT (r12 ADVICE): ``src``
     must be the table frame ``df`` derives from via select/filter ONLY —
-    passing it alongside a joined/unioned/exploded ``df`` would memoize a
-    wrong split count for the table key (mis-sized fan-out; perf only,
+    passing it alongside a joined/unioned/exploded ``df`` would cache a
+    wrong partition count on the table frame (mis-sized fan-out; perf only,
     never correctness). When given and stamped with
-    ``tables._SCAN_KEY_ATTR``, the partition-count probe is memoized per
-    (session, sf_dir, table): ``df.rdd.getNumPartitions()`` physically
-    plans the frame on EVERY call (~40 ms of py4j + planning, r12 floor
-    probe) while the split count of a fixed file set under fixed confs is
-    a session constant. Frames without the stamp (synthetic test inputs,
-    checkpointed intermediates — whose RDD already exists, making the
-    probe ~free) keep the dynamic probe. Memo staleness is
-    performance-neutral by construction: _fan_out only ever decides
-    whether to insert a repartition, never what the query computes."""
-    spark = df.sparkSession
-    parallelism = spark.sparkContext.defaultParallelism
-    key = getattr(src, _SCAN_KEY_ATTR, None) if src is not None else None
-    if key is not None:
-        # A session memo (engine.memo): two sessions must not share it.
-        npart = memo(spark, "fanout_npart")
-        n = npart.get(key)
-        if n is None:
-            n = npart[key] = df.rdd.getNumPartitions()
-    else:
+    ``tables._SCAN_KEY_ATTR``, the count is read from the frame's
+    ``tables._NPART_ATTR``: ``load_tables`` sets it to 1 for a table read
+    as one partition, and the first probe of a larger table stores it
+    there. ``df.rdd.getNumPartitions()`` physically plans the frame on
+    EVERY call (~40 ms of py4j + planning, r12 floor probe), while the
+    table frame is a session memo keyed by its split threshold, so its count
+    is a constant under the session's scan confs; a stale count could only
+    mis-size the fan-out, never change what the query computes. Frames
+    without the stamp (synthetic test inputs, checkpointed intermediates —
+    whose RDD already exists, making the probe ~free) keep the dynamic
+    probe."""
+    parallelism = df.sparkSession.sparkContext.defaultParallelism
+    stamped = src is not None and hasattr(src, _SCAN_KEY_ATTR)
+    n = getattr(src, _NPART_ATTR, None) if stamped else None
+    if n is None:
         n = df.rdd.getNumPartitions()
+        if stamped:
+            setattr(src, _NPART_ATTR, n)
     if n >= parallelism:
         return df
     return df.repartition(parallelism)

@@ -9,6 +9,8 @@ Normalization applied at load:
 - ``events.ts`` is parquet TIMESTAMP(NANOS); Spark reads it as int64 under
   ``spark.sql.legacy.parquet.nanosAsLong`` and we convert to TIMESTAMP_NTZ at
   microsecond precision (truncation — matches DuckDB's ns→us cast).
+- A table of at most one task's worth of bytes is read through
+  ``coalesce(1)`` (see ``one_task_bytes``).
 """
 
 from __future__ import annotations
@@ -36,18 +38,40 @@ TABLE_NAMES = (
 # a spark.newSession() sibling would return frames bound to the FIRST session
 # and skip registering the sibling's views.
 
-# Stamped on every registry table frame so operators/_util._fan_out can
-# memoize its scan-partition-count probe per (sf_dir, table) — the split
-# count of a fixed file set under fixed session confs is a session constant,
-# while df.rdd.getNumPartitions() re-plans the frame on every call.
+# Stamped on every registry table frame: its (sf_dir, table) key and its
+# size in bytes. operators/_util._fan_out also caches the frame's partition
+# count on it under _NPART_ATTR (set here to 1 for a one-partition table):
+# the frame is a session memo keyed by its split threshold, so its count is
+# a constant, while df.rdd.getNumPartitions() re-plans the frame on every
+# call.
 _SCAN_KEY_ATTR = "_dds_scan_key"
+_SCAN_BYTES_ATTR = "_dds_scan_bytes"
+_NPART_ATTR = "_dds_npart"
+
+# One task's worth of input: the reference sizes leaf tasks at 16 MiB each
+# (DesiredTaskCountHandler, SURVEY.md §4.2 row 4).
+ONE_TASK_BYTES = 16 * 1024 * 1024
+
+
+def one_task_bytes(spark: SparkSession) -> int:
+    """Largest table read as one partition: ``ONE_TASK_BYTES``, clamped to
+    ``spark.sql.files.maxPartitionBytes`` so a session that asks for smaller
+    scan splits (the max-fan-out stress) still splits every table."""
+    conf = spark._jsparkSession.sessionState().conf()
+    return min(ONE_TASK_BYTES, conf.filesMaxPartitionBytes())
+
+
+def table_key(spark: SparkSession, sf_dir: str) -> tuple[str, int]:
+    """Memo key of the frames ``load_tables`` builds for ``sf_dir``: a
+    frame built under one split threshold is never reused under another."""
+    return sf_dir.rstrip("/"), one_task_bytes(spark)
 
 
 def claim_views(spark: SparkSession, owner, register) -> None:
     """Run ``register()`` unless ``owner`` already owns the session's
     bare-named temp views, then record ``owner`` as their owner.
 
-    Owners are an sf_dir (``load_tables``) or an (sf_dir, suite) pair
+    Owners are a ``table_key`` (``load_tables``) or that key plus a suite
     (``literal.register_spark_views``, which overrides bare names with
     schema-mapped views). A cache hit alone is NOT enough to skip
     registration: if another owner registered since, the views point at
@@ -58,6 +82,33 @@ def claim_views(spark: SparkSession, owner, register) -> None:
     if views.get("owner") != owner:
         register()
         views["owner"] = owner
+
+
+def _read(spark: SparkSession, dir_key: str, name: str, threshold: int) -> DataFrame:
+    """One table's frame, stamped with its key and size.
+
+    The size is Catalyst's own relation statistic (the listed files' total,
+    the figure it chooses broadcasts by): no Spark job, and the same for
+    part-file directories and remote stores. A table of at most
+    ``threshold`` bytes is read through ``coalesce(1)``. Its scan then
+    reports SinglePartition, so EnsureRequirements plans aggregates,
+    windows, sorts and joins among such tables with no exchange, where
+    Spark would otherwise plan one per operator and AQE would later shrink
+    each to a single-task stage. The reference does the same: it sizes
+    leaves from bytes and removes every boundary between one-task stages
+    (``prepare_network_boundaries``, SURVEY.md §4.2 row 5). A larger table
+    keeps Spark's scan splits, and a join between the two keeps the plan it
+    had: the small side is broadcast or hash-shuffled, never the big side
+    gathered."""
+    raw = spark.read.parquet(f"{dir_key}/{name}.parquet")
+    size = raw._jdf.queryExecution().analyzed().stats().sizeInBytes()
+    one_partition = size <= threshold
+    df = _normalize(name, raw.coalesce(1) if one_partition else raw)
+    setattr(df, _SCAN_KEY_ATTR, (dir_key, name))
+    setattr(df, _SCAN_BYTES_ATTR, size)
+    if one_partition:
+        setattr(df, _NPART_ATTR, 1)
+    return df
 
 
 def _normalize(name: str, df: DataFrame) -> DataFrame:
@@ -76,21 +127,18 @@ def load_tables(
     """Load all testdata tables from ``sf_dir`` and (optionally) register them
     as temp views under their bare names."""
     apply_session_confs(spark)
-    dir_key = sf_dir.rstrip("/")
-    cache: dict[str, dict[str, DataFrame]] = memo(spark, "tables")
-    tables = cache.get(dir_key)
+    key = table_key(spark, sf_dir)
+    cache: dict[tuple[str, int], dict[str, DataFrame]] = memo(spark, "tables")
+    tables = cache.get(key)
     if tables is None:
-        tables = {}
-        for name in TABLE_NAMES:
-            df = _normalize(name, spark.read.parquet(f"{dir_key}/{name}.parquet"))
-            setattr(df, _SCAN_KEY_ATTR, (dir_key, name))
-            tables[name] = df
-        cache[dir_key] = tables
+        dir_key, threshold = key
+        tables = {name: _read(spark, dir_key, name, threshold) for name in TABLE_NAMES}
+        cache[key] = tables
     if register:
 
         def _register() -> None:
             for name, df in tables.items():
                 df.createOrReplaceTempView(name)
 
-        claim_views(spark, dir_key, _register)
+        claim_views(spark, key, _register)
     return tables

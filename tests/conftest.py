@@ -39,6 +39,26 @@ def spark():
     s.stop()
 
 
+# Below the size of every test table (the smallest, region, is 1,885
+# bytes): tables.one_task_bytes clamps to spark.sql.files.maxPartitionBytes,
+# so under this value no table is read as one partition.
+_BELOW_EVERY_TABLE = 1024
+
+
+@pytest.fixture()
+def split_tables(spark):
+    """The session with ``spark.sql.files.maxPartitionBytes`` below every
+    table's size, which turns the one-partition read off: each table keeps
+    Spark's own scan splits. For tests whose subject is an exchange, a
+    broadcast or a per-task panel, which a one-partition plan would not
+    have."""
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(_BELOW_EVERY_TABLE))
+    yield spark
+    spark.conf.set(key, old)
+
+
 @pytest.fixture(scope="session")
 def duck():
     con = duckdb.connect()

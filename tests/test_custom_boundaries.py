@@ -150,6 +150,7 @@ def test_observe_metrics(spark):
     assert obs.get["cents"] == exact
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_empty_columns_between_stages(spark):
     """Zero-column batches crossing an exchange — the reference's
     empty_columns_between_workers.rs repro: `SELECT (SELECT count(*) FROM t)

@@ -3,13 +3,18 @@
 Reference analogues: plan snapshots per query (tests/tpch_plans_test.rs), the
 ASCII stage renderer (src/stage.rs display_plan_ascii), and EXPLAIN ANALYZE
 with per-stage metrics (src/explain_analyze.rs, tests/explain_analyze.rs).
-These assert the *distributed shape* of known plans — q1 is one shuffle
-(partial/final agg), q5's dimension joins broadcast, q6 has no shuffle other
-than the final single-partition gather — independent of result correctness.
+These assert the *distributed shape* of known plans — q1 and q6 over a
+one-partition lineitem plan no exchange, q5's dimension joins broadcast over
+split tables — independent of result correctness. Tests whose subject is an
+exchange, a broadcast or a per-task panel run under ``split_tables``
+(conftest), which keeps every table at Spark's own scan splits.
 """
 
 from __future__ import annotations
 
+import pytest
+
+from datafusion_distributed_spark.operators.registry import _ensure_loaded
 from datafusion_distributed_spark.operators.relational import (
     tpch_q1,
     tpch_q3,
@@ -24,15 +29,19 @@ from datafusion_distributed_spark.plans.explain import (
 
 from .conftest import SF_DIR
 
+_ensure_loaded()
 
-def test_q1_single_shuffle(spark):
-    # scan -> partial agg -> Exchange -> final agg: exactly one network boundary
+
+def test_q1_single_stage(spark):
+    # lineitem is read as one partition, so its partial and final aggregates
+    # need no exchange between them: scan -> agg -> sort in one stage
     s = stage_summary(tpch_q1(spark, SF_DIR))
-    assert s["n_shuffles"] == 1
+    assert s["n_shuffles"] == 0
     assert s["n_broadcasts"] == 0
-    assert s["n_stages"] == 2
+    assert s["n_stages"] == 1
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_q5_broadcast_dimensions(spark):
     # 6-way join: small dims broadcast (reference insert_broadcast analogue),
     # at most the agg/join shuffles remain
@@ -41,10 +50,10 @@ def test_q5_broadcast_dimensions(spark):
     assert s["n_shuffles"] >= 1
 
 
-def test_q6_no_extra_shuffle(spark):
-    # global agg: the only boundary is the final single-partition gather
+def test_q6_no_shuffle(spark):
+    # global agg over a one-partition scan: not even the final gather
     s = stage_summary(tpch_q6(spark, SF_DIR))
-    assert s["n_shuffles"] == 1
+    assert s["n_shuffles"] == 0
     assert s["n_broadcasts"] == 0
 
 
@@ -64,6 +73,7 @@ def test_render_stage_tree_shape(spark):
     assert "Scan parquet" in out
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_explain_analyze_metrics(spark):
     out = explain_analyze(tpch_q1(spark, SF_DIR))
     # drained query must carry executor-collected metrics on scan + exchange
@@ -101,7 +111,7 @@ def test_explain_works_aqe_off(spark):
         # apply_session_confs; re-disable before the plan materializes
         spark.conf.set("spark.sql.adaptive.enabled", "false")
         s = stage_summary(df)
-        assert s["n_shuffles"] == 1
+        assert s["n_shuffles"] == 0
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", "true")
 
@@ -129,6 +139,7 @@ def test_udf_group_key_plan_shape(spark):
     assert s["n_broadcasts"] == 0
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_q9_broadcasts_dimension(spark):
     from datafusion_distributed_spark.operators.relational import tpch_q9
 
@@ -159,6 +170,7 @@ def test_mark_join_plan_shape(spark):
     assert "LeftSemi" not in plan
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_runtime_bloom_filter_injection(spark):
     """Spark's runtime bloom-filter join pruning (the runtime-filtering
     analogue of the reference's dynamic SamplerExec re-planning): a selective
@@ -260,6 +272,7 @@ def test_token_budget_window_bounded_to_boundary_bucket(spark):
         )
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_network_stream_summary_per_edge_bytes(spark):
     """One row per exchange edge with producer-side bytes/rows — the
     reference's per-(consumer, producer) Flight-stream byte counters
@@ -283,6 +296,7 @@ def test_network_stream_summary_per_edge_bytes(spark):
                if s["kind"] == "shuffle" and s["rows"] > 0)
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_network_stream_matrix_per_stream_bytes(spark):
     """Per-(consumer-partition ← producer-task) byte matrix — the
     reference's per-Flight-stream BytesCounterMetric granularity
@@ -316,6 +330,7 @@ def test_network_stream_matrix_per_stream_bytes(spark):
     assert max(len(v) for v in fanout.values()) > 1
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_network_stream_matrix_multi_shuffle(spark):
     """Every shuffle edge of a join query gets its own matrix; reused
     exchanges are reported once (one physical shuffle)."""
@@ -339,6 +354,7 @@ def test_network_stream_matrix_multi_shuffle(spark):
     assert len(keys) == len(set(keys))
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_network_stream_matrix_aqe_off(spark):
     """The matrix walker unwraps plain (non-adaptive) exchange nodes too —
     static plans carry ShuffleExchangeExec directly, no QueryStage wrappers."""
@@ -363,6 +379,7 @@ def test_network_stream_matrix_aqe_off(spark):
         spark.conf.set("spark.sql.adaptive.enabled", prior)
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_explain_analyze_renders_network_streams(spark):
     from datafusion_distributed_spark.plans.explain import explain_analyze
 
@@ -373,6 +390,7 @@ def test_explain_analyze_renders_network_streams(spark):
     assert "Busiest task streams (consumer task ← producer task):" in out
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_network_stream_matrix_by_task_rollup(spark):
     """Per-task rollup of the stream matrix: the reference's
     per-Flight-stream table is one byte counter per (consumer task,
@@ -415,6 +433,7 @@ def test_network_stream_matrix_by_task_rollup(spark):
     assert keys == sorted(keys) and len(keys) == len(set(keys))
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_network_stream_matrix_by_task_aqe_off_identity(spark):
     """Without an AQEShuffleReadExec the rollup degrades to
     task == partition: same rows as the fine matrix, n_partitions == 1."""
@@ -448,6 +467,7 @@ def test_network_stream_matrix_by_task_aqe_off_identity(spark):
         spark.conf.set("spark.sql.adaptive.enabled", prior)
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_rank_topn_uses_window_group_limit(spark):
     """rank() <= k filters must plan with WindowGroupLimit (Spark's
     group-limit pushdown): each map task keeps only the per-group top-k
@@ -496,6 +516,7 @@ def test_ann_recall_running_sum_window_is_bounded(spark):
     )
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_case_scalar_subqueries_merge_and_reuse(spark):
     """TPC-DS q9 class: each band's three scalar subqueries (COUNT selector
     + both arms) must collapse into ONE shared aggregate —
@@ -592,6 +613,7 @@ def test_network_stream_matrix_by_task_skew_replication(spark):
                 spark.conf.set(k, v)
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_per_task_metrics_format(spark):
     """PerTask metrics rendering — the reference's
     DistributedMetricsFormat::PerTask (user-guide/05-metrics.md): each
@@ -649,6 +671,7 @@ def test_per_task_metrics_repeat_drain_is_stable(spark):
     assert sc.getLocalProperty("spark.job.interruptOnCancel") is None
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_explain_analyze_renders_per_task_panel(spark):
     """explain_analyze output includes the PerTask panel — one map per
     metric keyed by task index per stage, the reference's

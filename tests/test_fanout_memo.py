@@ -1,82 +1,110 @@
-"""_fan_out partition-probe memo (r12 optimization round).
+"""_fan_out reads the partition count stamped on the table frame.
 
 The conditional fan-out's ``df.rdd.getNumPartitions()`` probe physically
 plans the frame on every call (~40 ms of py4j + planning measured by the
-r12 floor probe) while the split count of a fixed file set under fixed
-session confs is a session constant. ``_fan_out(df, src=table_frame)``
-memoizes the count per (session, sf_dir, table) via the ``_dds_scan_key``
-attribute tables.load_tables stamps on every registry frame, in the
-session's ``memo(spark, "fanout_npart")``.
+r12 floor probe). ``tables.load_tables`` stamps ``_NPART_ATTR = 1`` on every
+table it reads as one partition, so ``_fan_out(df, src=table_frame)`` fans
+those out with no probe; a larger table's count is probed once and stored
+on its own frame, which is a session memo keyed by the split threshold.
 
-Pinned here: the memo is consulted (not just populated), frames without a
-stamp keep the dynamic probe, the decision itself is unchanged in both
-regimes (under-split -> repartition to defaultParallelism; well-split ->
-pass-through), and sibling sessions do not share a memo.
+Pinned here: the stamp is consulted (not just written), frames without a
+stamp keep the dynamic probe, the decision itself is the same as when every
+call probed (under-split -> repartition to defaultParallelism; well-split
+-> pass-through), and sibling sessions do not share a count.
 """
 
 from __future__ import annotations
 
-from datafusion_distributed_spark.engine import memo
+import pytest
+
 from datafusion_distributed_spark.operators._util import _fan_out
-from datafusion_distributed_spark.tables import load_tables
+from datafusion_distributed_spark.tables import _NPART_ATTR, load_tables
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, SF_DIR_MED
+
+# Splits sf0.01 lineitem (~1 MiB) into more scan partitions than cores.
+_SMALL_SPLITS = 64 * 1024
 
 
-def _npart(spark) -> dict:
-    return memo(spark, "fanout_npart")
+@pytest.fixture()
+def small_splits(spark):
+    key = "spark.sql.files.maxPartitionBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(_SMALL_SPLITS))
+    yield spark
+    spark.conf.set(key, old)
 
 
-def _clear_memo(spark) -> None:
-    _npart(spark).clear()
+def _fans_out(df, src) -> bool:
+    return _fan_out(df, src=src) is not df
+
+
+@pytest.mark.parametrize("sf_dir", [SF_DIR, SF_DIR_MED])
+@pytest.mark.parametrize("table", ["documents", "events", "lineitem"])
+def test_fan_out_decision_one_partition_tables(spark, sf_dir, table):
+    """Every fan-out source at the test scales is under one task's bytes:
+    it is read as one partition and fans out, as it did when its single
+    scan split was probed."""
+    src = load_tables(spark, sf_dir)[table]
+    assert getattr(src, _NPART_ATTR) == 1
+    assert _fans_out(src.select(src.columns[0]), src)
+
+
+def test_fan_out_decision_split_table(small_splits):
+    """A table over the threshold keeps Spark's scan splits; with at least
+    one per core it passes through, and its probed count is stored on it."""
+    li = load_tables(small_splits, SF_DIR_MED)["lineitem"]
+    vars(li).pop(_NPART_ATTR, None)  # cold: an earlier test may have probed it
+    assert not _fans_out(li.select("l_orderkey"), li)
+    assert getattr(li, _NPART_ATTR) == li.rdd.getNumPartitions()
+    assert getattr(li, _NPART_ATTR) >= small_splits.sparkContext.defaultParallelism
 
 
 def test_stamped_probe_memoizes_and_is_consulted(spark):
     docs = load_tables(spark, SF_DIR)["documents"]
-    _clear_memo(spark)
     par = spark.sparkContext.defaultParallelism
 
     out = _fan_out(docs.select("doc_id", "text"), src=docs)
-    npart = _npart(spark)
-    key = (SF_DIR.rstrip("/"), "documents")
-    assert npart == {key: 1}  # sf0.001 documents is a single split
+    assert getattr(docs, _NPART_ATTR) == 1  # sf0.001 documents: one partition
     # under-split input -> explicit repartition to defaultParallelism
     assert out.rdd.getNumPartitions() == par
 
-    # Prove the memo is CONSULTED: plant a fake "well-split" count and
+    # Prove the stamp is CONSULTED: plant a fake "well-split" count and
     # check the repartition disappears (pass-through keeps 1 partition).
-    npart[key] = par + 1
-    passthrough = _fan_out(docs.select("doc_id", "text"), src=docs)
-    assert passthrough.rdd.getNumPartitions() == 1
-    _clear_memo(spark)
+    setattr(docs, _NPART_ATTR, par + 1)
+    try:
+        passthrough = _fan_out(docs.select("doc_id", "text"), src=docs)
+        assert passthrough.rdd.getNumPartitions() == 1
+    finally:
+        setattr(docs, _NPART_ATTR, 1)
 
 
 def test_unstamped_frame_uses_dynamic_probe(spark):
     docs = load_tables(spark, SF_DIR)["documents"]
-    _clear_memo(spark)
     synthetic = docs.select("doc_id", "text").limit(10)
-    out = _fan_out(synthetic)  # no src -> dynamic probe, no memo entry
-    assert not _npart(spark)
+    out = _fan_out(synthetic)  # no src -> dynamic probe, nothing stored
+    assert not hasattr(synthetic, _NPART_ATTR)
     assert out.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
-    # src without the stamp (not a registry table frame) also stays dynamic
+    # src that is not a registry table frame also stays dynamic
     out2 = _fan_out(synthetic, src=synthetic)
-    assert not _npart(spark)
+    assert not hasattr(synthetic, _NPART_ATTR)
     assert out2.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
 
 
-def test_sibling_sessions_do_not_share_memo(spark):
-    docs = load_tables(spark, SF_DIR)["documents"]
-    _clear_memo(spark)
-    _fan_out(docs.select("doc_id"), src=docs)
-    assert _npart(spark)
+def test_sibling_sessions_do_not_share_memo(small_splits):
+    spark = small_splits
+    li = load_tables(spark, SF_DIR_MED)["lineitem"]
+    _fan_out(li.select("l_orderkey"), src=li)
+    assert getattr(li, _NPART_ATTR) > 1
 
     sibling = spark.newSession()
     try:
-        assert not _npart(sibling)
-        sdocs = load_tables(sibling, SF_DIR)["documents"]
-        _fan_out(sdocs.select("doc_id"), src=sdocs)
-        assert _npart(sibling)
-        assert _npart(sibling) is not _npart(spark)
+        sibling.conf.set("spark.sql.files.maxPartitionBytes", str(_SMALL_SPLITS))
+        sli = load_tables(sibling, SF_DIR_MED)["lineitem"]
+        assert sli is not li
+        assert not hasattr(sli, _NPART_ATTR)
+        _fan_out(sli.select("l_orderkey"), src=sli)
+        assert getattr(sli, _NPART_ATTR) == getattr(li, _NPART_ATTR)
     finally:
         sibling.catalog.clearCache()

@@ -19,6 +19,8 @@ same query on both planners.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from datafusion_distributed_spark.plans.explain import local_connections_used
@@ -31,14 +33,23 @@ from .conftest import SF_DIR
 def demoting_session(spark):
     """Static planner must NOT broadcast (threshold -1) while AQE MAY
     (adaptive threshold generous) — the only way the local-read rewrite
-    fires. Restores both confs afterwards."""
+    fires. Split size = customer's file size: customer is read as one
+    partition and orders is split, so the static planner shuffles both
+    join sides (two one-partition tables would join with no exchange to
+    demote). Restores the confs afterwards."""
     saved_static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     saved_adaptive = spark.conf.get(
         "spark.sql.adaptive.autoBroadcastJoinThreshold", None
     )
+    saved_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
+    spark.conf.set(
+        "spark.sql.files.maxPartitionBytes",
+        str(os.path.getsize(f"{SF_DIR.rstrip('/')}/customer.parquet")),
+    )
     yield spark
+    spark.conf.set("spark.sql.files.maxPartitionBytes", saved_split)
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved_static)
     if saved_adaptive is None:
         spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
@@ -88,6 +99,7 @@ def test_demoted_join_reports_local_connections(demoting_session):
     assert rows_adaptive == rows_static
 
 
+@pytest.mark.usefixtures("split_tables")
 def test_remote_boundaries_report_zero_local(spark):
     """A plain one-shuffle aggregate has no co-locatable read: AQE's
     coalesced reduce-partition reads fetch from every mapper, so the
@@ -95,5 +107,7 @@ def test_remote_boundaries_report_zero_local(spark):
     t = load_tables(spark, SF_DIR)
     df = t["lineitem"].groupBy("l_returnflag").count()
     df.collect()
-    for r in local_connections_used(df):
+    reads = local_connections_used(df)
+    assert reads  # the aggregate's shuffle is there to be read
+    for r in reads:
         assert r["local_connections_used"] == 0, r

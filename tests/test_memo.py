@@ -19,8 +19,8 @@ from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_lo
 
 from .conftest import SF_DIR
 
-# One entry per memo user: table frames, the fan-out probe, IVF centroids
-# (and constant expressions), Lloyd codebooks, BPE merges.
+# One entry per memo user: table frames (and a fan-out over one), IVF
+# centroids (and constant expressions), Lloyd codebooks, BPE merges.
 _ENTRIES = (
     "tpch_q1_pricing_summary",
     "text_gopher_filters",
@@ -67,7 +67,7 @@ def test_memos_never_hold_rows(spark):
 
     session, context = _memos(spark), _memos(spark.sparkContext)
     for owned, names in (
-        (session, ("tables", "views", "fanout_npart")),
+        (session, ("tables", "views")),
         (context, ("const_exprs", "ivf_centroids", "lloyd_codebooks", "bpe_merges")),
     ):
         for name in names:
