@@ -38,14 +38,13 @@ TABLE_NAMES = (
 # a spark.newSession() sibling would return frames bound to the FIRST session
 # and skip registering the sibling's views.
 
-# Stamped on every registry table frame: its (sf_dir, table) key and its
-# size in bytes. operators/_util._fan_out also caches the frame's partition
-# count on it under _NPART_ATTR (set here to 1 for a one-partition table):
+# Stamped on every registry table frame: its (sf_dir, table) key.
+# operators/_util._fan_out also caches the frame's partition count on it
+# under _NPART_ATTR (set here to 1 for a one-partition table):
 # the frame is a session memo keyed by its split threshold, so its count is
 # a constant, while df.rdd.getNumPartitions() re-plans the frame on every
 # call.
 _SCAN_KEY_ATTR = "_dds_scan_key"
-_SCAN_BYTES_ATTR = "_dds_scan_bytes"
 _NPART_ATTR = "_dds_npart"
 
 # One task's worth of input: the reference sizes leaf tasks at 16 MiB each
@@ -85,9 +84,9 @@ def claim_views(spark: SparkSession, owner, register) -> None:
 
 
 def _read(spark: SparkSession, dir_key: str, name: str, threshold: int) -> DataFrame:
-    """One table's frame, stamped with its key and size.
+    """One table's frame, stamped with its key.
 
-    The size is Catalyst's own relation statistic (the listed files' total,
+    Its size is Catalyst's own relation statistic (the listed files' total,
     the figure it chooses broadcasts by): no Spark job, and the same for
     part-file directories and remote stores. A table of at most
     ``threshold`` bytes is read through ``coalesce(1)``. Its scan then
@@ -105,7 +104,6 @@ def _read(spark: SparkSession, dir_key: str, name: str, threshold: int) -> DataF
     one_partition = size <= threshold
     df = _normalize(name, raw.coalesce(1) if one_partition else raw)
     setattr(df, _SCAN_KEY_ATTR, (dir_key, name))
-    setattr(df, _SCAN_BYTES_ATTR, size)
     if one_partition:
         setattr(df, _NPART_ATTR, 1)
     return df

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import math
 import os
+from contextlib import contextmanager
 
 import duckdb
 import pytest
@@ -39,10 +40,29 @@ def spark():
     s.stop()
 
 
+MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+
 # Below the size of every test table (the smallest, region, is 1,885
 # bytes): tables.one_task_bytes clamps to spark.sql.files.maxPartitionBytes,
 # so under this value no table is read as one partition.
 _BELOW_EVERY_TABLE = 1024
+
+
+@contextmanager
+def session_confs(spark, confs: dict[str, object]):
+    """Sets the session confs ``confs`` (name -> value) for the block and
+    restores each one after it, unsetting those that had no value."""
+    saved = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, str(v))
+    try:
+        yield spark
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 @pytest.fixture()
@@ -52,11 +72,8 @@ def split_tables(spark):
     Spark's own scan splits. For tests whose subject is an exchange, a
     broadcast or a per-task panel, which a one-partition plan would not
     have."""
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(_BELOW_EVERY_TABLE))
-    yield spark
-    spark.conf.set(key, old)
+    with session_confs(spark, {MAX_PARTITION_BYTES: _BELOW_EVERY_TABLE}):
+        yield spark
 
 
 @pytest.fixture(scope="session")

@@ -20,7 +20,7 @@ import pytest
 from datafusion_distributed_spark.operators._util import _fan_out
 from datafusion_distributed_spark.tables import _NPART_ATTR, load_tables
 
-from .conftest import SF_DIR, SF_DIR_MED
+from .conftest import MAX_PARTITION_BYTES, SF_DIR, SF_DIR_MED, session_confs
 
 # Splits sf0.01 lineitem (~1 MiB) into more scan partitions than cores.
 _SMALL_SPLITS = 64 * 1024
@@ -28,11 +28,8 @@ _SMALL_SPLITS = 64 * 1024
 
 @pytest.fixture()
 def small_splits(spark):
-    key = "spark.sql.files.maxPartitionBytes"
-    old = spark.conf.get(key)
-    spark.conf.set(key, str(_SMALL_SPLITS))
-    yield spark
-    spark.conf.set(key, old)
+    with session_confs(spark, {MAX_PARTITION_BYTES: _SMALL_SPLITS}):
+        yield spark
 
 
 def _fans_out(df, src) -> bool:
@@ -100,7 +97,7 @@ def test_sibling_sessions_do_not_share_memo(small_splits):
 
     sibling = spark.newSession()
     try:
-        sibling.conf.set("spark.sql.files.maxPartitionBytes", str(_SMALL_SPLITS))
+        sibling.conf.set(MAX_PARTITION_BYTES, str(_SMALL_SPLITS))
         sli = load_tables(sibling, SF_DIR_MED)["lineitem"]
         assert sli is not li
         assert not hasattr(sli, _NPART_ATTR)

@@ -26,7 +26,7 @@ import pytest
 from datafusion_distributed_spark.plans.explain import local_connections_used
 from datafusion_distributed_spark.tables import load_tables
 
-from .conftest import SF_DIR
+from .conftest import MAX_PARTITION_BYTES, SF_DIR, session_confs
 
 
 @pytest.fixture()
@@ -37,26 +37,12 @@ def demoting_session(spark):
     partition and orders is split, so the static planner shuffles both
     join sides (two one-partition tables would join with no exchange to
     demote). Restores the confs afterwards."""
-    saved_static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    saved_adaptive = spark.conf.get(
-        "spark.sql.adaptive.autoBroadcastJoinThreshold", None
-    )
-    saved_split = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "64m")
-    spark.conf.set(
-        "spark.sql.files.maxPartitionBytes",
-        str(os.path.getsize(f"{SF_DIR.rstrip('/')}/customer.parquet")),
-    )
-    yield spark
-    spark.conf.set("spark.sql.files.maxPartitionBytes", saved_split)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", saved_static)
-    if saved_adaptive is None:
-        spark.conf.unset("spark.sql.adaptive.autoBroadcastJoinThreshold")
-    else:
-        spark.conf.set(
-            "spark.sql.adaptive.autoBroadcastJoinThreshold", saved_adaptive
-        )
+    with session_confs(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": -1,
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
+        MAX_PARTITION_BYTES: os.path.getsize(f"{SF_DIR.rstrip('/')}/customer.parquet"),
+    }):
+        yield spark
 
 
 def _join_frame(spark):

@@ -20,9 +20,16 @@ from datafusion_distributed_spark.literal import (
     NO_REFERENCE_QUERIES_REASON,
 )
 from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_loaded
+from datafusion_distributed_spark.plans.explain import stage_summary
 from datafusion_distributed_spark.tables import load_tables
 
-from .conftest import SF_DIR_MED, compare_to_oracle, oracle_views
+from .conftest import (
+    MAX_PARTITION_BYTES,
+    SF_DIR_MED,
+    compare_to_oracle,
+    oracle_views,
+    session_confs,
+)
 
 _ensure_loaded()
 
@@ -62,15 +69,12 @@ _TINY_SPLIT = 64 * 1024
 
 @pytest.fixture()
 def fanout_spark(spark):
-    old = spark.conf.get("spark.sql.files.maxPartitionBytes")
     # openCostInBytes also pads each file's size estimate; shrink it too so
     # the 64 KiB split size actually bites on ~MiB files.
-    old_cost = spark.conf.get("spark.sql.files.openCostInBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", str(_TINY_SPLIT))
-    spark.conf.set("spark.sql.files.openCostInBytes", "0")
-    yield spark
-    spark.conf.set("spark.sql.files.maxPartitionBytes", old)
-    spark.conf.set("spark.sql.files.openCostInBytes", old_cost)
+    with session_confs(
+        spark, {MAX_PARTITION_BYTES: _TINY_SPLIT, "spark.sql.files.openCostInBytes": 0}
+    ):
+        yield spark
 
 
 def test_tiny_splits_actually_fan_out(fanout_spark):
@@ -126,22 +130,25 @@ def test_sibling_sessions_get_their_own_views(spark):
         load_tables(spark, SF_DIR)  # restore parent views for later tests
 
 
+# Under split_tables, so no table is read as one partition and the stress
+# queries keep the exchanges that the 97 reduce tasks are for.
 @pytest.fixture()
-def odd_shuffle_spark(spark):
+def odd_shuffle_spark(split_tables):
     """Prime, non-default shuffle-partition count: results must be invariant
     to how many reduce tasks every exchange fans into (the reference's
     varying-task-count validation, e.g. 1/2/3-task plans in
     /root/reference/tests/distributed_aggregation.rs)."""
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "97")
-    yield spark
-    spark.conf.set("spark.sql.shuffle.partitions", old)
+    with session_confs(split_tables, {"spark.sql.shuffle.partitions": 97}):
+        yield split_tables
 
 
 @pytest.mark.parametrize("name", _STRESS_QUERIES)
 def test_query_matches_oracle_under_odd_shuffle_count(odd_shuffle_spark, duck, name):
     qd = REGISTRY[name]
     df = qd.fn(odd_shuffle_spark, SF_DIR_MED)
+    # Every stress query plans a shuffle with split scans; without one the
+    # 97 reduce tasks would never run.
+    assert stage_summary(df)["n_shuffles"] >= 1, name
     oracle_views(duck, SF_DIR_MED)
     compare_to_oracle(
         df, duck, qd.oracle, name=f"shuffle97:{name}", order_by=qd.order_by

@@ -10,38 +10,23 @@ memo and the views follow the split threshold, which
 
 from __future__ import annotations
 
+import os
 import re
+from contextlib import ExitStack
 
 import pytest
 
 from datafusion_distributed_spark.plans.explain import _jchildren, _unwrap
-from datafusion_distributed_spark.tables import (
-    _NPART_ATTR,
-    _SCAN_BYTES_ATTR,
-    load_tables,
-)
+from datafusion_distributed_spark.tables import _NPART_ATTR, load_tables
 
-from .conftest import SF_DIR, SF_DIR_MED
-
-_MAX_PARTITION_BYTES = "spark.sql.files.maxPartitionBytes"
+from .conftest import MAX_PARTITION_BYTES, SF_DIR, SF_DIR_MED, session_confs
 
 
 @pytest.fixture()
 def confs(spark):
     """Sets session confs for one test and restores them after it."""
-    keys = (
-        _MAX_PARTITION_BYTES,
-        "spark.sql.adaptive.enabled",
-        "spark.sql.autoBroadcastJoinThreshold",
-    )
-    saved = {k: spark.conf.get(k) for k in keys}
-
-    def set_(**kv):
-        for k, v in kv.items():
-            spark.conf.set(k, v)
-
-    yield set_
-    set_(**saved)
+    with ExitStack() as stack:
+        yield lambda **kv: stack.enter_context(session_confs(spark, kv))
     load_tables(spark, SF_DIR)  # re-point the bare views for later tests
 
 
@@ -73,13 +58,16 @@ def test_small_table_join_keeps_big_side_exchanges(spark, confs, aqe, broadcast)
     read as Spark's own scan, none of them gathers lineitem into one
     partition, and the join's output has as many partitions either way."""
     confs(**{
-        _MAX_PARTITION_BYTES: str(512 * 1024),
+        MAX_PARTITION_BYTES: str(512 * 1024),
         "spark.sql.autoBroadcastJoinThreshold": broadcast,
     })
     tb = load_tables(spark, SF_DIR_MED)
     confs(**{"spark.sql.adaptive.enabled": aqe})  # load_tables turns AQE on
     li, orders = tb["lineitem"], tb["orders"]
-    size = {t: getattr(tb[t], _SCAN_BYTES_ATTR) for t in ("lineitem", "orders")}
+    size = {
+        t: os.path.getsize(f"{SF_DIR_MED.rstrip('/')}/{t}.parquet")
+        for t in ("lineitem", "orders")
+    }
     assert size["orders"] <= 512 * 1024 < size["lineitem"], size
     assert getattr(orders, _NPART_ATTR) == 1
     assert not hasattr(li, _NPART_ATTR) and li.rdd.getNumPartitions() > 1
@@ -111,7 +99,7 @@ def test_split_threshold_keys_the_memo_and_views(spark, confs):
     default = load_tables(spark, SF_DIR_MED)["lineitem"]
     assert default.rdd.getNumPartitions() == 1
 
-    confs(**{_MAX_PARTITION_BYTES: str(64 * 1024)})
+    confs(**{MAX_PARTITION_BYTES: str(64 * 1024)})
     split = load_tables(spark, SF_DIR_MED)["lineitem"]
     assert split is not default
     n = split.rdd.getNumPartitions()
