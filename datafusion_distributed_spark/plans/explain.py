@@ -695,6 +695,10 @@ def _rollup_one_read(sid: int, read_idx: int, sl: list, rows: list) -> list[dict
     return out
 
 
+# Partition specs of a mapper-local shuffle read (AQE's local shuffle read).
+_LOCAL_READ_SPECS = ("PartialMapperPartitionSpec", "CoalescedMapperPartitionSpec")
+
+
 def local_connections_used(df: DataFrame) -> list[dict]:
     """Per shuffle read, how many consumer-task streams were LOCAL —
     the reference's ``local_connections_used`` metric on every network
@@ -705,10 +709,13 @@ def local_connections_used(df: DataFrame) -> list[dict]:
     Spark's equivalent co-location decision is AQE's local shuffle read
     (``OptimizeShuffleWithLocalRead``): when a statically-planned shuffle
     join is demoted to a broadcast join at runtime, the surviving shuffle
-    is re-read with ``PartialMapperPartitionSpec`` — each consumer task
-    reads exactly one mapper's output and the scheduler PREFERS placing it
-    on that mapper's host. Coalesced/skew-split specs and plain
-    reduce-partition reads fetch from every mapper and stay remote.
+    is re-read mapper by mapper: ``PartialMapperPartitionSpec`` when a
+    consumer task reads part of one mapper's output, and
+    ``CoalescedMapperPartitionSpec`` when there are more mappers than the
+    read's parallelism and a consumer task reads a run of whole mappers.
+    Either way the scheduler PREFERS placing the task on its mappers' host.
+    Coalesced reduce-partition, skew-split and plain reduce-partition reads
+    fetch from every mapper and stay remote.
 
     Caveat (vs the reference): mapper-host placement is a Spark locality
     PREFERENCE, not a guarantee — on a busy multi-node cluster a consumer
@@ -730,11 +737,7 @@ def local_connections_used(df: DataFrame) -> list[dict]:
     for sid in sorted(specs):
         for read_idx, sl in enumerate(specs[sid]):
             n_local = sum(
-                1
-                for s in sl
-                if s.getClass().getSimpleName().startswith(
-                    "PartialMapperPartitionSpec"
-                )
+                1 for s in sl if s.getClass().getSimpleName().startswith(_LOCAL_READ_SPECS)
             )
             out.append(
                 {

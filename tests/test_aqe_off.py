@@ -7,19 +7,18 @@ scale path), so the dual run here is the full oracle battery with
 ``spark.sql.adaptive.enabled=false`` — static planning, no runtime coalescing
 or skew-splitting that could hide a wrong exchange.
 
-Implementation note: query entrypoints re-apply ``engine.RUNTIME_CONFS`` on
-every table load, so the sweep patches that dict (and the live conf) for its
-duration rather than toggling the conf directly.
+The sweep runs under ``conftest.aqe_off``, which also patches
+``engine.RUNTIME_CONFS``: query entrypoints re-apply it on every table
+load.
 """
 
 from __future__ import annotations
 
 import pytest
 
-from datafusion_distributed_spark import engine
 from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_loaded
 
-from .conftest import SF_DIR, compare_to_oracle, oracle_views
+from .conftest import AQE, SF_DIR, aqe_off, compare_to_oracle, oracle_views
 
 _ensure_loaded()
 
@@ -27,19 +26,15 @@ _WITH_ORACLE = sorted(n for n, q in REGISTRY.items() if q.oracle)
 
 
 @pytest.fixture(scope="module")
-def aqe_off(spark):
-    saved = engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"]
-    engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"] = "false"
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    yield spark
-    engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"] = saved
-    spark.conf.set("spark.sql.adaptive.enabled", saved)
+def aqe_off_spark(spark):
+    with aqe_off(spark):
+        yield spark
 
 
 @pytest.mark.parametrize("name", _WITH_ORACLE)
-def test_query_matches_oracle_aqe_off(aqe_off, duck, name):
-    spark = aqe_off
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
+def test_query_matches_oracle_aqe_off(aqe_off_spark, duck, name):
+    spark = aqe_off_spark
+    assert spark.conf.get(AQE) == "false"
     qd = REGISTRY[name]
     df = qd.fn(spark, SF_DIR)
     oracle_views(duck, SF_DIR)

@@ -27,7 +27,7 @@ from datafusion_distributed_spark.plans.explain import (
     stage_summary,
 )
 
-from .conftest import SF_DIR
+from .conftest import SF_DIR, aqe_off
 
 _ensure_loaded()
 
@@ -358,15 +358,9 @@ def test_network_stream_matrix_multi_shuffle(spark):
 def test_network_stream_matrix_aqe_off(spark):
     """The matrix walker unwraps plain (non-adaptive) exchange nodes too —
     static plans carry ShuffleExchangeExec directly, no QueryStage wrappers."""
-    from datafusion_distributed_spark import engine
     from datafusion_distributed_spark.plans.explain import network_stream_matrix
 
-    # Patch RUNTIME_CONFS too: query entrypoints re-apply it on table load,
-    # so a bare conf.set silently leaves AQE on (round-8 fix).
-    prior = engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"]
-    engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"] = "false"
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(spark):
         df = tpch_q1(spark, SF_DIR)
         df.collect()
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -374,9 +368,6 @@ def test_network_stream_matrix_aqe_off(spark):
         matrix = network_stream_matrix(df)
         assert matrix
         assert all(r["bytes_est"] > 0 for r in matrix)
-    finally:
-        engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"] = prior
-        spark.conf.set("spark.sql.adaptive.enabled", prior)
 
 
 @pytest.mark.usefixtures("split_tables")
@@ -442,12 +433,7 @@ def test_network_stream_matrix_by_task_aqe_off_identity(spark):
         network_stream_matrix_by_task,
     )
 
-    from datafusion_distributed_spark import engine
-
-    prior = engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"]
-    engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"] = "false"
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with aqe_off(spark):
         df = tpch_q1(spark, SF_DIR)
         df.collect()
         fine = network_stream_matrix(df)
@@ -462,9 +448,6 @@ def test_network_stream_matrix_by_task_aqe_off_identity(spark):
              r["bytes_est"])
             for r in fine
         }
-    finally:
-        engine.RUNTIME_CONFS["spark.sql.adaptive.enabled"] = prior
-        spark.conf.set("spark.sql.adaptive.enabled", prior)
 
 
 @pytest.mark.usefixtures("split_tables")

@@ -23,25 +23,33 @@ import os
 
 import pytest
 
-from datafusion_distributed_spark.plans.explain import local_connections_used
+from datafusion_distributed_spark.plans.explain import (
+    _aqe_shuffle_read_specs,
+    local_connections_used,
+)
 from datafusion_distributed_spark.tables import load_tables
 
-from .conftest import MAX_PARTITION_BYTES, SF_DIR, session_confs
+from .conftest import MAX_PARTITION_BYTES, SF_DIR, aqe_off, session_confs
+
+
+def _demoting(spark, split_bytes: int):
+    """Static planner must NOT broadcast (threshold -1) while AQE MAY
+    (adaptive threshold generous) — the only way the local-read rewrite
+    fires. Scans split at ``split_bytes``. Restores the confs afterwards."""
+    return session_confs(spark, {
+        "spark.sql.autoBroadcastJoinThreshold": -1,
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
+        MAX_PARTITION_BYTES: split_bytes,
+    })
 
 
 @pytest.fixture()
 def demoting_session(spark):
-    """Static planner must NOT broadcast (threshold -1) while AQE MAY
-    (adaptive threshold generous) — the only way the local-read rewrite
-    fires. Split size = customer's file size: customer is read as one
+    """Split size = customer's file size: customer is read as one
     partition and orders is split, so the static planner shuffles both
     join sides (two one-partition tables would join with no exchange to
-    demote). Restores the confs afterwards."""
-    with session_confs(spark, {
-        "spark.sql.autoBroadcastJoinThreshold": -1,
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": "64m",
-        MAX_PARTITION_BYTES: os.path.getsize(f"{SF_DIR.rstrip('/')}/customer.parquet"),
-    }):
+    demote)."""
+    with _demoting(spark, os.path.getsize(f"{SF_DIR.rstrip('/')}/customer.parquet")):
         yield spark
 
 
@@ -55,13 +63,24 @@ def _join_frame(spark):
     )
 
 
-def test_demoted_join_reports_local_connections(demoting_session):
-    spark = demoting_session
+def _top_node(df) -> str:
+    return df._jdf.queryExecution().executedPlan().getClass().getSimpleName()
+
+
+def _assert_demoted_read_is_local(spark, spec: str) -> None:
     df = _join_frame(spark)
     rows_adaptive = {tuple(r) for r in df.collect()}
 
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    executed = df._jdf.queryExecution().executedPlan()
+    plan = executed.toString()
     assert "AQEShuffleRead" in plan and "local" in plan, plan
+    kinds = {
+        s.getClass().getSimpleName()
+        for reads in _aqe_shuffle_read_specs(executed).values()
+        for sl in reads
+        for s in sl
+    }
+    assert spec in kinds, kinds
 
     lc = local_connections_used(df)
     local_reads = [r for r in lc if r["local_connections_used"] > 0]
@@ -76,13 +95,25 @@ def test_demoted_join_reports_local_connections(demoting_session):
 
     # Co-location is placement, not semantics: the static AQE-off plan
     # (remote shuffle both sides) returns the identical multiset.
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        rows_static = {tuple(r) for r in _join_frame(spark).collect()}
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", saved)
+    with aqe_off(spark):
+        static = _join_frame(spark)
+        rows_static = {tuple(r) for r in static.collect()}
+        assert _top_node(static) != "AdaptiveSparkPlanExec"
     assert rows_adaptive == rows_static
+
+
+def test_demoted_join_reports_local_connections(demoting_session):
+    # Fewer mappers than reduce partitions: each consumer task reads part
+    # of one mapper's output.
+    _assert_demoted_read_is_local(demoting_session, "PartialMapperPartitionSpec")
+
+
+def test_demoted_join_over_tiny_splits_reports_local_connections(spark):
+    """1 KiB splits: more mappers than the read's parallelism, so each
+    consumer task reads a run of whole mappers (CoalescedMapperPartitionSpec),
+    which is as local as reading part of one."""
+    with _demoting(spark, 1024):
+        _assert_demoted_read_is_local(spark, "CoalescedMapperPartitionSpec")
 
 
 @pytest.mark.usefixtures("split_tables")

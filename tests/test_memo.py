@@ -20,7 +20,8 @@ from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_lo
 from .conftest import SF_DIR
 
 # One entry per memo user: table frames (and a fan-out over one), IVF
-# centroids (and constant expressions), Lloyd codebooks, BPE merges.
+# centroids (and constant expressions), Lloyd codebooks, BPE merges, and
+# the prepared frames of the entries that are memoized.
 _ENTRIES = (
     "tpch_q1_pricing_summary",
     "text_gopher_filters",
@@ -62,12 +63,19 @@ def _offences(value, path: str):
 
 def test_memos_never_hold_rows(spark):
     _ensure_loaded()
+    handed_out = []
     for name in _ENTRIES:
-        REGISTRY[name].fn(spark, SF_DIR).collect()
+        # Twice: a miss, then a hit for the entries whose frame is memoized.
+        for _ in range(2):
+            df = REGISTRY[name].fn(spark, SF_DIR)
+            df.collect()
+            handed_out.append(df)
 
     session, context = _memos(spark), _memos(spark.sparkContext)
+    held = {id(v) for v in session.get("prepared", {}).values()}
+    assert not [df for df in handed_out if id(df) in held], "memoized frame handed out"
     for owned, names in (
-        (session, ("tables", "views")),
+        (session, ("tables", "views", "prepared")),
         (context, ("const_exprs", "ivf_centroids", "lloyd_codebooks", "bpe_merges")),
     ):
         for name in names:

@@ -48,3 +48,5 @@ def test_runs_query_and_prints_rows(spark, capsys):
     assert rc == 0
     assert "event_type" in out.splitlines()[0]
     assert "row(s) shown" in out
+    # The run's prepared-frame outcome closes the output.
+    assert out.splitlines()[-1] in ("-- memo: hit", "-- memo: miss"), out

@@ -39,6 +39,7 @@ def main() -> int:
     from datafusion_distributed_spark.operators.registry import (
         REGISTRY,
         _ensure_loaded,
+        prepare,
     )
 
     _ensure_loaded()
@@ -56,7 +57,7 @@ def main() -> int:
     from datafusion_distributed_spark.engine import build_session
 
     spark = build_session(app_name=f"run:{args.name}", master="local[8]")
-    df = REGISTRY[args.name].fn(spark, args.sf)
+    df, outcome = prepare(REGISTRY[args.name], spark, args.sf)
     # Worker plan rewrite hooks run where a plan leaves the engine for
     # execution (reference: with_distributed_worker_plan_rewrite_handler,
     # docs/advanced/03-plan-hooks.md). No-op unless hooks are registered.
@@ -68,22 +69,23 @@ def main() -> int:
         from datafusion_distributed_spark.plans.explain import render_stage_tree
 
         print(render_stage_tree(df))
-        return 0
-    if args.analyze:
+    elif args.analyze:
         from datafusion_distributed_spark.plans.explain import explain_analyze
 
         print(explain_analyze(df))
-        return 0
-
-    t0 = time.time()
-    rows = df.limit(args.rows).collect()
-    dt = time.time() - t0
-    cols = df.columns
-    print(" | ".join(cols))
-    for r in rows:
-        print(" | ".join(str(r[c]) for c in cols))
-    print(f"-- {len(rows)} row(s) shown (limit {args.rows}) in {dt:.2f}s "
-          f"[{args.name} @ {args.sf}]")
+    else:
+        t0 = time.time()
+        rows = df.limit(args.rows).collect()
+        dt = time.time() - t0
+        cols = df.columns
+        print(" | ".join(cols))
+        for r in rows:
+            print(" | ".join(str(r[c]) for c in cols))
+        print(f"-- {len(rows)} row(s) shown (limit {args.rows}) in {dt:.2f}s "
+              f"[{args.name} @ {args.sf}]")
+    # The prepared-frame memo's outcome: hit, miss, or why the entry
+    # rebuilds on every call (operators/registry.py docstring).
+    print(f"-- memo: {outcome}")
     return 0
 
 
