@@ -19,21 +19,32 @@ Conventions enforced for oracle hash-parity (see SURVEY.md §7 risk register):
 Prepared frames. ``QueryDef.fn`` is the entry's raw builder
 (``QueryDef.build``) behind one session memo, ``engine.memo(spark,
 "prepared")``, which holds each entry's analyzed frame:
-- The key is (entry name, ``sf_dir`` without a trailing slash, the
-  session's SQL confs after ``apply_session_confs``), so a frame built
-  under other planning confs is never reused.
+- The memo keeps one slot per (entry name, ``sf_dir`` without a trailing
+  slash). The slot records the session's SQL confs after
+  ``apply_session_confs``, so a frame built under other planning confs is
+  never reused: a call under other confs builds again and replaces the
+  slot, and the memo never grows past one frame per entry and table
+  directory.
 - A frame is memoized only if its build launched no Spark job, claimed no
   slot, and every leaf of its analyzed plan, subqueries included, reads
-  files or makes rows from nothing (``_FILE_LEAVES``). Otherwise the key
+  files or makes rows from nothing (``_FILE_LEAVES``). Otherwise the slot
   holds the reason (``prepare`` reports it), and the next call builds and
   checks again: a build that first loads the tables or trains a shared
   artifact launches jobs, and the entry's later builds may not.
-- The memoized frame is never handed out: every call, hit or miss, returns
-  a new frame over its analyzed plan (``_fresh``). Each run therefore gets
-  a fresh QueryExecution that optimizes, plans and executes from the
-  parquet inputs again, and the memoized frame's own QueryExecution never
-  executes, so no broadcast or shuffle output stays reachable from the
-  memo.
+- The job and slot checks run around every build. The first build under
+  the slot's confs is handed out as built and not kept, so a session's
+  first run of each entry pays a few py4j calls beyond its build; the
+  leaf check, which walks the whole plan string, runs from the second
+  build on, which is the one memoized.
+- The memoized frame is never handed out: the call that memoizes it and
+  every hit return a new frame over its analyzed plan (``_fresh``). Each
+  run therefore gets a fresh QueryExecution that optimizes, plans and
+  executes from the parquet inputs again, and the memoized frame's own
+  QueryExecution never executes, so no broadcast or shuffle output stays
+  reachable from the memo.
+- A hit re-claims the bare-named views the build claimed
+  (``tables.claim_views``), so after ``qd.fn(spark, sf_dir)`` spark.sql
+  reads ``sf_dir``'s tables, hit or miss.
 - A hit skips the builder's Python work, so it does not see state outside
   the key: a changed module constant or a cleared trained-artifact memo
   takes effect for a new session, or after ``memo(spark,
@@ -51,7 +62,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 
 from ..engine import apply_session_confs, memo
-from ..tables import load_tables
+from ..tables import claim_views, load_tables
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -99,7 +110,8 @@ def _portable_double_casts(sql: str) -> str:
 @dataclass
 class QueryDef:
     name: str
-    fn: QueryFn
+    fn: QueryFn  # ``build`` behind the prepared-frame memo
+    build: QueryFn
     oracle: str | None  # DuckDB SQL; None => driver runs rows-only check
     tags: tuple[str, ...] = ()
     # For top-k/sorted queries: an ORDER BY clause (over OUTPUT column names)
@@ -117,8 +129,6 @@ class QueryDef:
     # /root/reference/tests/tpcds_correctness_test.rs; r9 VERDICT found two
     # entries that were vacuously green for this exact reason).
     expect_empty: bool = False
-    # The builder itself; ``fn`` is it behind the prepared-frame memo.
-    build: QueryFn | None = None
 
 
 REGISTRY: dict[str, QueryDef] = {}
@@ -142,23 +152,20 @@ def query(
                 f"duplicate query name {name!r}: already registered by "
                 f"{REGISTRY[name].fn.__module__}.{REGISTRY[name].fn.__qualname__}"
             )
-        fixed = _portable_double_casts(oracle) if oracle else None
-        qd = QueryDef(
-            name=name,
-            fn=fn,
-            oracle=fixed,
-            tags=tags,
-            order_by=order_by,
-            expect_empty=expect_empty,
-            build=fn,
-        )
 
         @functools.wraps(fn)
         def prepared(spark: SparkSession, sf_dir: str) -> DataFrame:
             return prepare(qd, spark, sf_dir)[0]
 
-        qd.fn = prepared
-        REGISTRY[name] = qd
+        qd = REGISTRY[name] = QueryDef(
+            name=name,
+            fn=prepared,
+            build=fn,
+            oracle=_portable_double_casts(oracle) if oracle else None,
+            tags=tags,
+            order_by=order_by,
+            expect_empty=expect_empty,
+        )
         return fn
 
     return deco
@@ -196,21 +203,27 @@ def _job_count(spark: SparkSession) -> int:
 
 
 def _checked_build(qd: QueryDef, spark: SparkSession, sf_dir: str):
-    """Run the builder; returns its frame and why it must not be memoized
-    (None if it may be)."""
-    slots = memo(spark, "slots")
-    held = dict(slots)
+    """Run the builder; returns its frame, why it must not be memoized
+    (None if its jobs and slots allow it) and the views it claimed (None
+    if it claimed none)."""
+    slots, views = memo(spark, "slots"), memo(spark, "views")
+    held, claim = dict(slots), views.get("claim")
     jobs = _job_count(spark)
     df = qd.build(spark, sf_dir)
     launched = _job_count(spark) - jobs
+    claimed = views.get("claim")
+    claimed = None if claimed is claim else claimed
     if launched:
-        return df, f"launched {launched} Spark job(s) while building"
+        return df, f"launched {launched} Spark job(s) while building", claimed
     if slots.keys() != held.keys() or any(slots[k] is not v for k, v in held.items()):
-        return df, "claimed a slot while building"
+        return df, "claimed a slot while building", claimed
+    return df, None, claimed
+
+
+def leaf_reason(df: DataFrame) -> str | None:
+    """Why ``df``'s plan may not be memoized for its leaves, or None."""
     other = sorted(_leaf_nodes(df) - _FILE_LEAVES)
-    if other:
-        return df, f"plan has non-file leaves {other}"
-    return df, None
+    return f"plan has non-file leaves {other}" if other else None
 
 
 def _fresh(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -223,18 +236,32 @@ def _fresh(spark: SparkSession, df: DataFrame) -> DataFrame:
     return DataFrame(jdf, spark)
 
 
+# The reason a slot records for a first build, which is not kept.
+_UNCHECKED = "leaves not checked yet"
+
+
 def prepare(qd: QueryDef, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
     """The entry's frame for ``sf_dir``, and how it was made: "hit",
-    "miss", or the reason this build's frame was not memoized."""
+    "miss", or the reason this build's frame was not memoized.
+
+    A slot holds (confs, the memoized frame or None, None or the reason,
+    the views claim its last build made or None)."""
     apply_session_confs(spark)
-    key = (qd.name, sf_dir.rstrip("/"), _conf_fingerprint(spark))
+    confs = _conf_fingerprint(spark)
     frames = memo(spark, "prepared")
-    held = frames.get(key)
-    if isinstance(held, DataFrame):
+    slot = (qd.name, sf_dir.rstrip("/"))
+    held_confs, held, _, claimed = frames.get(slot, (None, None, None, None))
+    if held is not None and held_confs == confs:
+        if claimed:
+            claim_views(spark, *claimed)
         return _fresh(spark, held), "hit"
-    df, reason = _checked_build(qd, spark, sf_dir)
-    frames[key] = df if reason is None else reason
-    return (_fresh(spark, df), "miss") if reason is None else (df, reason)
+    df, reason, claimed = _checked_build(qd, spark, sf_dir)
+    if held_confs != confs:
+        frames[slot] = (confs, None, reason or _UNCHECKED, claimed)
+        return df, reason or "miss"
+    reason = reason or leaf_reason(df)
+    frames[slot] = (confs, None if reason else df, reason, claimed)
+    return (df, reason) if reason else (_fresh(spark, df), "miss")
 
 
 def sql_query(

@@ -76,11 +76,15 @@ def claim_views(spark: SparkSession, owner, register) -> None:
     registration: if another owner registered since, the views point at
     THAT data, and every spark.sql-path query would silently read the
     wrong scale. (Found by the max-fan-out suite — the first caller to
-    alternate sf_dirs in one session.)"""
+    alternate sf_dirs in one session.)
+
+    Each call records itself as the last claim, which a prepared-frame hit
+    repeats (``operators/registry.py``)."""
     views = memo(spark, "views")
     if views.get("owner") != owner:
         register()
         views["owner"] = owner
+    views["claim"] = (owner, register)
 
 
 def _read(spark: SparkSession, dir_key: str, name: str, threshold: int) -> DataFrame:

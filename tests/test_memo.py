@@ -65,14 +65,15 @@ def test_memos_never_hold_rows(spark):
     _ensure_loaded()
     handed_out = []
     for name in _ENTRIES:
-        # Twice: a miss, then a hit for the entries whose frame is memoized.
-        for _ in range(2):
+        # A miss, the checked build that memoizes the frame, then a hit, for
+        # the entries whose frame is memoized.
+        for _ in range(3):
             df = REGISTRY[name].fn(spark, SF_DIR)
             df.collect()
             handed_out.append(df)
 
     session, context = _memos(spark), _memos(spark.sparkContext)
-    held = {id(v) for v in session.get("prepared", {}).values()}
+    held = {id(frame) for _, frame, _, _ in session.get("prepared", {}).values()}
     assert not [df for df in handed_out if id(df) in held], "memoized frame handed out"
     for owned, names in (
         (session, ("tables", "views", "prepared")),

@@ -2,8 +2,9 @@
 entry's analyzed frame is built once per (entry, sf_dir, session confs) and
 re-planned on every run.
 
-A hit must run the same jobs as a miss, a conf that shapes the plan must
-give a fresh build, an entry whose build runs jobs, claims a slot or reads
+A hit must run the same jobs as a miss and leave the views on its sf_dir,
+a conf that shapes the plan must give a fresh build that replaces the
+entry's slot, an entry whose build runs jobs, claims a slot or reads
 non-file leaves must rebuild on every call, and no caller may receive the
 memoized frame itself.
 """
@@ -16,6 +17,7 @@ import pytest
 
 from datafusion_distributed_spark.engine import apply_session_confs, memo
 from datafusion_distributed_spark.operators.registry import (
+    _UNCHECKED,
     REGISTRY,
     _conf_fingerprint,
     _ensure_loaded,
@@ -27,6 +29,7 @@ from datafusion_distributed_spark.tables import load_tables
 from .conftest import (
     MAX_PARTITION_BYTES,
     SF_DIR,
+    SF_DIR_MED,
     aqe_off,
     session_confs,
     unregistered_reason,
@@ -70,14 +73,18 @@ _REASONS = {
 }
 
 
+def _slot(spark, name: str) -> tuple:
+    """``name``'s prepared-frame slot for ``SF_DIR``: (confs, frame,
+    reason, views claim)."""
+    return memo(spark, "prepared")[(name, SF_DIR.rstrip("/"))]
+
+
 def _forget(spark, name: str) -> None:
-    """Drop ``name``'s prepared frames, with the tables loaded under the
+    """Drop ``name``'s prepared frame, with the tables loaded under the
     current confs: a build that first loads them launches their
     schema-inference jobs and is not memoized."""
     load_tables(spark, SF_DIR)
-    frames = memo(spark, "prepared")
-    for key in [k for k in frames if k[0] == name]:
-        del frames[key]
+    memo(spark, "prepared").pop((name, SF_DIR.rstrip("/")), None)
 
 
 def _top_node(df) -> str:
@@ -98,6 +105,7 @@ def test_hit_runs_its_jobs_again(spark):
     miss, outcome = prepare(qd, spark, SF_DIR)
     assert outcome == "miss"
     miss_jobs, miss_rows = _jobs_of(spark, miss)
+    assert prepare(qd, spark, SF_DIR)[1] == "miss"
     hit, outcome = prepare(qd, spark, SF_DIR)
     assert outcome == "hit"
     hit_jobs, hit_rows = _jobs_of(spark, hit)
@@ -107,9 +115,13 @@ def test_hit_runs_its_jobs_again(spark):
 
 
 def _memoized(spark, qd) -> None:
-    """Only the current confs' frame of ``qd`` is memoized."""
+    """Only the current confs' frame of ``qd`` is memoized. The first
+    build is not kept; the second is checked and kept."""
     _forget(spark, qd.name)
     assert prepare(qd, spark, SF_DIR)[1] == "miss"
+    assert _slot(spark, qd.name)[1:3] == (None, _UNCHECKED)
+    assert prepare(qd, spark, SF_DIR)[1] == "miss"
+    assert _slot(spark, qd.name)[2] is None
     assert prepare(qd, spark, SF_DIR)[1] == "hit"
 
 
@@ -118,14 +130,21 @@ def _plan(df) -> str:
 
 
 def test_aqe_off_gives_a_fresh_build(spark):
+    """The AQE-off build replaces the entry's one slot, so turning AQE
+    back on builds again: the memo holds one frame per entry and sf_dir,
+    whatever confs the session has been through."""
     qd = REGISTRY["tpch_q1_pricing_summary"]
     _memoized(spark, qd)
+    frames = memo(spark, "prepared")
+    held = len(frames)
     with aqe_off(spark):
         df, outcome = prepare(qd, spark, SF_DIR)
         assert outcome == "miss"
         assert _top_node(df) != "AdaptiveSparkPlanExec"
+    assert len(frames) == held
     df, outcome = prepare(qd, spark, SF_DIR)
-    assert outcome == "hit" and _top_node(df) == "AdaptiveSparkPlanExec"
+    assert outcome == "miss" and _top_node(df) == "AdaptiveSparkPlanExec"
+    assert len(frames) == held
 
 
 @pytest.mark.usefixtures("split_tables")
@@ -157,11 +176,12 @@ def test_hit_replans_under_current_confs(spark):
     qd = REGISTRY["tpch_q1_pricing_summary"]
     with aqe_off(spark):
         apply_session_confs(spark)
-        key = (qd.name, SF_DIR.rstrip("/"), _conf_fingerprint(spark))
+        confs = _conf_fingerprint(spark)
     seeded = qd.build(spark, SF_DIR)
     assert _top_node(seeded) == "AdaptiveSparkPlanExec"
     frames = memo(spark, "prepared")
-    frames[key] = seeded
+    key = (qd.name, SF_DIR.rstrip("/"))
+    frames[key] = (confs, seeded, None, None)
     try:
         with aqe_off(spark):
             df, outcome = prepare(qd, spark, SF_DIR)
@@ -179,10 +199,28 @@ def test_impure_entries_rebuild_on_every_call(spark, name):
     qd = REGISTRY[name]
     kind = _NOT_MEMOIZED[name]
     pattern = _REASONS.get(kind, rf"plan has non-file leaves \[.*'{kind}'.*\]")
-    outcomes = [prepare(qd, spark, SF_DIR)[1] for _ in range(2)]
-    assert not {"hit", "miss"} & set(outcomes), outcomes
-    # The first call may also train a shared artifact; the repeat call
-    # records the entry's own reason.
-    assert re.fullmatch(pattern, outcomes[1]), outcomes
-    key = (name, SF_DIR.rstrip("/"), _conf_fingerprint(spark))
-    assert memo(spark, "prepared")[key] == outcomes[1]
+    _forget(spark, name)
+    outcomes = [prepare(qd, spark, SF_DIR)[1] for _ in range(4)]
+    assert "hit" not in outcomes, outcomes
+    # The first call may train a shared artifact or set a conf (new slot
+    # confs, then), and the first build under a slot's confs has no leaf
+    # check; the last calls record the entry's own reason.
+    assert all(re.fullmatch(pattern, o) for o in outcomes[2:]), outcomes
+    assert _slot(spark, name)[1:3] == (None, outcomes[3])
+
+
+def test_hit_leaves_the_views_on_its_sf_dir(spark):
+    """After ``qd.fn(spark, sf_dir)``, hit or miss, spark.sql over the
+    bare-named views reads ``sf_dir``'s tables, as it did when every call
+    ran the builder."""
+    qd = REGISTRY["tpch_q1_pricing_summary"]
+    count = "SELECT COUNT(*) FROM customer"
+    n_small = load_tables(spark, SF_DIR)["customer"].count()
+    _memoized(spark, qd)
+    try:
+        load_tables(spark, SF_DIR_MED)
+        assert spark.sql(count).collect()[0][0] != n_small
+        assert prepare(qd, spark, SF_DIR)[1] == "hit"
+        assert spark.sql(count).collect()[0][0] == n_small
+    finally:
+        load_tables(spark, SF_DIR)
