@@ -32,7 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 # Confs that are safe to set at runtime on an existing session (the correctness
-# driver owns its own SparkSession — every query entrypoint re-applies these).
+# driver owns its own SparkSession); set once per session, so a caller's own
+# setting holds.
 RUNTIME_CONFS: dict[str, str] = {
     # Deterministic temporal semantics: DuckDB oracle reads parquet timestamps
     # as naive; with UTC session tz, Spark TIMESTAMP/TIMESTAMP_NTZ agree.
@@ -49,17 +50,25 @@ RUNTIME_CONFS: dict[str, str] = {
     # Arrow transfer for any pandas interchange (mirrors the reference's
     # Arrow-IPC data plane, src/execution_plans/network_shuffle.rs).
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Filter pushdown into Python data sources (sources/work_unit_feed.py),
+    # read at optimize time, after a builder returns.
+    "spark.sql.python.filterPushdown.enabled": "true",
 }
 
 
 def apply_session_confs(spark: SparkSession) -> SparkSession:
-    """Apply runtime-settable confs to an existing session (idempotent)."""
-    for key, value in RUNTIME_CONFS.items():
-        try:
-            spark.conf.set(key, value)
-        except Exception:
-            # Static conf on this build — best effort; builder path sets it.
-            pass
+    """Set ``RUNTIME_CONFS`` the first time ``spark`` reaches the engine, as
+    the reference sets its ``DistributedConfig`` once per session; later
+    calls leave a caller's own settings alone."""
+    applied = memo(spark, "confs")
+    if not applied:
+        for key, value in RUNTIME_CONFS.items():
+            try:
+                spark.conf.set(key, value)
+            except Exception:
+                # Static conf on this build — best effort; builder path sets it.
+                pass
+        applied.update(RUNTIME_CONFS)
     return spark
 
 

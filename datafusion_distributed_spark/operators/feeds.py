@@ -67,8 +67,8 @@ GROUP BY lang
 def wuf_filtered_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Selective aggregate through the FILTER-PRUNED work-unit feed: the
     doc_id band predicate reaches the source's pushFilters hook (requires
-    spark.sql.python.filterPushdown.enabled, set here at runtime), prunes
-    row-group units whose footer stats prove them empty, and Spark
+    spark.sql.python.filterPushdown.enabled, one of engine.RUNTIME_CONFS),
+    prunes row-group units whose footer stats prove them empty, and Spark
     re-applies the band exactly post-scan (partial-pushdown contract) —
     so the oracle comparison also proves the pruning never drops a
     matching unit. The single-row-group driver file prunes nothing at test
@@ -77,7 +77,6 @@ def wuf_filtered_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources import register_filtered_work_unit_feed
 
     register_filtered_work_unit_feed(spark)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     docs = (
         spark.read.format("work_unit_feed_filtered")
         .option("path", f"{sf_dir.rstrip('/')}/documents.parquet")

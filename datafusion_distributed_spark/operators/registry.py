@@ -20,22 +20,18 @@ Prepared frames. ``QueryDef.fn`` is the entry's raw builder
 (``QueryDef.build``) behind one session memo, ``engine.memo(spark,
 "prepared")``, which holds each entry's analyzed frame:
 - The memo keeps one slot per (entry name, ``sf_dir`` without a trailing
-  slash). The slot records the session's SQL confs after
-  ``apply_session_confs``, so a frame built under other planning confs is
-  never reused: a call under other confs builds again and replaces the
-  slot, and the memo never grows past one frame per entry and table
-  directory.
-- A frame is memoized only if its build launched no Spark job, claimed no
-  slot, and every leaf of its analyzed plan, subqueries included, reads
-  files or makes rows from nothing (``_FILE_LEAVES``). Otherwise the slot
-  holds the reason (``prepare`` reports it), and the next call builds and
-  checks again: a build that first loads the tables or trains a shared
-  artifact launches jobs, and the entry's later builds may not.
-- The job and slot checks run around every build. The first build under
-  the slot's confs is handed out as built and not kept, so a session's
-  first run of each entry pays a few py4j calls beyond its build; the
-  leaf check, which walks the whole plan string, runs from the second
-  build on, which is the one memoized.
+  slash). The slot records the session's SQL confs, so a frame built
+  under other planning confs is never reused: a call under other confs
+  builds again and replaces the slot, and the memo never grows past one
+  frame per entry and table directory.
+- Every build is checked, and memoized only if it launched no Spark job,
+  claimed no slot, and every leaf of its analyzed plan, subqueries
+  included, reads files or makes rows from nothing (``_FILE_LEAVES``).
+  Otherwise the slot holds the reason (``prepare`` reports it), and the
+  next call builds and checks again: a build that first loads the tables
+  or trains a shared artifact launches jobs, and the entry's later builds
+  may not. A clean entry's first call is therefore a miss and its second
+  a hit.
 - The memoized frame is never handed out: the call that memoizes it and
   every hit return a new frame over its analyzed plan (``_fresh``). Each
   run therefore gets a fresh QueryExecution that optimizes, plans and
@@ -204,8 +200,8 @@ def _job_count(spark: SparkSession) -> int:
 
 def _checked_build(qd: QueryDef, spark: SparkSession, sf_dir: str):
     """Run the builder; returns its frame, why it must not be memoized
-    (None if its jobs and slots allow it) and the views it claimed (None
-    if it claimed none)."""
+    (None if its jobs, slots and leaves allow it) and the views it claimed
+    (None if it claimed none)."""
     slots, views = memo(spark, "slots"), memo(spark, "views")
     held, claim = dict(slots), views.get("claim")
     jobs = _job_count(spark)
@@ -217,13 +213,8 @@ def _checked_build(qd: QueryDef, spark: SparkSession, sf_dir: str):
         return df, f"launched {launched} Spark job(s) while building", claimed
     if slots.keys() != held.keys() or any(slots[k] is not v for k, v in held.items()):
         return df, "claimed a slot while building", claimed
-    return df, None, claimed
-
-
-def leaf_reason(df: DataFrame) -> str | None:
-    """Why ``df``'s plan may not be memoized for its leaves, or None."""
     other = sorted(_leaf_nodes(df) - _FILE_LEAVES)
-    return f"plan has non-file leaves {other}" if other else None
+    return df, f"plan has non-file leaves {other}" if other else None, claimed
 
 
 def _fresh(spark: SparkSession, df: DataFrame) -> DataFrame:
@@ -234,10 +225,6 @@ def _fresh(spark: SparkSession, df: DataFrame) -> DataFrame:
         spark._jsparkSession, df._jdf.queryExecution().analyzed()
     )
     return DataFrame(jdf, spark)
-
-
-# The reason a slot records for a first build, which is not kept.
-_UNCHECKED = "leaves not checked yet"
 
 
 def prepare(qd: QueryDef, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, str]:
@@ -256,10 +243,6 @@ def prepare(qd: QueryDef, spark: SparkSession, sf_dir: str) -> tuple[DataFrame, 
             claim_views(spark, *claimed)
         return _fresh(spark, held), "hit"
     df, reason, claimed = _checked_build(qd, spark, sf_dir)
-    if held_confs != confs:
-        frames[slot] = (confs, None, reason or _UNCHECKED, claimed)
-        return df, reason or "miss"
-    reason = reason or leaf_reason(df)
     frames[slot] = (confs, None if reason else df, reason, claimed)
     return (df, reason) if reason else (_fresh(spark, df), "miss")
 

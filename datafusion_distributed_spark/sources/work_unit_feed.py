@@ -223,8 +223,9 @@ def register_work_unit_feed(spark) -> None:
 # is returned to Spark for exact post-scan evaluation (the contract's
 # "partially pushed" mode), so stats-based pruning can stay conservative —
 # a unit is skipped only when provably non-matching, and correctness never
-# depends on the statistics. Enable with
-# spark.sql.python.filterPushdown.enabled=true (off by default in 4.1).
+# depends on the statistics. Needs
+# spark.sql.python.filterPushdown.enabled=true (off by default in 4.1; one
+# of engine.RUNTIME_CONFS).
 # ---------------------------------------------------------------------------
 
 

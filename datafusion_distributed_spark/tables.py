@@ -7,8 +7,10 @@ parquet footers, exactly like the reference (SURVEY.md §1.3).
 
 Normalization applied at load:
 - ``events.ts`` is parquet TIMESTAMP(NANOS); Spark reads it as int64 under
-  ``spark.sql.legacy.parquet.nanosAsLong`` and we convert to TIMESTAMP_NTZ at
-  microsecond precision (truncation — matches DuckDB's ns→us cast).
+  ``spark.sql.legacy.parquet.nanosAsLong`` (one of ``engine.RUNTIME_CONFS``,
+  which a session's first ``load_tables`` sets) and we convert to
+  TIMESTAMP_NTZ at microsecond precision (truncation — matches DuckDB's
+  ns→us cast).
 - A table of at most one task's worth of bytes is read through
   ``coalesce(1)`` (see ``one_task_bytes``).
 """
@@ -127,7 +129,9 @@ def load_tables(
     spark: SparkSession, sf_dir: str, register: bool = True
 ) -> dict[str, DataFrame]:
     """Load all testdata tables from ``sf_dir`` and (optionally) register them
-    as temp views under their bare names."""
+    as temp views under their bare names. A session's first call sets the
+    engine's confs (``engine.apply_session_confs``), so a session the engine
+    did not build, such as the correctness driver's, reads ``events.ts``."""
     apply_session_confs(spark)
     key = table_key(spark, sf_dir)
     cache: dict[tuple[str, int], dict[str, DataFrame]] = memo(spark, "tables")

@@ -8,12 +8,10 @@ from __future__ import annotations
 import math
 import os
 from contextlib import contextmanager
-from unittest import mock
 
 import duckdb
 import pytest
 
-from datafusion_distributed_spark import engine
 from datafusion_distributed_spark.engine import build_session
 from datafusion_distributed_spark.literal import (
     HAVE_REFERENCE_QUERIES,
@@ -70,15 +68,9 @@ def session_confs(spark, confs: dict[str, object]):
 AQE = "spark.sql.adaptive.enabled"
 
 
-@contextmanager
 def aqe_off(spark):
-    """Adaptive execution off for the block. Query entrypoints re-apply
-    ``engine.RUNTIME_CONFS`` (AQE on) on every table load, so a bare
-    conf.set would not hold: this patches that dict as well as the
-    session's conf, and restores both after the block."""
-    with mock.patch.dict(engine.RUNTIME_CONFS, {AQE: "false"}):
-        with session_confs(spark, {AQE: "false"}):
-            yield spark
+    """Adaptive execution off for the block."""
+    return session_confs(spark, {AQE: "false"})
 
 
 @pytest.fixture()

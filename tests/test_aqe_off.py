@@ -6,10 +6,6 @@ masked by one planning mode surfaces in the other. We default AQE ON (the
 scale path), so the dual run here is the full oracle battery with
 ``spark.sql.adaptive.enabled=false`` — static planning, no runtime coalescing
 or skew-splitting that could hide a wrong exchange.
-
-The sweep runs under ``conftest.aqe_off``, which also patches
-``engine.RUNTIME_CONFS``: query entrypoints re-apply it on every table
-load.
 """
 
 from __future__ import annotations

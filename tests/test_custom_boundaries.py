@@ -25,19 +25,21 @@ import pytest
 
 from datafusion_distributed_spark.tables import load_tables
 
+from . import conftest
 from .conftest import SF_DIR
 
 
 @pytest.fixture()
 def aqe_off(spark):
-    saved = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    yield spark
-    spark.conf.set("spark.sql.adaptive.enabled", saved)
+    with conftest.aqe_off(spark):
+        yield spark
 
 
 def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
+    """The executed plan, which must be the static planner's: AQE off."""
+    plan = df._jdf.queryExecution().executedPlan()
+    assert plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec"
+    return plan.toString()
 
 
 def test_user_repartition_satisfies_agg_requirement(aqe_off):
@@ -165,7 +167,7 @@ def test_empty_columns_between_stages(spark):
     load_tables(spark, SF_DIR)
     q = "SELECT (SELECT count(*) FROM documents) FROM documents GROUP BY lang"
     df = spark.sql(q)
-    plan = _plan(df)
+    plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" in plan  # the empty-column frame really crosses stages
     got = sorted(r[0] for r in df.collect())
     con = duckdb.connect()

@@ -104,16 +104,9 @@ def test_explain_analyze_task_latency_percentiles(spark):
 
 
 def test_explain_works_aqe_off(spark):
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        df = tpch_q1(spark, SF_DIR)
-        # build AFTER the conf change but query fns re-enable AQE via
-        # apply_session_confs; re-disable before the plan materializes
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-        s = stage_summary(df)
+    with aqe_off(spark):
+        s = stage_summary(tpch_q1(spark, SF_DIR))
         assert s["n_shuffles"] == 0
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", "true")
 
 
 def test_q6_filter_pushdown_reaches_scan(spark):

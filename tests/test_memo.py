@@ -65,9 +65,9 @@ def test_memos_never_hold_rows(spark):
     _ensure_loaded()
     handed_out = []
     for name in _ENTRIES:
-        # A miss, the checked build that memoizes the frame, then a hit, for
-        # the entries whose frame is memoized.
-        for _ in range(3):
+        # A clean build is memoized at its first call, and the second call
+        # is a hit.
+        for _ in range(2):
             df = REGISTRY[name].fn(spark, SF_DIR)
             df.collect()
             handed_out.append(df)

@@ -60,9 +60,9 @@ def test_small_table_join_keeps_big_side_exchanges(spark, confs, aqe, broadcast)
     confs(**{
         MAX_PARTITION_BYTES: str(512 * 1024),
         "spark.sql.autoBroadcastJoinThreshold": broadcast,
+        "spark.sql.adaptive.enabled": aqe,
     })
     tb = load_tables(spark, SF_DIR_MED)
-    confs(**{"spark.sql.adaptive.enabled": aqe})  # load_tables turns AQE on
     li, orders = tb["lineitem"], tb["orders"]
     size = {
         t: os.path.getsize(f"{SF_DIR_MED.rstrip('/')}/{t}.parquet")

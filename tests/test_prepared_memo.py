@@ -15,9 +15,8 @@ import re
 
 import pytest
 
-from datafusion_distributed_spark.engine import apply_session_confs, memo
+from datafusion_distributed_spark.engine import memo
 from datafusion_distributed_spark.operators.registry import (
-    _UNCHECKED,
     REGISTRY,
     _conf_fingerprint,
     _ensure_loaded,
@@ -27,6 +26,7 @@ from datafusion_distributed_spark.operators.registry import (
 from datafusion_distributed_spark.tables import load_tables
 
 from .conftest import (
+    AQE,
     MAX_PARTITION_BYTES,
     SF_DIR,
     SF_DIR_MED,
@@ -105,7 +105,6 @@ def test_hit_runs_its_jobs_again(spark):
     miss, outcome = prepare(qd, spark, SF_DIR)
     assert outcome == "miss"
     miss_jobs, miss_rows = _jobs_of(spark, miss)
-    assert prepare(qd, spark, SF_DIR)[1] == "miss"
     hit, outcome = prepare(qd, spark, SF_DIR)
     assert outcome == "hit"
     hit_jobs, hit_rows = _jobs_of(spark, hit)
@@ -115,11 +114,9 @@ def test_hit_runs_its_jobs_again(spark):
 
 
 def _memoized(spark, qd) -> None:
-    """Only the current confs' frame of ``qd`` is memoized. The first
-    build is not kept; the second is checked and kept."""
+    """Only the current confs' frame of ``qd`` is memoized: its first
+    build is checked and kept, and the next call is a hit."""
     _forget(spark, qd.name)
-    assert prepare(qd, spark, SF_DIR)[1] == "miss"
-    assert _slot(spark, qd.name)[1:3] == (None, _UNCHECKED)
     assert prepare(qd, spark, SF_DIR)[1] == "miss"
     assert _slot(spark, qd.name)[2] is None
     assert prepare(qd, spark, SF_DIR)[1] == "hit"
@@ -132,15 +129,18 @@ def _plan(df) -> str:
 def test_aqe_off_gives_a_fresh_build(spark):
     """The AQE-off build replaces the entry's one slot, so turning AQE
     back on builds again: the memo holds one frame per entry and sf_dir,
-    whatever confs the session has been through."""
+    whatever confs the session has been through. The caller's AQE setting
+    holds across the table load, the miss and the hit."""
     qd = REGISTRY["tpch_q1_pricing_summary"]
     _memoized(spark, qd)
     frames = memo(spark, "prepared")
     held = len(frames)
     with aqe_off(spark):
-        df, outcome = prepare(qd, spark, SF_DIR)
-        assert outcome == "miss"
-        assert _top_node(df) != "AdaptiveSparkPlanExec"
+        load_tables(spark, SF_DIR)
+        for expected in ("miss", "hit"):
+            df, outcome = prepare(qd, spark, SF_DIR)
+            assert (outcome, spark.conf.get(AQE)) == (expected, "false")
+            assert _top_node(df) != "AdaptiveSparkPlanExec"
     assert len(frames) == held
     df, outcome = prepare(qd, spark, SF_DIR)
     assert outcome == "miss" and _top_node(df) == "AdaptiveSparkPlanExec"
@@ -175,7 +175,6 @@ def test_hit_replans_under_current_confs(spark):
     planned without AQE."""
     qd = REGISTRY["tpch_q1_pricing_summary"]
     with aqe_off(spark):
-        apply_session_confs(spark)
         confs = _conf_fingerprint(spark)
     seeded = qd.build(spark, SF_DIR)
     assert _top_node(seeded) == "AdaptiveSparkPlanExec"
@@ -200,13 +199,12 @@ def test_impure_entries_rebuild_on_every_call(spark, name):
     kind = _NOT_MEMOIZED[name]
     pattern = _REASONS.get(kind, rf"plan has non-file leaves \[.*'{kind}'.*\]")
     _forget(spark, name)
-    outcomes = [prepare(qd, spark, SF_DIR)[1] for _ in range(4)]
+    outcomes = [prepare(qd, spark, SF_DIR)[1] for _ in range(3)]
     assert "hit" not in outcomes, outcomes
-    # The first call may train a shared artifact or set a conf (new slot
-    # confs, then), and the first build under a slot's confs has no leaf
-    # check; the last calls record the entry's own reason.
-    assert all(re.fullmatch(pattern, o) for o in outcomes[2:]), outcomes
-    assert _slot(spark, name)[1:3] == (None, outcomes[3])
+    # The first call may train a shared artifact, which launches jobs;
+    # the later calls record the entry's own reason.
+    assert all(re.fullmatch(pattern, o) for o in outcomes[1:]), outcomes
+    assert _slot(spark, name)[1:3] == (None, outcomes[2])
 
 
 def test_hit_leaves_the_views_on_its_sf_dir(spark):

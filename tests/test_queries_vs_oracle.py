@@ -9,7 +9,11 @@ from __future__ import annotations
 
 import pytest
 
-from datafusion_distributed_spark.operators.registry import REGISTRY, _ensure_loaded
+from datafusion_distributed_spark.operators.registry import (
+    REGISTRY,
+    _conf_fingerprint,
+    _ensure_loaded,
+)
 
 from .conftest import SF_DIR, compare_to_oracle, oracle_views
 
@@ -22,7 +26,10 @@ _ROWS_ONLY = sorted(n for n, q in REGISTRY.items() if not q.oracle)
 @pytest.mark.parametrize("name", _WITH_ORACLE)
 def test_query_matches_oracle(spark, duck, name):
     qd = REGISTRY[name]
+    confs = _conf_fingerprint(spark)
     df = qd.fn(spark, SF_DIR)
+    # A builder leaves the session's confs as it found them.
+    assert _conf_fingerprint(spark) == confs, f"{name} changed the session's confs"
     oracle_views(duck, SF_DIR)
     compare_to_oracle(df, duck, qd.oracle, name=name, order_by=qd.order_by)
 

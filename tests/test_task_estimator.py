@@ -154,21 +154,13 @@ def test_packer_composes_with_filter_pruning(spark, rg_file):
     import pyspark.sql.functions as F
 
     register_filtered_work_unit_feed(spark)
-    prior = spark.conf.get("spark.sql.python.filterPushdown.enabled", None)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        df = (
-            spark.read.format("work_unit_feed_filtered")
-            .option("path", rg_file)
-            .option("desired_tasks", "2")
-            .load()
-            .filter(F.col("doc_id") < 250)
-        )
-        rows = df.collect()
-        assert len(rows) == 250
-        assert {r.doc_id for r in rows} == set(range(250))
-    finally:
-        if prior is None:
-            spark.conf.unset("spark.sql.python.filterPushdown.enabled")
-        else:
-            spark.conf.set("spark.sql.python.filterPushdown.enabled", prior)
+    df = (
+        spark.read.format("work_unit_feed_filtered")
+        .option("path", rg_file)
+        .option("desired_tasks", "2")
+        .load()
+        .filter(F.col("doc_id") < 250)
+    )
+    rows = df.collect()
+    assert len(rows) == 250
+    assert {r.doc_id for r in rows} == set(range(250))

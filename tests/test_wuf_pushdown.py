@@ -76,28 +76,23 @@ def test_undecidable_filters_prune_nothing(rg_file):
 
 def test_end_to_end_pruned_scan_is_exact(spark, rg_file):
     register_filtered_work_unit_feed(spark)
-    saved = spark.conf.get("spark.sql.python.filterPushdown.enabled")
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    try:
-        feed = (
-            spark.read.format("work_unit_feed_filtered")
-            .option("path", rg_file)
-            .option("rows_per_unit", "50")
-            .load()
-        )
-        got = (
-            feed.filter((F.col("doc_id") < 250) & (F.col("n_chars") > 100))
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("chars"))
-            .collect()
-        )
-        expected = (
-            spark.read.parquet(rg_file)
-            .filter((F.col("doc_id") < 250) & (F.col("n_chars") > 100))
-            .groupBy("source")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("chars"))
-            .collect()
-        )
-        assert sorted(map(tuple, got)) == sorted(map(tuple, expected))
-    finally:
-        spark.conf.set("spark.sql.python.filterPushdown.enabled", saved)
+    feed = (
+        spark.read.format("work_unit_feed_filtered")
+        .option("path", rg_file)
+        .option("rows_per_unit", "50")
+        .load()
+    )
+    got = (
+        feed.filter((F.col("doc_id") < 250) & (F.col("n_chars") > 100))
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("chars"))
+        .collect()
+    )
+    expected = (
+        spark.read.parquet(rg_file)
+        .filter((F.col("doc_id") < 250) & (F.col("n_chars") > 100))
+        .groupBy("source")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("n_chars").alias("chars"))
+        .collect()
+    )
+    assert sorted(map(tuple, got)) == sorted(map(tuple, expected))

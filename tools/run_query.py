@@ -39,7 +39,6 @@ def main() -> int:
     from datafusion_distributed_spark.operators.registry import (
         REGISTRY,
         _ensure_loaded,
-        leaf_reason,
         prepare,
     )
 
@@ -59,10 +58,6 @@ def main() -> int:
 
     spark = build_session(app_name=f"run:{args.name}", master="local[8]")
     df, outcome = prepare(REGISTRY[args.name], spark, args.sf)
-    # A first build's leaves are checked at the entry's next call; a
-    # one-run process checks them here.
-    if outcome == "miss":
-        outcome = leaf_reason(df) or outcome
     # Worker plan rewrite hooks run where a plan leaves the engine for
     # execution (reference: with_distributed_worker_plan_rewrite_handler,
     # docs/advanced/03-plan-hooks.md). No-op unless hooks are registered.
