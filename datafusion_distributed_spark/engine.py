@@ -66,7 +66,7 @@ def apply_session_confs(spark: SparkSession) -> SparkSession:
             try:
                 spark.conf.set(key, value)
             except Exception:
-                # Static conf on this build — best effort; builder path sets it.
+                # A static conf on some Spark build: best effort.
                 pass
         applied.update(RUNTIME_CONFS)
     return spark
@@ -108,8 +108,6 @@ def build_session(
         shuffle_partitions = int(cpus) if str(cpus).isdigit() else None
     if shuffle_partitions is not None:
         builder = builder.config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-    for key, value in RUNTIME_CONFS.items():
-        builder = builder.config(key, value)
     for key, value in (extra_confs or {}).items():
         builder = builder.config(key, value)
     spark = builder.getOrCreate()

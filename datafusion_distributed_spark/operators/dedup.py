@@ -330,8 +330,6 @@ def minhash_lsh_pairs_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _jaccard_oracle() -> str:
-    base = _minhash_oracle().strip().rstrip()
-    # Reuse the candidate CTE chain, then join shingle sets back on.
     return f"""
 WITH words AS (
   SELECT doc_id, string_split_regex(trim(lower(text)), ' +') AS w FROM documents

@@ -38,6 +38,7 @@ from ..sources.png import PNG_SIGNATURE, decode_png, encode_png
 from ..sources.wav import decode_wav, encode_wav
 from ..sources.y4m import decode_y4m, encode_y4m
 from ._util import _fan_out, t
+from .registry import query
 
 # r12 optimization, the REAL-codec roundtrip entries (png/wav/y4m/jpeg/webp):
 # 1. _fan_out the doc_id frame feeding the codec stage — but ONLY where the
@@ -79,7 +80,73 @@ def _roundtrip(enc, dec):
         yield from dec(enc(batches))
 
     return fused
-from .registry import query
+
+
+# Pandas dtypes of the Spark field types the codec frames carry.
+_PD_DTYPES = {"long": "int64", "integer": "int32"}
+
+
+def _doc_batches(schema: StructType, fn, payload: str | None = None):
+    """The PNG/JPEG/WebP batch adapter: a mapInPandas function emitting one
+    ``schema`` row (doc_id, *fn(x)) per input row, where x is the row's
+    doc_id as an int (an encoder) or its ``payload`` column's bytes (a
+    decoder), typed by the schema's integer fields."""
+    dtypes = {
+        f.name: _PD_DTYPES[f.dataType.typeName()]
+        for f in schema.fields
+        if f.dataType.typeName() in _PD_DTYPES
+    }
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            xs = pdf["doc_id"] if payload is None else pdf[payload]
+            rows = [
+                (d, *fn(int(x) if payload is None else bytes(x)))
+                for d, x in zip(pdf["doc_id"], xs)
+            ]
+            yield pd.DataFrame(rows, columns=schema.fieldNames()).astype(dtypes)
+
+    return batches
+
+
+def _codec_gate(spark: SparkSession, sf_dir: str, enc, dec, schema) -> DataFrame:
+    """Per-document stats of an encode-then-decode roundtrip (``enc`` and
+    ``dec`` batch functions, ``schema`` rows) over the codec gate slice.
+
+    Fixture-size policy (r11 VERDICT): the codec gate entries run a
+    deterministic 1-in-7 doc slice (7 is coprime to every geometry
+    modulus, so all width/height classes stay populated); exhaustive
+    per-doc coverage lives in the codec unit tests. Mirrored in the
+    oracle geo CTEs. Do not regrow this family: encode+decode is pure
+    interpreter cost per doc, and full-corpus runs made these entries
+    ~14% of the whole battery."""
+    tbl = t(spark, sf_dir)["documents"]
+    docs = tbl.select("doc_id").filter(F.col("doc_id") % 7 == 0)
+    return _fan_out(docs, src=tbl).mapInPandas(_roundtrip(enc, dec), schema=schema)
+
+
+# The oracle side of _rgb_agg: per-width totals over a per-image stats CTE.
+_RGB_TOTALS = """       CAST(SUM(sum_r) AS BIGINT) AS sum_r,
+       CAST(SUM(sum_g) AS BIGINT) AS sum_g,
+       CAST(SUM(sum_b) AS BIGINT) AS sum_b,
+       CAST(MIN(min_px) AS INTEGER) AS min_px,
+       CAST(MAX(max_px) AS INTEGER) AS max_px
+FROM stats GROUP BY w
+"""
+
+
+def _rgb_agg(stats: DataFrame, *extra) -> DataFrame:
+    """Per-width image count, *extra, RGB channel sums and sample extrema."""
+    return stats.groupBy("width").agg(
+        F.count(F.lit(1)).alias("n_imgs"),
+        *extra,
+        F.sum("sum_r").cast("bigint").alias("sum_r"),
+        F.sum("sum_g").cast("bigint").alias("sum_g"),
+        F.sum("sum_b").cast("bigint").alias("sum_b"),
+        F.min("min_px").cast("int").alias("min_px"),
+        F.max("max_px").cast("int").alias("max_px"),
+    )
+
 
 # ---------------------------------------------------------------------------
 # Binary metadata: treat text as an opaque UTF-8 payload; compute byte-level
@@ -479,56 +546,24 @@ def _png_sample(doc_id: int, x: int, y: int, c: int) -> int:
     return (doc_id + 3 * x + 7 * y + 11 * c) % 256
 
 
-def encode_png_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _png_blob(d: int) -> tuple[bytes]:
     """doc_id -> real PNG bytes (gray or RGB, filters cycled per row)."""
-    for pdf in batches:
-        pngs = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h, nch = _png_geometry(d)
-            px = bytes(
-                _png_sample(d, x, y, c)
-                for y in range(h)
-                for x in range(w)
-                for c in range(nch)
-            )
-            pngs.append(encode_png(w, h, nch, px, filter_type="cycle"))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "png": pngs})
+    w, h, nch = _png_geometry(d)
+    px = bytes(
+        _png_sample(d, x, y, c) for y in range(h) for x in range(w) for c in range(nch)
+    )
+    return (encode_png(w, h, nch, px, filter_type="cycle"),)
 
 
-def png_stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _png_stats(payload: bytes) -> tuple:
     """PNG bytes -> decoded geometry + exact pixel statistics."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["png"]):
-            img = decode_png(payload if isinstance(payload, bytes) else bytes(payload))
-            px = img.pixels
-            rows.append(
-                [
-                    doc_id,
-                    img.width,
-                    img.height,
-                    img.channels,
-                    len(px),
-                    sum(px),
-                    min(px),
-                    max(px),
-                ]
-            )
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "channels",
-                "n_px", "px_sum", "px_min", "px_max",
-            ],
-        )
-        yield out.astype(
-            {
-                "width": "int32", "height": "int32", "channels": "int32",
-                "n_px": "int32", "px_sum": "int64",
-                "px_min": "int32", "px_max": "int32",
-            }
-        )
+    img = decode_png(payload)
+    px = img.pixels
+    return img.width, img.height, img.channels, len(px), sum(px), min(px), max(px)
+
+
+encode_png_batches = _doc_batches(_PNG_SCHEMA, _png_blob)
+png_stats_batches = _doc_batches(_PNG_STATS_SCHEMA, _png_stats, "png")
 
 
 _PNG_STATS_ORACLE = """
@@ -920,66 +955,46 @@ def _jpeg_block_coeffs(doc_id: int, b: int) -> list:
     return blk
 
 
-def encode_jpeg_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jpeg_blob(d: int) -> tuple[bytes]:
     """doc_id -> real baseline JPEG bytes (grayscale, 1-6 blocks)."""
-    for pdf in batches:
-        jpegs = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = _jpeg_geometry(d)
-            nb = (w // 8) * (h // 8)
-            blocks = [_jpeg_block_coeffs(d, b) for b in range(nb)]
-            jpegs.append(encode_jpeg_gray(w, h, blocks, _JPEG_QTABLE))
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpeg": jpegs})
+    w, h = _jpeg_geometry(d)
+    blocks = [_jpeg_block_coeffs(d, b) for b in range((w // 8) * (h // 8))]
+    return (encode_jpeg_gray(w, h, blocks, _JPEG_QTABLE),)
 
 
-def jpeg_stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _jpeg_stats(payload: bytes) -> tuple:
     """JPEG bytes -> decoded geometry + exact pixel statistics."""
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["jpeg"]):
-            img = decode_jpeg(
-                payload if isinstance(payload, bytes) else bytes(payload)
-            )
-            px = img.pixels
-            rows.append(
-                [
-                    doc_id, img.width, img.height, img.n_blocks,
-                    len(px), sum(px), min(px), max(px),
-                ]
-            )
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "n_blocks",
-                "n_px", "px_sum", "px_min", "px_max",
-            ],
-        )
-        yield out.astype(
-            {
-                "width": "int32", "height": "int32", "n_blocks": "int32",
-                "n_px": "int32", "px_sum": "int64",
-                "px_min": "int32", "px_max": "int32",
-            }
-        )
+    img = decode_jpeg(payload)
+    px = img.pixels
+    return img.width, img.height, img.n_blocks, len(px), sum(px), min(px), max(px)
 
 
-def _jpeg_oracle() -> str:
-    """Recompute every decoded pixel in SQL: the coefficient formulas, the
-    zigzag->(u,v) map, the quant table and the IDCT basis constants are all
-    inlined as literals generated from the codec's own Python constants, so
-    the two sides can never drift."""
+encode_jpeg_batches = _doc_batches(_JPEG_SCHEMA, _jpeg_blob)
+jpeg_stats_batches = _doc_batches(_JPEG_STATS_SCHEMA, _jpeg_stats, "jpeg")
+
+
+def _jpeg_tables(qt: str) -> str:
+    """The IDCT basis and zigzag->(u,v) map as VALUES CTEs, then ``qt``:
+    literals generated from the codec's own Python constants, so the two
+    sides can never drift."""
     basis_rows = ", ".join(
         f"({u}, {x}, {BASIS[u][x]!r})" for u in range(8) for x in range(8)
     )
     zig_rows = ", ".join(
         f"({k}, {ZIGZAG[k] % 8}, {ZIGZAG[k] // 8})" for k in range(64)
     )
+    return f"""basis(u, x, bv) AS (VALUES {basis_rows}),
+zig(z, zu, zv) AS (VALUES {zig_rows}),
+{qt}"""
+
+
+def _jpeg_oracle() -> str:
+    """Recompute every decoded pixel in SQL: the coefficient formulas, the
+    zigzag->(u,v) map, the quant table and the IDCT basis constants are all
+    inlined as literals (_jpeg_tables)."""
     q_rows = ", ".join(f"({k}, {_JPEG_QTABLE[k]})" for k in range(64))
     return f"""
-WITH basis(u, x, bv) AS (VALUES {basis_rows}),
-zig(z, zu, zv) AS (VALUES {zig_rows}),
-qt(z, q) AS (VALUES {q_rows}),
+WITH {_jpeg_tables(f"qt(z, q) AS (VALUES {q_rows})")},
 geo AS (
   SELECT doc_id,
          CAST(8 * (1 + doc_id % 3) AS INTEGER) AS w,
@@ -1040,19 +1055,8 @@ def jpeg_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the coefficient formulas via the same IDCT basis constants, proving the
     whole codec (markers, canonical Huffman, DC prediction, run/size + ZRL
     + EOB, byte unstuffing, dezigzag, dequant, IDCT, clamp)."""
-    tbl = t(spark, sf_dir)["documents"]
-    docs = tbl.select("doc_id").filter(
-        F.col("doc_id") % 7 == 0
-    )  # fixture-size policy (r11 VERDICT): the codec gate entries run a
-    # deterministic 1-in-7 doc slice (7 is coprime to every geometry
-    # modulus, so all width/height classes stay populated); exhaustive
-    # per-doc coverage lives in the codec unit tests. Mirrored in the
-    # oracle geo CTE. Do not regrow this family: encode+decode is pure
-    # interpreter cost per doc, and full-corpus runs made these four
-    # entries ~14% of the whole battery.
-    stats = _fan_out(docs, src=tbl).mapInPandas(
-        _roundtrip(encode_jpeg_batches, jpeg_stats_batches),
-        schema=_JPEG_STATS_SCHEMA,
+    stats = _codec_gate(
+        spark, sf_dir, encode_jpeg_batches, jpeg_stats_batches, _JPEG_STATS_SCHEMA
     )
     return stats.groupBy("width", "height").agg(
         F.count(F.lit(1)).alias("n_imgs"),
@@ -1119,70 +1123,52 @@ def _jpeg_color_coeffs(doc_id: int, b: int) -> tuple[list, list, list]:
     return tuple(out)
 
 
-def encode_jpeg_color_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        jpegs = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = _jpeg_color_geometry(d)
-            mcus = [_jpeg_color_coeffs(d, b) for b in range((w // 8) * (h // 8))]
-            jpegs.append(
-                encode_jpeg_color(w, h, mcus, _JPEG_QTABLE, _JPEG_CHROMA_QTABLE)
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpeg": jpegs})
+def _jpeg_color_blob(d: int) -> tuple[bytes]:
+    w, h = _jpeg_color_geometry(d)
+    mcus = [_jpeg_color_coeffs(d, b) for b in range((w // 8) * (h // 8))]
+    return (encode_jpeg_color(w, h, mcus, _JPEG_QTABLE, _JPEG_CHROMA_QTABLE),)
 
 
-def jpeg_color_stats_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["jpeg"]):
-            img = decode_jpeg(
-                payload if isinstance(payload, bytes) else bytes(payload)
-            )
-            px = img.pixels
-            rows.append(
-                [
-                    doc_id, img.width, img.height, img.n_blocks,
-                    sum(px[0::3]), sum(px[1::3]), sum(px[2::3]),
-                    min(px), max(px),
-                ]
-            )
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height", "n_mcus",
-                "sum_r", "sum_g", "sum_b", "min_px", "max_px",
-            ],
-        )
-        yield out.astype(
-            {
-                "width": "int32", "height": "int32", "n_mcus": "int32",
-                "sum_r": "int64", "sum_g": "int64", "sum_b": "int64",
-                "min_px": "int32", "max_px": "int32",
-            }
-        )
+def _jpeg_rgb_stats(payload: bytes) -> tuple:
+    img = decode_jpeg(payload)
+    px = img.pixels
+    return (
+        img.width, img.height, img.n_blocks,
+        sum(px[0::3]), sum(px[1::3]), sum(px[2::3]), min(px), max(px),
+    )
+
+
+encode_jpeg_color_batches = _doc_batches(_JPEG_SCHEMA, _jpeg_color_blob)
+jpeg_color_stats_batches = _doc_batches(
+    _JPEG_COLOR_STATS_SCHEMA, _jpeg_rgb_stats, "jpeg"
+)
+
+
+def _jpeg_chroma_qt() -> str:
+    """The luma (slot 0) and chroma (slot 1) quantization tables."""
+    q_rows = ", ".join(
+        f"({slot}, {k}, {table[k]})"
+        for slot, table in enumerate((_JPEG_QTABLE, _JPEG_CHROMA_QTABLE))
+        for k in range(64)
+    )
+    return f"qt(slot, z, q) AS (VALUES {q_rows})"
+
+
+# JFIF YCbCr -> RGB with floor(x + 0.5) rounding and clamping, over the
+# yv/cbv/crv columns of the color oracles' ycc CTE.
+_YCC_TO_RGB = f"""         LEAST(GREATEST(CAST(FLOOR(
+           yv + {YCC_R_CR!r} * (crv - 128) + 0.5) AS BIGINT), 0), 255) AS r,
+         LEAST(GREATEST(CAST(FLOOR(
+           yv - {YCC_G_CB!r} * (cbv - 128) - {YCC_G_CR!r} * (crv - 128) + 0.5)
+           AS BIGINT), 0), 255) AS g,
+         LEAST(GREATEST(CAST(FLOOR(
+           yv + {YCC_B_CB!r} * (cbv - 128) + 0.5) AS BIGINT), 0), 255) AS bl
+"""
 
 
 def _jpeg_color_oracle() -> str:
-    basis_rows = ", ".join(
-        f"({u}, {x}, {BASIS[u][x]!r})" for u in range(8) for x in range(8)
-    )
-    zig_rows = ", ".join(
-        f"({k}, {ZIGZAG[k] % 8}, {ZIGZAG[k] // 8})" for k in range(64)
-    )
-    q_rows = ", ".join(
-        f"(0, {k}, {_JPEG_QTABLE[k]})" for k in range(64)
-    ) + ", " + ", ".join(
-        f"(1, {k}, {_JPEG_CHROMA_QTABLE[k]})" for k in range(64)
-    )
     return f"""
-WITH basis(u, x, bv) AS (VALUES {basis_rows}),
-zig(z, zu, zv) AS (VALUES {zig_rows}),
-qt(slot, z, q) AS (VALUES {q_rows}),
+WITH {_jpeg_tables(_jpeg_chroma_qt())},
 geo AS (
   SELECT doc_id, CAST(8 * (1 + doc_id % 2) AS INTEGER) AS w,
          CAST(8 AS INTEGER) AS h
@@ -1230,14 +1216,7 @@ ycc AS (
 ),
 rgb AS (
   SELECT doc_id, w, h,
-         LEAST(GREATEST(CAST(FLOOR(
-           yv + {YCC_R_CR!r} * (crv - 128) + 0.5) AS BIGINT), 0), 255) AS r,
-         LEAST(GREATEST(CAST(FLOOR(
-           yv - {YCC_G_CB!r} * (cbv - 128) - {YCC_G_CR!r} * (crv - 128) + 0.5)
-           AS BIGINT), 0), 255) AS g,
-         LEAST(GREATEST(CAST(FLOOR(
-           yv + {YCC_B_CB!r} * (cbv - 128) + 0.5) AS BIGINT), 0), 255) AS bl
-  FROM ycc
+{_YCC_TO_RGB}  FROM ycc
 ),
 stats AS (
   SELECT doc_id, w, h, SUM(r) AS sum_r, SUM(g) AS sum_g, SUM(bl) AS sum_b,
@@ -1247,13 +1226,7 @@ stats AS (
 )
 SELECT w AS width, COUNT(*) AS n_imgs,
        CAST(SUM(w // 8) AS BIGINT) AS total_mcus,
-       CAST(SUM(sum_r) AS BIGINT) AS sum_r,
-       CAST(SUM(sum_g) AS BIGINT) AS sum_g,
-       CAST(SUM(sum_b) AS BIGINT) AS sum_b,
-       CAST(MIN(min_px) AS INTEGER) AS min_px,
-       CAST(MAX(max_px) AS INTEGER) AS max_px
-FROM stats GROUP BY w
-"""
+{_RGB_TOTALS}"""
 
 
 @query(
@@ -1266,29 +1239,14 @@ def jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     baseline JPEG bytes: interleaved MCUs, per-component DC prediction,
     luma/chroma table slots, JFIF YCbCr->RGB. The oracle recomputes every
     RGB sample from the coefficient formulas."""
-    tbl = t(spark, sf_dir)["documents"]
-    docs = tbl.select("doc_id").filter(
-        F.col("doc_id") % 7 == 0
-    )  # fixture-size policy (r11 VERDICT): the codec gate entries run a
-    # deterministic 1-in-7 doc slice (7 is coprime to every geometry
-    # modulus, so all width/height classes stay populated); exhaustive
-    # per-doc coverage lives in the codec unit tests. Mirrored in the
-    # oracle geo CTE. Do not regrow this family: encode+decode is pure
-    # interpreter cost per doc, and full-corpus runs made these four
-    # entries ~14% of the whole battery.
-    stats = _fan_out(docs, src=tbl).mapInPandas(
-        _roundtrip(encode_jpeg_color_batches, jpeg_color_stats_batches),
-        schema=_JPEG_COLOR_STATS_SCHEMA,
+    stats = _codec_gate(
+        spark,
+        sf_dir,
+        encode_jpeg_color_batches,
+        jpeg_color_stats_batches,
+        _JPEG_COLOR_STATS_SCHEMA,
     )
-    return stats.groupBy("width").agg(
-        F.count(F.lit(1)).alias("n_imgs"),
-        F.sum("n_mcus").cast("bigint").alias("total_mcus"),
-        F.sum("sum_r").cast("bigint").alias("sum_r"),
-        F.sum("sum_g").cast("bigint").alias("sum_g"),
-        F.sum("sum_b").cast("bigint").alias("sum_b"),
-        F.min("min_px").cast("int").alias("min_px"),
-        F.max("max_px").cast("int").alias("max_px"),
-    )
+    return _rgb_agg(stats, F.sum("n_mcus").cast("bigint").alias("total_mcus"))
 
 
 # ---------------------------------------------------------------------------
@@ -1330,40 +1288,22 @@ def _jpeg_sub_mcu(doc_id: int, b: int):
     return ys, chroma[0], chroma[1]
 
 
-def encode_jpeg_sub_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        jpegs = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = _jpeg_sub_geometry(d)
-            mcus = [_jpeg_sub_mcu(d, b) for b in range((w // 16) * (h // 16))]
-            jpegs.append(
-                encode_jpeg_subsampled(
-                    w, h, mcus, _JPEG_QTABLE, _JPEG_CHROMA_QTABLE,
-                    restart_interval=1,
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "jpeg": jpegs})
+def _jpeg_sub_blob(d: int) -> tuple[bytes]:
+    w, h = _jpeg_sub_geometry(d)
+    mcus = [_jpeg_sub_mcu(d, b) for b in range((w // 16) * (h // 16))]
+    return (
+        encode_jpeg_subsampled(
+            w, h, mcus, _JPEG_QTABLE, _JPEG_CHROMA_QTABLE, restart_interval=1
+        ),
+    )
+
+
+encode_jpeg_sub_batches = _doc_batches(_JPEG_SCHEMA, _jpeg_sub_blob)
 
 
 def _jpeg_sub_oracle() -> str:
-    basis_rows = ", ".join(
-        f"({u}, {x}, {BASIS[u][x]!r})" for u in range(8) for x in range(8)
-    )
-    zig_rows = ", ".join(
-        f"({k}, {ZIGZAG[k] % 8}, {ZIGZAG[k] // 8})" for k in range(64)
-    )
-    q_rows = ", ".join(
-        f"(0, {k}, {_JPEG_QTABLE[k]})" for k in range(64)
-    ) + ", " + ", ".join(
-        f"(1, {k}, {_JPEG_CHROMA_QTABLE[k]})" for k in range(64)
-    )
     return f"""
-WITH basis(u, x, bv) AS (VALUES {basis_rows}),
-zig(z, zu, zv) AS (VALUES {zig_rows}),
-qt(slot, z, q) AS (VALUES {q_rows}),
+WITH {_jpeg_tables(_jpeg_chroma_qt())},
 geo AS (
   SELECT doc_id, CAST(16 * (1 + doc_id % 2) AS INTEGER) AS w,
          CAST(16 AS INTEGER) AS h
@@ -1433,14 +1373,7 @@ ycc AS (
 ),
 rgb AS (
   SELECT doc_id, w,
-         LEAST(GREATEST(CAST(FLOOR(
-           yv + {YCC_R_CR!r} * (crv - 128) + 0.5) AS BIGINT), 0), 255) AS r,
-         LEAST(GREATEST(CAST(FLOOR(
-           yv - {YCC_G_CB!r} * (cbv - 128) - {YCC_G_CR!r} * (crv - 128) + 0.5)
-           AS BIGINT), 0), 255) AS g,
-         LEAST(GREATEST(CAST(FLOOR(
-           yv + {YCC_B_CB!r} * (cbv - 128) + 0.5) AS BIGINT), 0), 255) AS bl
-  FROM ycc
+{_YCC_TO_RGB}  FROM ycc
 ),
 stats AS (
   SELECT doc_id, w, SUM(r) AS sum_r, SUM(g) AS sum_g, SUM(bl) AS sum_b,
@@ -1450,13 +1383,7 @@ stats AS (
 )
 SELECT w AS width, COUNT(*) AS n_imgs,
        CAST(SUM(w // 16) AS BIGINT) AS total_mcus,
-       CAST(SUM(sum_r) AS BIGINT) AS sum_r,
-       CAST(SUM(sum_g) AS BIGINT) AS sum_g,
-       CAST(SUM(sum_b) AS BIGINT) AS sum_b,
-       CAST(MIN(min_px) AS INTEGER) AS min_px,
-       CAST(MAX(max_px) AS INTEGER) AS max_px
-FROM stats GROUP BY w
-"""
+{_RGB_TOTALS}"""
 
 
 @query(
@@ -1472,29 +1399,14 @@ def jpeg_subsampled_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     conversion — one wrong bit in the RSTn re-sync, the predictor resets,
     the 4-blocks-per-MCU interleave order, or the upsample indexing breaks
     the hash."""
-    tbl = t(spark, sf_dir)["documents"]
-    docs = tbl.select("doc_id").filter(
-        F.col("doc_id") % 7 == 0
-    )  # fixture-size policy (r11 VERDICT): the codec gate entries run a
-    # deterministic 1-in-7 doc slice (7 is coprime to every geometry
-    # modulus, so all width/height classes stay populated); exhaustive
-    # per-doc coverage lives in the codec unit tests. Mirrored in the
-    # oracle geo CTE. Do not regrow this family: encode+decode is pure
-    # interpreter cost per doc, and full-corpus runs made these four
-    # entries ~14% of the whole battery.
-    stats = _fan_out(docs, src=tbl).mapInPandas(
-        _roundtrip(encode_jpeg_sub_batches, jpeg_color_stats_batches),
-        schema=_JPEG_SUB_STATS_SCHEMA,
+    stats = _codec_gate(
+        spark,
+        sf_dir,
+        encode_jpeg_sub_batches,
+        jpeg_color_stats_batches,
+        _JPEG_SUB_STATS_SCHEMA,
     )
-    return stats.groupBy("width").agg(
-        F.count(F.lit(1)).alias("n_imgs"),
-        F.sum("n_mcus").cast("bigint").alias("total_mcus"),
-        F.sum("sum_r").cast("bigint").alias("sum_r"),
-        F.sum("sum_g").cast("bigint").alias("sum_g"),
-        F.sum("sum_b").cast("bigint").alias("sum_b"),
-        F.min("min_px").cast("int").alias("min_px"),
-        F.max("max_px").cast("int").alias("max_px"),
-    )
+    return _rgb_agg(stats, F.sum("n_mcus").cast("bigint").alias("total_mcus"))
 
 
 # ---------------------------------------------------------------------------
@@ -1548,59 +1460,35 @@ def _webp_row_rgba(doc_id: int, w: int) -> list[int]:
     return row
 
 
-def encode_webp_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        blobs = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w, h = _webp_geometry(d)
-            rgba = _webp_row_rgba(d, w) * h
-            blobs.append(
-                encode_webp_lossless(
-                    w, h, rgba,
-                    backrefs=[(w, w * (h - 1), w)],  # rows 2..h copy row 1
-                    cache_bits=4,
-                    subtract_green=True,  # exercises the inverse transform
-                    # r12: the row-stride copy now rides the spec's
-                    # near-distance window codes ((0,1) at these widths)
-                    # instead of absolute codes; decoded stats — and thus
-                    # the gate hashes — are unchanged (lossless).
-                    near_codes=True,
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "webp": blobs})
+def _webp_blob(d: int) -> tuple[bytes]:
+    w, h = _webp_geometry(d)
+    return (
+        encode_webp_lossless(
+            w, h, _webp_row_rgba(d, w) * h,
+            backrefs=[(w, w * (h - 1), w)],  # rows 2..h copy row 1
+            cache_bits=4,
+            subtract_green=True,  # exercises the inverse transform
+            # r12: the row-stride copy now rides the spec's
+            # near-distance window codes ((0,1) at these widths)
+            # instead of absolute codes; decoded stats — and thus
+            # the gate hashes — are unchanged (lossless).
+            near_codes=True,
+        ),
+    )
 
 
-def webp_stats_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        rows = []
-        for doc_id, payload in zip(pdf["doc_id"], pdf["webp"]):
-            img = decode_webp_lossless(
-                payload if isinstance(payload, bytes) else bytes(payload)
-            )
-            px = img.pixels
-            rows.append(
-                [
-                    doc_id, img.width, img.height,
-                    sum(px[0::4]), sum(px[1::4]), sum(px[2::4]),
-                    min(px[0::4] + px[1::4] + px[2::4]),
-                    max(px[0::4] + px[1::4] + px[2::4]),
-                ]
-            )
-        out = pd.DataFrame(
-            rows,
-            columns=[
-                "doc_id", "width", "height",
-                "sum_r", "sum_g", "sum_b", "min_px", "max_px",
-            ],
-        )
-        yield out.astype(
-            {
-                "width": "int32", "height": "int32",
-                "sum_r": "int64", "sum_g": "int64", "sum_b": "int64",
-                "min_px": "int32", "max_px": "int32",
-            }
-        )
+def _webp_stats(payload: bytes) -> tuple:
+    img = decode_webp_lossless(payload)
+    px = img.pixels
+    rgb = px[0::4] + px[1::4] + px[2::4]
+    return (
+        img.width, img.height,
+        sum(px[0::4]), sum(px[1::4]), sum(px[2::4]), min(rgb), max(rgb),
+    )
+
+
+encode_webp_batches = _doc_batches(_WEBP_SCHEMA, _webp_blob)
+webp_stats_batches = _doc_batches(_WEBP_STATS_SCHEMA, _webp_stats, "webp")
 
 
 _WEBP_ORACLE = f"""
@@ -1623,13 +1511,7 @@ stats AS (
   FROM px GROUP BY doc_id, w
 )
 SELECT w AS width, COUNT(*) AS n_imgs,
-       CAST(SUM(sum_r) AS BIGINT) AS sum_r,
-       CAST(SUM(sum_g) AS BIGINT) AS sum_g,
-       CAST(SUM(sum_b) AS BIGINT) AS sum_b,
-       CAST(MIN(min_px) AS INTEGER) AS min_px,
-       CAST(MAX(max_px) AS INTEGER) AS max_px
-FROM stats GROUP BY w
-"""
+{_RGB_TOTALS}"""
 
 
 @query(
@@ -1641,27 +1523,10 @@ def webp_lossless_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode-then-decode roundtrip through REAL VP8L bytes (backward
     reference per image + color cache); per-width aggregate of decoded RGB
     sums/extrema, hash-matched against the closed-form pixel formulas."""
-    tbl = t(spark, sf_dir)["documents"]
-    docs = tbl.select("doc_id").filter(
-        F.col("doc_id") % 7 == 0
-    )  # fixture-size policy (r11 VERDICT): the codec gate entries run a
-    # deterministic 1-in-7 doc slice (7 is coprime to every geometry
-    # modulus, so all width/height classes stay populated); exhaustive
-    # per-doc coverage lives in the codec unit tests. Mirrored in the
-    # oracle geo CTE. Do not regrow this family: encode+decode is pure
-    # interpreter cost per doc, and full-corpus runs made these four
-    # entries ~14% of the whole battery.
-    stats = _fan_out(docs, src=tbl).mapInPandas(
-        _roundtrip(encode_webp_batches, webp_stats_batches),
-        schema=_WEBP_STATS_SCHEMA,
-    )
-    return stats.groupBy("width").agg(
-        F.count(F.lit(1)).alias("n_imgs"),
-        F.sum("sum_r").cast("bigint").alias("sum_r"),
-        F.sum("sum_g").cast("bigint").alias("sum_g"),
-        F.sum("sum_b").cast("bigint").alias("sum_b"),
-        F.min("min_px").cast("int").alias("min_px"),
-        F.max("max_px").cast("int").alias("max_px"),
+    return _rgb_agg(
+        _codec_gate(
+            spark, sf_dir, encode_webp_batches, webp_stats_batches, _WEBP_STATS_SCHEMA
+        )
     )
 
 
@@ -1700,23 +1565,19 @@ def _webp_pred_rgba(doc_id: int, w: int) -> list[int]:
     return out
 
 
-def encode_webp_pred_batches(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        blobs = []
-        for doc_id in pdf["doc_id"]:
-            d = int(doc_id)
-            w = _webp_pred_geometry(d)
-            mw = (w + 7) >> 3  # size_bits 3 -> 8-px blocks; h=4 -> 1 row
-            blobs.append(
-                encode_webp_lossless(
-                    w, _WEBP_PRED_H, _webp_pred_rgba(d, w),
-                    predictor_size_bits=3,
-                    predictor_modes=[(d + 3 * k) % 14 for k in range(mw)],
-                )
-            )
-        yield pd.DataFrame({"doc_id": pdf["doc_id"], "webp": blobs})
+def _webp_pred_blob(d: int) -> tuple[bytes]:
+    w = _webp_pred_geometry(d)
+    mw = (w + 7) >> 3  # size_bits 3 -> 8-px blocks; h=4 -> 1 row
+    return (
+        encode_webp_lossless(
+            w, _WEBP_PRED_H, _webp_pred_rgba(d, w),
+            predictor_size_bits=3,
+            predictor_modes=[(d + 3 * k) % 14 for k in range(mw)],
+        ),
+    )
+
+
+encode_webp_pred_batches = _doc_batches(_WEBP_SCHEMA, _webp_pred_blob)
 
 
 _WEBP_PRED_ORACLE = f"""
@@ -1741,13 +1602,7 @@ stats AS (
   FROM px GROUP BY doc_id, w
 )
 SELECT w AS width, COUNT(*) AS n_imgs,
-       CAST(SUM(sum_r) AS BIGINT) AS sum_r,
-       CAST(SUM(sum_g) AS BIGINT) AS sum_g,
-       CAST(SUM(sum_b) AS BIGINT) AS sum_b,
-       CAST(MIN(min_px) AS INTEGER) AS min_px,
-       CAST(MAX(max_px) AS INTEGER) AS max_px
-FROM stats GROUP BY w
-"""
+{_RGB_TOTALS}"""
 
 
 @query(
@@ -1761,19 +1616,12 @@ def webp_predictor_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     rightmost-column TR wrap on the 2-block class): per-width aggregate of
     decoded RGB sums/extrema vs the closed-form pixel formulas. Runs the
     codec family's 1-in-7 doc slice (fixture-size policy)."""
-    tbl = t(spark, sf_dir)["documents"]
-    docs = tbl.select("doc_id").filter(
-        F.col("doc_id") % 7 == 0
-    )
-    stats = _fan_out(docs, src=tbl).mapInPandas(
-        _roundtrip(encode_webp_pred_batches, webp_stats_batches),
-        schema=_WEBP_STATS_SCHEMA,
-    )
-    return stats.groupBy("width").agg(
-        F.count(F.lit(1)).alias("n_imgs"),
-        F.sum("sum_r").cast("bigint").alias("sum_r"),
-        F.sum("sum_g").cast("bigint").alias("sum_g"),
-        F.sum("sum_b").cast("bigint").alias("sum_b"),
-        F.min("min_px").cast("int").alias("min_px"),
-        F.max("max_px").cast("int").alias("max_px"),
+    return _rgb_agg(
+        _codec_gate(
+            spark,
+            sf_dir,
+            encode_webp_pred_batches,
+            webp_stats_batches,
+            _WEBP_STATS_SCHEMA,
+        )
     )

@@ -83,31 +83,94 @@ def pair_cos(ae: str = "ae", be: str = "be", a_nrm: str = "a_nrm", b_nrm: str = 
     return F.round(_dot(ae, be) / (F.col(a_nrm) * F.col(b_nrm)), 6)
 
 
-# ---------------------------------------------------------------------------
-# Brute-force cosine top-k.
-# ---------------------------------------------------------------------------
+def _emb(spark: SparkSession, sf_dir: str, *keys: str, vec: str = "e") -> DataFrame:
+    """The embeddings table as ``keys`` (default vec_id) plus the vector
+    cast to array<double> as ``vec``."""
+    return t(spark, sf_dir)["embeddings"].select(
+        *(keys or ("vec_id",)), F.col("embedding").cast("array<double>").alias(vec)
+    )
 
-_COSINE_ORACLE = f"""
-WITH emb AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-),
-q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id < {_N_QUERIES}),
-c AS (SELECT vec_id, e FROM emb WHERE vec_id >= {_N_QUERIES}),
-flat AS (
+
+def _cross_pairs(emb: DataFrame, *q_cols, keep: DataFrame | None = None) -> DataFrame:
+    """Every (corpus, query) pair: the corpus rows of ``emb`` (only the
+    vec_ids ``keep`` lists as doc_id, if given) with their norm ``nrm``,
+    crossed with the broadcast query vectors (q_id, *q_cols, qe, qnrm)."""
+    q = _with_nrm(
+        emb.filter(F.col("vec_id") < _N_QUERIES).select(
+            F.col("vec_id").alias("q_id"), *q_cols, F.col("e").alias("qe")
+        ),
+        "qe",
+        "qnrm",
+    )
+    c = emb.filter(F.col("vec_id") >= _N_QUERIES)
+    if keep is not None:
+        c = c.join(keep, emb["vec_id"] == keep["doc_id"])
+    return _with_nrm(c, "e", "nrm").crossJoin(F.broadcast(q))
+
+
+def _scored(pairs: DataFrame, *extra) -> DataFrame:
+    """(q_id, neighbor_id, cos_sim, *extra) of a frame pairing corpus
+    vectors (vec_id, e, nrm) with query vectors (q_id, qe, qnrm)."""
+    return pairs.select(
+        "q_id",
+        F.col("vec_id").alias("neighbor_id"),
+        pair_cos("e", "qe", "nrm", "qnrm").alias("cos_sim"),
+        *extra,
+    )
+
+
+def _by_cos():
+    """Each query's neighbors by cosine, ties on neighbor_id."""
+    return Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
+
+
+def _top_k(scored: DataFrame) -> DataFrame:
+    """The _TOP_K nearest neighbors of each query in a _scored frame."""
+    return (
+        scored.withColumn("rn", F.row_number().over(_by_cos()))
+        .filter(F.col("rn") <= _TOP_K)
+        .select("q_id", "neighbor_id", "cos_sim")
+    )
+
+
+# DuckDB oracle fragments shared by the entries below.
+_EMB_CTE = "emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings)"
+
+
+def _emb_cte(cols: str = "vec_id", where: str = "") -> str:
+    return (
+        f"emb AS (\n  SELECT {cols}, CAST(embedding AS DOUBLE[]) AS e"
+        f" FROM embeddings{where}\n)"
+    )
+
+
+_Q_CTE = f"q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id < {_N_QUERIES})"
+_C_CTE = f"c AS (SELECT vec_id, e FROM emb WHERE vec_id >= {_N_QUERIES})"
+_COS6 = "ROUND(dot / (SQRT(qq) * SQRT(cc)), 6)"
+
+
+def _cos_dots(flat: str = "flat", dots: str = "dots", join: str = "CROSS JOIN c") -> str:
+    """Per-pair dot product and squared norms of the q and c vectors."""
+    return f"""{flat} AS (
   SELECT q.q_id, c.vec_id, unnest(q.qe) AS qv, unnest(c.e) AS cv
-  FROM q CROSS JOIN c
+  FROM q {join}
 ),
-dots AS (
+{dots} AS (
   SELECT q_id, vec_id,
          SUM(qv * cv) AS dot, SUM(qv * qv) AS qq, SUM(cv * cv) AS cc
-  FROM flat GROUP BY q_id, vec_id
-),
-scored AS (
+  FROM {flat} GROUP BY q_id, vec_id
+)"""
+
+
+def _scored_cte(dots: str) -> str:
+    return f"""scored AS (
   SELECT q_id, vec_id AS neighbor_id,
-         ROUND(dot / (SQRT(qq) * SQRT(cc)), 6) AS cos_sim
-  FROM dots
-),
-ranked AS (
+         {_COS6} AS cos_sim
+  FROM {dots}
+)"""
+
+
+_RANKED_TOP_K = f"""ranked AS (
   SELECT q_id, neighbor_id, cos_sim,
          ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS rn
   FROM scored
@@ -116,32 +179,22 @@ SELECT q_id, neighbor_id, cos_sim FROM ranked WHERE rn <= {_TOP_K}
 """
 
 
+# ---------------------------------------------------------------------------
+# Brute-force cosine top-k.
+# ---------------------------------------------------------------------------
+
+_COSINE_ORACLE = f"""
+WITH {_emb_cte()},
+{_Q_CTE},
+{_C_CTE},
+{_cos_dots()},
+{_scored_cte("dots")},
+{_RANKED_TOP_K}"""
+
+
 @query("sim_cosine_topk", oracle=_COSINE_ORACLE, tags=("similarity", "ann"))
 def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = _with_nrm(
-        emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-        ),
-        "qe",
-        "qnrm",
-    )
-    c = _with_nrm(emb.filter(F.col("vec_id") >= _N_QUERIES), "e", "nrm")
-    joined = c.crossJoin(F.broadcast(q))
-    cos = _dot("e", "qe") / (F.col("nrm") * F.col("qnrm"))
-    scored = joined.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cos, 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("q_id", "neighbor_id", "cos_sim")
-    )
+    return _top_k(_scored(_cross_pairs(_emb(spark, sf_dir))))
 
 
 # ---------------------------------------------------------------------------
@@ -199,7 +252,7 @@ def _plane_buckets(emb: DataFrame) -> DataFrame:
     the partial sum accumulates in d=0..63 order — the same sequential
     sum the fold computes (verified bucket-exact on the fixtures); the
     oracle's SUM..GROUP BY is equally unordered (§D rounding note)."""
-    # Single-round-trip spellings (r12 floor probe, the _cell_dists note).
+    # Single-round-trip spellings (r12 floor probe, the _sq_dists note).
     plane_sqls = [
         arr_lit_sql(_plane_value(j, d) for d in range(64))
         for j in range(_N_PLANES)
@@ -253,11 +306,8 @@ FROM buckets GROUP BY bucket
 
 @query("sim_ann_lsh_buckets", oracle=_lsh_oracle(), tags=("similarity", "ann", "lsh"))
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
     return (
-        _plane_buckets(emb)
+        _plane_buckets(_emb(spark, sf_dir))
         .groupBy("bucket")
         .agg(F.count(F.lit(1)).alias("n_vectors"), F.min("vec_id").alias("min_vec_id"))
     )
@@ -275,7 +325,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _ann_topk_oracle() -> str:
     bucket_cte = _lsh_oracle().split("SELECT bucket, COUNT(*)")[0].rstrip().rstrip(",")
     return f"""{bucket_cte},
-emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+{_EMB_CTE},
 q AS (
   SELECT b.vec_id AS q_id, m.e AS qe, b.bucket
   FROM buckets b JOIN emb m ON m.vec_id = b.vec_id WHERE b.vec_id < {_N_QUERIES}
@@ -284,27 +334,9 @@ c AS (
   SELECT b.vec_id, m.e, b.bucket
   FROM buckets b JOIN emb m ON m.vec_id = b.vec_id WHERE b.vec_id >= {_N_QUERIES}
 ),
-flatp AS (
-  SELECT q.q_id, c.vec_id, unnest(q.qe) AS qv, unnest(c.e) AS cv
-  FROM q JOIN c ON q.bucket = c.bucket
-),
-pair_dots AS (
-  SELECT q_id, vec_id,
-         SUM(qv * cv) AS dot, SUM(qv * qv) AS qq, SUM(cv * cv) AS cc
-  FROM flatp GROUP BY q_id, vec_id
-),
-scored AS (
-  SELECT q_id, vec_id AS neighbor_id,
-         ROUND(dot / (SQRT(qq) * SQRT(cc)), 6) AS cos_sim
-  FROM pair_dots
-),
-ranked AS (
-  SELECT q_id, neighbor_id, cos_sim,
-         ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos_sim DESC, neighbor_id) AS rn
-  FROM scored
-)
-SELECT q_id, neighbor_id, cos_sim FROM ranked WHERE rn <= {_TOP_K}
-"""
+{_cos_dots("flatp", "pair_dots", "JOIN c ON q.bucket = c.bucket")},
+{_scored_cte("pair_dots")},
+{_RANKED_TOP_K}"""
 
 
 # ---------------------------------------------------------------------------
@@ -335,7 +367,7 @@ def _neardup_oracle(
 ) -> str:
     bucket_cte = _lsh_oracle().split("SELECT bucket, COUNT(*)")[0].rstrip().rstrip(",")
     return f"""{bucket_cte},
-emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+{_EMB_CTE},
 withb AS (SELECT b.vec_id, m.e, b.bucket FROM buckets b JOIN emb m ON m.vec_id = b.vec_id),
 wcap AS (
   SELECT vec_id, e, bucket FROM (
@@ -370,9 +402,7 @@ def _neardup_frames(
     threshold: float = _NEARDUP_THRESHOLD,
     cap: int = _NEARDUP_BUCKET_CAP,
 ) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir)
     # Identical self-join sides: Catalyst ReuseExchange collapses their
     # shuffles; Catalyst's size gate picks broadcast here and SMJ at scale.
     bucketed = emb.select("vec_id", "e", _bucket_expr_spark().alias("bucket"))
@@ -398,24 +428,24 @@ def _neardup_frames(
         "bucket",
     )
     joined = a.join(b, ["bucket"]).filter(F.col("vec_a") < F.col("vec_b"))
-    cos = _dot("ea", "eb") / (F.col("na") * F.col("nb"))
     # coalesce() keeps InferFiltersFromConstraints from pushing a derived
     # isnotnull(<plane-dot expression>) into the scans (see ngram_jaccard).
     return joined.select(
-        "vec_a", "vec_b", F.round(cos, 6).alias("cos_sim")
+        "vec_a", "vec_b", pair_cos("ea", "eb", "na", "nb").alias("cos_sim")
     ).filter(F.coalesce(F.col("cos_sim"), F.lit(-2.0)) >= threshold)
+
+
+def _bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, e, bucket, nrm): every vector with its LSH bucket and norm."""
+    emb = _emb(spark, sf_dir)
+    return _with_nrm(
+        emb.select("vec_id", "e", _bucket_expr_spark().alias("bucket")), "e", "nrm"
+    )
 
 
 @query("sim_ann_lsh_topk", oracle=_ann_topk_oracle(), tags=("similarity", "ann", "lsh"))
 def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    bucketed = _with_nrm(
-        emb.select("vec_id", "e", _bucket_expr_spark().alias("bucket")),
-        "e",
-        "nrm",
-    )
+    bucketed = _bucketed(spark, sf_dir)
     q = bucketed.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("e").alias("qe"),
@@ -428,17 +458,7 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # within a shared bucket. At 100 TB with a large query set, drop the
     # broadcast hint and this becomes a bucket-co-partitioned shuffle join —
     # same plan shape the reference would produce.
-    joined = c.join(F.broadcast(q), "bucket")
-    cos = _dot("e", "qe") / (F.col("nrm") * F.col("qnrm"))
-    scored = joined.select(
-        "q_id", F.col("vec_id").alias("neighbor_id"), F.round(cos, 6).alias("cos_sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("q_id", "neighbor_id", "cos_sim")
-    )
+    return _top_k(_scored(c.join(F.broadcast(q), "bucket")))
 
 
 # ---------------------------------------------------------------------------
@@ -477,53 +497,97 @@ _IVF_K_SQL = ("CASE WHEN COUNT(*) >= 16384 THEN 32 "
               "WHEN COUNT(*) >= 1024 THEN 16 ELSE 8 END")
 
 
-def _ivf_cent_ctes() -> str:
-    """Shared oracle CTE pair: the corpus-scaled cell count (kk) and the
-    centroid rows (cent) — the DuckDB side of _ivf_k_for/_centroids."""
+def _ivf_cent_ctes(where: str = "") -> str:
+    """Shared oracle CTEs: the corpus-scaled cell count (kk) and the
+    centroid rows (cent) — the DuckDB side of _ivf_k_for/_centroids — and
+    every (vector, centroid) dim pair (dflat) of the vectors ``where``
+    keeps."""
     k0 = _IVF_FIRST_CENTROID
     return f"""kk AS (SELECT {_IVF_K_SQL} AS k FROM emb WHERE vec_id >= {_N_QUERIES}),
 cent AS (SELECT vec_id - {k0} + 1 AS k, e AS ce
-         FROM emb, kk WHERE vec_id BETWEEN {k0} AND {k0} + kk.k - 1)"""
+         FROM emb, kk WHERE vec_id BETWEEN {k0} AND {k0} + kk.k - 1),
+dflat AS (
+  SELECT m.vec_id, c.k, unnest(m.e) AS mv, unnest(c.ce) AS cv
+  FROM emb m CROSS JOIN cent c{where}
+)"""
 
 
-def _cell_dists(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
-    """(vec_id, darr array<double>[K]): rounded (6-dp) L2^2 of every vector
-    to each centroid — the posexplode+codegen reshape of the per-row
-    K*64-element interpreted HOF argmin (same move as _pq_subspace_dists,
-    same rounding-boundary note: the oracle's dists CTE is an equally
-    unordered SUM..GROUP BY). One map-side-combinable (vec_id) aggregate;
-    K whole-stage-codegen squared-diff terms per exploded dim row."""
-    # Constant expressions built ONCE per (SparkContext, centroid matrix)
-    # (r12 floor probe): the per-Column K-term listcomp cost ~0.5 s of py4j
-    # frame construction PER INVOCATION at K=16, and re-spelling it as SQL
-    # strings only moved the cost into per-invocation parsing of the K x 64
-    # literal texts — the matrices are session constants, so the parsed
-    # trees are memoized (const_exprs note in _util).
-    k = len(centroids)
+_IVF_DISTS_CTE = """dists AS (
+  SELECT vec_id, k, ROUND(SUM((mv - cv) * (mv - cv)), 6) AS d
+  FROM dflat GROUP BY vec_id, k
+)"""
+
+
+def _micros(sums: list[str]) -> str:
+    """The sums as integer micros (round(x * 1e6)), comma-separated SQL."""
+    return ", ".join(f"CAST(ROUND({s} * 1000000.0, 0) AS BIGINT)" for s in sums)
+
+
+def _sq_dists(
+    emb: DataFrame,
+    keys: list[str],
+    books: list[tuple[str, list[list[float]]]],
+    tag: str,
+    finish,
+    sub: str | None = None,
+):
+    """The squared-difference kernel of the IVF and PQ lanes: posexplode
+    ``emb``'s vector ``e`` to (keys, pos, val), one whole-stage-codegen
+    term (val - element_at(cw, pos + 1))^2 per codeword cw per dim row, and
+    ONE map-side-combinable aggregate per (keys[, sub]) summing each term.
+    This replaces a per-row interpreted K*64-element HOF fold
+    (CodegenFallback). ``books`` is a list of (prefix, codebook): codeword
+    c sums as column ``t<prefix><c>``. ``sub`` names the 0-based PQ
+    subspace column, added to the grouping.
+
+    Returns the aggregate and ``finish(names)``, where names[i] lists the
+    sum columns of the i-th codebook. Rounding boundary: each double sum
+    accumulates in shuffle-group order before any rounding, and the
+    oracles' SUM..GROUP BY is equally unordered (pq_distortion's note).
+
+    The expressions are built ONCE per (SparkContext, tag, codebooks) (r12
+    floor probe): the per-Column K-term listcomp cost ~0.5 s of py4j frame
+    construction PER INVOCATION at K=16, and re-spelling it as SQL strings
+    only moved the cost into per-invocation parsing of the K x 64 literal
+    texts — the matrices are session constants, so the parsed trees are
+    memoized (const_exprs note in _util)."""
 
     def build():
-        cw_sqls = [arr_lit_sql(c) for c in centroids]
+        names = [[f"{p}{c}" for c in range(len(cb))] for p, cb in books]
         sq = [
             F.expr(
                 f"(val - element_at({cw}, pos + 1))"
                 f" * (val - element_at({cw}, pos + 1))"
-            ).alias(f"s{c}")
-            for c, cw in enumerate(cw_sqls)
+            ).alias(f"s{n}")
+            for (_, cb), ns in zip(books, names)
+            for n, cw in zip(ns, map(arr_lit_sql, cb))
         ]
-        sums = [F.sum(f"s{c}").alias(f"t{c}") for c in range(k)]
-        darr = F.expr(
-            "array(" + ", ".join(f"ROUND(t{c}, 6)" for c in range(k)) + ")"
-        ).alias("darr")
-        return sq, sums, darr
+        sums = [F.sum(f"s{n}").alias(f"t{n}") for ns in names for n in ns]
+        m = [F.expr(f"CAST(pos / {_PQ_D} AS INT)").alias(sub)] if sub else []
+        return m, sq, sums, finish([[f"t{n}" for n in ns] for ns in names])
 
-    sq, sums, darr = const_exprs(
+    m, sq, sums, fin = const_exprs(
         emb.sparkSession,
-        ("cell_dists", tuple(tuple(c) for c in centroids)),
+        (tag, tuple(tuple(tuple(c) for c in cb) for _, cb in books)),
         build,
     )
-    ex = emb.select("vec_id", F.posexplode("e").alias("pos", "val"))
-    per_dim = ex.select("vec_id", *sq)
-    agg = per_dim.groupBy("vec_id").agg(*sums)
+    ex = emb.select(*keys, F.posexplode("e").alias("pos", "val"))
+    per_dim = ex.select(*keys, *m, *sq)
+    return per_dim.groupBy(*keys, *([sub] if sub else [])).agg(*sums), fin
+
+
+def _cell_dists(emb: DataFrame, centroids: list[list[float]]) -> DataFrame:
+    """(vec_id, darr array<double>[K]): rounded (6-dp) L2^2 of every vector
+    to each centroid, one (vec_id) aggregate of _sq_dists."""
+    agg, darr = _sq_dists(
+        emb,
+        ["vec_id"],
+        [("", centroids)],
+        "cell_dists",
+        lambda ts: F.expr(
+            "array(" + ", ".join(f"ROUND({n}, 6)" for n in ts[0]) + ")"
+        ).alias("darr"),
+    )
     return agg.select("vec_id", darr)
 
 
@@ -536,16 +600,9 @@ def _cell_of():
 
 def _ivf_oracle() -> str:
     return f"""
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+WITH {_EMB_CTE},
 {_ivf_cent_ctes()},
-dflat AS (
-  SELECT m.vec_id, c.k, unnest(m.e) AS mv, unnest(c.ce) AS cv
-  FROM emb m CROSS JOIN cent c
-),
-dists AS (
-  SELECT vec_id, k, ROUND(SUM((mv - cv) * (mv - cv)), 6) AS d
-  FROM dflat GROUP BY vec_id, k
-),
+{_IVF_DISTS_CTE},
 cells AS (
   SELECT vec_id, k AS cell FROM (
     SELECT vec_id, k, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, k) AS rn
@@ -609,9 +666,7 @@ def _centroids(spark: SparkSession, emb: DataFrame, sf_dir: str) -> list[list[fl
 
 @query("sim_ivf_topk", oracle=_ivf_oracle(), tags=("similarity", "ann", "ivf"))
 def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir)
     centroids = _centroids(spark, emb, sf_dir)
     # Cell assignment + query probe distances from ONE shared
     # posexplode+codegen frame (see _cell_dists); per-side norms attached
@@ -640,17 +695,7 @@ def ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("q_id", "qe", "qnrm", F.explode(probe_cells).alias("cell"))
     )
-    joined = corpus.join(F.broadcast(qd), "cell")
-    cos = _dot("e", "qe") / (F.col("nrm") * F.col("qnrm"))
-    scored = joined.select(
-        "q_id", F.col("vec_id").alias("neighbor_id"), F.round(cos, 6).alias("cos_sim")
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("q_id", "neighbor_id", "cos_sim")
-    )
+    return _top_k(_scored(corpus.join(F.broadcast(qd), "cell")))
 
 
 # ---------------------------------------------------------------------------
@@ -688,9 +733,7 @@ FROM q GROUP BY label
 
 @query("sim_int8_quantize", oracle=_QUANT_ORACLE, tags=("similarity", "quantize"))
 def int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("v")
-    )
+    emb = _emb(spark, sf_dir, "vec_id", "label", vec="v")
     # max|x| = max(max(x), -min(x)): array_max/array_min are plain codegen
     # collection functions, so this kills the interpreted transform(abs)
     # pass (CodegenFallback) — value-identical for any array (r12; ~15%
@@ -744,16 +787,9 @@ def int8_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _kmeans_oracle() -> str:
     return f"""
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
-{_ivf_cent_ctes()},
-dflat AS (
-  SELECT m.vec_id, c.k, unnest(m.e) AS mv, unnest(c.ce) AS cv
-  FROM emb m CROSS JOIN cent c WHERE m.vec_id >= {_N_QUERIES}
-),
-dists AS (
-  SELECT vec_id, k, ROUND(SUM((mv - cv) * (mv - cv)), 6) AS d
-  FROM dflat GROUP BY vec_id, k
-),
+WITH {_EMB_CTE},
+{_ivf_cent_ctes(f" WHERE m.vec_id >= {_N_QUERIES}")},
+{_IVF_DISTS_CTE},
 cells AS (
   SELECT vec_id, cell FROM (
     SELECT vec_id, k AS cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, k) AS rn
@@ -774,9 +810,7 @@ FROM member GROUP BY cell, dim
 
 @query("sim_kmeans_step", oracle=_kmeans_oracle(), tags=("similarity", "ivf", "kmeans"))
 def kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir)
     centroids = _centroids(spark, emb, sf_dir)
     # Cell assignment via the shared posexplode+codegen frame (_cell_dists)
     # instead of the per-row K*64 interpreted HOF argmin; the assignment
@@ -791,6 +825,14 @@ def kmeans_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ex = corpus.select("cell", F.posexplode("e").alias("pos", "val"))
     return ex.groupBy("cell", (F.col("pos") + 1).cast("int").alias("dim")).agg(
+        *_exact_mean()
+    )
+
+
+def _exact_mean():
+    """(mean_val, n_members) aggregates of ``val``: the exact int64 sum of
+    round(val * 1e6) over 1e6 * count, one correctly rounded division."""
+    return (
         (
             F.sum(F.round(F.col("val") * 1000000, 0).cast("long")).cast("double")
             / (F.lit(1000000.0) * F.count(F.lit(1)))
@@ -831,10 +873,7 @@ FROM per GROUP BY label
 
 @query("sim_hof_label_stats", oracle=_HOF_ORACLE, tags=("similarity", "higher-order"))
 def hof_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "label", F.col("embedding").cast("array<double>").alias("v")
-    )
-    per = emb.select(
+    per = _emb(spark, sf_dir, "label", vec="v").select(
         "label",
         F.expr("size(filter(v, x -> x > 0D))").alias("n_pos"),
         F.expr("CASE WHEN exists(v, x -> x > 0.25D) THEN 1 ELSE 0 END").alias("has_big"),
@@ -862,45 +901,21 @@ def hof_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RANGE_THRESHOLD = 0.3
 
 _COSINE_RANGE_ORACLE = f"""
-WITH emb AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-),
-q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id < {_N_QUERIES}),
-c AS (SELECT vec_id, e FROM emb WHERE vec_id >= {_N_QUERIES}),
-flat AS (
-  SELECT q.q_id, c.vec_id, unnest(q.qe) AS qv, unnest(c.e) AS cv
-  FROM q CROSS JOIN c
-),
-dots AS (
-  SELECT q_id, vec_id,
-         SUM(qv * cv) AS dot, SUM(qv * qv) AS qq, SUM(cv * cv) AS cc
-  FROM flat GROUP BY q_id, vec_id
-)
+WITH {_emb_cte()},
+{_Q_CTE},
+{_C_CTE},
+{_cos_dots()}
 SELECT q_id, vec_id AS neighbor_id,
-       ROUND(dot / (SQRT(qq) * SQRT(cc)), 6) AS cos_sim
+       {_COS6} AS cos_sim
 FROM dots
-WHERE ROUND(dot / (SQRT(qq) * SQRT(cc)), 6) >= {_RANGE_THRESHOLD}
+WHERE {_COS6} >= {_RANGE_THRESHOLD}
 """
 
 
 @query("sim_cosine_range", oracle=_COSINE_RANGE_ORACLE, tags=("similarity", "range"))
 def cosine_range(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    q = _with_nrm(
-        emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-        ),
-        "qe",
-        "qnrm",
-    )
-    c = _with_nrm(emb.filter(F.col("vec_id") >= _N_QUERIES), "e", "nrm")
-    cos = F.round(_dot("e", "qe") / (F.col("nrm") * F.col("qnrm")), 6)
-    return (
-        c.crossJoin(F.broadcast(q))
-        .select("q_id", F.col("vec_id").alias("neighbor_id"), cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= _RANGE_THRESHOLD)
+    return _scored(_cross_pairs(_emb(spark, sf_dir))).filter(
+        F.col("cos_sim") >= _RANGE_THRESHOLD
     )
 
 
@@ -925,10 +940,8 @@ def cosine_range(spark: SparkSession, sf_dir: str) -> DataFrame:
 _FILTERED_MIN_CHARS = 300
 
 _FILTERED_TOPK_ORACLE = f"""
-WITH emb AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-),
-q AS (SELECT vec_id AS q_id, e AS qe FROM emb WHERE vec_id < {_N_QUERIES}),
+WITH {_emb_cte()},
+{_Q_CTE},
 keep AS (
   SELECT doc_id FROM documents
   WHERE lang = 'en' AND n_chars >= {_FILTERED_MIN_CHARS}
@@ -938,20 +951,8 @@ c AS (
   JOIN keep k ON k.doc_id = emb.vec_id
   WHERE emb.vec_id >= {_N_QUERIES}
 ),
-flat AS (
-  SELECT q.q_id, c.vec_id, unnest(q.qe) AS qv, unnest(c.e) AS cv
-  FROM q CROSS JOIN c
-),
-dots AS (
-  SELECT q_id, vec_id,
-         SUM(qv * cv) AS dot, SUM(qv * qv) AS qq, SUM(cv * cv) AS cc
-  FROM flat GROUP BY q_id, vec_id
-),
-scored AS (
-  SELECT q_id, vec_id AS neighbor_id,
-         ROUND(dot / (SQRT(qq) * SQRT(cc)), 6) AS cos_sim
-  FROM dots
-),
+{_cos_dots()},
+{_scored_cte("dots")},
 ranked AS (
   SELECT q_id, neighbor_id, cos_sim,
          ROW_NUMBER() OVER (PARTITION BY q_id
@@ -968,43 +969,14 @@ SELECT q_id, neighbor_id, cos_sim FROM ranked WHERE rn <= {_TOP_K}
     tags=("similarity", "ann", "hybrid"),
 )
 def filtered_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tables = t(spark, sf_dir)
-    emb = tables["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
     keep = (
-        tables["documents"]
+        t(spark, sf_dir)["documents"]
         .filter(
             (F.col("lang") == "en") & (F.col("n_chars") >= _FILTERED_MIN_CHARS)
         )
         .select("doc_id")
     )
-    q = _with_nrm(
-        emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"), F.col("e").alias("qe")
-        ),
-        "qe",
-        "qnrm",
-    )
-    c = _with_nrm(
-        emb.filter(F.col("vec_id") >= _N_QUERIES).join(
-            keep, emb["vec_id"] == keep["doc_id"]
-        ),
-        "e",
-        "nrm",
-    )
-    cos = _dot("e", "qe") / (F.col("nrm") * F.col("qnrm"))
-    scored = c.crossJoin(F.broadcast(q)).select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cos, 6).alias("cos_sim"),
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= _TOP_K)
-        .select("q_id", "neighbor_id", "cos_sim")
-    )
+    return _top_k(_scored(_cross_pairs(_emb(spark, sf_dir), keep=keep)))
 
 
 # ---------------------------------------------------------------------------
@@ -1059,14 +1031,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     their k-row outputs (the oracle does exactly that); the Spark plan
     fuses them — the cosine for each (query, corpus) pair is computed once
     and both rankings are derived from the same scored frame."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    bucketed = _with_nrm(
-        emb.select("vec_id", "e", _bucket_expr_spark().alias("bucket")),
-        "e",
-        "nrm",
-    )
+    bucketed = _bucketed(spark, sf_dir)
     q = bucketed.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("e").alias("qe"),
@@ -1074,12 +1039,8 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("bucket").alias("qbucket"),
     )
     c = bucketed.filter(F.col("vec_id") >= _N_QUERIES)
-    joined = c.crossJoin(F.broadcast(q))
-    cos = _dot("e", "qe") / (F.col("nrm") * F.col("qnrm"))
-    scored = joined.select(
-        "q_id",
-        F.col("vec_id").alias("neighbor_id"),
-        F.round(cos, 6).alias("cos_sim"),
+    scored = _scored(
+        c.crossJoin(F.broadcast(q)),
         (F.col("bucket") == F.col("qbucket")).alias("in_bucket"),
     )
     # Two-step fusion that stays WindowGroupLimit-prunable:
@@ -1098,9 +1059,7 @@ def ann_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is also above it globally — i.e. also inside the global top-k. The
     # running-sum window therefore sees at most k rows per q_id, and no
     # reshuffle happens (hash(q_id) clustering + sort order carry over).
-    w_exact = Window.partitionBy("q_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
+    w_exact = _by_cos()
     topk = scored.withColumn("rn", F.row_number().over(w_exact)).where(
         F.col("rn") <= _TOP_K
     )
@@ -1150,12 +1109,8 @@ _SEMDEDUP_TAU = 0.40  # inside the synthetic corpus' cosine range (max ~0.49)
 
 def _semdedup_oracle(tau: float = _SEMDEDUP_TAU) -> str:
     return f"""
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+WITH {_EMB_CTE},
 {_ivf_cent_ctes()},
-dflat AS (
-  SELECT m.vec_id, c.k, unnest(m.e) AS mv, unnest(c.ce) AS cv
-  FROM emb m CROSS JOIN cent c
-),
 dotsq AS (
   SELECT vec_id, k, ROUND(SUM((mv - cv) * (mv - cv)), 6) AS d,
          SUM(mv * cv) AS dot, SUM(mv * mv) AS mm, SUM(cv * cv) AS cc
@@ -1199,9 +1154,7 @@ def _semdedup_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, e, cell, nrm, ccos): every vector with its assigned cell,
     vector norm, and rounded cosine-to-own-centroid — the shared input of
     both semantic-dedup variants."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir)
     centroids = _centroids(spark, emb, sf_dir)
     # Cell assignment via the shared posexplode+codegen frame (_cell_dists,
     # joined back at vector grain) instead of the per-row K*64 interpreted
@@ -1211,7 +1164,7 @@ def _semdedup_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # cosine to the OWN cell's centroid: index the broadcast centroid matrix
     # by the assigned cell — per-row array algebra, no extra join. Constant
-    # expressions memoized per (SparkContext, centroids) — _cell_dists note.
+    # expressions memoized per (SparkContext, centroids) — _sq_dists note.
     def build():
         cent_mat = F.expr(
             "array(" + ", ".join(arr_lit_sql(c) for c in centroids) + ")"
@@ -1268,43 +1221,27 @@ def _semdedup_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _semdedup_frames(
-    spark: SparkSession, sf_dir: str, tau: float = _SEMDEDUP_TAU
-) -> DataFrame:
-    # Same one-derivation move as _semdedup_capped_frames (distinct slot:
-    # the differential suite holds frames from both variants at once).
-    members = slot_local_checkpoint(
-        "sim_semdedup_members_uncapped", _semdedup_members(spark, sf_dir)
+def _member_side(members: DataFrame, p: str) -> DataFrame:
+    """One side of the dominance join: members as (<p>_id, <p>e, <p>_nrm,
+    cell, <p>_ccos)."""
+    return members.select(
+        F.col("vec_id").alias(f"{p}_id"),
+        F.col("e").alias(f"{p}e"),
+        F.col("nrm").alias(f"{p}_nrm"),
+        "cell",
+        F.col("ccos").alias(f"{p}_ccos"),
     )
-    a = members.select(
-        F.col("vec_id").alias("a_id"),
-        F.col("e").alias("ae"),
-        F.col("nrm").alias("a_nrm"),
-        F.col("cell").alias("cell"),
-        F.col("ccos").alias("a_ccos"),
-    )
-    b = members.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("e").alias("be"),
-        F.col("nrm").alias("b_nrm"),
-        F.col("cell").alias("cell"),
-        F.col("ccos").alias("b_ccos"),
-    )
-    dominance = (F.col("a_ccos") < F.col("b_ccos")) | (
+
+
+def _dominates():
+    """a outranks b in the keep order: lower ccos, ties on vec_id."""
+    return (F.col("a_ccos") < F.col("b_ccos")) | (
         (F.col("a_ccos") == F.col("b_ccos")) & (F.col("a_id") < F.col("b_id"))
     )
-    # The probe side of the cell join carries the O(sum |cell|^2)
-    # pair-scoring work; a small corpus arrives as ONE scan split, which
-    # would run every pair's cosine on a single core. Conditional fan-out on
-    # both sides (no-op once the scan is already well-split) keeps the probe
-    # parallel whichever side Catalyst picks to broadcast — no explicit
-    # broadcast hint, so at corpus scale this degrades to a sort-merge join
-    # on cell instead of pinning a corpus-sized broadcast.
-    pairs = _fan_out(b).join(_fan_out(a), "cell").where(dominance)
-    cos_ab = pair_cos()
-    dups = pairs.select("b_id", "cell", cos_ab.alias("cos_ab")).where(
-        F.col("cos_ab") >= tau
-    )
+
+
+def _dup_counts(dups: DataFrame) -> DataFrame:
+    """Per dominated vector: its dominator count and best cosine."""
     return (
         dups.groupBy(F.col("b_id").alias("vec_id"), "cell")
         .agg(
@@ -1313,6 +1250,30 @@ def _semdedup_frames(
         )
         .orderBy("vec_id")
     )
+
+
+def _semdedup_frames(
+    spark: SparkSession, sf_dir: str, tau: float = _SEMDEDUP_TAU
+) -> DataFrame:
+    # Same one-derivation move as _semdedup_capped_frames (distinct slot:
+    # the differential suite holds frames from both variants at once).
+    members = slot_local_checkpoint(
+        "sim_semdedup_members_uncapped", _semdedup_members(spark, sf_dir)
+    )
+    a = _member_side(members, "a")
+    b = _member_side(members, "b")
+    # The probe side of the cell join carries the O(sum |cell|^2)
+    # pair-scoring work; a small corpus arrives as ONE scan split, which
+    # would run every pair's cosine on a single core. Conditional fan-out on
+    # both sides (no-op once the scan is already well-split) keeps the probe
+    # parallel whichever side Catalyst picks to broadcast — no explicit
+    # broadcast hint, so at corpus scale this degrades to a sort-merge join
+    # on cell instead of pinning a corpus-sized broadcast.
+    pairs = _fan_out(b).join(_fan_out(a), "cell").where(_dominates())
+    dups = pairs.select("b_id", "cell", pair_cos().alias("cos_ab")).where(
+        F.col("cos_ab") >= tau
+    )
+    return _dup_counts(dups)
 
 
 # ---------------------------------------------------------------------------
@@ -1410,28 +1371,12 @@ def _semdedup_capped_frames(
         "sim_semdedup_members", _semdedup_members(spark, sf_dir)
     )
     w = Window.partitionBy("cell").orderBy(F.asc("ccos"), F.asc("vec_id"))
-    dominators = (
-        members.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= cap)
-        .select(
-            F.col("vec_id").alias("a_id"),
-            F.col("e").alias("ae"),
-            F.col("nrm").alias("a_nrm"),
-            "cell",
-            F.col("ccos").alias("a_ccos"),
-        )
+    dominators = _member_side(
+        members.withColumn("rn", F.row_number().over(w)).where(F.col("rn") <= cap),
+        "a",
     )
-    b = members.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("e").alias("be"),
-        F.col("nrm").alias("b_nrm"),
-        "cell",
-        F.col("ccos").alias("b_ccos"),
-    )
-    dominance = (F.col("a_ccos") < F.col("b_ccos")) | (
-        (F.col("a_ccos") == F.col("b_ccos")) & (F.col("a_id") < F.col("b_id"))
-    )
-    pairs = _fan_out(b).join(dominators, "cell").where(dominance)
+    b = _member_side(members, "b")
+    pairs = _fan_out(b).join(dominators, "cell").where(_dominates())
     # Pair scoring via the pair-grain posexplode reshape (r12: the
     # _cell_dists move applied AFTER the join): explode the dominator
     # vector, one codegen product per (pair, dim) row against
@@ -1461,14 +1406,7 @@ def _semdedup_capped_frames(
             "cos_ab"
         ),
     ).where(F.col("cos_ab") >= tau)
-    return (
-        dups.groupBy(F.col("b_id").alias("vec_id"), "cell")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_dominators"),
-            F.max("cos_ab").alias("best_dup_cos"),
-        )
-        .orderBy("vec_id")
-    )
+    return _dup_counts(dups)
 
 
 # ---------------------------------------------------------------------------
@@ -1487,10 +1425,8 @@ def _semdedup_capped_frames(
 # multiply, one divide — spelled identically on both sides.
 # ---------------------------------------------------------------------------
 
-_CENTROID_DRIFT_ORACLE = """
-WITH emb AS (
-  SELECT label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-),
+_CENTROID_DRIFT_ORACLE = f"""
+WITH {_emb_cte("label")},
 ex AS (
   SELECT label, unnest(e) AS val, unnest(generate_series(1, 64)) AS dim
   FROM emb
@@ -1527,9 +1463,7 @@ ORDER BY q.label
     order_by="label",
 )
 def centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "label", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir, "label")
     ex = emb.select("label", F.posexplode("e").alias("pos", "val"))
     s = ex.groupBy("label", (F.col("pos") + 1).alias("dim")).agg(
         # Cast each rounded component to DECIMAL BEFORE the sum: Spark widens
@@ -1602,53 +1536,19 @@ _PQ_TOPK = 5
 
 def _pq_subspace_dists(emb: DataFrame, codewords: list[list[float]]) -> DataFrame:
     """(vec_id, m [1-based], d2u array<long>[K]): integer-micro L2^2 of each
-    row's m-th subvector against every codeword — the pq_distortion
-    posexplode+codegen shape (see its formulation note), generalized to an
-    arbitrary codebook and shared by the encode / query-table / training /
-    distortion lanes. Replaces the K*M*D-per-row interpreted HOF encode
-    (CodegenFallback lambdas; measured sim_pq_adc_topk 7.6 s,
-    sim_pq_train_convergence 8.7 s at sf0.1 on the r12 baseline box) with K
-    whole-stage-codegen squared-diff terms per exploded dim row and ONE
-    map-side-combinable (vec, m) aggregate — M small rows per vector cross
-    the shuffle, same as pq_distortion. Same rounding-boundary assumption
-    as pq_distortion's note: per-subspace double sums accumulate in
-    shuffle-group order before the round-to-micro (the oracle's SUM..GROUP
-    BY is equally unordered)."""
-    # Constant expressions built ONCE per (SparkContext, codebook) — the
-    # _cell_dists memoization note applies verbatim (K x 64 literal
-    # matrices are session constants; re-shipping OR re-parsing them per
-    # invocation costs ~0.5 s of frame build).
-    k = len(codewords)
-
-    def build():
-        cw_sqls = [arr_lit_sql(c) for c in codewords]
-        m0 = F.expr(f"CAST(pos / {_PQ_D} AS INT)").alias("m0")
-        sq = [
-            F.expr(
-                f"(val - element_at({cw}, pos + 1))"
-                f" * (val - element_at({cw}, pos + 1))"
-            ).alias(f"s{c}")
-            for c, cw in enumerate(cw_sqls)
-        ]
-        sums = [F.sum(f"s{c}").alias(f"t{c}") for c in range(k)]
-        d2u = F.expr(
-            "array("
-            + ", ".join(
-                f"CAST(ROUND(t{c} * 1000000.0, 0) AS BIGINT)"
-                for c in range(k)
-            )
-            + ")"
-        ).alias("d2u")
-        return m0, sq, sums, d2u
-
-    m0, sq, sums, d2u = const_exprs(
-        emb.sparkSession,
-        ("pq_subspace_dists", tuple(tuple(c) for c in codewords)),
-        build,
+    row's m-th subvector against every codeword, one (vec, m) aggregate of
+    _sq_dists shared by the encode / query-table / training lanes — M small
+    rows per vector cross the shuffle. Replaced the K*M*D-per-row
+    interpreted HOF encode (measured sim_pq_adc_topk 7.6 s,
+    sim_pq_train_convergence 8.7 s at sf0.1 on the r12 baseline box)."""
+    per_sub, d2u = _sq_dists(
+        emb,
+        ["vec_id"],
+        [("", codewords)],
+        "pq_subspace_dists",
+        lambda ts: F.expr(f"array({_micros(ts[0])})").alias("d2u"),
+        sub="m0",
     )
-    ex = emb.select("vec_id", F.posexplode("e").alias("pos", "val"))
-    per_dim = ex.select("vec_id", m0, *sq)
-    per_sub = per_dim.groupBy("vec_id", "m0").agg(*sums)
     return per_sub.select(
         "vec_id", (F.col("m0") + 1).cast("int").alias("m"), d2u
     )
@@ -1666,12 +1566,20 @@ def _first_m(m: int, col):
     return F.first(F.when(F.col("m") == m, col), ignorenulls=True)
 
 
+def _pq_codes(sub: DataFrame) -> DataFrame:
+    """(vec_id, code_1..code_M): each vector's subspace codes, pivoted wide
+    from a _pq_subspace_dists frame."""
+    return sub.groupBy("vec_id").agg(
+        *[_first_m(m + 1, _pq_code()).alias(f"code_{m + 1}") for m in range(_PQ_M)]
+    )
+
+
 def _pq_cte_prefix() -> str:
     """Shared oracle CTEs through ``adc`` (the ALL-pairs ADC distances) —
     the top-k and the recall oracles both rank from this frame."""
     k0 = _IVF_FIRST_CENTROID
     return f"""
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+WITH {_EMB_CTE},
 cw AS (SELECT vec_id - {k0} + 1 AS c, e AS ce FROM emb
        WHERE vec_id BETWEEN {k0} AND {k0 + _PQ_K - 1}),
 sq AS (
@@ -1680,24 +1588,92 @@ sq AS (
   FROM emb v CROSS JOIN cw w
   CROSS JOIN unnest(generate_series(1, {_PQ_M * _PQ_D})) AS g(d)
 ),
-sub AS (
+{_sub_cte("")},
+{_codes_cte("")},
+{_adc_ctes("", "")}"""
+
+
+# PQ oracle CTEs by suffix s: the per-(vector, codeword, subspace)
+# micro-distances of the squared terms sq<s> (sub<s>), each corpus
+# subvector's nearest code (codes<s>), the query distance tables and the
+# ADC sums over codes<s> (qtab<n>, adc<n>), and one Lloyd step's exact
+# member means (tcw<s>).
+def _grid_sq_cte(s: str, grid: str) -> str:
+    return f"""sq{s} AS (
+  SELECT v.vec_id, cg.c, cg.m,
+         (v.e[(cg.m - 1) * {_PQ_D} + cg.d] - cg.val)
+         * (v.e[(cg.m - 1) * {_PQ_D} + cg.d] - cg.val) AS s
+  FROM emb v CROSS JOIN {grid} cg
+)"""
+
+
+def _sub_cte(s: str) -> str:
+    return f"""sub{s} AS (
   SELECT vec_id, c, m, CAST(ROUND(SUM(s) * 1000000.0, 0) AS BIGINT) AS d2u
-  FROM sq GROUP BY vec_id, c, m
-),
-codes AS (
+  FROM sq{s} GROUP BY vec_id, c, m
+)"""
+
+
+def _codes_cte(s: str) -> str:
+    return f"""codes{s} AS (
   SELECT vec_id, m, c AS code FROM (
     SELECT vec_id, m, c,
            ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2u, c) AS rn
-    FROM sub WHERE vec_id >= {_N_QUERIES}
+    FROM sub{s} WHERE vec_id >= {_N_QUERIES}
   ) WHERE rn = 1
-),
-qtab AS (SELECT vec_id AS q_id, m, c, d2u FROM sub WHERE vec_id < {_N_QUERIES}),
-adc AS (
+)"""
+
+
+def _adc_ctes(n: str, s: str) -> str:
+    return f"""qtab{n} AS (SELECT vec_id AS q_id, m, c, d2u FROM sub{s} WHERE vec_id < {_N_QUERIES}),
+adc{n} AS (
   SELECT t.q_id, cd.vec_id AS neighbor_id,
          CAST(SUM(t.d2u) AS BIGINT) AS adc_micro
-  FROM codes cd JOIN qtab t ON t.m = cd.m AND t.c = cd.code
+  FROM codes{s} cd JOIN qtab{n} t ON t.m = cd.m AND t.c = cd.code
   GROUP BY t.q_id, cd.vec_id
 )"""
+
+
+def _tcw_cte(s: str) -> str:
+    return f"""tcw{s} AS (
+  SELECT cd.m, cd.code, g.d AS dim,
+         COUNT(*) AS n_members,
+         CAST(SUM(CAST(ROUND(v.e[(cd.m - 1) * {_PQ_D} + g.d] * 1000000)
+                       AS BIGINT)) AS DOUBLE)
+           / (1000000.0 * COUNT(*)) AS mean_val
+  FROM codes{s} cd JOIN emb v ON v.vec_id = cd.vec_id
+  CROSS JOIN unnest(generate_series(1, {_PQ_D})) AS g(d)
+  GROUP BY cd.m, cd.code, g.d
+)"""
+
+
+def _recall_tail(adc: str, topk: int) -> str:
+    """recall@topk of the ``adc`` ranking against the exact L2 ranking."""
+    return f"""tru AS (
+  SELECT q.vec_id AS q_id, v.vec_id AS neighbor_id,
+         CAST(ROUND(SUM((q.e[d] - v.e[d]) * (q.e[d] - v.e[d]))
+                    * 1000000.0, 0) AS BIGINT) AS true_micro
+  FROM emb q CROSS JOIN emb v
+  CROSS JOIN unnest(generate_series(1, {_PQ_M * _PQ_D})) AS g(d)
+  WHERE q.vec_id < {_N_QUERIES} AND v.vec_id >= {_N_QUERIES}
+  GROUP BY q_id, neighbor_id
+),
+rk AS (
+  SELECT p.q_id, p.neighbor_id,
+         ROW_NUMBER() OVER (PARTITION BY p.q_id
+                            ORDER BY t.true_micro, p.neighbor_id) AS rt,
+         ROW_NUMBER() OVER (PARTITION BY p.q_id
+                            ORDER BY p.adc_micro, p.neighbor_id) AS ra
+  FROM {adc} p JOIN tru t
+    ON t.q_id = p.q_id AND t.neighbor_id = p.neighbor_id
+)
+SELECT q_id, COUNT(*) AS n_exact,
+       CAST(SUM(CASE WHEN ra <= {topk} THEN 1 ELSE 0 END) AS BIGINT)
+         AS n_matched,
+       CAST(SUM(CASE WHEN ra <= {topk} THEN 1 ELSE 0 END) AS DOUBLE)
+         / COUNT(*) AS recall_at_k
+FROM rk WHERE rt <= {topk} GROUP BY q_id
+"""
 
 
 def _pq_oracle(topk: int = _PQ_TOPK) -> str:
@@ -1749,9 +1725,7 @@ def _pq_adc_pairs(
     TRUE distance from the same pair frame (the recall gate). ``codewords``
     overrides the codebook (default: the seed vectors; the trained lane
     passes the one-Lloyd-step codebook from _trained_codewords)."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir)
     if codewords is None:
         codewords = _centroids(spark, emb, sf_dir)[:_PQ_K]
     # Encode via the shared posexplode+codegen subspace-distance frame
@@ -1761,16 +1735,7 @@ def _pq_adc_pairs(
     # tables. Pivoting the (vec, m) grain wide is a tiny second aggregate
     # over M rows per vector.
     sub = _pq_subspace_dists(emb, codewords)
-    corpus = (
-        sub.filter(F.col("vec_id") >= _N_QUERIES)
-        .groupBy("vec_id")
-        .agg(
-            *[
-                _first_m(m + 1, _pq_code()).alias(f"code_{m + 1}")
-                for m in range(_PQ_M)
-            ]
-        )
-    )
+    corpus = _pq_codes(sub.filter(F.col("vec_id") >= _N_QUERIES))
     q = (
         sub.filter(F.col("vec_id") < _N_QUERIES)
         .groupBy("vec_id")
@@ -1821,31 +1786,7 @@ def _pq_adc_pairs(
 
 def _pq_recall_oracle(topk: int = _PQ_TOPK) -> str:
     return f"""{_pq_cte_prefix()},
-tru AS (
-  SELECT q.vec_id AS q_id, v.vec_id AS neighbor_id,
-         CAST(ROUND(SUM((q.e[d] - v.e[d]) * (q.e[d] - v.e[d]))
-                    * 1000000.0, 0) AS BIGINT) AS true_micro
-  FROM emb q CROSS JOIN emb v
-  CROSS JOIN unnest(generate_series(1, {_PQ_M * _PQ_D})) AS g(d)
-  WHERE q.vec_id < {_N_QUERIES} AND v.vec_id >= {_N_QUERIES}
-  GROUP BY q_id, neighbor_id
-),
-rk AS (
-  SELECT p.q_id, p.neighbor_id,
-         ROW_NUMBER() OVER (PARTITION BY p.q_id
-                            ORDER BY t.true_micro, p.neighbor_id) AS rt,
-         ROW_NUMBER() OVER (PARTITION BY p.q_id
-                            ORDER BY p.adc_micro, p.neighbor_id) AS ra
-  FROM adc p JOIN tru t
-    ON t.q_id = p.q_id AND t.neighbor_id = p.neighbor_id
-)
-SELECT q_id, COUNT(*) AS n_exact,
-       CAST(SUM(CASE WHEN ra <= {topk} THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_matched,
-       CAST(SUM(CASE WHEN ra <= {topk} THEN 1 ELSE 0 END) AS DOUBLE)
-         / COUNT(*) AS recall_at_k
-FROM rk WHERE rt <= {topk} GROUP BY q_id
-"""
+{_recall_tail("adc", topk)}"""
 
 
 @query(
@@ -1926,43 +1867,16 @@ def pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     longs — the same exposure as every d2u rounding in this module
     (fixture values sit far from boundaries; a boundary hit would surface
     as a deterministic off-by-one differential)."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir, "vec_id", "label")
     codewords = _centroids(spark, emb.select("vec_id", "e"), sf_dir)[:_PQ_K]
-    # Constant expressions built ONCE per (SparkContext, codebook) — the
-    # _cell_dists memoization note.
-    def build():
-        cw_sqls = [arr_lit_sql(c) for c in codewords]
-        m = F.expr(f"CAST(pos / {_PQ_D} AS INT)").alias("m")
-        sq = [
-            F.expr(
-                f"(val - element_at({cw}, pos + 1))"
-                f" * (val - element_at({cw}, pos + 1))"
-            ).alias(f"s{c}")
-            for c, cw in enumerate(cw_sqls)
-        ]
-        sums = [F.sum(f"s{c}").alias(f"t{c}") for c in range(_PQ_K)]
-        md = F.expr(
-            "least("
-            + ", ".join(
-                f"CAST(ROUND(t{c} * 1000000.0, 0) AS BIGINT)"
-                for c in range(_PQ_K)
-            )
-            + ")"
-        )
-        return m, sq, sums, md
-
-    m, sq, sums, md = const_exprs(
-        spark,
-        ("pq_distortion", tuple(tuple(c) for c in codewords)),
-        build,
+    per_sub, md = _sq_dists(
+        emb.filter(F.col("vec_id") >= _N_QUERIES),
+        ["vec_id", "label"],
+        [("", codewords)],
+        "pq_distortion",
+        lambda ts: F.expr(f"least({_micros(ts[0])})"),
+        sub="m",
     )
-    ex = emb.filter(F.col("vec_id") >= _N_QUERIES).select(
-        "vec_id", "label", F.posexplode("e").alias("pos", "val")
-    )
-    per_dim = ex.select("vec_id", "label", m, *sq)
-    per_sub = per_dim.groupBy("vec_id", "label", "m").agg(*sums)
     per_vec = (
         per_sub.select("vec_id", "label", md.alias("md"))
         .groupBy("vec_id", "label")
@@ -2006,24 +1920,10 @@ def pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _pq_tcw_cte() -> str:
-    """Oracle CTE for the trained codebook: one Lloyd step over the seed
-    assignment (`codes` from the shared prefix)."""
-    return f"""
-tcw AS (
-  SELECT cd.m, cd.code, g.d AS dim,
-         COUNT(*) AS n_members,
-         CAST(SUM(CAST(ROUND(v.e[(cd.m - 1) * {_PQ_D} + g.d] * 1000000)
-                       AS BIGINT)) AS DOUBLE)
-           / (1000000.0 * COUNT(*)) AS mean_val
-  FROM codes cd JOIN emb v ON v.vec_id = cd.vec_id
-  CROSS JOIN unnest(generate_series(1, {_PQ_D})) AS g(d)
-  GROUP BY cd.m, cd.code, g.d
-)"""
-
-
 def _pq_train_oracle() -> str:
-    return f"""{_pq_cte_prefix()},{_pq_tcw_cte()}
+    # One Lloyd step over the seed assignment (`codes` from the prefix).
+    return f"""{_pq_cte_prefix()},
+{_tcw_cte("")}
 SELECT m, code, dim, mean_val, n_members FROM tcw
 """
 
@@ -2032,10 +1932,7 @@ def _trained_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The trained-codebook statistics frame: (m, code, dim) -> exact mean
     of member subvector values + member count. One scan, one 512-group
     map-combinable aggregate."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    seed = _centroids(spark, emb, sf_dir)[:_PQ_K]
+    seed = _centroids(spark, _emb(spark, sf_dir), sf_dir)[:_PQ_K]
     return _lloyd_stats(spark, sf_dir, seed)
 
 
@@ -2084,16 +1981,8 @@ def pq_train_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PQ_TRAIN_STEPS = 3
 
 
-def _pq_k_for(n_corpus: int) -> int:
-    if n_corpus >= 16384:
-        return 32
-    if n_corpus >= 1024:
-        return 16
-    return 8
-
-
-_PQ_K_SQL = ("CASE WHEN COUNT(*) >= 16384 THEN 32 "
-             "WHEN COUNT(*) >= 1024 THEN 16 ELSE 8 END")
+_pq_k_for = _ivf_k_for
+_PQ_K_SQL = _IVF_K_SQL
 
 
 def _pq_chain_ctes(steps: int) -> str:
@@ -2104,7 +1993,7 @@ def _pq_chain_ctes(steps: int) -> str:
     their previous centroid, the Spark side's fallback)."""
     k0 = _IVF_FIRST_CENTROID
     parts = [f"""
-WITH emb AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings),
+WITH {_EMB_CTE},
 kk AS (SELECT {_PQ_K_SQL} AS k FROM emb WHERE vec_id >= {_N_QUERIES}),
 grid_0 AS (
   SELECT w.vec_id - {k0} + 1 AS c, g.m, g.d,
@@ -2118,37 +2007,14 @@ grid_0 AS (
     for step in range(1, steps + 1):
         prev = step - 1
         parts.append(f""",
-sq_{step} AS (
-  SELECT v.vec_id, cg.c, cg.m,
-         (v.e[(cg.m - 1) * {_PQ_D} + cg.d] - cg.val)
-         * (v.e[(cg.m - 1) * {_PQ_D} + cg.d] - cg.val) AS s
-  FROM emb v CROSS JOIN grid_{prev} cg
-),
-sub_{step} AS (
-  SELECT vec_id, c, m, CAST(ROUND(SUM(s) * 1000000.0, 0) AS BIGINT) AS d2u
-  FROM sq_{step} GROUP BY vec_id, c, m
-),
+{_grid_sq_cte(f"_{step}", f"grid_{prev}")},
+{_sub_cte(f"_{step}")},
 best_{step} AS (
   SELECT vec_id, m, MIN(d2u) AS bd FROM sub_{step}
   WHERE vec_id >= {_N_QUERIES} GROUP BY vec_id, m
 ),
-codes_{step} AS (
-  SELECT vec_id, m, c AS code FROM (
-    SELECT vec_id, m, c,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2u, c) AS rn
-    FROM sub_{step} WHERE vec_id >= {_N_QUERIES}
-  ) WHERE rn = 1
-),
-tcw_{step} AS (
-  SELECT cd.m, cd.code, g.d AS dim,
-         COUNT(*) AS n_members,
-         CAST(SUM(CAST(ROUND(v.e[(cd.m - 1) * {_PQ_D} + g.d] * 1000000)
-                       AS BIGINT)) AS DOUBLE)
-           / (1000000.0 * COUNT(*)) AS mean_val
-  FROM codes_{step} cd JOIN emb v ON v.vec_id = cd.vec_id
-  CROSS JOIN unnest(generate_series(1, {_PQ_D})) AS g(d)
-  GROUP BY cd.m, cd.code, g.d
-),
+{_codes_cte(f"_{step}")},
+{_tcw_cte(f"_{step}")},
 grid_{step} AS (
   SELECT g.c, g.m, g.d, COALESCE(t.mean_val, g.val) AS val
   FROM grid_{prev} g
@@ -2173,21 +2039,13 @@ def _lloyd_stats(
     """(m, code, dim) -> exact member mean + count of the corpus assignment
     against ``codewords`` — _trained_stats generalized to an arbitrary
     codebook (the chain feeds each step's collected means back in)."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir)
     # Assignment codes from the shared posexplode+codegen frame (see
     # _pq_subspace_dists — replaces the per-row interpreted HOF encode),
     # attached back to the exploded dim rows by a broadcast-scale join
     # (codes are one row per corpus vector).
-    sub = _pq_subspace_dists(emb, codewords).filter(
-        F.col("vec_id") >= _N_QUERIES
-    )
-    codes_w = sub.groupBy("vec_id").agg(
-        *[
-            _first_m(m + 1, _pq_code()).alias(f"code_{m + 1}")
-            for m in range(_PQ_M)
-        ]
+    codes_w = _pq_codes(
+        _pq_subspace_dists(emb, codewords).filter(F.col("vec_id") >= _N_QUERIES)
     )
     m_of = (F.col("pos") / _PQ_D).cast("int") + 1
     ex = (
@@ -2204,13 +2062,7 @@ def _lloyd_stats(
             "val",
         )
     )
-    return ex.groupBy("m", "code", "dim").agg(
-        (
-            F.sum(F.round(F.col("val") * 1000000, 0).cast("long")).cast("double")
-            / (F.lit(1000000.0) * F.count(F.lit(1)))
-        ).alias("mean_val"),
-        F.count(F.lit(1)).alias("n_members"),
-    )
+    return ex.groupBy("m", "code", "dim").agg(*_exact_mean())
 
 
 def _lloyd_codebooks(
@@ -2224,9 +2076,7 @@ def _lloyd_codebooks(
     hit = chains.get(cache_key)
     if hit is not None:
         return hit
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
+    emb = _emb(spark, sf_dir)
     n_corpus = emb.filter(F.col("vec_id") >= _N_QUERIES).count()
     k = _pq_k_for(n_corpus)
     k0 = _IVF_FIRST_CENTROID
@@ -2260,57 +2110,19 @@ def _chain_distortion_frame(
     of array minima — order-independent, identical to the per-row
     sum-of-subspace-minima, with n_subvectors = the (vec, m) row count =
     n_corpus * M exactly as before."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
     n_steps = len(chain)
-
-    # Constant expressions built ONCE per (SparkContext, chain) — the
-    # _cell_dists memoization note, amplified here: T*K literal-matrix
-    # terms per invocation.
-    def build():
-        cw_sqls = [[arr_lit_sql(c) for c in cb] for cb in chain]
-        m0 = F.expr(f"CAST(pos / {_PQ_D} AS INT)").alias("m0")
-        sq = [
-            F.expr(
-                f"(val - element_at({cw}, pos + 1))"
-                f" * (val - element_at({cw}, pos + 1))"
-            ).alias(f"s{ti}_{c}")
-            for ti, cws in enumerate(cw_sqls)
-            for c, cw in enumerate(cws)
-        ]
-        sums = [
-            F.sum(f"s{ti}_{c}").alias(f"t{ti}_{c}")
-            for ti, cws in enumerate(cw_sqls)
-            for c in range(len(cws))
-        ]
-        mins = [
-            F.expr(
-                "array_min(array("
-                + ", ".join(
-                    f"CAST(ROUND(t{ti}_{c} * 1000000.0, 0) AS BIGINT)"
-                    for c in range(len(cw_sqls[ti]))
-                )
-                + "))"
-            ).alias(f"min{ti}")
-            for ti in range(n_steps)
-        ]
-        return m0, sq, sums, mins
-
-    m0, sq, sums, mins = const_exprs(
-        spark,
-        (
-            "chain_distortion",
-            tuple(tuple(tuple(c) for c in cb) for cb in chain),
-        ),
-        build,
+    # All T*K squared-difference terms ride one _sq_dists aggregate.
+    per_sub, mins = _sq_dists(
+        _emb(spark, sf_dir).filter(F.col("vec_id") >= _N_QUERIES),
+        ["vec_id"],
+        [(f"{ti}_", cb) for ti, cb in enumerate(chain)],
+        "chain_distortion",
+        lambda ts: [
+            F.expr(f"array_min(array({_micros(names)}))").alias(f"min{ti}")
+            for ti, names in enumerate(ts)
+        ],
+        sub="m0",
     )
-    ex = (
-        emb.filter(F.col("vec_id") >= _N_QUERIES)
-        .select("vec_id", F.posexplode("e").alias("pos", "val"))
-    )
-    per_dim = ex.select("vec_id", m0, *sq)
-    per_sub = per_dim.groupBy("vec_id", "m0").agg(*sums)
     glob = per_sub.select(*mins).agg(
         *[F.sum(f"min{ti}").alias(f"dist{ti}") for ti in range(n_steps)],
         F.count(F.lit(1)).alias("n_sub"),
@@ -2353,55 +2165,11 @@ def _pq_trained_recall_oracle(topk: int = _PQ_TOPK) -> str:
     # fresh encode / query-table / ADC / recall pipeline against it.
     T = _PQ_TRAIN_STEPS
     return f"""{_pq_chain_ctes(T)},
-sq_f AS (
-  SELECT v.vec_id, cg.c, cg.m,
-         (v.e[(cg.m - 1) * {_PQ_D} + cg.d] - cg.val)
-         * (v.e[(cg.m - 1) * {_PQ_D} + cg.d] - cg.val) AS s
-  FROM emb v CROSS JOIN grid_{T} cg
-),
-sub_f AS (
-  SELECT vec_id, c, m, CAST(ROUND(SUM(s) * 1000000.0, 0) AS BIGINT) AS d2u
-  FROM sq_f GROUP BY vec_id, c, m
-),
-codes_f AS (
-  SELECT vec_id, m, c AS code FROM (
-    SELECT vec_id, m, c,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, m ORDER BY d2u, c) AS rn
-    FROM sub_f WHERE vec_id >= {_N_QUERIES}
-  ) WHERE rn = 1
-),
-qtab2 AS (SELECT vec_id AS q_id, m, c, d2u FROM sub_f WHERE vec_id < {_N_QUERIES}),
-adc2 AS (
-  SELECT t.q_id, cd.vec_id AS neighbor_id,
-         CAST(SUM(t.d2u) AS BIGINT) AS adc_micro
-  FROM codes_f cd JOIN qtab2 t ON t.m = cd.m AND t.c = cd.code
-  GROUP BY t.q_id, cd.vec_id
-),
-tru AS (
-  SELECT q.vec_id AS q_id, v.vec_id AS neighbor_id,
-         CAST(ROUND(SUM((q.e[d] - v.e[d]) * (q.e[d] - v.e[d]))
-                    * 1000000.0, 0) AS BIGINT) AS true_micro
-  FROM emb q CROSS JOIN emb v
-  CROSS JOIN unnest(generate_series(1, {_PQ_M * _PQ_D})) AS g(d)
-  WHERE q.vec_id < {_N_QUERIES} AND v.vec_id >= {_N_QUERIES}
-  GROUP BY q_id, neighbor_id
-),
-rk AS (
-  SELECT p.q_id, p.neighbor_id,
-         ROW_NUMBER() OVER (PARTITION BY p.q_id
-                            ORDER BY t.true_micro, p.neighbor_id) AS rt,
-         ROW_NUMBER() OVER (PARTITION BY p.q_id
-                            ORDER BY p.adc_micro, p.neighbor_id) AS ra
-  FROM adc2 p JOIN tru t
-    ON t.q_id = p.q_id AND t.neighbor_id = p.neighbor_id
-)
-SELECT q_id, COUNT(*) AS n_exact,
-       CAST(SUM(CASE WHEN ra <= {topk} THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_matched,
-       CAST(SUM(CASE WHEN ra <= {topk} THEN 1 ELSE 0 END) AS DOUBLE)
-         / COUNT(*) AS recall_at_k
-FROM rk WHERE rt <= {topk} GROUP BY q_id
-"""
+{_grid_sq_cte("_f", f"grid_{T}")},
+{_sub_cte("_f")},
+{_codes_cte("_f")},
+{_adc_ctes("2", "_f")},
+{_recall_tail("adc2", topk)}"""
 
 
 @query(
@@ -2458,9 +2226,7 @@ _AP_LCM = 2520  # lcm(1..10)
 
 def _mrr_ap_oracle() -> str:
     return f"""
-WITH emb AS (
-  SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-),
+WITH {_emb_cte("vec_id, label")},
 q AS (SELECT vec_id AS q_id, label AS q_label, e AS qe FROM emb
       WHERE vec_id < {_N_QUERIES}),
 c AS (SELECT vec_id, label, e FROM emb WHERE vec_id >= {_N_QUERIES}),
@@ -2478,7 +2244,7 @@ ranked AS (
   SELECT q_id, vec_id, (label = q_label) AS rel,
          ROW_NUMBER() OVER (
            PARTITION BY q_id
-           ORDER BY ROUND(dot / (SQRT(qq) * SQRT(cc)), 6) DESC, vec_id
+           ORDER BY {_COS6} DESC, vec_id
          ) AS rnk
   FROM dots
 ),
@@ -2514,25 +2280,14 @@ FROM per_q
     tags=("similarity", "evaluation", "retrieval"),
 )
 def retrieval_mrr_ap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", "label", F.col("embedding").cast("array<double>").alias("e")
+    pairs = _cross_pairs(
+        _emb(spark, sf_dir, "vec_id", "label"), F.col("label").alias("q_label")
     )
-    q = _with_nrm(
-        emb.filter(F.col("vec_id") < _N_QUERIES).select(
-            F.col("vec_id").alias("q_id"),
-            F.col("label").alias("q_label"),
-            F.col("e").alias("qe"),
-        ),
-        "qe",
-        "qnrm",
-    )
-    c = _with_nrm(emb.filter(F.col("vec_id") >= _N_QUERIES), "e", "nrm")
-    cos = F.round(_dot("e", "qe") / (F.col("nrm") * F.col("qnrm")), 6)
-    scored = c.crossJoin(F.broadcast(q)).select(
+    scored = pairs.select(
         "q_id",
         "vec_id",
         (F.col("label") == F.col("q_label")).alias("rel"),
-        cos.alias("cos_sim"),
+        pair_cos("e", "qe", "nrm", "qnrm").alias("cos_sim"),
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
     ranked = scored.select(
@@ -2596,11 +2351,9 @@ _PCA_SCALE = 1000000
 
 
 def _pca_power_oracle() -> str:
+    corpus = f"\n  WHERE vec_id >= {_N_QUERIES}"
     return f"""
-WITH emb AS (
-  SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-  WHERE vec_id >= {_N_QUERIES}
-),
+WITH {_emb_cte(where=corpus)},
 q AS (
   SELECT vec_id, g.d AS dim,
          CAST(ROUND(e[g.d] * {_PCA_SCALE}) AS BIGINT) AS xq
@@ -2627,10 +2380,7 @@ def pca_power_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One exact power-iteration step u = X^T (X v0), v0 = all-ones, over
     the corpus embeddings: 64 rows of integer-exact (quantized) component
     sums. Per-row dot in whole-stage codegen, one 64-group aggregate."""
-    emb = t(spark, sf_dir)["embeddings"].select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    corpus = emb.filter(F.col("vec_id") >= _N_QUERIES)
+    corpus = _emb(spark, sf_dir).filter(F.col("vec_id") >= _N_QUERIES)
     xq = F.expr(
         f"transform(e, x -> cast(round(x * {_PCA_SCALE}) as bigint))"
     )

@@ -20,7 +20,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from ..tables import load_tables
-from .windows import _normalize_event_time
+from .windows import _event_stream
 
 _GAP = "30 minutes"
 _WATERMARK = "1 hour"
@@ -59,19 +59,8 @@ def streaming_session_counts(
     state instead of retaining everything forever.
     """
     batch_events = load_tables(spark, sf_dir)["events"]
-    # readStream needs the ON-DISK schema (pre-normalization: ts is int64
-    # nanos under nanosAsLong), then the same normalization as tables.py.
-    raw_schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
-    # The streaming file source wants a DIRECTORY; select just the events
-    # file with a glob filter.
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
-    stream = _normalize_event_time(stream)
-    sessions = _session_agg(stream.withWatermark("ts", _WATERMARK)).select(
+    stream = _event_stream(spark, sf_dir, watermark=_WATERMARK)
+    sessions = _session_agg(stream).select(
         "user_id",
         F.col("session_start").cast("timestamp_ntz").alias("session_start"),
         F.col("session_end").cast("timestamp_ntz").alias("session_end"),

@@ -33,7 +33,7 @@ from pyspark.sql.types import (
 
 from ..operators._util import cents as _cents
 from ..tables import load_tables
-from .windows import _normalize_event_time
+from .windows import _event_stream
 
 _STATE_SCHEMA = StructType(
     [
@@ -83,14 +83,7 @@ def streaming_user_totals(
 ) -> DataFrame:
     """Run the stateful per-user fold over the events feed to completion and
     return one final row per user from the in-memory sink."""
-    raw_schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir.rstrip("/"))
-    )
-    stream = _normalize_event_time(stream)
+    stream = _event_stream(spark, sf_dir, watermark=None)
     totals = stream.groupBy("user_id").applyInPandasWithState(
         _update_user_state,
         outputStructType=_OUTPUT_SCHEMA,

@@ -72,15 +72,23 @@ def batch_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sliding_agg(load_tables(spark, sf_dir)["events"])
 
 
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _event_stream(
+    spark: SparkSession, sf_dir: str, watermark: str | None = _WATERMARK
+) -> DataFrame:
+    """The events parquet as a stream, ts normalized like the batch path,
+    with a ``watermark`` delay on ts unless it is None."""
+    # readStream needs the ON-DISK schema (pre-normalization: ts is int64
+    # nanos under nanosAsLong), then the same normalization as tables.py.
     raw_schema = spark.read.parquet(f"{sf_dir.rstrip('/')}/events.parquet").schema
-    stream = (
+    # The streaming file source wants a DIRECTORY; select just the events
+    # file with a glob filter.
+    stream = _normalize_event_time(
         spark.readStream.schema(raw_schema)
         .option("maxFilesPerTrigger", "1")
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir.rstrip("/"))
     )
-    return _normalize_event_time(stream).withWatermark("ts", _WATERMARK)
+    return stream if watermark is None else stream.withWatermark("ts", watermark)
 
 
 def _run_to_completion(df: DataFrame, table_name: str) -> DataFrame:

@@ -11,6 +11,7 @@ data into the memo instead of recomputing it from the parquet inputs.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import DataFrame, Row
 
 from datafusion_distributed_spark.engine import memo
@@ -101,3 +102,31 @@ def test_row_guard_flags_a_local_frame(spark):
     local = spark.createDataFrame([(1,)], "x int")
     found = list(_offences({"a": local, "b": [Row(x=1)]}, "probe"))
     assert len(found) == 2, found
+
+
+@pytest.mark.parametrize("name", ["sim_semantic_dedup", "dd_dup_clusters"])
+def test_unmemoized_builds_reuse_their_constant_expressions(spark, monkeypatch, name):
+    """Entries rebuilt on every call (they launch jobs while building) take
+    their constant expression trees from the ``const_exprs`` memo: a second
+    build asks for the same keys and adds none."""
+    from datafusion_distributed_spark.operators import _util
+
+    _ensure_loaded()
+    requested = []
+    real = _util._const_exprs_on
+
+    def recording(sc, key, builder):
+        requested.append(key)
+        return real(sc, key, builder)
+
+    monkeypatch.setattr(_util, "_const_exprs_on", recording)
+    exprs = memo(spark.sparkContext, "const_exprs")
+    REGISTRY[name].build(spark, SF_DIR)
+    release_all_slots(spark)
+    before, first = set(exprs), set(requested)
+    requested.clear()
+    REGISTRY[name].build(spark, SF_DIR)
+    release_all_slots(spark)
+    assert first, f"{name} built no constant expression through the memo"
+    assert set(requested) == first
+    assert set(exprs) == before, f"second build added {set(exprs) - before}"
